@@ -626,9 +626,15 @@ class Lake(val spark: SparkSession, val root: String,
       StructField("pos", LongType), StructField("row_id", LongType)))
     val ddTagged: Option[DataFrame] = if (delTaggedV.isEmpty) None else {
       val withParts = delTaggedV.map { case (d, sid, ct) =>
+        // an entry without recorded parts is a part directory (listed) or,
+        // thawed from a foreign catalog, a single parquet file: a file
+        // lists as empty and reads as itself, like Meta.deleteReadPaths
         val parts = if (d.parts.nonEmpty) d.parts
           else StoreIO.forPath(d.path).list(d.path, "", ".parquet").sorted
-            .map(n => s"${d.path}/$n").toList
+            .map(n => s"${d.path}/$n").toList match {
+              case Nil => List(d.path)
+              case listed => listed
+            }
         (d, sid, ct, parts)
       }
       val names = withParts.flatMap(_._4).map(baseName)

@@ -1,8 +1,11 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, GenericInternalRow, JsonToStructs}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import Meta._
 
 /** Snapshot-scoped merge-on-read scan composition (SURVEY.md §2.A A2,
@@ -13,7 +16,15 @@ import Meta._
   *     Σ over live data files:   parquet rows, column-mapped from the
   *                               file's schema epoch to S's schema
   *   ∪ live inlined batches:     JSON rows parsed with their epoch schema
+  *                               ([[decodeInline]], the one inline decoder:
+  *                               the native tier serves the same rows)
   *   ∖ live delete files:        anti-join on (file, position)
+  *
+  * SQL reads run on the native tier ([[LakeNativeScan]]) whenever
+  * [[LakeTable.nativePlan]] admits the snapshot; this composition serves
+  * the rest (`_row_id` reads, file epochs the parquet reader cannot map,
+  * `spark.graft.lake.nativeScan=false`) and every API, DML, change-feed
+  * and MV read, which call [[scanDF]] directly.
   *
   * All per-file work (pruning, schema grouping, row-id bases) is
   * driver-side O(files) — the same metadata weight class as Delta/Iceberg;
@@ -97,6 +108,73 @@ object LakeRead {
       }
     })
 
+  /** row layout of [[decodeInline]]: the snapshot's columns (all nullable,
+    * as JSON-parsed values are), then the (file, pos, row id) meta columns */
+  private def inlineSchema(cols: Seq[ColumnEntry]): StructType =
+    StructType(cols.map(c => StructField(c.name, sparkType(c.dataType))))
+      .add(FileCol, StringType).add(PosCol, LongType, nullable = false)
+      .add(RowIdCol, LongType, nullable = false)
+
+  /** The inline decoder, shared by both scan tiers: the live inlined batches
+    * of `tableId` at snapshot `s`, parsed on the driver (no Spark job) into
+    * rows of [[inlineSchema]]. Each batch's JSON parses under its own schema
+    * epoch with `from_json`'s semantics (default options, session time
+    * zone); its columns then map to `s`'s columns by columnId — cast to the
+    * current type, or filled with the existence default (null if none) for
+    * columns added after the batch was written. Meta columns: file =
+    * "inline:<batchId>", pos = index in the batch, the batch's row id. */
+  private[lake] def decodeInline(spark: SparkSession, st: CatalogState,
+      tableId: Long, s: Long): Vector[InternalRow] = {
+    val batches = st.inlinedAt(tableId, s)
+    if (batches.isEmpty) return Vector.empty
+    val cols = st.columnsAt(tableId, s)
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    lazy val defaults: Map[Long, Any] = cols.map { c =>
+      val to = sparkType(c.dataType)
+      c.columnId -> c.existsDefault.map(dv => evalConstant(spark, dv, to)).orNull
+    }.toMap
+    batches.groupBy(_.schemaVersion).toSeq.sortBy(_._1).flatMap { case (sv, bs) =>
+      val physCols = st.columnsAt(tableId, sv)
+      val physStruct = structFor(physCols)
+      val parse = JsonToStructs(physStruct, Map.empty,
+        BoundReference(0, StringType, nullable = true), tz)
+      val physIdx = physCols.map(_.columnId).zipWithIndex.toMap
+      val fills: Seq[InternalRow => Any] = cols.map { c =>
+        val to = sparkType(c.dataType)
+        physIdx.get(c.columnId) match {
+          case Some(i) =>
+            val read = BoundReference(i, physStruct(i).dataType, nullable = true)
+            val e = if (read.dataType == to) read else Cast(read, to, tz)
+            (r: InternalRow) => if (r == null) null else e.eval(r)
+          case None =>
+            val v = defaults(c.columnId)
+            (_: InternalRow) => v
+        }
+      }
+      bs.flatMap { b =>
+        val file = UTF8String.fromString(s"inline:${b.batchId}")
+        b.rowsJson.zip(b.ids).zipWithIndex.map { case ((j, rid), idx) =>
+          val parsed = parse.eval(InternalRow(UTF8String.fromString(j)))
+            .asInstanceOf[InternalRow]
+          new GenericInternalRow(
+            (fills.map(_(parsed)) ++ Seq(file, idx.toLong, rid)).toArray): InternalRow
+        }
+      }
+    }.toVector
+  }
+
+  /** value of a constant SQL expression (an existence default) cast to
+    * `to`, resolved by the session analyzer the way `expr(sql).cast(to)`
+    * is, then evaluated on the driver */
+  private def evalConstant(spark: SparkSession, sql: String, to: DataType): Any = {
+    import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
+    val parsed = spark.sessionState.sqlParser.parseExpression(sql)
+    val plan = spark.sessionState.analyzer.execute(
+      Project(Seq(Alias(Cast(parsed, to), "v")()), OneRowRelation()))
+    org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions(plan)
+      .asInstanceOf[Project].projectList.head.eval()
+  }
+
   /** Scan of `tableId` as of snapshot `s`.
     * @param filters     pushed predicates (file pruning only; Spark
     *                    re-applies them on rows)
@@ -178,26 +256,17 @@ object LakeRead {
         mapToCurrent(df, physCols, if (needMeta) Seq(FileCol, PosCol, RowIdCol) else Nil)
       }
 
-    // inlined batches: driver-held JSON rows → DataFrame per schema epoch
-    val inlinedParts: Seq[DataFrame] = inlined.groupBy(_.schemaVersion).toSeq.sortBy(_._1)
-      .map { case (sv, batches) =>
-        val physCols = st.columnsAt(tableId, sv)
-        val physStruct = structFor(physCols)
-        import spark.implicits._
-        val rows: Seq[(String, String, Long, Long)] = batches.flatMap { b =>
-          b.rowsJson.zip(b.ids).zipWithIndex.map { case ((j, rid), idx) =>
-            (j, s"inline:${b.batchId}", idx.toLong, rid)
-          }
-        }
-        val ds = rows.toDF("_json", FileCol, PosCol, RowIdCol)
-        val parsed = ds
-          .withColumn("_row", from_json(col("_json"), physStruct))
-          .select((physStruct.fieldNames.map(n => col(s"_row.$n").as(n)) ++
-            Seq(col(FileCol), col(PosCol), col(RowIdCol))): _*)
-        val metaCols = if (needMeta) Seq(FileCol, PosCol, RowIdCol) else Nil
-        mapToCurrent(
-          if (needMeta) parsed else parsed.drop(FileCol, PosCol, RowIdCol),
-          physCols, metaCols)
+    // inlined batches: rows from decodeInline, already in the snapshot's
+    // columns, as one local relation
+    val inlinedParts: Seq[DataFrame] =
+      if (inlined.isEmpty) Nil
+      else {
+        val schema = inlineSchema(cols)
+        val df = org.apache.spark.sql.graft.StreamingBatch.ofRows(spark,
+          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
+            decodeInline(spark, st, tableId, s)))
+        Seq(if (needMeta) df else df.drop(FileCol, PosCol, RowIdCol))
       }
 
     val allParts = parts ++ inlinedParts

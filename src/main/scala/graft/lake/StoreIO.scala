@@ -196,7 +196,11 @@ class HadoopStoreIO(anchor: String) extends StoreIO {
 
   override def list(dir: String, prefix: String, suffix: String): Vector[String] = {
     val d = new HPath(dir)
-    if (!fs.exists(d)) return Vector.empty
+    // a missing path or a FILE lists as empty, as on the local store (a
+    // Hadoop listStatus of a file returns the file itself)
+    val isDir = try fs.getFileStatus(d).isDirectory
+      catch { case _: java.io.FileNotFoundException => false }
+    if (!isDir) return Vector.empty
     fs.listStatus(d).iterator.map(_.getPath.getName)
       .filter(n => n.startsWith(prefix) && n.endsWith(suffix)).toVector
   }

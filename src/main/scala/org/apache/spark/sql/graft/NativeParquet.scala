@@ -20,6 +20,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionRe
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.util.SerializableConfiguration
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
@@ -214,6 +215,11 @@ object NativeParquet {
       if (k.ascending) SortDirection.ASCENDING else SortDirection.DESCENDING,
       if (k.nullsFirst) NullOrdering.NULLS_FIRST else NullOrdering.NULLS_LAST)
   }
+
+  /** `inner` plus a lake table's inline rows (already in `readSchema`
+    * layout) as one extra partition; see [[WithInlineBatch]] */
+  def withInline(inner: Batch, rows: Array[InternalRow], readSchema: StructType): Batch =
+    WithInlineBatch(inner, InlineRowsPartition(rows), readSchema)
 
   /** Delete-aware native scan: merge-on-read with EXECUTOR-LOCAL delete
     * application. Each task reads only the delete positions of the data
@@ -885,6 +891,65 @@ private[graft] class MultiEpochParquetScan(
   override def createReaderFactory(): PartitionReaderFactory =
     new EpochDispatchFactory(NativeParquet.epochFactories(
       spark, files, dataSchema, requiredSchema, filters, epochs))
+}
+
+/** a lake table's live inline rows (decoded on the driver, in the scan's
+  * read-schema layout), shipped as one input partition */
+private[graft] case class InlineRowsPartition(rows: Array[InternalRow])
+  extends InputPartition
+
+/** A native lake batch plus its inline rows as one extra partition. Spark
+  * rejects a scan that mixes row and columnar partitions, so the inline
+  * partition is read in the mode of the parquet partitions: one
+  * `ColumnarBatch` built from the rows when they are columnar, plain rows
+  * otherwise (and when there are no parquet partitions at all). */
+private[graft] case class WithInlineBatch(
+    inner: Batch,
+    inline: InlineRowsPartition,
+    schema: StructType) extends Batch {
+
+  private lazy val innerParts = inner.planInputPartitions()
+
+  override def planInputPartitions(): Array[InputPartition] = innerParts :+ inline
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    val f = inner.createReaderFactory()
+    new WithInlineFactory(f, innerParts.exists(f.supportColumnarReads), schema)
+  }
+}
+
+private[graft] class WithInlineFactory(
+    inner: PartitionReaderFactory,
+    columnar: Boolean,
+    schema: StructType) extends PartitionReaderFactory {
+
+  override def supportColumnarReads(p: InputPartition): Boolean = p match {
+    case _: InlineRowsPartition => columnar
+    case other => inner.supportColumnarReads(other)
+  }
+
+  override def createReader(p: InputPartition): PartitionReader[InternalRow] = p match {
+    case InlineRowsPartition(rows) => new PartitionReader[InternalRow] {
+      private var i = -1
+      override def next(): Boolean = { i += 1; i < rows.length }
+      override def get(): InternalRow = rows(i)
+      override def close(): Unit = ()
+    }
+    case other => inner.createReader(other)
+  }
+
+  override def createColumnarReader(p: InputPartition): PartitionReader[ColumnarBatch] = p match {
+    case InlineRowsPartition(rows) => new PartitionReader[ColumnarBatch] {
+      private var batch: ColumnarBatch = _
+      override def next(): Boolean = batch == null && {
+        batch = org.apache.spark.sql.execution.InlineColumnar.batchOf(rows, schema)
+        true
+      }
+      override def get(): ColumnarBatch = batch
+      override def close(): Unit = if (batch != null) batch.close()
+    }
+    case other => inner.createColumnarReader(other)
+  }
 }
 
 /** A [[PartitioningAwareFileIndex]] backed entirely by catalog metadata:

@@ -125,6 +125,48 @@ class MaterializedViewSpec extends AnyFunSuite {
     assert(got == Map("a" -> (2L, 11L), "b" -> (1L, 2L)))
   }
 
+  test("change feed keeps a thawed single-file delete beside a native DELETE") {
+    // a foreign catalog records a delete file as ONE parquet file with no
+    // part list; in a window that also holds a native DELETE (parts
+    // recorded) its rows used to vanish from the feed and from MV refresh
+    val lake = mkLake()
+    import spark.implicits._
+    lake.createTableAs("main.src", Seq(("a", 1L), ("a", 2L), ("b", 10L), ("c", 5L))
+      .toDF("g", "x").coalesce(1))
+    lake.createMaterializedView("main.mv", "main.src", Seq("g"), Seq("x"))
+    val s0 = lake.currentSnapshot()
+    lake.delete("main.src", col("x") === 2L)
+    val frozen = Files.createTempDirectory("graft_mvdelfreeze").toString
+    lake.freeze(frozen)
+    val cat = s"$frozen/catalog_parquet"
+    val foreign = Files.createTempDirectory("graft_mvdelforeign").toString
+    java.nio.file.Files.list(java.nio.file.Paths.get(cat)).forEach { p =>
+      val name = p.getFileName.toString
+      val df = spark.read.parquet(p.toString)
+      val out = if (name != "ducklake_delete_file.parquet") df else {
+        val dir = df.select("path").collect().map(_.getString(0)).toSeq match {
+          case Seq(one) => one
+          case other => fail(s"expected one delete file, got $other")
+        }
+        val parts = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+          .toArray.map(_.toString).filter(_.endsWith(".parquet")).toSeq
+        assert(parts.size == 1, s"expected one delete part, got $parts")
+        df.withColumn("path", lit(parts.head))
+      }
+      out.write.parquet(s"$foreign/$name")
+    }
+    val thawed = new Lake(spark, Files.createTempDirectory("graft_mvdelthaw").toString)
+    thawed.importCatalog(foreign)
+    assert(thawed.store.state().deleteFiles.forall(_.parts.isEmpty))
+    thawed.delete("main.src", col("x") === 10L)
+    val ch = thawed.tableChanges("main.src", s0, thawed.currentSnapshot())
+      .filter(col("_change_type") === "delete").select("x").collect()
+      .map(_.getLong(0)).sorted.toSeq
+    assert(ch == Seq(2L, 10L))
+    thawed.refreshMaterializedView("main.mv")
+    assert(mvState(thawed) == oracle(thawed))
+  }
+
   test("NULL group keys fold and recompute correctly (null-safe joins)") {
     // regression (r11 review): a using-join's EqualTo never matches NULL
     // with NULL, which split a NULL group into stale+delta rows on every
