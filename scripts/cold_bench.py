@@ -14,7 +14,7 @@ Usage:
 Defaults: /tmp/gsf10, /tmp/verify_out/oracle_sql.json,
 bench_artifacts/COLD.json, and the 5-entry family below (heaviest +
 layout-sensitive: q03 inverts cold per the r13 dossier; the b-twins are
-where the lookahead/bounded-layout cold story lives; t11 is the heavy
+where the bounded-layout cold story lives; t11 is the heavy
 shuffle entry).
 """
 import json, os, subprocess, sys, time

@@ -29,7 +29,7 @@ object Bench {
     sys.env.get("SPARK_GRAFT_MAXPART_MB").foreach(mb =>
       builder.config("spark.sql.files.maxPartitionBytes", s"${mb}MB")
         .config("spark.sql.files.openCostInBytes", s"${256 * 1024}"))
-    // free-form conf overrides for A/B runs: "k=v;k=v" (PerfLab's idiom)
+    // free-form conf overrides for A/B runs: "k=v;k=v"
     sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(';').filter(_.contains("=")).foreach { kv =>
       val Array(k, v) = kv.split("=", 2); builder.config(k, v)
     })
@@ -216,7 +216,7 @@ object Bench {
         s""""runs":${j(sys.env.get("SPARK_GRAFT_RUNS"))},""" +
         s""""cold":$cold,""" +
         s""""only":${j(sys.env.get("SPARK_GRAFT_ONLY"))},""" +
-        s""""fixture_layout":"${spark.conf.get("spark.graft.bucketFixture.layout", "bounded")}"}"""
+        s""""fixture_layout":"${graft.queries.BucketedFacts.Layout}"}"""
     }
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")

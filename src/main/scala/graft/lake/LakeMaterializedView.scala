@@ -809,13 +809,6 @@ object LakeMaterializedView {
               .join(dirty, nullSafeCond(dirty), "left_semi"))
           clean.unionByName(recomputed)
         }
-      // plan-audit hook (r17 optimization evidence): dump the fold plan the
-      // refresh is about to execute; off unless explicitly armed
-      if (lake.spark.conf.getOption("spark.graft.mv.explainRefresh").contains("true"))
-        // scalastyle:off println
-        println(merged.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
-        // scalastyle:on println
       commitMv(merged)
     } finally changes.unpersist()
     cur

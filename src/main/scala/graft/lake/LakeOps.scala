@@ -440,8 +440,8 @@ class Lake(val spark: SparkSession, val root: String,
     * per-table. What the engine CAN do is tell the operator which tables
     * would benefit from the session flip:
     *   - "skew-split": some key group holds >1 file and more than
-    *     skewFactor × the median group's bytes — the per-file split would
-    *     relieve a straggler;
+    *     `NativeParquet.SkewFactor` × the median group's bytes — the
+    *     per-file split would relieve a straggler;
     *   - "ordering": SPJ-groupable and balanced — fused groups keep the
     *     sort-elision report;
     *   - None: not SPJ-groupable (no identity/bucket partition spec, or
@@ -462,9 +462,8 @@ class Lake(val spark: SparkSession, val root: String,
       .map(fs => (fs.map(_._2).sum, fs.size)).toSeq
     val bytes = groups.map(_._1).sorted
     val median = math.max(1L, bytes(bytes.size / 2))
-    val factor = spark.conf.getOption("spark.graft.lake.skewFactor")
-      .map(_.toDouble).getOrElse(4.0)
-    val hot = groups.exists { case (b, n) => n > 1 && b > factor * median }
+    val hot = groups.exists { case (b, n) =>
+      n > 1 && b > org.apache.spark.sql.graft.NativeParquet.SkewFactor * median }
     Some(if (hot) "skew-split" else "ordering")
   }
 

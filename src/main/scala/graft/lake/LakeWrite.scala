@@ -546,8 +546,7 @@ object LakeWrite {
     // hundred MB per part, guide §2.2/§6), not the session shuffle width:
     // a small DELETE gets one part with NO range-sampling job, a 100 TB
     // one still fans out.
-    val rowsPerPart = spark.conf.getOption("spark.graft.delete.rowsPerPart")
-      .flatMap(_.toLongOption).filter(_ > 0).getOrElse(4L << 20)
+    val rowsPerPart = 4L << 20
     val nParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
       (total + rowsPerPart - 1) / rowsPerPart)).toInt

@@ -9,10 +9,10 @@ import org.apache.spark.sql.functions._
   * Catalyst no equi key, so the only available plans are
   * BroadcastNestedLoopJoin / CartesianProduct — O(|points| × |intervals|)
   * predicate evaluations, which stops being a plan and starts being a
-  * wall at cluster scale (RangeBench: 3.3× at 10M × 71 on one machine,
-  * linear in the interval count). The standard decomposition — the same
-  * one DuckDB's IEJoin and Databricks' range-join optimization perform
-  * internally — quantizes the axis into fixed-width bins: each interval
+  * wall at cluster scale (3.3× at 10M × 71 on one machine, BASELINE.md
+  * round 7, linear in the interval count). The standard decomposition —
+  * the same one DuckDB's IEJoin and Databricks' range-join optimization
+  * perform internally — quantizes the axis into fixed-width bins: each interval
   * explodes into the bins it covers (bounded by ceil(len/bin) + 1), each
   * point computes its single bin, and the join becomes a plain shuffled
   * (or broadcast) equi-join on the bin followed by the exact range
@@ -20,8 +20,9 @@ import org.apache.spark.sql.functions._
   * own — so the decomposition introduces no duplicates and needs no
   * post-dedup.
   *
-  * Used by the q24_range_join query entry; `graft.RangeBench` measures
-  * the naive-vs-binned crossover with result equality asserted.
+  * Used by the q24_range_join query entry; `RangeJoinSpec` checks the
+  * result against the naive join and that only the naive one plans a
+  * nested-loop join.
   */
 object RangeJoin {
 

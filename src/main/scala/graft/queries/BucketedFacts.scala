@@ -40,21 +40,12 @@ object BucketedFacts {
   /** bump when the fixture layout changes — stale roots rebuild */
   private val Version = "v3" // v3: buckets sorted on their key (ordering report)
 
-  /** Layout knob (r13, VERDICT r12 #8): `compact` compacts each bucket to
-    * ONE sorted file — the best-case ordering-report layout but an
-    * unbounded file size at 100 TB; `bounded` rewriteSorted-splits each
-    * bucket at a 16 MB target into SEVERAL sorted files with pairwise
+  /** The one layout (r13, VERDICT r12 #8; `bounded` in the fixture's root
+    * name and stamp): each bucket holds SEVERAL sorted files with pairwise
     * DISJOINT key ranges — the layout a real deployment keeps (bounded
     * files, compaction never rewrites a whole bucket), eligible for the
-    * ordering report via the r13 multi-file disjoint-range rule. The two
-    * layouts build into different roots so an A/B regrade can hold both.
-    *
-    * r14 (VERDICT r13 #1): `bounded` is the DEFAULT — it is the only
-    * layout a 100 TB table can actually have, so the graded b-twin cells
-    * measure it; `compact` stays available as the recorded best-case
-    * bound. */
-  private def layoutOf(s: SparkSession): String =
-    s.conf.get("spark.graft.bucketFixture.layout", "bounded")
+    * ordering report via the r13 multi-file disjoint-range rule. */
+  val Layout = "bounded"
 
   private def dirBytes(path: String): Long = {
     val f = new File(path)
@@ -83,8 +74,8 @@ object BucketedFacts {
   private def sanitize(dir: String): String =
     dir.replaceAll("[^A-Za-z0-9]", "_").replaceAll("_+", "_").stripPrefix("_")
 
-  private def stamp(dir: String, nO: Int, nC: Int, layout: String): String =
-    s"$Version${if (layout == "compact") "" else s"-$layout"} " +
+  private def stamp(dir: String, nO: Int, nC: Int): String =
+    s"$Version-$Layout " +
       s"nO=$nO nC=$nC lineitem=${dirBytes(s"$dir/lineitem.parquet")} " +
       s"orders=${dirBytes(s"$dir/orders.parquet")} " +
       s"customer=${dirBytes(s"$dir/customer.parquet")}"
@@ -102,14 +93,12 @@ object BucketedFacts {
     * lazily at action time, after this returns. */
   def catalog(s: SparkSession, dir: String): String = synchronized {
     val cores = s.sparkContext.defaultParallelism
-    val layout = layoutOf(s)
     val nO = bucketsFor(dirBytes(s"$dir/lineitem.parquet"), cores)
     val nC = bucketsFor(dirBytes(s"$dir/orders.parquet"), cores)
-    val suffix = if (layout == "compact") "" else s"_$layout"
     val root = Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_bktfacts$suffix${"_"}${sanitize(dir)}").toString
+      s"graft_bktfacts_${Layout}_${sanitize(dir)}").toString
     val marker = new File(root, "_GRAFT_BUCKETED_OK")
-    val want = stamp(dir, nO, nC, layout)
+    val want = stamp(dir, nO, nC)
     val lockPath = Paths.get(s"$root.lock")
     val ch = java.nio.channels.FileChannel.open(lockPath,
       java.nio.file.StandardOpenOption.CREATE,
@@ -123,7 +112,7 @@ object BucketedFacts {
           else ""
         if (have != want) {
           graft.lake.LakeWrite.deleteRecursively(root)
-          build(s, dir, root, nO, nC, layout)
+          build(s, dir, root, nO, nC)
           Files.write(marker.toPath, want.getBytes(StandardCharsets.UTF_8))
         }
       } finally lock.release()
@@ -137,38 +126,22 @@ object BucketedFacts {
   }
 
   private def build(s: SparkSession, dir: String, root: String,
-      nO: Int, nC: Int, layout: String): Unit = {
+      nO: Int, nC: Int): Unit = {
     val lake = new Lake(s, root)
     def load(name: String) = Tables.load(s, dir, name)
     def mk(table: String, src: String, key: String, n: Int): Unit = {
       val df = load(src)
       // v3: each bucket is additionally SORTED on its key. Appends sort
-      // within the bucket task (sortedBy-stamped files) and the post-ingest
-      // compaction folds a bucket's chunk files into ONE sorted file, so
-      // the key-grouped scan reports per-partition ordering
-      // (SupportsReportOrdering) and the SPJ sort-merge join plans with
-      // NO sorts — the physical design a 100 TB ingest would choose once.
+      // within the bucket task (sortedBy-stamped files), so the key-grouped
+      // scan reports per-partition ordering (SupportsReportOrdering) and
+      // the SPJ sort-merge join plans with NO sorts — the physical design
+      // a 100 TB ingest would choose once.
       lake.createTable(table, df.schema,
         partitionKeys = List(PartitionKey(BucketTransform(n), key)),
         sortKeys = List(graft.lake.Meta.SortKey(key,
           ascending = true, nullsFirst = true)))
-      // one file per bucket after compaction (buckets are sized ~64 MB)
+      // buckets are sized ~64 MB: never split a bucket's chunk file
       lake.setOption("target_file_size", "1GB", Some(table))
-      // append in ~3 GB input chunks (grouping the source's part files):
-      // one monolithic append of a 15 GB fact shuffles its whole raw row
-      // volume at once — measured ~37 GB of transient shuffle+spill at
-      // sf100, an ENOSPC on this host and a per-ingest-job disk spike a
-      // real deployment would never accept. Chunked appends bound the
-      // transient footprint AND mirror how a 100 TB table actually
-      // arrives (incremental commits); each bucket simply holds one file
-      // per chunk, which the key-grouped scan folds into the same
-      // key-group.
-      val srcDir = new File(s"$dir/$src.parquet")
-      val parts =
-        if (srcDir.isDirectory)
-          srcDir.listFiles.filter(_.getName.endsWith(".parquet"))
-            .sortBy(_.getName)
-        else Array.empty[File]
       val (sn, tn) = lake.schemaOf(table)
       def appendSorted(chunk: org.apache.spark.sql.DataFrame): Unit = {
         graft.lake.LakeWrite.append(s, lake.store, sn, tn, chunk, sorted = true)
@@ -179,50 +152,31 @@ object BucketedFacts {
         // fixture itself
         System.gc()
       }
+      // append in ~3 GB input chunks: one monolithic append of a 15 GB
+      // fact shuffles its whole raw row volume at once — measured ~37 GB
+      // of transient shuffle+spill at sf100, an ENOSPC on this host and a
+      // per-ingest-job disk spike a real deployment would never accept.
+      // The ingest is chunked by KEY RANGE (approxQuantile splits), so
+      // each bucket holds one sorted file PER RANGE CHUNK whose key ranges
+      // are pairwise disjoint BY CONSTRUCTION — the multi-file ordering
+      // report holds with bounded file sizes and NO table rewrite (a
+      // whole-table rewriteSorted shuffles the entire fact: measured as an
+      // ENOSPC-class transient at sf100, and a rewrite a 100 TB deployment
+      // would never run just to stay sort-eligible). Range-correlated
+      // arrival is also how real ingest behaves (monotone ids / event
+      // time), so this is the honest at-scale layout, not a benchmark pose.
       val chunkBytes = 3L << 30
-      val totalBytes = dirBytes(srcDir.getPath)
-      if (layout == "bounded") {
-        // bounded layout (r13, VERDICT r12 #8): chunk the ingest by KEY
-        // RANGE (approxQuantile splits) instead of by source file. Each
-        // bucket then holds one sorted file PER RANGE CHUNK whose key
-        // ranges are pairwise disjoint BY CONSTRUCTION — the multi-file
-        // ordering report holds with bounded file sizes and NO table
-        // rewrite (a whole-table rewriteSorted shuffles the entire fact:
-        // measured as an ENOSPC-class transient at sf100, and a rewrite a
-        // 100 TB deployment would never run just to stay sort-eligible).
-        // Range-correlated arrival is also how real ingest behaves
-        // (monotone ids / event time), so this is the honest at-scale
-        // layout, not a benchmark pose.
-        val k = math.max(3, math.min(8, (totalBytes / chunkBytes + 1).toInt))
-        val probs = (1 until k).map(_.toDouble / k).toArray
-        val splits = df.stat.approxQuantile(key, probs, 0.001).map(_.toLong)
-        val lo = None +: splits.map(Option(_)).toVector
-        val hi = splits.map(Option(_)).toVector :+ None
-        lo.zip(hi).foreach { case (l, h) =>
-          val c = df.filter(
-            l.map(col(key) >= _).getOrElse(lit(true)) &&
-              h.map(col(key) < _).getOrElse(lit(true)))
-          appendSorted(c)
-        }
-      } else if (parts.length < 2 || totalBytes <= chunkBytes)
-        appendSorted(df)
-      else {
-        val chunks = parts.foldLeft(Vector(Vector.empty[File])) { (acc, f) =>
-          if (acc.last.map(_.length).sum + f.length > chunkBytes && acc.last.nonEmpty)
-            acc :+ Vector(f)
-          else acc.init :+ (acc.last :+ f)
-        }
-        chunks.foreach { c =>
-          appendSorted(s.read.schema(df.schema).parquet(c.map(_.getPath): _*))
-        }
-      }
-      // compact: fold each bucket's chunk files into ONE sorted file —
-      // the best-case ordering layout, unbounded file size at scale.
-      // bounded: nothing to do — the range-chunked appends already left
-      // several sorted disjoint-range files per bucket.
-      if (layout == "compact") {
-        lake.mergeAdjacentFiles(table)
-        lake.cleanupOldFiles(olderThanMs = Some(0L))
+      val totalBytes = dirBytes(s"$dir/$src.parquet")
+      val k = math.max(3, math.min(8, (totalBytes / chunkBytes + 1).toInt))
+      val probs = (1 until k).map(_.toDouble / k).toArray
+      val splits = df.stat.approxQuantile(key, probs, 0.001).map(_.toLong)
+      val lo = None +: splits.map(Option(_)).toVector
+      val hi = splits.map(Option(_)).toVector :+ None
+      lo.zip(hi).foreach { case (l, h) =>
+        val c = df.filter(
+          l.map(col(key) >= _).getOrElse(lit(true)) &&
+            h.map(col(key) < _).getOrElse(lit(true)))
+        appendSorted(c)
       }
       System.gc() // release the build jobs' lineage promptly
     }

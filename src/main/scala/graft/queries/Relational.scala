@@ -59,12 +59,6 @@ object Relational {
     * oracle's decimal SUM → VARCHAR → DOUBLE. */
   private def sumRevMicros(price: Column, disc: Column): Column =
     sumOfRevMicros(revMicros(price, disc))
-  /** [[sumRevMicros]] exposed for PerfLab A/B variants */
-  def sumRevMicrosPub(price: Column, disc: Column): Column =
-    sumRevMicros(price, disc)
-  /** [[revMicros]] / [[sumOfRevMicros]] exposed for PerfLab A/B variants */
-  def revMicrosPub(price: Column, disc: Column): Column = revMicros(price, disc)
-  def sumOfRevMicrosPub(micros: Column): Column = sumOfRevMicros(micros)
   /** the per-row exact revenue term in 1e-6 units (long) — compute this
     * BEFORE a fact shuffle to exchange one long instead of two doubles */
   private def revMicros(price: Column, disc: Column): Column =
@@ -796,9 +790,9 @@ object Relational {
     }),
 
     // pure range (interval-containment) join via graft.ops.RangeJoin's
-    // binned equi-join decomposition (see its Scaladoc and RangeBench for
-    // the naive-NLJ crossover): marker events (user_id = 0) each open a
-    // 1-hour window; count all events falling inside each window.
+    // binned equi-join decomposition (see its Scaladoc for the naive-NLJ
+    // crossover): marker events (user_id = 0) each open a 1-hour window;
+    // count all events falling inside each window.
     "q24_range_join" -> ((s, dir) => {
       val e = t(s, dir, "events")
       val markers = e.filter(col("user_id") === 0)

@@ -23,7 +23,7 @@ import org.apache.spark.sql.types._
   *
   * Exactness contract: the harvest either reproduces the stats-job's values
   * BIT-IDENTICALLY (same strings the old `min(col).cast(string)` aggregate
-  * produced, verified case-by-case by `graft.FooterStatsProbe`) or returns
+  * produced, pinned case-by-case by `FooterStatsSpec`) or returns
   * None and the caller runs the old job. Fallback triggers:
   *   - INT96 timestamps (no footer stats; the lake writes TIMESTAMP_MICROS
   *     since r17, but foreign sessions may not)

@@ -54,16 +54,15 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * (the fold allocates only fresh local rows, so abandoning is free).
   * Folding preserves the node's output attributes, so parent references
   * never dangle. Disable with `spark.graft.localFold.enabled=false`;
-  * bound with `spark.graft.localFold.maxRows` (default 131072 — small
-  * enough that a folded relation is always a trivial driver allocation,
-  * comfortably under broadcast thresholds).
+  * folds are bounded at `maxRows` = 131072 rows — small enough that a
+  * folded relation is always a trivial driver allocation, comfortably
+  * under broadcast thresholds.
   */
 class LocalFold(session: SparkSession) extends Rule[LogicalPlan] {
 
   private def enabled: Boolean =
     conf.getConfString("spark.graft.localFold.enabled", "true").toBoolean
-  private def maxRows: Long =
-    conf.getConfString("spark.graft.localFold.maxRows", "131072").toLong
+  private val maxRows = 131072L
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!enabled) return plan

@@ -56,6 +56,11 @@ object NativeParquet {
       "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled")
       .exists(_.toBoolean)
 
+  /** a key group is hot (skewed) when it holds more than this many times
+    * the median group's bytes: the key-grouped scan splits it per file,
+    * and `tableInfo` recommends the skew split for its table */
+  val SkewFactor = 4.0
+
   /** V2 transform expression of a lake partition key (SPJ reporting):
     * identity and bucket[N] are the SPJ-groupable transforms; bucket
     * resolves against [[graft.lake.LakeBucketFunction]] through the
@@ -583,7 +588,7 @@ private[graft] class KeyGroupedParquetScan(
       // its append history.
       //
       // r12: the split is DERIVED PER GROUP from the catalog's file-size
-      // histogram (hot = bytes > skewFactor × median group bytes) instead
+      // histogram (hot = bytes > SkewFactor × median group bytes) instead
       // of splitting every group — r11's all-per-file shape cost a few
       // percent of fixed overhead on every small scan (A/B'd at sf10), so
       // uniform tables now keep fused key groups even under the conf.
@@ -592,10 +597,8 @@ private[graft] class KeyGroupedParquetScan(
       // histogram narrows its blast radius to the groups that need it.)
       val bytes = groups.map(_._2.map(_._2).sum)
       val median = { val s = bytes.sorted; math.max(1L, s(s.size / 2)) }
-      val factor = spark.conf.getOption("spark.graft.lake.skewFactor")
-        .map(_.toDouble).getOrElse(4.0)
       groups.zip(bytes).flatMap { case ((key, fs), b) =>
-        if (fs.lengthCompare(1) > 0 && b > factor * median)
+        if (fs.lengthCompare(1) > 0 && b > NativeParquet.SkewFactor * median)
           fs.map(f => KeyedFilePartition(EpochedFilePartition(
             FilePartition(0, Array(pf(f._1, f._2))),
             Array(epochs.epochOf(f._1))), key): InputPartition)
@@ -604,30 +607,16 @@ private[graft] class KeyGroupedParquetScan(
     } else groups.map { case (key, fs) => fused(key, fs) }.toArray
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val inner = new EpochDispatchFactory(
+  // a FUSED key-group partition reads its files back to back, each
+  // boundary paying a footer read + row-group planning. Building file
+  // i+1's reader on a background thread while file i streams measured
+  // slower on a warm local[32] box (b-twins at sf100 bounded: 8.87/17.42 s
+  // vs 8.38/17.00 s serial for q05b/q07b — BASELINE.md r14), so the chain
+  // stays serial.
+  override def createReaderFactory(): PartitionReaderFactory =
+    new UnwrapKeyedFactory(new EpochDispatchFactory(
       NativeParquet.epochFactories(spark, groups.flatMap(_._2), dataSchema,
-        requiredSchema, filters, epochs),
-      lookahead0, threads0)
-    // r14 (VERDICT r13 #1): a FUSED key-group partition chains its files
-    // serially — each boundary pays footer read + row-group planning. The
-    // lookahead factory builds file i+1's reader on a background thread
-    // while file i streams. Default OFF after measurement: on a WARM
-    // local[32] box the per-file setup is page-cached CPU work, so the
-    // extra threads only contend with saturated compute (b-twins at sf100
-    // bounded: ON 8.87/17.42 s vs OFF 8.38/17.00 s for q05b/q07b; a
-    // 16-thread pool measured no better — BASELINE.md r14). The knob
-    // exists for COLD object storage, where a footer read is a network
-    // RTT the chain otherwise stalls on.
-    new UnwrapKeyedFactory(inner)
-  }
-
-  private def lookahead0: Boolean = spark.conf
-    .getOption("spark.graft.lake.lookaheadReaders").exists(_.toBoolean)
-  // resolve the pool-size knob DRIVER-side from the session conf (the
-  // executor singleton would only see the static SparkConf) and ship it
-  private def threads0: Option[Int] = spark.conf
-    .getOption("spark.graft.lake.prefetchThreads").map(_.toInt)
+        requiredSchema, filters, epochs)))
 }
 
 private[graft] case class KeyedFilePartition(inner: InputPartition, key: InternalRow)
@@ -660,13 +649,9 @@ private[graft] class UnwrapKeyedFactory(inner: PartitionReaderFactory)
   * epoch's translated parquet factory. Epoch-uniform partitions delegate
   * wholesale — Spark's own multi-file iteration and columnar batching,
   * zero overhead on the rename-free path — while a fused group mixing
-  * pre- and post-rename files chains per-file readers. With `lookahead`
-  * on, a multi-file partition reads through [[LookaheadChainReader]]
-  * (file i+1's reader builds while file i streams). */
+  * pre- and post-rename files chains per-file readers. */
 private[graft] class EpochDispatchFactory(
-    factories: IndexedSeq[PartitionReaderFactory],
-    lookahead: Boolean = false,
-    prefetchThreads: Option[Int] = None)
+    factories: IndexedSeq[PartitionReaderFactory])
   extends PartitionReaderFactory {
 
   private def asEpoched(p: InputPartition): (FilePartition, Array[Int]) = p match {
@@ -685,16 +670,11 @@ private[graft] class EpochDispatchFactory(
   private def make[T](fp: FilePartition, es: Array[Int],
       one: (Int, InputPartition) => PartitionReader[T],
       whole: Int => PartitionReader[T]): PartitionReader[T] = {
-    val uniform = es.isEmpty || es.forall(_ == es(0))
-    if (uniform && !(lookahead && fp.files.length > 1))
+    if (es.isEmpty || es.forall(_ == es(0)))
       whole(if (es.isEmpty) 0 else es(0))
     else {
       val parts = singles(fp)
-      def epochAt(i: Int) = if (es.isEmpty) 0 else es(i)
-      val create = (i: Int) => one(epochAt(i), parts(i))
-      if (lookahead && parts.length > 1)
-        new LookaheadChainReader[T](parts, create, prefetchThreads)
-      else new ChainReader[T](parts.length, create)
+      new ChainReader[T](parts.length, i => one(es(i), parts(i)))
     }
   }
 
@@ -710,7 +690,7 @@ private[graft] class EpochDispatchFactory(
   }
 }
 
-/** serial per-file reader chain (no prefetch): files of one partition read
+/** serial per-file reader chain: files of one partition read
   * back-to-back, each reader built on demand by index */
 private[graft] class ChainReader[T](n: Int, create: Int => PartitionReader[T])
   extends PartitionReader[T] {
@@ -731,115 +711,6 @@ private[graft] class ChainReader[T](n: Int, create: Int => PartitionReader[T])
   }
   override def get(): T = current.get()
   override def close(): Unit = if (current != null) current.close()
-}
-
-/** executor-side shared pool for reader prefetch: sized by the
-  * `spark.graft.lake.prefetchThreads` SESSION conf (resolved driver-side
-  * and shipped with the factory; default: half the executor's cores,
-  * min 4) — too narrow and a wave of tasks hitting file boundaries
-  * together queues behind the pool, inverting the benefit. The size is
-  * pinned at first use for the executor's lifetime. */
-private[graft] object ReaderPrefetch {
-  @volatile private var shared: java.util.concurrent.ExecutorService = _
-  def pool(sizeHint: Option[Int]): java.util.concurrent.ExecutorService = {
-    val p = shared
-    if (p != null) p
-    else synchronized {
-      if (shared == null) {
-        val n = sizeHint.getOrElse(
-          math.max(4, Runtime.getRuntime.availableProcessors() / 2))
-        shared = java.util.concurrent.Executors.newFixedThreadPool(n, r => {
-          val t = new Thread(r, "graft-reader-prefetch")
-          t.setDaemon(true)
-          t
-        })
-      }
-      shared
-    }
-  }
-}
-
-/** Chains single-file readers over a fused key-group's files with ONE-file
-  * lookahead: while file i streams, file i+1's reader (footer read,
-  * row-group planning, filter pushdown) is created on [[ReaderPrefetch]]'s
-  * pool under the caller's TaskContext — the per-file setup latency the
-  * bounded multi-file layout pays at every boundary overlaps with compute
-  * instead of stalling the task. At most two readers are open per task. */
-private[graft] class LookaheadChainReader[T](
-    parts: IndexedSeq[InputPartition],
-    create: Int => PartitionReader[T],
-    prefetchThreads: Option[Int] = None) extends PartitionReader[T] {
-
-  private val tc = org.apache.spark.TaskContext.get()
-  private var idx = 0
-  private var current: PartitionReader[T] = _
-  private var pending: java.util.concurrent.Future[PartitionReader[T]] = _
-  // close-vs-construction handoff: the pool thread publishes the reader it
-  // built here BEFORE re-checking `closed`, so a close() racing with an
-  // in-flight construction either claims the reader via getAndSet (and
-  // closes it) or the pool thread sees `closed` and closes its own work —
-  // exactly one side wins, and close() never BLOCKS on the construction
-  @volatile private var closed = false
-  private val pendingMade =
-    new java.util.concurrent.atomic.AtomicReference[PartitionReader[T]]()
-
-  private def submit(i: Int): Unit =
-    pending =
-      if (i >= parts.length) null
-      else ReaderPrefetch.pool(prefetchThreads).submit(
-        new java.util.concurrent.Callable[PartitionReader[T]] {
-          override def call(): PartitionReader[T] = {
-            // reader creation may consult the task context (metrics,
-            // completion listeners) — propagate the caller's
-            val prev = org.apache.spark.TaskContext.get()
-            org.apache.spark.TaskContext.setTaskContext(tc)
-            val r = try create(i)
-              finally org.apache.spark.TaskContext.setTaskContext(prev)
-            pendingMade.set(r)
-            if (closed) {
-              val mine = pendingMade.getAndSet(null.asInstanceOf[PartitionReader[T]])
-              if (mine != null) try mine.close() catch { case _: Exception => () }
-            }
-            r
-          }
-        })
-
-  override def next(): Boolean = {
-    while (true) {
-      if (current == null) {
-        if (idx >= parts.length) return false
-        current =
-          if (pending != null) {
-            val r = pending.get()
-            pendingMade.set(null.asInstanceOf[PartitionReader[T]])
-            r
-          } else create(idx)
-        pending = null
-        idx += 1
-        submit(idx)
-      }
-      if (current.next()) return true
-      current.close()
-      current = null
-    }
-    false // unreachable
-  }
-
-  override def get(): T = current.get()
-
-  override def close(): Unit = {
-    // a task dying mid-chain must not leak the prefetched reader — even
-    // when closing the current one throws. Never BLOCK on a construction
-    // still in flight (on cold object storage that's a network RTT per
-    // killed task): cancel if unstarted, claim via the handoff otherwise.
-    closed = true
-    try { if (current != null) current.close() }
-    finally if (pending != null) {
-      pending.cancel(false)
-      val made = pendingMade.getAndSet(null.asInstanceOf[PartitionReader[T]])
-      if (made != null) try made.close() catch { case _: Exception => () }
-    }
-  }
 }
 
 /** Clean ungrouped scan over a table with RENAME COLUMN epochs: files are

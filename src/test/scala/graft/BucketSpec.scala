@@ -106,6 +106,15 @@ class BucketSpec extends AnyFunSuite {
         s"co-bucketed join still shuffled:\n$plan")
       // oracle: both sides have k = id % 500; ba 4 rows/k, bb 3 rows/k
       assert(q.collect().head.getLong(0) == 500L * 4 * 3)
+      // value-bearing: the bucketed join equals the same join over plain
+      // (non-lake) frames of the same rows
+      val sumQ = "SELECT count(*) AS n, sum(a.v * b.v) AS s " +
+        "FROM %s a JOIN %s b ON a.k = b.k"
+      def plain(rows: Long) = spark.range(0, rows).selectExpr("id % 500 AS k", "id AS v")
+      plain(2000).createOrReplaceTempView("bspj_plain_a")
+      plain(1500).createOrReplaceTempView("bspj_plain_b")
+      assert(spark.sql(sumQ.format(s"$cat.main.ba", s"$cat.main.bb")).collect().toSeq ==
+        spark.sql(sumQ.format("bspj_plain_a", "bspj_plain_b")).collect().toSeq)
     } finally {
       spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -842,7 +851,7 @@ class BucketSpec extends AnyFunSuite {
     // writer groups by the LIVE spec (LakeWrite partitioned branch), so one
     // range shuffle absorbs every pre-spec file into the bucketed layout
     // and the SAME tables' join flips from both-sides-shuffle to the
-    // storage-partitioned shape. BucketBench measures the one-off cost.
+    // storage-partitioned shape.
     val lake = new Lake(spark, Files.createTempDirectory("graft_bmig").toString)
     def mkRaw(name: String, rows: Long): Unit = {
       lake.createTable(s"main.$name",
@@ -864,6 +873,9 @@ class BucketSpec extends AnyFunSuite {
       assert(before.contains("Exchange hashpartitioning"),
         s"raw join should shuffle before migration:\n$before")
       assert(q().head.getLong(0) == expected)
+      def sums() = spark.sql(s"SELECT sum(a.v * b.v) AS s " +
+        s"FROM $cat.main.ma a JOIN $cat.main.mb b ON a.k = b.k").head.getLong(0)
+      val rawSums = sums()
 
       Seq("main.ma", "main.mb").foreach { t =>
         lake.setPartition(t, List(PartitionKey(BucketTransform(8), "k")))
@@ -886,6 +898,7 @@ class BucketSpec extends AnyFunSuite {
       assert(!after.contains("Exchange hashpartitioning"),
         s"join must plan ZERO exchanges after the in-place migration:\n$after")
       assert(q().head.getLong(0) == expected)
+      assert(sums() == rawSums, "migrated join disagrees with the raw join")
       // and a point lookup now prunes to the literal's one bucket
       val e = st.tableAt("main", "ma", st.currentSnapshotId).get
       val ct = st.columnsAt(e.tableId, st.currentSnapshotId)

@@ -55,6 +55,19 @@ class LakeSpec extends AnyFunSuite {
       .select("snapshot_id").collect().map(_.getLong(0)).min
     assert(spark.sql(s"SELECT count(*) FROM $cat.main.t VERSION AS OF $insertSnap")
       .collect().head.getLong(0) == 3)
+    // a filtered grouped aggregate through the catalog equals the same SQL
+    // over the plain parquet it was loaded from
+    val plainDir = Files.createTempDirectory("graft_cat_plain").toString + "/li"
+    spark.range(0, 3000).selectExpr("CAST(id % 3 AS STRING) AS flag",
+        "CAST(id % 50 AS DECIMAL(12,2)) AS qty",
+        "date_add(DATE '1998-01-01', CAST(id % 400 AS INT)) AS ship")
+      .write.parquet(plainDir)
+    spark.read.parquet(plainDir).createOrReplaceTempView("cat_li_plain")
+    spark.sql(s"CREATE TABLE $cat.main.li AS SELECT * FROM cat_li_plain")
+    def agg(from: String) = spark.sql(s"SELECT flag, sum(qty) AS q, count(*) AS n " +
+      s"FROM $from WHERE ship <= DATE '1998-09-02' GROUP BY flag")
+      .collect().map(_.toString).sorted.toSeq
+    assert(agg(s"$cat.main.li") == agg("cat_li_plain"))
     // overwrite
     spark.sql(s"INSERT OVERWRITE $cat.main.t VALUES (9, 900)")
     assert(spark.sql(s"SELECT * FROM $cat.main.t").collect().map(_.getInt(0)).toSeq == Seq(9))

@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.ops.RangeJoin property check: the binned decomposition must equal
   * the naive range join on seeded random data whose intervals span MANY
-  * bins (q24 and RangeBench only exercise 1-hour windows → ≤ 2 bins;
+  * bins (q24 only exercises 1-hour windows → ≤ 2 bins;
   * here lengths run 0 s to 10 h, covering zero-length, sub-bin,
   * bin-aligned and 11-bin fan-outs), including points exactly on bin and
   * interval boundaries. */
@@ -30,12 +30,20 @@ class RangeJoinSpec extends AnyFunSuite {
       (j.toLong, new Timestamp(s), new Timestamp(s + lenMs))
     }.toDF("iid", "istart", "iend")
 
-    val binned = graft.ops.RangeJoin
+    val binnedDf = graft.ops.RangeJoin
       .contains(points, intervals, "pt", "istart", "iend")
-      .select("iid", "pid").as[(Long, Long)].collect().sorted.toSeq
-    val naive = intervals.join(points,
-        col("pt") >= col("istart") && col("pt") < col("iend"))
-      .select("iid", "pid").as[(Long, Long)].collect().sorted.toSeq
+    val naiveDf = intervals.join(points,
+      col("pt") >= col("istart") && col("pt") < col("iend"))
+    // the decomposition is the point: with no equi key the naive join can
+    // only plan a nested-loop (or cartesian) join, the binned one never does
+    val nPlan = naiveDf.queryExecution.executedPlan.toString
+    assert(nPlan.contains("BroadcastNestedLoop") || nPlan.contains("CartesianProduct"),
+      s"naive join unexpectedly avoided the quadratic plan:\n$nPlan")
+    val bPlan = binnedDf.queryExecution.executedPlan.toString
+    assert(!bPlan.contains("BroadcastNestedLoop") && !bPlan.contains("CartesianProduct"),
+      s"binned join fell back to a quadratic plan:\n$bPlan")
+    val binned = binnedDf.select("iid", "pid").as[(Long, Long)].collect().sorted.toSeq
+    val naive = naiveDf.select("iid", "pid").as[(Long, Long)].collect().sorted.toSeq
 
     assert(naive.nonEmpty, "test data produced no matches — not a real check")
     assert(binned == naive,
