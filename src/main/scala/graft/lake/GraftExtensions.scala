@@ -68,8 +68,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // SELECT from catalog-qualified stored views (Spark 4.1 ships the
     // ViewCatalog interface but no read rule)
     ext.injectResolutionRule(new ResolveLakeViewRead(_))
-    // size-based broadcast for tier-3 lake scans (V1ScanWrapper hides stats)
-    ext.injectPreCBORule(new LakeJoinHint(_))
     // variant_get predicates → file pruning on recorded variant path stats
     ext.injectOptimizerRule(new LakeVariantPruning(_))
     // opt-in MV query rewrite: matching grouped aggregates served from the

@@ -259,10 +259,8 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
       override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit =
         throw new UnsupportedOperationException("frozen mount is read-only")
       override def scanDF(spark: SparkSession,
-          filters: Seq[org.apache.spark.sql.sources.Filter],
-          withRowMeta: Boolean): org.apache.spark.sql.DataFrame =
-        LakeRead.scanDF(spark, this.st, entry.tableId, s, filters,
-          withRowMeta = withRowMeta)
+          filters: Seq[org.apache.spark.sql.sources.Filter]): org.apache.spark.sql.DataFrame =
+        LakeRead.scanDF(spark, this.st, entry.tableId, s, filters)
     }
     else new LakeTable(effectiveStore, ns(ident), ident.name(), s, st)
   }

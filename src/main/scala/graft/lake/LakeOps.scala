@@ -1767,8 +1767,8 @@ class Lake(val spark: SparkSession, val root: String,
     val rows = Vector(
       "max_retry_count" -> conf("maxRetryCount", "20"),
       "metadata_backend" -> backend,
-      "native_scan" -> spark.conf
-        .getOption("spark.graft.lake.nativeScan").getOrElse("true"),
+      // every SQL read is native; the row stays for catalog parity
+      "native_scan" -> "true",
       "retry_backoff" -> conf("retryBackoff", "2.0"),
       "retry_wait_ms" -> conf("retryWaitMs", "5")).map(kv => Row(kv._1, kv._2))
     spark.createDataFrame(rows.toList.asJava, StructType(Seq(

@@ -20,11 +20,11 @@ import Meta._
   *                               the native tier serves the same rows)
   *   ∖ live delete files:        anti-join on (file, position)
   *
-  * SQL reads run on the native tier ([[LakeNativeScan]]) whenever
-  * [[LakeTable.nativePlan]] admits the snapshot; this composition serves
-  * the rest (`_row_id` reads, file epochs the parquet reader cannot map,
-  * `spark.graft.lake.nativeScan=false`) and every API, DML, change-feed
-  * and MV read, which call [[scanDF]] directly.
+  * SQL reads never come here: they run on [[LakeNativeScan]], Spark's
+  * own parquet readers over the same files, epochs, deletes and inline
+  * rows. This composition is the reader of the `Lake` API, DML, the change
+  * feed and MV refresh, which call [[scanDF]] directly, and the reference
+  * the native scan is tested against.
   *
   * All per-file work (pruning, schema grouping, row-id bases) is
   * driver-side O(files) — the same metadata weight class as Delta/Iceberg;
@@ -166,7 +166,7 @@ object LakeRead {
   /** value of a constant SQL expression (an existence default) cast to
     * `to`, resolved by the session analyzer the way `expr(sql).cast(to)`
     * is, then evaluated on the driver */
-  private def evalConstant(spark: SparkSession, sql: String, to: DataType): Any = {
+  private[lake] def evalConstant(spark: SparkSession, sql: String, to: DataType): Any = {
     import org.apache.spark.sql.catalyst.plans.logical.{OneRowRelation, Project}
     val parsed = spark.sessionState.sqlParser.parseExpression(sql)
     val plan = spark.sessionState.analyzer.execute(

@@ -1,18 +1,17 @@
 package graft.lake
 
 import java.util
-import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
-import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.expressions.NamedReference
-import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering, V1Scan}
+import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, Statistics, SupportsPushDownFilters, SupportsPushDownRequiredColumns, SupportsReportPartitioning, SupportsReportStatistics, SupportsRuntimeFiltering}
 import org.apache.spark.sql.connector.read.partitioning.{Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, SupportsTruncate, V1Write, Write, WriteBuilder}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, InsertableRelation, TableScan}
+import org.apache.spark.sql.sources.{Filter, InsertableRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import scala.jdk.CollectionConverters._
@@ -24,11 +23,12 @@ import Meta._
   * Read path: `ScanBuilder` receives pushed filters + required columns,
   * prunes the FILE LIST driver-side (snapshot interval + hidden-partition
   * values + per-file min/max stats — reference A2), then hands Spark a
-  * `V1Scan` whose relation materializes the merge-on-read DataFrame
-  * composition from [[LakeRead]]. Filters are also reported back as
-  * residuals, so Catalyst re-applies them on rows AND pushes them into the
-  * underlying parquet scan — files we can't prove prunable still get
-  * row-group-level skipping for free.
+  * [[LakeNativeScan]]: Spark's own DSv2 parquet readers over the pruned
+  * files, with delete positions, inline rows, schema epochs and `_row_id`
+  * served inside the scan. Filters are also reported back as residuals,
+  * so Catalyst re-applies them on rows AND the readers use them for
+  * row-group skipping — files we can't prove prunable still get it for
+  * free.
   *
   * Write path: `V1Write`/`InsertableRelation` routes into
   * [[LakeWrite.append]] — Spark's own distributed parquet writer does the
@@ -58,8 +58,10 @@ class LakeTable(
   /** the upstream-DuckLake `rowid` virtual column as a DSv2 metadata
     * column: `SELECT _row_id, * FROM lake.main.t` surfaces stable row
     * lineage (implicit ids = file.firstRowId + position; survivors keep
-    * their id across UPDATE rewrites). Referencing it routes the scan to
-    * the composed tier, which already materializes row identity. */
+    * their id across UPDATE rewrites). The native scan serves it on its
+    * row tier: firstRowId + the parquet row index for implicit-id files,
+    * the stored `_graft_row_id` for explicit-id files, the decoded id for
+    * inline rows. */
   override def metadataColumns(): Array[MetadataColumn] = Array(
     new MetadataColumn {
       override def name(): String = LakeTable.RowIdMetaCol
@@ -122,25 +124,12 @@ class LakeTable(
     LakeWrite.delete(SparkSession.active, store, schemaName, tableName, cond)
   }
 
-  /** fresh snapshot-scoped DataFrame (used by the scan and by LakeOps);
-    * variantPrune joins the pushed filters for FILE pruning only (scanDF
-    * uses filters solely to prune the file list) */
-  def scanDF(spark: SparkSession, filters: Seq[Filter] = Nil,
-      withRowMeta: Boolean = false): DataFrame =
+  /** fresh snapshot-scoped DataFrame of the composed reader
+    * ([[LakeRead.scanDF]]); variantPrune joins the filters for FILE pruning
+    * only (scanDF uses filters solely to prune the file list) */
+  def scanDF(spark: SparkSession, filters: Seq[Filter] = Nil): DataFrame =
     LakeRead.scanDF(spark, store.state(), entry.tableId, snapshot,
-      filters ++ variantPrune, withRowMeta = withRowMeta)
-
-  /** Physical footprint from metadata (exact for parquet, estimated for
-    * inline JSON rows). Reported as the V1 relation's `sizeInBytes` so the
-    * join planner can auto-broadcast a small lake table — without it a V1
-    * relation defaults to `defaultSizeInBytes` (effectively infinite) and a
-    * lake dim table would never be the broadcast side. The native tiers
-    * already report this through `MetadataFileIndex.sizeInBytes`. */
-  private[lake] def estimatedSizeInBytes: Long = {
-    val tid = entry.tableId
-    st.filesAt(tid, snapshot).map(_.fileSizeBytes).sum +
-      st.inlinedAt(tid, snapshot).map(_.rowsJson.map(_.length.toLong).sum).sum
-  }
+      filters ++ variantPrune)
 
   /** Columns on which runtime (DPP) filters can prune files: hidden
     * partition source columns (pruned via recorded per-file values) and
@@ -154,18 +143,6 @@ class LakeTable(
       st.sortKeysAt(entry.tableId, snapshot).map(_.expr).filter(names))
       .distinct.toArray
   }
-
-  /** type widenings Spark's parquet reader performs natively (probed on
-    * 4.1: int32 physical reads as int/long/double, float as double), so an
-    * ALTER TYPE widening keeps old epochs on the native tier */
-  private def widensTo(from: String, to: String): Boolean =
-    (from.toLowerCase, to.toLowerCase) match {
-      case ("tinyint", "smallint" | "int" | "bigint") => true
-      case ("smallint", "int" | "bigint") => true
-      case ("int", "bigint" | "double") => true
-      case ("float", "double") => true
-      case _ => false
-    }
 
   /** storage-partitioned-join value of one stored partition string, typed
     * for an InternalRow; None = type/value not SPJ-safe → don't report */
@@ -355,96 +332,62 @@ class LakeTable(
     Some((pks.toArray, grouped))
   }
 
-  /** live row count from metadata (upper bound: delete files subtracted,
-    * but un-pruned filters aren't modeled) */
-  private[lake] def estimatedRowCount: Long = {
-    val tid = entry.tableId
-    (st.filesAt(tid, snapshot).map(_.rowCount).sum +
-      st.inlinedAt(tid, snapshot).map(_.rowsJson.length.toLong).sum -
-      st.deleteFilesAt(tid, snapshot).map(_.deleteCount).sum).max(0L)
-  }
-
-  /** Native-scan eligibility: every live file's schema epoch is readable
+  /** The native scan's file plan. Every live file's schema epoch is read
     * by Spark's BY-NAME parquet reader under the scan snapshot's schema,
     * resolving by COLUMN ID across renames:
-    *   - every current column maps to an epoch column by columnId with an
-    *     equal or natively-widening type — under its epoch name when it
-    *     was renamed since (the scan reads that epoch's files with the
-    *     translated name; rows are positional, so downstream is
-    *     name-blind), or
-    *   - it is genuinely NEW (columnId unseen in the epoch), nullable
-    *     with no existence default (null-fills natively; a DEFAULT needs
-    *     the composed plan's fill), and its name shadows no epoch column
-    *     (a dropped-and-readded name must not leak predecessor data).
+    *   - a current column the epoch has (same columnId) reads under its
+    *     epoch name when it was renamed since (rows are positional, so
+    *     downstream is name-blind); its type must equal or promote from
+    *     the epoch's ([[Meta.typePromotes]], the rule ALTER TYPE enforces —
+    *     the parquet readers widen every such pair natively);
+    *   - a column NEW since the epoch (columnId unseen) is missing from its
+    *     files, so the reader fills its existence default, or null. When
+    *     its name is one the epoch used for another column (dropped and
+    *     re-added), it reads under a name the files lack, so the
+    *     predecessor's data never leaks into it.
     * DROPPED epoch columns are simply ignored by the reader.
-    * Non-widening type changes keep the old epoch ineligible (the reader
-    * doesn't cast). Then the scan runs on Spark's own DSv2 parquet path:
-    * columnar when the snapshot also has no delete files, or the
-    * delete-aware row path (executor-local position skipping — the delete
-    * set never travels) when it does. Live inline batches never block the
-    * tier: [[LakeNativeScan]] decodes them once per scan
-    * ([[LakeRead.decodeInline]], any schema epoch) and serves them as one
-    * extra input partition. What keeps the composed V1 plan: a `_row_id`
-    * request, a file epoch lacking a column that has an existence default
-    * or whose type changed without native widening, and
-    * `spark.graft.lake.nativeScan=false`.
     * Returns the stats/partition-pruned live files (layout metadata
     * normalized to current names), per-file delete parts, and the
     * per-epoch current→old read renames (schemaVersion → map; identity
     * epochs omitted). */
   private[lake] def nativePlan(filters: Seq[Filter])
-      : Option[(Vector[DataFileEntry], Map[String, Seq[String]], Map[Long, Map[String, String]])] = {
+      : (Vector[DataFileEntry], Map[String, Seq[String]], Map[Long, Map[String, String]]) = {
     val tid = entry.tableId
     val sig = cols.map(c => (c.columnId, c.name, c.dataType))
-    // Per-epoch eligibility BY COLUMN ID (VERDICT r14 #2): matching by
+    // Per-epoch translation BY COLUMN ID (VERDICT r14 #2): matching by
     // name alone made a renamed nullable column look like drop+add, and
-    // the by-name reader silently null-filled its old files. Each current
-    // column must resolve in the epoch by columnId (name may differ →
-    // recorded as a current→old READ rename the native readers apply
-    // per epoch; type must be equal or natively widening), or be
-    // genuinely NEW (columnId unseen) and nullable with no existence
-    // default — and its name must not collide with any epoch column
-    // (a dropped-and-readded name would leak predecessor data by-name).
-    // Epoch columns absent from the current set were dropped; the by-name
-    // reader ignores them, and they cannot shadow a translated read name
-    // (translated names are the epoch's own, unique within it).
-    def epochRename(sv: Long): Option[Map[String, String]] = {
+    // the by-name reader silently null-filled its old files. Translated
+    // names are the epoch's own, unique within it, so an epoch column
+    // dropped since cannot shadow one.
+    def epochRename(sv: Long): Map[String, String] = {
       val old = st.columnsAt(tid, sv)
-      if (old.map(c => (c.columnId, c.name, c.dataType)) == sig)
-        return Some(Map.empty)
+      if (old.map(c => (c.columnId, c.name, c.dataType)) == sig) return Map.empty
       val oldById = old.map(c => c.columnId -> c).toMap
       val oldNames = old.map(_.name).toSet
-      var renames = Map.empty[String, String]
-      cols.foreach { c =>
+      cols.flatMap { c =>
         oldById.get(c.columnId) match {
           case Some(o) =>
-            if (o.dataType != c.dataType && !widensTo(o.dataType, c.dataType))
-              return None
-            if (o.name != c.name) renames += (c.name -> o.name)
-          case None =>
-            if (c.existsDefault.nonEmpty || !c.nullable || oldNames.contains(c.name))
-              return None
+            if (!Meta.typePromotes(o.dataType, c.dataType))
+              throw new UnsupportedOperationException(s"${name()}.${c.name}: " +
+                s"files of schema version $sv store ${o.dataType}, which does " +
+                s"not promote to ${c.dataType}")
+            if (o.name != c.name) Some(c.name -> o.name) else None
+          case None if oldNames(c.name) => Some(c.name -> s"_graft_absent_${c.columnId}")
+          case None => None
         }
-      }
-      Some(renames)
+      }.toMap
     }
     val files = st.filesAt(tid, snapshot)
-    val epochs = scala.collection.mutable.Map.empty[Long, Map[String, String]]
-    files.map(_.schemaVersion).distinct.foreach { sv =>
-      epochRename(sv) match {
-        case Some(m) => if (m.nonEmpty) epochs(sv) = m
-        case None => return None
-      }
-    }
+    val epochMap = files.map(_.schemaVersion).distinct
+      .map(sv => sv -> epochRename(sv)).filter(_._2.nonEmpty).toMap
     // layout metadata normalized to the scan snapshot's names (pruning,
     // SPJ grouping and the ordering report all match on CURRENT names)
     val normed = files.map(st.fileNamesAt(tid, snapshot))
     val pruned = Pruning.prune(normed, st.statsForAt(tid, snapshot, normed),
       cols.map(c => c.name -> c.dataType).toMap,
       st.partitionKeysAt(tid, snapshot), filters ++ variantPrune)
-    val epochMap = epochs.toMap
     val deletes = st.deleteFilesAt(tid, snapshot)
-    if (deletes.isEmpty) return Some((pruned, Map.empty, epochMap))
+    if (deletes.isEmpty) return (pruned, Map.empty, epochMap)
     // per-file delete parts come straight from metadata (recorded at write
     // time, VERDICT r4 #5) — zero filesystem RPCs per scan. The listStatus
     // fallback only fires for entries written before `parts` existed
@@ -467,7 +410,7 @@ class LakeTable(
         }
       }
     }
-    Some((pruned, byFile.toMap, epochMap))
+    (pruned, byFile.toMap, epochMap)
   }
 }
 
@@ -499,20 +442,16 @@ private[lake] class LakeScanBuilder(table: LakeTable) extends ScanBuilder
       table.tableName, table.st.currentSnapshotId)
     LakeEncryption.ensureReadConfFor(session, table.st, table.entry.tableId,
       table.snapshot)
-    // the _row_id metadata column only exists on the composed tier
-    val wantsRowId = required.exists(_.fieldNames.contains(LakeTable.RowIdMetaCol))
-    val native = !wantsRowId && session.conf
-      .getOption("spark.graft.lake.nativeScan").forall(_.toBoolean)
-    (if (native) table.nativePlan(pushed.toSeq) else None) match {
-      case Some(initial) => new LakeNativeScan(session, table, pushed, required, initial)
-      case None => new LakeScan(table, pushed, required)
-    }
+    new LakeNativeScan(session, table, pushed, required, table.nativePlan(pushed.toSeq))
   }
 }
 
-/** Native-tier scan with runtime file pruning (dynamic partition pruning).
+/** The lake table scan, with runtime file pruning (dynamic partition
+  * pruning).
   *
-  * Wraps the tier-1/2 parquet scans and implements
+  * Wraps the parquet scans of [[org.apache.spark.sql.graft.NativeParquet]]
+  * (columnar when no delete overlay is live and no `_row_id` is asked for,
+  * the delete-aware row tier otherwise) and implements
   * `SupportsRuntimeFiltering` over the HIDDEN partition source columns:
   * when the optimizer derives a DPP subquery from a join (fact joined to a
   * filtered dim on a partition column), the runtime `In` filter re-runs
@@ -525,7 +464,7 @@ private[lake] class LakeScanBuilder(table: LakeTable) extends ScanBuilder
   * region = 'ASIA'` reads only the matching partition files.
   *
   * Also re-exports metadata statistics (the wrapper would otherwise hide
-  * the inner `FileScan`'s stats exactly like Spark's V1ScanWrapper does).
+  * the inner `FileScan`'s stats), which size-based join broadcasting uses.
   *
   * Live inline batches ride along as ONE extra input partition of rows
   * decoded on the driver ([[LakeRead.decodeInline]]), read in the parquet
@@ -534,6 +473,11 @@ private[lake] class LakeScanBuilder(table: LakeTable) extends ScanBuilder
   * Spark re-applies every pushed filter above the scan, so the partition
   * needs neither an anti-join nor a filter. While it is live the scan
   * reports no key grouping and no ordering (one partition holds every key).
+  *
+  * A `_row_id` request reads on the delete-aware row tier, which already
+  * reads the parquet row index: implicit-id files yield firstRowId + row
+  * index, explicit-id files their stored `_graft_row_id` (a per-file read
+  * rename), inline rows the id [[LakeRead.decodeInline]] emits.
   */
 private[graft] class LakeNativeScan(
     session: SparkSession,
@@ -550,13 +494,26 @@ private[graft] class LakeNativeScan(
   private var epochRenames: Map[Long, Map[String, String]] = initial._3
   private val inlineBatches = table.st.inlinedAt(table.entry.tableId, table.snapshot)
   private val inlineRowCount = inlineBatches.map(_.rowsJson.size.toLong).sum
+  /** whether the `_row_id` metadata column is read (a data column of that
+    * name would hide it) */
+  private val rowIds = required.exists(_.fieldNames.contains(LakeTable.RowIdMetaCol)) &&
+    !table.schema().fieldNames.contains(LakeTable.RowIdMetaCol)
+  /** the required columns, `_row_id` last (the row tier appends it) */
+  private val read: StructType = required match {
+    case Some(r) if rowIds => StructType(
+      r.filterNot(_.name == LakeTable.RowIdMetaCol) :+ r(LakeTable.RowIdMetaCol))
+    case r => r.getOrElse(table.schema())
+  }
   /** the live inline rows in `readSchema()` layout, decoded on the first
     * `toBatch` (a scan built only for statistics never decodes them);
     * snapshot-static, so a runtime re-plan in `filter()` keeps them */
   private lazy val inlineRows: Array[InternalRow] = {
     val full = table.schema()
-    val read = readSchema()
-    val from = read.fields.map(f => full.fieldIndex(f.name))
+    // decodeInline rows: the columns, then (file, pos, row id)
+    val from = read.fields.map { f =>
+      if (rowIds && f.name == LakeTable.RowIdMetaCol) (full.length + 2, LongType)
+      else { val i = full.fieldIndex(f.name); (i, full(i).dataType) }
+    }
     val unsafe = org.apache.spark.sql.catalyst.expressions.InterpretedUnsafeProjection
       .createProjection(read.fields.toSeq.zipWithIndex.map { case (f, i) =>
         org.apache.spark.sql.catalyst.expressions.BoundReference(i, f.dataType, nullable = true)
@@ -564,32 +521,57 @@ private[graft] class LakeNativeScan(
     LakeRead.decodeInline(session, table.st, table.entry.tableId, table.snapshot)
       .map { r =>
         val row = new GenericInternalRow(read.fields.indices.map { j =>
-          val src = full(from(j)).dataType
-          LakeNativeScan.pruned(r.get(from(j), src), src, read(j).dataType)
+          val (i, src) = from(j)
+          LakeNativeScan.pruned(r.get(i, src), src, read(j).dataType)
         }.toArray)
         unsafe(row).copy(): InternalRow
       }.toArray
   }
+  /** column name → existence default, as the literal the driver evaluates
+    * (the same value [[LakeRead.decodeInline]] fills into inline rows) */
+  private lazy val existsDefaults: Map[String, String] =
+    table.st.columnsAt(table.entry.tableId, table.snapshot).flatMap { c =>
+      c.existsDefault.map { dv =>
+        val dt = LakeRead.sparkType(c.dataType)
+        c.name -> org.apache.spark.sql.catalyst.expressions
+          .Literal(LakeRead.evalConstant(session, dv, dt), dt).sql
+      }
+    }.toMap
+  /** `s` as the parquet readers get it: every field nullable (a column a
+    * file lacks must not trip the reader's required-column check) and
+    * carrying its column's existence default only, which the readers fill
+    * into files written before the column */
+  private def forReaders(s: StructType): StructType = StructType(s.fields.map { f =>
+    f.copy(nullable = true, metadata = existsDefaults.get(f.name).fold(Metadata.empty)(
+      v => new MetadataBuilder().putString("EXISTS_DEFAULT", v).build()))
+  })
   private var inner: Scan = buildInner()
 
-  /** rename-epoch read plan (see [[NativeParquet.EpochReads]]): intern the
-    * distinct current→old maps, index each file by its schemaVersion's map;
-    * the common rename-free table short-circuits to the trivial plan */
+  /** per-file read plan (see [[NativeParquet.EpochReads]]): each file's
+    * current→old renames are its schema epoch's, plus `_row_id` →
+    * `_graft_row_id` on explicit-id files when row ids are read; the
+    * distinct maps are interned. The common rename-free table
+    * short-circuits to the trivial plan */
   private def epochReads: org.apache.spark.sql.graft.NativeParquet.EpochReads = {
     import org.apache.spark.sql.graft.NativeParquet.EpochReads
-    if (epochRenames.isEmpty) EpochReads.none
+    val idRead = Map(LakeTable.RowIdMetaCol -> LakeRead.RowIdCol)
+    def renamesOf(f: DataFileEntry): Map[String, String] =
+      epochRenames.getOrElse(f.schemaVersion, Map.empty) ++
+        (if (rowIds && f.explicitRowIds) idRead else Map.empty)
+    if (epochRenames.isEmpty && !(rowIds && files.exists(_.explicitRowIds))) EpochReads.none
     else {
-      val distinct = epochRenames.values.toVector.distinct
+      val byPath = files.map(f => f.path -> renamesOf(f)).filter(_._2.nonEmpty)
+      val distinct = byPath.map(_._2).distinct
       val idxOf = distinct.zipWithIndex.map { case (m, i) => m -> (i + 1) }.toMap
       EpochReads((Map.empty[String, String] +: distinct).toIndexedSeq,
-        files.iterator.flatMap(f =>
-          epochRenames.get(f.schemaVersion).map(m => f.path -> idxOf(m))).toMap)
+        byPath.map { case (p, m) => p -> idxOf(m) }.toMap)
     }
   }
 
   private def buildInner(): Scan = {
     val sizes = files.map(f => (f.path, f.fileSizeBytes))
     val epochs = epochReads
+    val (dataSchema, readSchema) = (forReaders(table.schema()), forReaders(read))
     // storage-partitioned join eligibility: opt-in conf + identity keys
     // with recorded values on every file → key-grouped partitions, so a
     // co-partitioned lake-lake join plans with no shuffle at all — on the
@@ -604,18 +586,18 @@ private[graft] class LakeNativeScan(
     // per-file skew split — VERDICT r13 #2's mixed-workload rule
     val spjMode = table.st.optionAt(table.entry.tableId, "spj.mode",
       table.snapshot)
-    if (deletesByFile.isEmpty) grouped match {
+    if (deletesByFile.isEmpty && !rowIds) grouped match {
       case Some((keyCols, groups)) =>
         // ordering eligibility may also RANGE-REORDER files inside each
         // group (multi-file disjoint-range groups) — scan the ordered view
         val (ordering, orderedGroups) =
-          table.reportableOrdering(files, groups, readSchema())
+          table.reportableOrdering(files, groups, read)
         org.apache.spark.sql.graft.NativeParquet.keyGroupedScan(
-          session, orderedGroups, keyCols, table.schema(), readSchema(), pushed,
+          session, orderedGroups, keyCols, dataSchema, readSchema, pushed,
           ordering, spjMode, epochs)
       case None =>
         org.apache.spark.sql.graft.NativeParquet.parquetScan(
-          session, sizes, table.schema(), readSchema(), pushed, epochs)
+          session, sizes, dataSchema, readSchema, pushed, epochs)
     }
     else {
       // the delete-aware tier keeps the ordering report too (r14, VERDICT
@@ -624,14 +606,18 @@ private[graft] class LakeNativeScan(
       // is live — vacuum is a cost optimization, not a planning gate
       val (ordering, orderedKeyed) = grouped match {
         case Some((keyCols, groups)) =>
-          val (o, og) = table.reportableOrdering(files, groups, readSchema())
+          val (o, og) = table.reportableOrdering(files, groups, read)
           (o, Some((keyCols, og)))
         case None => (Array.empty[Meta.SortKey], None)
       }
+      // row ids: file name → firstRowId of the implicit-id files
+      val firstRowIds =
+        if (!rowIds) None
+        else Some(files.filterNot(_.explicitRowIds).map(f => f.fileName -> f.firstRowId).toMap)
       org.apache.spark.sql.graft.NativeParquet.deleteAwareScan(
-        session, sizes, deletesByFile, table.schema(), readSchema(), pushed,
+        session, sizes, deletesByFile, dataSchema, readSchema, pushed,
         keyed = orderedKeyed, spjMode = spjMode, ordering = ordering,
-        epochs = epochs)
+        epochs = epochs, firstRowIds = firstRowIds)
     }
   }
 
@@ -648,12 +634,12 @@ private[graft] class LakeNativeScan(
       case _ => Array.empty
     }
 
-  override def readSchema(): StructType = required.getOrElse(table.schema())
+  override def readSchema(): StructType = read
 
   override def toBatch: Batch =
     if (inlineBatches.isEmpty) inner.toBatch
     else org.apache.spark.sql.graft.NativeParquet.withInline(inner.toBatch,
-      inlineRows, readSchema())
+      inlineRows, read)
 
   override def description(): String =
     s"graft-lake native scan ${table.name()}@${table.snapshot} " +
@@ -668,21 +654,20 @@ private[graft] class LakeNativeScan(
     // declaring a partition/sort column the query projected away would
     // crash any join over the pruned scan (found by the q05b leg probe:
     // "Unable to resolve l_orderkey given [l_suppkey]")
-    val avail = readSchema().fieldNames.toSet
+    val avail = read.fieldNames.toSet
     table.runtimeFilterColumns.filter(avail)
       .map(org.apache.spark.sql.connector.expressions.Expressions.column)
   }
 
-  override def filter(runtime: Array[Filter]): Unit =
-    // same conservative pruner as compile-time filters; eligibility is
-    // snapshot-static, so nativePlan can only return Some here (the inline
-    // rows are snapshot-static too: toBatch keeps serving them)
-    table.nativePlan(pushed.toSeq ++ runtime).foreach { case (fs, dbf, eps) =>
-      files = fs
-      deletesByFile = dbf
-      epochRenames = eps
-      inner = buildInner()
-    }
+  override def filter(runtime: Array[Filter]): Unit = {
+    // same conservative pruner as compile-time filters (the inline rows
+    // are snapshot-static: toBatch keeps serving them)
+    val (fs, dbf, eps) = table.nativePlan(pushed.toSeq ++ runtime)
+    files = fs
+    deletesByFile = dbf
+    epochRenames = eps
+    inner = buildInner()
+  }
 
   /** current file count after pruning (test observability) */
   private[graft] def currentFileCount: Int = files.size
@@ -725,71 +710,6 @@ private object LakeNativeScan {
             .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
       case _ => v
     }
-}
-
-private[lake] class LakeScan(table: LakeTable, filters: Array[Filter],
-    required: Option[StructType]) extends Scan with V1Scan
-    with SupportsReportStatistics {
-
-  /** the required columns at their FULL types: the composed plan emits
-    * whole column values, so a nested-pruned struct type here would make
-    * Spark read the emitted rows with the wrong layout (it projects the
-    * pruned fields itself above a scan that reports full types) */
-  override def readSchema(): StructType = {
-    val full = table.schema()
-    required.map(r => StructType(r.fields.map(f =>
-      full.find(_.name == f.name).map(c => f.copy(dataType = c.dataType)).getOrElse(f))))
-      .getOrElse(full)
-  }
-
-  /** metadata footprint for [[LakeJoinHint]] (the V1ScanWrapper Spark puts
-    * around this scan hides `estimateStatistics` from the planner) */
-  private[lake] def sizeHint: Long = table.estimatedSizeInBytes
-
-  // metadata-exact footprint (kept even though the current V1 fallback
-  // wrapper doesn't consult it — LakeJoinHint covers join planning)
-  override def estimateStatistics(): Statistics = new Statistics {
-    override def sizeInBytes(): java.util.OptionalLong =
-      java.util.OptionalLong.of(table.estimatedSizeInBytes)
-    override def numRows(): java.util.OptionalLong =
-      java.util.OptionalLong.of(table.estimatedRowCount)
-  }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](context: SQLContext): T =
-    new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = readSchema()
-      override def sizeInBytes: Long = table.estimatedSizeInBytes
-      // the composed plan already produces InternalRows in exactly
-      // `readSchema()` order — hand them over as-is (needConversion=false
-      // makes Spark treat the RDD[Row] as RDD[InternalRow]), skipping the
-      // per-row external-Row round trip `.rdd` would pay on every read
-      override def needConversion: Boolean = false
-      override def buildScan(): RDD[org.apache.spark.sql.Row] = {
-        val wantsRowId = readSchema().fieldNames.contains(LakeTable.RowIdMetaCol)
-        var df = table.scanDF(context.sparkSession, filters.toSeq,
-          withRowMeta = wantsRowId)
-        if (wantsRowId) df = df
-          .withColumn(LakeTable.RowIdMetaCol,
-            org.apache.spark.sql.functions.col(LakeRead.RowIdCol))
-          .drop(LakeRead.FileCol, LakeRead.PosCol, LakeRead.RowIdCol)
-        // apply the translatable pushed filters INSIDE the composed plan so
-        // Catalyst drives them into the underlying parquet scan (row-group
-        // skipping) — Spark still re-applies all residuals above, so a
-        // filter we can't translate only loses the pushdown, not rows
-        filters.toSeq.flatMap(Pruning.filterToColumn)
-          .reduceOption(_ && _).foreach(c => df = df.filter(c))
-        val projected = readSchema().fieldNames match {
-          case names if names.nonEmpty => df.select(names.map(org.apache.spark.sql.functions.col).toSeq: _*)
-          case _ => df
-        }
-        projected.queryExecution.toRdd
-          .asInstanceOf[RDD[org.apache.spark.sql.Row]]
-      }
-    }.asInstanceOf[T]
-
-  override def description(): String =
-    s"graft-lake ${table.name()}@${table.snapshot} filters=[${filters.mkString(", ")}]"
 }
 
 private[lake] class LakeWriteBuilder(table: LakeTable) extends WriteBuilder

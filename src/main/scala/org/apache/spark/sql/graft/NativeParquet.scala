@@ -10,6 +10,7 @@ import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Expression, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.classic.{SparkSession => ClassicSparkSession}
 import org.apache.spark.sql.connector.expressions.{Expressions, Expression => V2Expression}
 import org.apache.spark.sql.connector.read.{Batch, HasPartitionKey, InputPartition, PartitionReader, PartitionReaderFactory, Scan, SupportsReportPartitioning}
@@ -242,6 +243,11 @@ object NativeParquet {
     * @param deletesByFile data-file NAME → delete parquet part paths
     *                      holding positions for it (empty list = clean
     *                      file, scanned with zero skip overhead)
+    * @param firstRowIds   Some when `readSchema` ends with the lake
+    *                      `_row_id` column: data-file NAME → firstRowId of
+    *                      each implicit-id file, whose `_row_id` is
+    *                      firstRowId + row index; other files read it
+    *                      from the file (an [[EpochReads]] rename)
     */
   def deleteAwareScan(
       spark: SparkSession,
@@ -253,10 +259,11 @@ object NativeParquet {
       keyed: Option[(Array[graft.lake.Meta.PartitionKey], Seq[(InternalRow, Seq[(String, Long)])])] = None,
       spjMode: Option[String] = None,
       ordering: Array[graft.lake.Meta.SortKey] = Array.empty,
-      epochs: EpochReads = EpochReads.none): Scan = {
+      epochs: EpochReads = EpochReads.none,
+      firstRowIds: Option[Map[String, Long]] = None): Scan = {
     val classic = spark.asInstanceOf[ClassicSparkSession]
     new LakeDeleteAwareScan(classic, files, deletesByFile, dataSchema, readSchema,
-      filters, keyed, spjMode, ordering, epochs)
+      filters, keyed, spjMode, ordering, epochs, firstRowIds)
   }
 }
 
@@ -272,13 +279,23 @@ private[graft] class LakeDeleteAwareScan(
     keyed: Option[(Array[graft.lake.Meta.PartitionKey], Seq[(InternalRow, Seq[(String, Long)])])] = None,
     spjMode: Option[String] = None,
     ordering: Array[graft.lake.Meta.SortKey] = Array.empty,
-    epochs: NativeParquet.EpochReads = NativeParquet.EpochReads.none)
+    epochs: NativeParquet.EpochReads = NativeParquet.EpochReads.none,
+    firstRowIds: Option[Map[String, Long]] = None)
   extends Scan with Batch with SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
   override def readSchema(): StructType = requiredSchema
 
   override def toBatch: Batch = this
+
+  /** `fp` with its files' delete parts, rename epochs and row-id bases */
+  private def partition(fp: FilePartition, fileEpochs: Array[Int]): DeleteAwareFilePartition = {
+    val names = fp.files.toSeq.map(_.toPath.getName)
+    DeleteAwareFilePartition(fp,
+      names.map(n => n -> deletesByFile.getOrElse(n, Nil)).toMap, fileEpochs,
+      firstRowIds.fold(Map.empty[String, Long])(m =>
+        names.flatMap(n => m.get(n).map(n -> _)).toMap))
+  }
 
   override def description(): String =
     s"graft-lake delete-aware scan (${files.size} files, " +
@@ -314,11 +331,8 @@ private[graft] class LakeDeleteAwareScan(
           val q = raw.getFileSystem(hc).makeQualified(raw)
           val pf = PartitionedFile(InternalRow.empty, SparkPath.fromPath(q),
             0, size, Array.empty[String], 0L, size, Map.empty[String, Any])
-          val name = q.getName
           KeyedFilePartition(
-            DeleteAwareFilePartition(FilePartition(0, Array(pf)),
-              Map(name -> deletesByFile.getOrElse(name, Nil)),
-              Array(epochs.epochOf(p))),
+            partition(FilePartition(0, Array(pf)), Array(epochs.epochOf(p))),
             key): InputPartition
         }
       }.toArray
@@ -331,13 +345,9 @@ private[graft] class LakeDeleteAwareScan(
           PartitionedFile(InternalRow.empty, SparkPath.fromPath(q), 0, size,
             Array.empty[String], 0L, size, Map.empty[String, Any])
         }
-        val fp = FilePartition(0, splits.toArray)
         KeyedFilePartition(
-          DeleteAwareFilePartition(fp, fp.files.toSeq.map { pf =>
-            val name = pf.toPath.getName
-            name -> deletesByFile.getOrElse(name, Nil)
-          }.toMap,
-          fs.map(f => epochs.epochOf(f._1)).toArray),
+          partition(FilePartition(0, splits.toArray),
+            fs.map(f => epochs.epochOf(f._1)).toArray),
           key): InputPartition
       }.toArray
     case None => planUngrouped()
@@ -370,10 +380,7 @@ private[graft] class LakeDeleteAwareScan(
           }
         }
         FilePartition.getFilePartitions(spark, splits, maxSplit)
-          .map(fp => DeleteAwareFilePartition(fp, fp.files.toSeq.map { pf =>
-            val name = pf.toPath.getName
-            name -> deletesByFile.getOrElse(name, Nil)
-          }.toMap, Array.fill(fp.files.length)(e)): InputPartition)
+          .map(fp => partition(fp, Array.fill(fp.files.length)(e)): InputPartition)
       }.toArray
   }
 
@@ -399,24 +406,32 @@ private[graft] class LakeDeleteAwareScan(
     }
     val bc = SerializableConfiguration.broadcast(spark.sparkContext,
       spark.sessionState.newHadoopConf())
-    val base = new DeleteAwareReaderFactory(inners, requiredSchema.length, bc)
+    val base = new DeleteAwareReaderFactory(inners, requiredSchema, bc)
     if (keyed.isDefined) new UnwrapKeyedFactory(base) else base
   }
 }
 
+/** @param firstRowIds file NAME → firstRowId of its implicit-id files
+  *                    (row-id reads only; see [[DeleteAwareReaderFactory]]) */
 private[graft] case class DeleteAwareFilePartition(
     inner: FilePartition,
     deletesByFile: Map[String, Seq[String]],
-    fileEpochs: Array[Int] = Array.empty) extends InputPartition
+    fileEpochs: Array[Int] = Array.empty,
+    firstRowIds: Map[String, Long] = Map.empty) extends InputPartition
 
 /** Wraps Spark's parquet row readers: per file, skip rows whose row index
   * appears in that file's sorted delete-position list (single forward
   * pointer — both streams are ascending). Rows physically carry a trailing
-  * row-index field the consumer never reads (ordinal-based access). */
+  * row-index field the consumer never reads (ordinal-based access).
+  * A file its partition gives a firstRowId is an implicit-id file of a
+  * row-id read: the last `schema` field is the lake `_row_id`, emitted as
+  * firstRowId + the row index (other files read it from the file). */
 private[graft] class DeleteAwareReaderFactory(
     inners: IndexedSeq[ParquetPartitionReaderFactory],
-    rowIdxOrdinal: Int,
+    schema: StructType,
     conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
+
+  private val rowIdxOrdinal = schema.length
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
 
@@ -427,15 +442,32 @@ private[graft] class DeleteAwareReaderFactory(
       private var current: PartitionReader[InternalRow] = _
       private var positions: Array[Long] = Array.emptyLongArray
       private var pi = 0
+      // implicit row ids: the columns before `_row_id`, then row index +
+      // the current file's firstRowId (held in `base`)
+      private var implicitIds = false
+      private val base = new GenericInternalRow(Array[Any](0L))
+      private lazy val joined = new JoinedRow
+      private lazy val withId = {
+        val n = schema.length - 1
+        UnsafeProjection.create(schema.fields.take(n).toSeq.zipWithIndex.map {
+          case (f, i) => BoundReference(i, f.dataType, nullable = true): Expression
+        } :+ Add(BoundReference(n + 1, LongType, nullable = false),
+          BoundReference(n + 2, LongType, nullable = false)))
+      }
 
       private def openNext(): Boolean = {
         if (fi >= dp.inner.files.length) return false
         val pf = dp.inner.files(fi)
         val epoch = if (dp.fileEpochs.isEmpty) 0 else dp.fileEpochs(fi)
         fi += 1
-        positions = DeletePositions.forFile(pf.toPath.getName,
-          dp.deletesByFile.getOrElse(pf.toPath.getName, Nil), conf.value.value)
+        val name = pf.toPath.getName
+        positions = DeletePositions.forFile(name,
+          dp.deletesByFile.getOrElse(name, Nil), conf.value.value)
         pi = 0
+        implicitIds = dp.firstRowIds.get(name) match {
+          case Some(first) => base.update(0, first); true
+          case None => false
+        }
         current = inners(epoch).createReader(FilePartition(dp.inner.index, Array(pf)))
         true
       }
@@ -455,7 +487,8 @@ private[graft] class DeleteAwareReaderFactory(
         false
       }
 
-      override def get(): InternalRow = current.get()
+      override def get(): InternalRow =
+        if (implicitIds) withId(joined(current.get(), base)) else current.get()
 
       override def close(): Unit = if (current != null) current.close()
     }

@@ -51,7 +51,7 @@ class FuzzSpec extends AnyFunSuite {
     // schedule widening ALTER TYPE (below) makes every later scan, change-
     // feed window, MV refresh and AS-OF replay cross a type epoch on a
     // layout-bearing table (the columnId-eligibility branch the r15 rename
-    // bug lived beside, LakeTable.widensTo, only had directed coverage)
+    // bug lived beside, now Meta.typePromotes, only had directed coverage)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.IntegerType)))

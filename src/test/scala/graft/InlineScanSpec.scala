@@ -13,8 +13,9 @@ import graft.lake.Meta._
 
 /** Pending inline rows on the native scan tier: a SQL read of a table with
   * live inline batches plans a [[LakeNativeScan]] (one extra partition of
-  * driver-decoded rows), and every answer equals the composed tier's
-  * (`spark.graft.lake.nativeScan=false`) for each table shape. */
+  * driver-decoded rows), and every answer equals the composed reader's
+  * ([[LakeRead.scanDF]], read through the `Lake` API) for each table
+  * shape. */
 class InlineScanSpec extends AnyFunSuite {
   import TestSession.spark
 
@@ -40,19 +41,22 @@ class InlineScanSpec extends AnyFunSuite {
     df.collect().map(_.toString).toSeq.sorted
 
   /** `sql` plans a native scan of every lake table it reads, and its
-    * answer equals the composed tier's */
-  private def assertNativeMatchesComposed(sql: String): Seq[String] = {
+    * answer equals the same query over temp views of `lake.table(...)`
+    * (the composed reader, [[LakeRead.scanDF]]) — each
+    * `<catalog>.main.<t> [VERSION AS OF n]` is swapped for one */
+  private def assertNativeMatchesComposed(lake: Lake, sql: String): Seq[String] = {
     val native = spark.sql(sql)
     assert(scansOf(native).nonEmpty &&
       scansOf(native).forall(_.isInstanceOf[LakeNativeScan]),
       s"expected native scans: ${scansOf(native)}")
     val got = rows(native)
-    spark.conf.set("spark.graft.lake.nativeScan", "false")
-    try {
-      val composed = spark.sql(sql)
-      assert(!scansOf(composed).exists(_.isInstanceOf[LakeNativeScan]))
-      assert(got == rows(composed), s"tiers disagree on: $sql")
-    } finally spark.conf.unset("spark.graft.lake.nativeScan")
+    val viaApi = """\w+\.main\.(\w+)(?: VERSION AS OF (\d+))?""".r.replaceAllIn(sql, m => {
+      val version = Option(m.group(2)).map(_.toLong)
+      val view = s"inl_ref_${m.group(1)}_${version.getOrElse("cur")}"
+      lake.table(s"main.${m.group(1)}", version).createOrReplaceTempView(view)
+      view
+    })
+    assert(got == rows(spark.sql(viaApi)), s"native scan and scanDF disagree on: $sql")
     got
   }
 
@@ -73,10 +77,10 @@ class InlineScanSpec extends AnyFunSuite {
     inlinable(lake, "main.io")
     lake.insertRows("main.io", Seq(Seq(1, "x"), Seq(2, null)))
     lake.insertRows("main.io", Seq(Seq(3, "z\"q")))
-    assert(assertNativeMatchesComposed(s"SELECT * FROM $cat.main.io") ==
+    assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.io") ==
       Seq("[1,x]", "[2,null]", "[3,z\"q]"))
-    assertNativeMatchesComposed(s"SELECT b FROM $cat.main.io WHERE a = 3")
-    assertNativeMatchesComposed(s"SELECT count(*), sum(a) FROM $cat.main.io")
+    assertNativeMatchesComposed(lake, s"SELECT b FROM $cat.main.io WHERE a = 3")
+    assertNativeMatchesComposed(lake, s"SELECT count(*), sum(a) FROM $cat.main.io")
     // observability: the file text stays as it was, inline counts follow
     val scan = nativeScan(lake, "io")
     assert(scan.description().endsWith(
@@ -94,9 +98,9 @@ class InlineScanSpec extends AnyFunSuite {
     lake.insertRows("main.ic", Seq(Seq(100, "i100"), Seq(101, "i101")))
     val df = spark.sql(s"SELECT a, b FROM $cat.main.ic")
     assert(columnarScan(df), df.queryExecution.executedPlan.toString)
-    assert(assertNativeMatchesComposed(s"SELECT a, b FROM $cat.main.ic").size == 52)
-    assertNativeMatchesComposed(s"SELECT b FROM $cat.main.ic WHERE a >= 50")
-    assertNativeMatchesComposed(s"SELECT count(*) FROM $cat.main.ic")
+    assert(assertNativeMatchesComposed(lake, s"SELECT a, b FROM $cat.main.ic").size == 52)
+    assertNativeMatchesComposed(lake, s"SELECT b FROM $cat.main.ic WHERE a >= 50")
+    assertNativeMatchesComposed(lake, s"SELECT count(*) FROM $cat.main.ic")
     val scan = nativeScan(lake, "ic")
     val parts = scan.toBatch.planInputPartitions()
     assert(parts.last.getClass.getSimpleName == "InlineRowsPartition")
@@ -113,13 +117,13 @@ class InlineScanSpec extends AnyFunSuite {
     lake.insertRows("main.id", Seq(Seq(200, "i200"), Seq(3, "again")))
     val df = spark.sql(s"SELECT * FROM $cat.main.id")
     assert(!columnarScan(df), df.queryExecution.executedPlan.toString)
-    assert(assertNativeMatchesComposed(s"SELECT * FROM $cat.main.id").size == 17)
-    assertNativeMatchesComposed(s"SELECT a FROM $cat.main.id WHERE a = 3")
+    assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.id").size == 17)
+    assertNativeMatchesComposed(lake, s"SELECT a FROM $cat.main.id WHERE a = 3")
     assert(nativeScan(lake, "id").description().contains(
       "(1 files, 1 with deletes) + 1 inline batches, 2 inline rows"))
     // an inline row deleted by DML leaves the inline log, not a position
     lake.delete("main.id", col("a") === 200)
-    assert(assertNativeMatchesComposed(s"SELECT * FROM $cat.main.id").size == 16)
+    assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.id").size == 16)
   }
 
   test("inline batches of older schema epochs decode into the current schema") {
@@ -134,10 +138,10 @@ class InlineScanSpec extends AnyFunSuite {
     lake.insertRows("main.ie", Seq(Seq(3L, "new3", 30)))                    // current epoch
     // parquet written under the current epoch keeps the files eligible
     lake.append("main.ie", Seq((4L, "file4", 40)).toDF("a", "bb", "c"))
-    assert(assertNativeMatchesComposed(s"SELECT * FROM $cat.main.ie") ==
+    assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.ie") ==
       Seq("[1,old1,7]", "[2,null,7]", "[3,new3,30]", "[4,file4,40]"))
-    assertNativeMatchesComposed(s"SELECT c, bb FROM $cat.main.ie WHERE a < 3")
-    assertNativeMatchesComposed(s"SELECT sum(a) FROM $cat.main.ie")
+    assertNativeMatchesComposed(lake, s"SELECT c, bb FROM $cat.main.ie WHERE a < 3")
+    assertNativeMatchesComposed(lake, s"SELECT sum(a) FROM $cat.main.ie")
   }
 
   test("time travel to a snapshot with live inline rows") {
@@ -150,11 +154,11 @@ class InlineScanSpec extends AnyFunSuite {
     val s2 = lake.currentSnapshot()
     lake.insertRows("main.it", Seq(Seq(3, "c")))
     lake.flushInlinedData("main.it")
-    assert(assertNativeMatchesComposed(
+    assert(assertNativeMatchesComposed(lake,
       s"SELECT * FROM $cat.main.it VERSION AS OF $s1") == Seq("[1,a]"))
-    assert(assertNativeMatchesComposed(
+    assert(assertNativeMatchesComposed(lake,
       s"SELECT * FROM $cat.main.it VERSION AS OF $s2") == Seq("[1,a]", "[2,b]"))
-    assert(assertNativeMatchesComposed(s"SELECT * FROM $cat.main.it").size == 3)
+    assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.it").size == 3)
   }
 
   test("a runtime (DPP) re-plan keeps the inline partition") {
@@ -188,7 +192,7 @@ class InlineScanSpec extends AnyFunSuite {
       assert(spark.sql(sql).queryExecution.optimizedPlan.toString
         .contains("dynamicpruning"))
       val n = 5000L
-      assert(assertNativeMatchesComposed(sql) ==
+      assert(assertNativeMatchesComposed(lake, sql) ==
         Seq(s"[keep,${n + 1},${n * (n - 1) / 2 - 1}]"))
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
@@ -216,20 +220,52 @@ class InlineScanSpec extends AnyFunSuite {
       assert(withInline.outputOrdering().isEmpty)
       assert(nativeScan(lake, "sb").outputPartitioning()
         .isInstanceOf[KeyGroupedPartitioning], "the clean side keeps SPJ")
-      assertNativeMatchesComposed(
+      assertNativeMatchesComposed(lake,
         s"""SELECT a.k, count(*), sum(a.v + b.v) FROM $cat.main.sa a
            |JOIN $cat.main.sb b ON a.k = b.k AND a.v = b.v GROUP BY a.k""".stripMargin)
     } finally spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
   }
 
-  test("_row_id requests still take the composed tier") {
+  test("_row_id reads on the native tier: inline, clean, deletes, explicit ids") {
     val (lake, cat) = newCat()
+    import spark.implicits._
     lake.createTable("main.ir", abSchema)
     inlinable(lake, "main.ir")
+    /** (_row_id, a, b) by SQL, planned on native scans only, equal to the
+      * composed reader's `_graft_row_id` */
+    def check(): Seq[(Long, Int)] = {
+      val df = spark.sql(s"SELECT _row_id, a, b FROM $cat.main.ir")
+      assert(scansOf(df).nonEmpty && scansOf(df).forall(_.isInstanceOf[LakeNativeScan]),
+        s"expected native scans: ${scansOf(df)}")
+      val st = lake.store.state()
+      val s = st.currentSnapshotId
+      val ref = LakeRead.scanDF(spark, st, st.tableAt("main", "ir", s).get.tableId, s,
+        withRowMeta = true).select(col(LakeRead.RowIdCol), col("a"), col("b"))
+      val got = rows(df)
+      assert(got == rows(ref), "native _row_id differs from scanDF's")
+      val ids = df.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      assert(ids.map(_._1).distinct.size == ids.size, s"row ids not unique: $ids")
+      ids
+    }
     lake.insertRows("main.ir", Seq(Seq(1, "x"), Seq(2, "y")))
-    val df = spark.sql(s"SELECT _row_id, a FROM $cat.main.ir")
-    assert(scansOf(df).nonEmpty && !scansOf(df).exists(_.isInstanceOf[LakeNativeScan]))
-    assert(df.collect().map(_.getLong(0)).distinct.length == 2)
+    assert(check().size == 2)
+    lake.append("main.ir", (10 to 29).map(i => (i, s"p$i")).toDF("a", "b").coalesce(1))
+    assert(check().size == 22)
+    lake.delete("main.ir", col("a") % 3 === 0)
+    val before = check().toMap.map(_.swap)
+    assert(before.size == 16)
+    // an UPDATE rewrites the row into an explicit-id file; it keeps its id
+    lake.update("main.ir", col("a") === 11, Map("b" -> lit("u")))
+    val st = lake.store.state()
+    assert(st.filesAt(st.tableAt("main", "ir", st.currentSnapshotId).get.tableId,
+      st.currentSnapshotId).exists(_.explicitRowIds))
+    val after = check().toMap.map(_.swap)
+    assert(after == before)
+    // a _row_id predicate, on an explicit-id and an implicit-id file
+    Seq(11, 10).foreach { a =>
+      assert(spark.sql(s"SELECT a FROM $cat.main.ir WHERE _row_id = ${after(a)}")
+        .collect().map(_.getInt(0)).toSeq == Seq(a))
+    }
     assert(scansOf(spark.sql(s"SELECT a FROM $cat.main.ir"))
       .forall(_.isInstanceOf[LakeNativeScan]))
   }
@@ -247,8 +283,8 @@ class InlineScanSpec extends AnyFunSuite {
     // an UPDATE of inline rows rewrites the batch with the struct value
     lake.update("main.is", col("a") === 3,
       Map("s" -> struct(lit(30).as("x"), lit("r").as("y"))))
-    assert(assertNativeMatchesComposed(s"SELECT a, s.y FROM $cat.main.is") ==
+    assert(assertNativeMatchesComposed(lake, s"SELECT a, s.y FROM $cat.main.is") ==
       Seq("[1,p]", "[2,null]", "[3,r]"))
-    assertNativeMatchesComposed(s"SELECT s FROM $cat.main.is")
+    assertNativeMatchesComposed(lake, s"SELECT s FROM $cat.main.is")
   }
 }

@@ -1321,24 +1321,26 @@ class LakeSpec extends AnyFunSuite {
     // effectively-infinite and would force a sort-merge/shuffled-hash join
     spark.range(0, 2000000).selectExpr("cast(id % 3 + 1 as int) AS a", "id AS v")
       .createOrReplaceTempView("bigfact")
-    // force the composed V1 tier — the native tiers get stats from
-    // MetadataFileIndex already
-    spark.conf.set("spark.graft.lake.nativeScan", "false")
+    // an ADD COLUMN DEFAULT epoch (a shape that once took a separate,
+    // stats-less scan tier): the native scan reports the file footprint
+    spark.sql(s"ALTER TABLE $cat.main.dim ADD COLUMN c STRING DEFAULT 'x'")
+    val joined = spark.sql(
+      s"SELECT b, c, count(*) AS n FROM bigfact JOIN $cat.main.dim USING (a) GROUP BY b, c")
+    assert(joined.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.exists(_.isInstanceOf[LakeNativeScan]))
+    val plan = joined.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin"), s"expected broadcast of lake dim side:\n$plan")
+    assert(joined.collect().map(r => (r.getString(1), r.getLong(2))).toSeq
+      .groupBy(_._1).map { case (c, rs) => c -> rs.map(_._2).sum } == Map("x" -> 2000000L))
+    // guard: with size-based broadcasting disabled no broadcast is planned
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val joined = spark.sql(
+      val p2 = spark.sql(
         s"SELECT b, count(*) AS n FROM bigfact JOIN $cat.main.dim USING (a) GROUP BY b")
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("BroadcastHashJoin"), s"expected broadcast of lake dim side:\n$plan")
-      assert(joined.collect().map(_.getLong(1)).sum == 2000000L)
-      // guard: with size-based broadcasting disabled the hint must not fire
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        val p2 = spark.sql(
-          s"SELECT b, count(*) AS n FROM bigfact JOIN $cat.main.dim USING (a) GROUP BY b")
-          .queryExecution.executedPlan.toString
-        assert(!p2.contains("BroadcastHashJoin"), s"hint fired with threshold off:\n$p2")
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    } finally spark.conf.unset("spark.graft.lake.nativeScan")
+        .queryExecution.executedPlan.toString
+      assert(!p2.contains("BroadcastHashJoin"), s"broadcast with threshold off:\n$p2")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("runtime (DPP) file pruning on the native scan via hidden partition values") {
@@ -1528,10 +1530,13 @@ class LakeSpec extends AnyFunSuite {
     assert(scanOf().isInstanceOf[LakeNativeScan], "DROP COLUMN dropped the native tier")
     assert(lake.table("main.ne").columns.toSeq == Seq("a", "c"))
     // re-adding a dropped NAME mints a new column id: the old files' stale
-    // "b" data must NOT leak into the successor → composed plan, all null
+    // "b" data must NOT leak into the successor → read under a name the
+    // files lack, all null
     spark.sql(s"ALTER TABLE $cat.main.ne ADD COLUMN b INT")
-    assert(!scanOf().isInstanceOf[LakeNativeScan], "re-added name must not read stale data")
+    assert(scanOf().isInstanceOf[LakeNativeScan], "re-added name dropped the native tier")
     assert(lake.table("main.ne").collect().forall(r => r.isNullAt(r.fieldIndex("b"))))
+    assert(spark.sql(s"SELECT a, c, b FROM $cat.main.ne").collect().map(_.toString)
+      .sorted.toSeq == Seq("[1,null,null]", "[2,null,null]", "[3,300,null]"))
   }
 
   test("_row_id metadata column: SQL-visible row lineage (upstream rowid)") {
@@ -1589,7 +1594,7 @@ class LakeSpec extends AnyFunSuite {
       org.apache.spark.sql.types.LongType)
   }
 
-  test("ADD COLUMN WITH DEFAULT keeps the composed tier (default must be filled)") {
+  test("ADD COLUMN WITH DEFAULT reads on the native tier (the reader fills the default)") {
     val lake = newLake()
     import spark.implicits._
     lake.createTableAs("main.nd", Seq((1, 10)).toDF("a", "b"))
@@ -1600,8 +1605,44 @@ class LakeSpec extends AnyFunSuite {
     val st = lake.store.state()
     val scan = new LakeTable(lake.store, "main", "nd", st.currentSnapshotId, st)
       .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
-    assert(!scan.isInstanceOf[LakeNativeScan])
+    assert(scan.isInstanceOf[LakeNativeScan])
     assert(lake.table("main.nd").collect().head.getString(2) == "x")
+    // a later SET DEFAULT changes inserts only; old files keep 'x'
+    spark.sql(s"ALTER TABLE $cat.main.nd ALTER COLUMN t SET DEFAULT 'y'")
+    spark.sql(s"INSERT INTO $cat.main.nd (a, b) VALUES (2, 20)")
+    val sqlRows = spark.sql(s"SELECT a, t FROM $cat.main.nd").collect().map(_.toString).sorted.toSeq
+    assert(sqlRows == Seq("[1,x]", "[2,y]"), sqlRows)
+    assert(lake.table("main.nd").select("a", "t").collect().map(_.toString).sorted.toSeq == sqlRows)
+    assert(spark.sql(s"SELECT a FROM $cat.main.nd WHERE t = 'x'").collect()
+      .map(_.getInt(0)).toSeq == Seq(1))
+    // the delete-aware row readers fill it too
+    spark.sql(s"INSERT INTO $cat.main.nd (a, b) VALUES (3, 30)")
+    lake.delete("main.nd", col("a") === 3)
+    val overlay = spark.sql(s"SELECT a, t FROM $cat.main.nd")
+    assert(!overlay.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(overlay.collect().map(_.toString).sorted.toSeq == sqlRows)
+  }
+
+  test("tinyint and smallint promoted to double read natively") {
+    val lake = newLake()
+    import spark.implicits._
+    lake.createTableAs("main.np", Seq((1.toByte, 1.toShort, 1), (2.toByte, -3.toShort, 2))
+      .toDF("t", "s", "k"))
+    val cat = s"lnp${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", lake.root)
+    spark.sql(s"ALTER TABLE $cat.main.np ALTER COLUMN t TYPE DOUBLE")
+    spark.sql(s"ALTER TABLE $cat.main.np ALTER COLUMN s TYPE DOUBLE")
+    lake.append("main.np", Seq((2.5, 1e10, 3)).toDF("t", "s", "k"))
+    val st = lake.store.state()
+    val scan = new LakeTable(lake.store, "main", "np", st.currentSnapshotId, st)
+      .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    assert(scan.isInstanceOf[LakeNativeScan])
+    val got = spark.sql(s"SELECT k, t, s FROM $cat.main.np").collect().map(_.toString).sorted.toSeq
+    assert(got == Seq("[1,1.0,1.0]", "[2,2.0,-3.0]", "[3,2.5,1.0E10]"), got)
+    assert(lake.table("main.np").select("k", "t", "s").collect().map(_.toString).sorted.toSeq == got)
+    assert(spark.sql(s"SELECT k FROM $cat.main.np WHERE s < 0 OR t > 2.2").collect()
+      .map(_.getInt(0)).sorted.toSeq == Seq(2, 3))
   }
 
   test("SPJ and runtime (DPP) filtering compose on the same scan") {
@@ -1949,26 +1990,6 @@ class LakeSpec extends AnyFunSuite {
     // consolidating again is a no-op
     val before = lake.currentSnapshot()
     assert(lake.consolidateDeleteFiles("main.t") == before)
-  }
-
-  // ---- native-scan escape hatch ------------------------------------------
-  test("spark.graft.lake.nativeScan=false falls back to the composed V1 plan") {
-    val root = Files.createTempDirectory("graft_nsoff").toString
-    val cat = s"nsoff${System.nanoTime()}"
-    spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
-    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
-    spark.sql(s"CREATE TABLE $cat.main.t (a INT, b INT)")
-    spark.sql(s"INSERT INTO $cat.main.t VALUES (1, 10), (2, 20), (3, 30)")
-    def q() = spark.sql(s"SELECT b FROM $cat.main.t WHERE a >= 2 ORDER BY b")
-    assert(q().queryExecution.executedPlan.toString.contains("BatchScan"))
-    spark.conf.set("spark.graft.lake.nativeScan", "false")
-    try {
-      val off = q()
-      assert(!off.queryExecution.executedPlan.toString.contains("BatchScan"),
-        "flag off must route through the V1 composed plan")
-      assert(off.collect().map(_.getInt(0)).toSeq == Seq(20, 30))
-    } finally spark.conf.unset("spark.graft.lake.nativeScan")
-    assert(q().collect().map(_.getInt(0)).toSeq == Seq(20, 30))
   }
 
   // ---- streaming sink: exactly-once micro-batch ingest -------------------

@@ -33,7 +33,7 @@ class PlanNetSpec extends AnyFunSuite {
     "q04_priority_semi" -> (4, 1, 0, 1),
     "q04b_bucketed_spj" -> (2, 1, 0, 1),
     "q05_nation_revenue" -> (4, 6, 0, 1),
-    "q05b_bucketed_spj" -> (8, 14, 0, 5),
+    "q05b_bucketed_spj" -> (4, 14, 0, 1),
     "q06_forecast_revenue" -> (1, 0, 0, 0),
     "q07_volume_shipping" -> (3, 4, 0, 2),
     "q07b_bucketed_spj" -> (1, 7, 0, 0),
