@@ -20,9 +20,10 @@ import Meta._
   * gap: checks run at the engine's own choke points, which a planner
   * cannot skip —
   *
-  *  - SELECT at [[LakeRead.scanDF]] (every read: API, DSv2 SQL, change
+  *  - SELECT at [[LakeRead.scanDF]] (the library's reads: API, change
   *    feed, views — views check the BASE tables, the documented
-  *    difference from PG's owner-rights views),
+  *    difference from PG's owner-rights views) and at the DSv2 scan
+  *    build (SQL, and again for the relations scanDF makes),
   *  - INSERT / UPDATE / DELETE at [[LakeWrite]].append/update/delete
   *    (every write path funnels there: API, DSv2, SQL DML, MERGE,
   *    streaming sink),

@@ -29,7 +29,9 @@ import graft.lake.Meta.CatalogState
   *
   * Match contract (conservative — anything else falls through verbatim):
   *   - the aggregate's child is (attribute-Projects over) an optional
-  *     single Filter over a raw [[LakeTable]] relation of the MV's source;
+  *     single Filter over a raw catalog [[LakeTable]] relation of the MV's
+  *     source (never an internal one of the library's own reads — the
+  *     `Lake` API, DML, the change feed and the refresh itself);
   *   - query grouping columns == MV group columns as a set;
   *   - the MV's own filter (if any) appears among the query filter's
   *     conjuncts, and every residual conjunct references ONLY group
@@ -107,7 +109,7 @@ class LakeMvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
     case Project(pl, child) if pl.forall(_.isInstanceOf[AttributeReference]) =>
       bareRel(child)
     case r: DataSourceV2Relation => r.table match {
-      case lt: LakeTable => Some(Rel(r.output, lt))
+      case lt: LakeTable if !lt.internal => Some(Rel(r.output, lt))
       case _ => None
     }
     case _ => None
@@ -210,7 +212,7 @@ class LakeMvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
       unwrapChain(j).filter(ch => ch.nn.subsetOf(ch.condIds))
         .map(ch => Shape(None, ch.fact, ch.dims))
     case r: DataSourceV2Relation => r.table match {
-      case lt: LakeTable => Seq(Shape(None, Rel(r.output, lt), Nil))
+      case lt: LakeTable if !lt.internal => Seq(Shape(None, Rel(r.output, lt), Nil))
       case _ => Nil
     }
     case _ => Nil
@@ -394,8 +396,8 @@ class LakeMvRewrite(spark: SparkSession) extends Rule[LogicalPlan]
         } else if (effRefresh && store != null && !inRefresh.get()) {
           // plan-time refresh runs whole queries, which re-enter the
           // optimizer — the reentrancy latch stops a nested rewrite from
-          // kicking off another refresh (the refresh's own internal reads
-          // are composed scans that never match `unwrap` anyway)
+          // kicking off another refresh (the refresh's own reads are
+          // internal relations, which `unwrap` never matches anyway)
           inRefresh.set(true)
           try {
             val lake = new Lake(spark, store.root, Some(store))

@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, BoundReference, Cast, GenericInternalRow, JsonToStructs}
 import org.apache.spark.sql.functions._
@@ -8,29 +8,23 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import Meta._
 
-/** Snapshot-scoped merge-on-read scan composition (SURVEY.md §2.A A2,
-  * reference behavior contract: test/regression/sql/vacuum.sql:20-27,
-  * time_travel.sql, data_inlining_row_limit.sql).
+/** The lake's read entry point for the library's own reads, and the shared
+  * pieces of the one scan (SURVEY.md §2.A A2, reference behavior contract:
+  * test/regression/sql/vacuum.sql:20-27, time_travel.sql,
+  * data_inlining_row_limit.sql).
   *
   * rows(table @ snapshot S) =
-  *     Σ over live data files:   parquet rows, column-mapped from the
-  *                               file's schema epoch to S's schema
+  *     Σ over live data files:   parquet rows, read under S's schema by
+  *                               column id from the file's schema epoch
   *   ∪ live inlined batches:     JSON rows parsed with their epoch schema
-  *                               ([[decodeInline]], the one inline decoder:
-  *                               the native tier serves the same rows)
-  *   ∖ live delete files:        anti-join on (file, position)
+  *                               ([[decodeInline]])
+  *   ∖ live delete files:        positions skipped inside the reader
   *
-  * SQL reads never come here: they run on [[LakeNativeScan]], Spark's
-  * own parquet readers over the same files, epochs, deletes and inline
-  * rows. This composition is the reader of the `Lake` API, DML, the change
-  * feed and MV refresh, which call [[scanDF]] directly, and the reference
-  * the native scan is tested against.
-  *
-  * All per-file work (pruning, schema grouping, row-id bases) is
-  * driver-side O(files) — the same metadata weight class as Delta/Iceberg;
-  * the data path is declarative DataFrame composition, so Catalyst pushes
-  * residual predicates and column pruning into the underlying parquet scan
-  * and Tungsten executes it codegen'd.
+  * Every read runs on [[LakeNativeScan]], Spark's own parquet readers over
+  * those files, epochs, deletes and inline rows. SQL reads reach it through
+  * the catalog's [[LakeTable]]s; the `Lake` API, DML, the change feed, MV
+  * refresh, maintenance and the view expansions through [[scanDF]], a thin
+  * adapter that plans the same scan over an internal table.
   */
 object LakeRead {
 
@@ -108,16 +102,10 @@ object LakeRead {
       }
     })
 
-  /** row layout of [[decodeInline]]: the snapshot's columns (all nullable,
-    * as JSON-parsed values are), then the (file, pos, row id) meta columns */
-  private def inlineSchema(cols: Seq[ColumnEntry]): StructType =
-    StructType(cols.map(c => StructField(c.name, sparkType(c.dataType))))
-      .add(FileCol, StringType).add(PosCol, LongType, nullable = false)
-      .add(RowIdCol, LongType, nullable = false)
-
-  /** The inline decoder, shared by both scan tiers: the live inlined batches
-    * of `tableId` at snapshot `s`, parsed on the driver (no Spark job) into
-    * rows of [[inlineSchema]]. Each batch's JSON parses under its own schema
+  /** The inline decoder: the live inlined batches of `tableId` at snapshot
+    * `s`, parsed on the driver (no Spark job) into rows of the snapshot's
+    * columns (all nullable, as JSON-parsed values are), then the (file, pos,
+    * row id) meta columns. Each batch's JSON parses under its own schema
     * epoch with `from_json`'s semantics (default options, session time
     * zone); its columns then map to `s`'s columns by columnId — cast to the
     * current type, or filled with the existence default (null if none) for
@@ -175,9 +163,12 @@ object LakeRead {
       .asInstanceOf[Project].projectList.head.eval()
   }
 
-  /** Scan of `tableId` as of snapshot `s`.
-    * @param filters     pushed predicates (file pruning only; Spark
-    *                    re-applies them on rows)
+  /** Scan of `tableId` as of snapshot `s`: one [[LakeNativeScan]] over an
+    * internal [[LakeTable]] pinned at (`st`, `s`), so deletes, inline rows,
+    * schema epochs and row ids are all served inside the reader.
+    * @param filters     file-prune-only predicates (the table's
+    *                    `variantPrune`; Spark's own filters above the
+    *                    relation still push down and prune as in SQL)
     * @param withRowMeta surface (_graft_file, _graft_pos, _graft_row_id)
     */
   def scanDF(
@@ -187,110 +178,36 @@ object LakeRead {
       s: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
       withRowMeta: Boolean = false): DataFrame = {
-    // the universal read choke point: every read path (API, DSv2 SQL,
-    // change feed, stored views) lands here, so the SELECT check cannot
-    // be planned around — closing the reference's documented permInfos
-    // gap (docs/access_control.md "Known Gaps"; LakeAcl scaladoc)
-    // privileges evaluate at the CURRENT snapshot, not the scan snapshot
-    // `s` — PG semantics: time travel (and the change feed's historical
-    // scoped scans) reads old DATA under today's ACL
-    st.tableById(tableId, s).foreach(e =>
-      LakeAcl.requirePriv(spark, st, "SELECT", e.schemaName, e.tableName,
-        st.currentSnapshotId))
+    val e = st.tableById(tableId, s)
+      .getOrElse(throw new IllegalArgumentException(s"table $tableId is not live at snapshot $s"))
+    // the library's read choke point (API, DML, change feed, MV refresh,
+    // stored views): the SELECT check runs here, eagerly, so errors surface
+    // where the DataFrame is made (the scan build repeats it) — closing the
+    // reference's documented permInfos gap (docs/access_control.md "Known
+    // Gaps"; LakeAcl scaladoc). Privileges evaluate at the CURRENT snapshot,
+    // not the scan snapshot `s` — PG semantics: time travel (and the change
+    // feed's historical scoped scans) reads old DATA under today's ACL
+    LakeAcl.requirePriv(spark, st, "SELECT", e.schemaName, e.tableName,
+      st.currentSnapshotId)
     LakeEncryption.ensureReadConfFor(spark, st, tableId, s)
-    val cols = st.columnsAt(tableId, s)
-    require(cols.nonEmpty, s"table $tableId has no columns at snapshot $s")
-    val colTypes = cols.map(c => c.name -> c.dataType).toMap
-    val partKeys = st.partitionKeysAt(tableId, s)
-    val deletes = st.deleteFilesAt(tableId, s)
-    // layout metadata (partition-value labels, stats names) is recorded
-    // under each file's write-epoch names — normalize to the scan
-    // snapshot's names so pruning survives RENAME COLUMN (no-op, same
-    // objects, when nothing was renamed)
-    val files0 = st.filesAt(tableId, s).map(st.fileNamesAt(tableId, s))
-    val files = Pruning.prune(files0, st.statsForAt(tableId, s, files0),
-      colTypes, partKeys, filters)
-    val inlined = st.inlinedAt(tableId, s)
-    val needMeta = withRowMeta || deletes.nonEmpty
-
-    val currentStruct = structFor(cols)
-    def mapToCurrent(df: DataFrame, physCols: Seq[ColumnEntry], metaCols: Seq[String]): DataFrame = {
-      val physById = physCols.map(c => c.columnId -> c.name).toMap
-      val sel = cols.map { c =>
-        physById.get(c.columnId) match {
-          case Some(pn) => col(pn).cast(sparkType(c.dataType)).as(c.name)
-          case None =>
-            // column added after this file was written: existence default
-            // (frozen at ADD COLUMN time — SET DEFAULT never changes it)
-            c.existsDefault.map(dv => expr(dv)).getOrElse(lit(null))
-              .cast(sparkType(c.dataType)).as(c.name)
-        }
-      } ++ metaCols.map(col)
-      df.select(sel: _*)
-    }
-
-    // parquet files, grouped by (schema epoch, row-id representation)
-    val parts: Seq[DataFrame] = files.groupBy(f => (f.schemaVersion, f.explicitRowIds)).toSeq
-      .sortBy(_._1).map { case ((sv, explicit), fs) =>
-        val physCols = st.columnsAt(tableId, sv)
-        val baseStruct = structFor(physCols)
-        val readStruct =
-          if (explicit) baseStruct.add(StructField(RowIdCol, LongType, nullable = false))
-          else baseStruct
-        var df = spark.read.schema(readStruct).parquet(fs.map(_.path): _*)
-        if (needMeta) {
-          df = df
-            .withColumn(FileCol, col("_metadata.file_name"))
-            .withColumn(PosCol, col("_metadata.row_index"))
-          if (!explicit) {
-            // implicit ids: row_id = file.firstRowId + position (O(files)
-            // broadcast lookup, same weight as the file list itself)
-            val lookup = spark.createDataFrame(
-              fs.map(f => Row(f.fileName, f.firstRowId)).toList.asJava,
-              StructType(Seq(StructField(FileCol, StringType), StructField("_graft_first", LongType))))
-            df = df.join(broadcast(lookup), Seq(FileCol), "left")
-              .withColumn(RowIdCol, col("_graft_first") + col(PosCol))
-              .drop("_graft_first")
-          }
-        } else if (explicit) df = df.drop(RowIdCol)
-        mapToCurrent(df, physCols, if (needMeta) Seq(FileCol, PosCol, RowIdCol) else Nil)
-      }
-
-    // inlined batches: rows from decodeInline, already in the snapshot's
-    // columns, as one local relation
-    val inlinedParts: Seq[DataFrame] =
-      if (inlined.isEmpty) Nil
+    require(st.columnsAt(tableId, s).nonEmpty, s"table $tableId has no columns at snapshot $s")
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
+    val rel = DataSourceV2Relation.create(new LakeTable(null, e.schemaName,
+      e.tableName, s, st, filters, internal = true), None, None)
+    val plan =
+      if (!withRowMeta) rel
       else {
-        val schema = inlineSchema(cols)
-        val df = org.apache.spark.sql.graft.StreamingBatch.ofRows(spark,
-          org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
-            org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema),
-            decodeInline(spark, st, tableId, s)))
-        Seq(if (needMeta) df else df.drop(FileCol, PosCol, RowIdCol))
+        val withMeta = rel.withMetadataColumns()
+        val meta = withMeta.output.drop(rel.output.size).map(a => a.name -> a).toMap
+        // plain columns under the names DML and the change feed key on (no
+        // metadata-column mark, so `*` and writes treat them as data)
+        def as(from: String, to: String) =
+          Alias(meta(from), to)(explicitMetadata = Some(Metadata.empty))
+        Project(rel.output ++ Seq(as(FileCol, FileCol), as(PosCol, PosCol),
+          as(LakeTable.RowIdMetaCol, RowIdCol)), withMeta)
       }
-
-    val allParts = parts ++ inlinedParts
-    var all: DataFrame =
-      if (allParts.nonEmpty) allParts.reduce(_ unionByName _)
-      else {
-        val schema = if (needMeta)
-          currentStruct.add(FileCol, StringType).add(PosCol, LongType).add(RowIdCol, LongType)
-        else currentStruct
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      }
-
-    if (deletes.nonEmpty) {
-      val delStruct = StructType(Seq(
-        StructField("file", StringType), StructField("pos", LongType),
-        StructField("row_id", LongType)))
-      val dd = spark.read.schema(delStruct).parquet(deleteReadPaths(deletes): _*)
-        .select(col("file").as(FileCol), col("pos").as(PosCol))
-      all = all.join(gateBroadcast(spark, dd, deletes.map(_.deleteCount).sum),
-        Seq(FileCol, PosCol), "left_anti")
-    }
-
-    if (!withRowMeta && needMeta) all = all.drop(FileCol, PosCol, RowIdCol)
-    all
+    org.apache.spark.sql.graft.StreamingBatch.ofRows(spark, plan)
   }
 
   /** estimated in-memory bytes per (file, pos) delete-set row: the file-name
@@ -309,13 +226,5 @@ object LakeRead {
   def gateBroadcast(spark: SparkSession, dd: DataFrame, totalDeleted: Long): DataFrame = {
     val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
     if (threshold > 0 && totalDeleted * DeleteRowBytes <= threshold) broadcast(dd) else dd
-  }
-
-  private implicit class ListAsJava[A](l: List[A]) {
-    def asJava: java.util.List[A] = {
-      val jl = new java.util.ArrayList[A](l.size)
-      l.foreach(jl.add)
-      jl
-    }
   }
 }

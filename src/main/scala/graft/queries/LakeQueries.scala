@@ -1316,8 +1316,8 @@ object LakeQueries {
     // MV's group columns — the rule re-aggregates the group-domain-sized
     // MV (sums of sums, COUNT-guarded, extrema of extrema) instead of
     // scanning the fact; the entry REQUIRES the plan to carry no fact
-    // relation (the MV splice is a composed V1 scan, the fact would be a
-    // RelationV2) ---------------------------------------------------------
+    // relation (the MV splice reads through an internal relation, the fact
+    // through the catalog) ------------------------------------------------
     "l63_mv_rollup" -> ((s, dir) => {
       val lake = newLake(s)
       val orders = t(s, dir, "orders")
@@ -1342,10 +1342,7 @@ object LakeQueries {
              |FROM $cat.main.mvo GROUP BY o_orderpriority
              |ORDER BY o_orderpriority""".stripMargin)
         val opt = q.queryExecution.optimizedPlan
-        require(opt.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        }.isEmpty, s"l63: rollup rewrite did not fire — fact relation survives:\n$opt")
+        require(!graft.lake.LakeTable.readsCatalogTable(opt), s"l63: rollup rewrite did not fire — fact relation survives:\n$opt")
         q
       } finally s.conf.unset("spark.graft.mv.rewrite")
     }),
@@ -1377,10 +1374,7 @@ object LakeQueries {
              |  ON f.o_custkey = d.c_custkey
              |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)
         val opt = q.queryExecution.optimizedPlan
-        require(opt.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        }.isEmpty, s"l64: join-MV rewrite did not fire — fact relation survives:\n$opt")
+        require(!graft.lake.LakeTable.readsCatalogTable(opt), s"l64: join-MV rewrite did not fire — fact relation survives:\n$opt")
         q
       } finally s.conf.unset("spark.graft.mv.rewrite")
     }),
@@ -1418,10 +1412,7 @@ object LakeQueries {
              |FROM $cat.main.mvo GROUP BY o_orderpriority
              |ORDER BY o_orderpriority""".stripMargin)
         val opt = q.queryExecution.optimizedPlan
-        require(opt.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        }.isEmpty, s"l65: decimal MV rewrite did not fire — fact relation survives:\n$opt")
+        require(!graft.lake.LakeTable.readsCatalogTable(opt), s"l65: decimal MV rewrite did not fire — fact relation survives:\n$opt")
         q
       } finally s.conf.unset("spark.graft.mv.rewrite")
     }),
@@ -1454,10 +1445,7 @@ object LakeQueries {
              |FROM $cat.main.mvo GROUP BY date_trunc('DAY', o_orderdate)
              |ORDER BY o_day""".stripMargin)
         val opt = q.queryExecution.optimizedPlan
-        require(opt.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        }.isEmpty, s"l66: time-bucket MV rewrite did not fire — fact relation survives:\n$opt")
+        require(!graft.lake.LakeTable.readsCatalogTable(opt), s"l66: time-bucket MV rewrite did not fire — fact relation survives:\n$opt")
         q
       } finally s.conf.unset("spark.graft.mv.rewrite")
     }),
@@ -1499,10 +1487,7 @@ object LakeQueries {
              |JOIN $cat.main.d2 n ON c.c_nationkey = n.n_nationkey
              |GROUP BY n_name ORDER BY n_name""".stripMargin)
         val opt = q.queryExecution.optimizedPlan
-        require(opt.collect {
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => r
-          case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r
-        }.isEmpty, s"l67: snowflake MV rewrite did not fire — a relation survives:\n$opt")
+        require(!graft.lake.LakeTable.readsCatalogTable(opt), s"l67: snowflake MV rewrite did not fire — a relation survives:\n$opt")
         q
       } finally s.conf.unset("spark.graft.mv.rewrite")
     }),

@@ -243,11 +243,14 @@ object NativeParquet {
     * @param deletesByFile data-file NAME → delete parquet part paths
     *                      holding positions for it (empty list = clean
     *                      file, scanned with zero skip overhead)
-    * @param firstRowIds   Some when `readSchema` ends with the lake
-    *                      `_row_id` column: data-file NAME → firstRowId of
-    *                      each implicit-id file, whose `_row_id` is
-    *                      firstRowId + row index; other files read it
-    *                      from the file (an [[EpochReads]] rename)
+    * @param firstRowIds   Some when `readSchema` holds the lake `_row_id`
+    *                      column after the data columns: data-file NAME →
+    *                      firstRowId of each implicit-id file, whose
+    *                      `_row_id` is firstRowId + row index; other files
+    *                      read it from the file (an [[EpochReads]] rename)
+    * @param positionMeta  how many of `_graft_file`, `_graft_pos` end
+    *                      `readSchema`: the data file's name and the row
+    *                      index, emitted by the reader
     */
   def deleteAwareScan(
       spark: SparkSession,
@@ -260,10 +263,11 @@ object NativeParquet {
       spjMode: Option[String] = None,
       ordering: Array[graft.lake.Meta.SortKey] = Array.empty,
       epochs: EpochReads = EpochReads.none,
-      firstRowIds: Option[Map[String, Long]] = None): Scan = {
+      firstRowIds: Option[Map[String, Long]] = None,
+      positionMeta: Int = 0): Scan = {
     val classic = spark.asInstanceOf[ClassicSparkSession]
     new LakeDeleteAwareScan(classic, files, deletesByFile, dataSchema, readSchema,
-      filters, keyed, spjMode, ordering, epochs, firstRowIds)
+      filters, keyed, spjMode, ordering, epochs, firstRowIds, positionMeta)
   }
 }
 
@@ -280,7 +284,8 @@ private[graft] class LakeDeleteAwareScan(
     spjMode: Option[String] = None,
     ordering: Array[graft.lake.Meta.SortKey] = Array.empty,
     epochs: NativeParquet.EpochReads = NativeParquet.EpochReads.none,
-    firstRowIds: Option[Map[String, Long]] = None)
+    firstRowIds: Option[Map[String, Long]] = None,
+    positionMeta: Int = 0)
   extends Scan with Batch with SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
 
@@ -391,7 +396,7 @@ private[graft] class LakeDeleteAwareScan(
     // carries everything Spark's readers expect (read-support class,
     // requested-schema json, timezone/legacy flags) — hand-assembling that
     // conf would chase internals across versions.
-    val readWithIdx = StructType(requiredSchema.fields :+
+    val readWithIdx = StructType(requiredSchema.fields.dropRight(positionMeta) :+
       StructField(ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME, LongType))
     // one factory per rename epoch (index 0 = current names); the
     // row-index column is synthetic and never renamed
@@ -406,7 +411,7 @@ private[graft] class LakeDeleteAwareScan(
     }
     val bc = SerializableConfiguration.broadcast(spark.sparkContext,
       spark.sessionState.newHadoopConf())
-    val base = new DeleteAwareReaderFactory(inners, requiredSchema, bc)
+    val base = new DeleteAwareReaderFactory(inners, requiredSchema, bc, positionMeta)
     if (keyed.isDefined) new UnwrapKeyedFactory(base) else base
   }
 }
@@ -421,19 +426,41 @@ private[graft] case class DeleteAwareFilePartition(
 
 /** Wraps Spark's parquet row readers: per file, skip rows whose row index
   * appears in that file's sorted delete-position list (single forward
-  * pointer — both streams are ascending). Rows physically carry a trailing
-  * row-index field the consumer never reads (ordinal-based access).
-  * A file its partition gives a firstRowId is an implicit-id file of a
-  * row-id read: the last `schema` field is the lake `_row_id`, emitted as
-  * firstRowId + the row index (other files read it from the file). */
+  * pointer — both streams are ascending). The inner readers read the
+  * columns `schema` holds before its `positionMeta` trailing fields, plus
+  * a trailing row index.
+  * Rows of a plain read are the inner rows as they are: the row index
+  * rides along as a field the consumer never reads (ordinal-based access).
+  * Otherwise each row is projected to `schema`:
+  *   - a file its partition gives a firstRowId is an implicit-id file of
+  *     a row-id read: the last inner column is the lake `_row_id`, emitted
+  *     as firstRowId + the row index (other files read it from the file);
+  *   - the `positionMeta` trailing fields are the file's name
+  *     (`_graft_file`) or the row index (`_graft_pos`). */
 private[graft] class DeleteAwareReaderFactory(
     inners: IndexedSeq[ParquetPartitionReaderFactory],
     schema: StructType,
-    conf: Broadcast[SerializableConfiguration]) extends PartitionReaderFactory {
+    conf: Broadcast[SerializableConfiguration],
+    positionMeta: Int = 0) extends PartitionReaderFactory {
 
-  private val rowIdxOrdinal = schema.length
+  /** inner columns; the row index follows them */
+  private val nInner = schema.length - positionMeta
 
   override def supportColumnarReads(partition: InputPartition): Boolean = false
+
+  /** `schema` from JoinedRow(inner row, (file name, firstRowId)) */
+  private def projection(implicitIds: Boolean): UnsafeProjection = {
+    val rowIdx = BoundReference(nInner, LongType, nullable = false)
+    val cols = schema.fields.take(nInner).toSeq.zipWithIndex.map {
+      case (_, i) if implicitIds && i == nInner - 1 =>
+        Add(rowIdx, BoundReference(nInner + 2, LongType, nullable = false))
+      case (f, i) => BoundReference(i, f.dataType, nullable = true): Expression
+    }
+    val file = BoundReference(nInner + 1, org.apache.spark.sql.types.StringType,
+      nullable = false)
+    UnsafeProjection.create(cols ++ schema.fields.drop(nInner).map(f =>
+      if (f.name == graft.lake.LakeRead.FileCol) file else rowIdx))
+  }
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val dp = partition.asInstanceOf[DeleteAwareFilePartition]
@@ -442,18 +469,12 @@ private[graft] class DeleteAwareReaderFactory(
       private var current: PartitionReader[InternalRow] = _
       private var positions: Array[Long] = Array.emptyLongArray
       private var pi = 0
-      // implicit row ids: the columns before `_row_id`, then row index +
-      // the current file's firstRowId (held in `base`)
-      private var implicitIds = false
-      private val base = new GenericInternalRow(Array[Any](0L))
+      // the current file's (name, firstRowId), joined after the inner row
+      private val base = new GenericInternalRow(Array[Any](null, 0L))
       private lazy val joined = new JoinedRow
-      private lazy val withId = {
-        val n = schema.length - 1
-        UnsafeProjection.create(schema.fields.take(n).toSeq.zipWithIndex.map {
-          case (f, i) => BoundReference(i, f.dataType, nullable = true): Expression
-        } :+ Add(BoundReference(n + 1, LongType, nullable = false),
-          BoundReference(n + 2, LongType, nullable = false)))
-      }
+      private lazy val plain = projection(implicitIds = false)
+      private lazy val withIds = projection(implicitIds = true)
+      private var project: UnsafeProjection = _
 
       private def openNext(): Boolean = {
         if (fi >= dp.inner.files.length) return false
@@ -464,9 +485,10 @@ private[graft] class DeleteAwareReaderFactory(
         positions = DeletePositions.forFile(name,
           dp.deletesByFile.getOrElse(name, Nil), conf.value.value)
         pi = 0
-        implicitIds = dp.firstRowIds.get(name) match {
-          case Some(first) => base.update(0, first); true
-          case None => false
+        base.update(0, org.apache.spark.unsafe.types.UTF8String.fromString(name))
+        project = dp.firstRowIds.get(name) match {
+          case Some(first) => base.update(1, first); withIds
+          case _ => if (positionMeta > 0) plain else null
         }
         current = inners(epoch).createReader(FilePartition(dp.inner.index, Array(pf)))
         true
@@ -478,7 +500,7 @@ private[graft] class DeleteAwareReaderFactory(
           if (!current.next()) { current.close(); current = null }
           else {
             if (positions.isEmpty) return true
-            val idx = current.get().getLong(rowIdxOrdinal)
+            val idx = current.get().getLong(nInner)
             while (pi < positions.length && positions(pi) < idx) pi += 1
             if (pi >= positions.length || positions(pi) != idx) return true
             // else deleted: fall through, fetch the next row
@@ -488,7 +510,7 @@ private[graft] class DeleteAwareReaderFactory(
       }
 
       override def get(): InternalRow =
-        if (implicitIds) withId(joined(current.get(), base)) else current.get()
+        if (project == null) current.get() else project(joined(current.get(), base))
 
       override def close(): Unit = if (current != null) current.close()
     }
@@ -506,7 +528,12 @@ private[graft] object DeletePositions {
     if (delParts.isEmpty) return Array.emptyLongArray
     val out = mutable.ArrayBuilder.make[Long]
     delParts.foreach { part =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(part), conf))
+      // read options from the hadoop conf and path: decryption properties
+      // for the delete vectors of an encrypted table come from its crypto
+      // factory settings
+      val path = new Path(part)
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(path, conf),
+        org.apache.parquet.HadoopReadOptions.builder(conf, path).build())
       try {
         val schema = reader.getFooter.getFileMetaData.getSchema
         val blocks = reader.getFooter.getBlocks.asScala.toSeq

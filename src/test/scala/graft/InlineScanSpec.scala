@@ -13,9 +13,8 @@ import graft.lake.Meta._
 
 /** Pending inline rows on the native scan tier: a SQL read of a table with
   * live inline batches plans a [[LakeNativeScan]] (one extra partition of
-  * driver-decoded rows), and every answer equals the composed reader's
-  * ([[LakeRead.scanDF]], read through the `Lake` API) for each table
-  * shape. */
+  * driver-decoded rows), and every answer equals the composed reference
+  * reader's ([[ComposedReference]]) for each table shape. */
 class InlineScanSpec extends AnyFunSuite {
   import TestSession.spark
 
@@ -41,8 +40,8 @@ class InlineScanSpec extends AnyFunSuite {
     df.collect().map(_.toString).toSeq.sorted
 
   /** `sql` plans a native scan of every lake table it reads, and its
-    * answer equals the same query over temp views of `lake.table(...)`
-    * (the composed reader, [[LakeRead.scanDF]]) — each
+    * answer equals the same query over temp views of the composed
+    * reference reader ([[ComposedReference.table]]) — each
     * `<catalog>.main.<t> [VERSION AS OF n]` is swapped for one */
   private def assertNativeMatchesComposed(lake: Lake, sql: String): Seq[String] = {
     val native = spark.sql(sql)
@@ -53,10 +52,11 @@ class InlineScanSpec extends AnyFunSuite {
     val viaApi = """\w+\.main\.(\w+)(?: VERSION AS OF (\d+))?""".r.replaceAllIn(sql, m => {
       val version = Option(m.group(2)).map(_.toLong)
       val view = s"inl_ref_${m.group(1)}_${version.getOrElse("cur")}"
-      lake.table(s"main.${m.group(1)}", version).createOrReplaceTempView(view)
+      ComposedReference.table(lake, s"main.${m.group(1)}", version)
+        .createOrReplaceTempView(view)
       view
     })
-    assert(got == rows(spark.sql(viaApi)), s"native scan and scanDF disagree on: $sql")
+    assert(got == rows(spark.sql(viaApi)), s"native scan and reference disagree on: $sql")
     got
   }
 
@@ -232,17 +232,25 @@ class InlineScanSpec extends AnyFunSuite {
     lake.createTable("main.ir", abSchema)
     inlinable(lake, "main.ir")
     /** (_row_id, a, b) by SQL, planned on native scans only, equal to the
-      * composed reader's `_graft_row_id` */
+      * composed reference reader's `_graft_row_id` */
     def check(): Seq[(Long, Int)] = {
       val df = spark.sql(s"SELECT _row_id, a, b FROM $cat.main.ir")
       assert(scansOf(df).nonEmpty && scansOf(df).forall(_.isInstanceOf[LakeNativeScan]),
         s"expected native scans: ${scansOf(df)}")
       val st = lake.store.state()
       val s = st.currentSnapshotId
-      val ref = LakeRead.scanDF(spark, st, st.tableAt("main", "ir", s).get.tableId, s,
+      val ref = ComposedReference.scanDF(spark, st, st.tableAt("main", "ir", s).get.tableId, s,
         withRowMeta = true).select(col(LakeRead.RowIdCol), col("a"), col("b"))
       val got = rows(df)
-      assert(got == rows(ref), "native _row_id differs from scanDF's")
+      assert(got == rows(ref), "native _row_id differs from the reference's")
+      // the row metadata of the Lake API's reads (one native scan) equals
+      // the reference's: file, position and row id of every live row
+      val meta = Seq(col(LakeRead.FileCol), col(LakeRead.PosCol), col(LakeRead.RowIdCol),
+        col("a"), col("b"))
+      val api = lake.tableWithRowMeta("main.ir")
+      assert(scansOf(api).size == 1 && scansOf(api).forall(_.isInstanceOf[LakeNativeScan]))
+      assert(rows(api.select(meta: _*)) == rows(ComposedReference.table(lake, "main.ir",
+        withRowMeta = true).select(meta: _*)), "row metadata differs from the reference's")
       val ids = df.collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
       assert(ids.map(_._1).distinct.size == ids.size, s"row ids not unique: $ids")
       ids

@@ -1522,19 +1522,21 @@ class LakeSpec extends AnyFunSuite {
     spark.sql(s"ALTER TABLE $cat.main.ne ADD COLUMN c INT")
     lake.append("main.ne", Seq((3, 30, 300)).toDF("a", "b", "c"))
     assert(scanOf().isInstanceOf[LakeNativeScan], "ADD COLUMN dropped the native tier")
-    assert(lake.table("main.ne").orderBy("a").collect().map(r =>
+    // the native scan (Lake API) and the composed reference agree
+    def readers = Seq(lake.table("main.ne"), ComposedReference.table(lake, "main.ne"))
+    readers.foreach(df => assert(df.orderBy("a").collect().map(r =>
       (r.getInt(0), if (r.isNullAt(2)) -1 else r.getInt(2))).toSeq ==
-      Seq((1, -1), (2, -1), (3, 300)))
+      Seq((1, -1), (2, -1), (3, 300))))
     // DROP COLUMN: the by-name reader just ignores the stale column
     spark.sql(s"ALTER TABLE $cat.main.ne DROP COLUMN b")
     assert(scanOf().isInstanceOf[LakeNativeScan], "DROP COLUMN dropped the native tier")
-    assert(lake.table("main.ne").columns.toSeq == Seq("a", "c"))
+    readers.foreach(df => assert(df.columns.toSeq == Seq("a", "c")))
     // re-adding a dropped NAME mints a new column id: the old files' stale
     // "b" data must NOT leak into the successor → read under a name the
     // files lack, all null
     spark.sql(s"ALTER TABLE $cat.main.ne ADD COLUMN b INT")
     assert(scanOf().isInstanceOf[LakeNativeScan], "re-added name dropped the native tier")
-    assert(lake.table("main.ne").collect().forall(r => r.isNullAt(r.fieldIndex("b"))))
+    readers.foreach(df => assert(df.collect().forall(r => r.isNullAt(r.fieldIndex("b")))))
     assert(spark.sql(s"SELECT a, c, b FROM $cat.main.ne").collect().map(_.toString)
       .sorted.toSeq == Seq("[1,null,null]", "[2,null,null]", "[3,300,null]"))
   }
@@ -1572,8 +1574,8 @@ class LakeSpec extends AnyFunSuite {
     val scan = new LakeTable(lake.store, "main", "nw", st.currentSnapshotId, st)
       .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
     assert(scan.isInstanceOf[LakeNativeScan], "int->bigint widening dropped the native tier")
-    assert(lake.table("main.nw").orderBy("a").collect().map(_.getLong(1)).toSeq ==
-      Seq(10L, 20L, 3000000000L))
+    Seq(lake.table("main.nw"), ComposedReference.table(lake, "main.nw")).foreach(df =>
+      assert(df.orderBy("a").collect().map(_.getLong(1)).toSeq == Seq(10L, 20L, 3000000000L)))
     // pushed filter over the widened column stays correct across epochs
     assert(spark.sql(s"SELECT a FROM $cat.main.nw WHERE b > 15")
       .collect().map(_.getInt(0)).sorted.toSeq == Seq(2, 3))
@@ -1590,8 +1592,8 @@ class LakeSpec extends AnyFunSuite {
       spark.sql(s"ALTER TABLE $cat.main.nw ALTER COLUMN b TYPE STRING"))
     assert(e2.getMessage.contains("promotion"), e2.getMessage)
     // the rejected ALTERs left no epoch behind: reads and schema unchanged
-    assert(lake.table("main.nw").schema("b").dataType ==
-      org.apache.spark.sql.types.LongType)
+    Seq(lake.table("main.nw"), ComposedReference.table(lake, "main.nw")).foreach(df =>
+      assert(df.schema("b").dataType == org.apache.spark.sql.types.LongType))
   }
 
   test("ADD COLUMN WITH DEFAULT reads on the native tier (the reader fills the default)") {
@@ -1606,13 +1608,15 @@ class LakeSpec extends AnyFunSuite {
     val scan = new LakeTable(lake.store, "main", "nd", st.currentSnapshotId, st)
       .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
     assert(scan.isInstanceOf[LakeNativeScan])
-    assert(lake.table("main.nd").collect().head.getString(2) == "x")
+    Seq(lake.table("main.nd"), ComposedReference.table(lake, "main.nd")).foreach(df =>
+      assert(df.collect().head.getString(2) == "x"))
     // a later SET DEFAULT changes inserts only; old files keep 'x'
     spark.sql(s"ALTER TABLE $cat.main.nd ALTER COLUMN t SET DEFAULT 'y'")
     spark.sql(s"INSERT INTO $cat.main.nd (a, b) VALUES (2, 20)")
     val sqlRows = spark.sql(s"SELECT a, t FROM $cat.main.nd").collect().map(_.toString).sorted.toSeq
     assert(sqlRows == Seq("[1,x]", "[2,y]"), sqlRows)
-    assert(lake.table("main.nd").select("a", "t").collect().map(_.toString).sorted.toSeq == sqlRows)
+    Seq(lake.table("main.nd"), ComposedReference.table(lake, "main.nd")).foreach(df =>
+      assert(df.select("a", "t").collect().map(_.toString).sorted.toSeq == sqlRows))
     assert(spark.sql(s"SELECT a FROM $cat.main.nd WHERE t = 'x'").collect()
       .map(_.getInt(0)).toSeq == Seq(1))
     // the delete-aware row readers fill it too
@@ -1640,7 +1644,8 @@ class LakeSpec extends AnyFunSuite {
     assert(scan.isInstanceOf[LakeNativeScan])
     val got = spark.sql(s"SELECT k, t, s FROM $cat.main.np").collect().map(_.toString).sorted.toSeq
     assert(got == Seq("[1,1.0,1.0]", "[2,2.0,-3.0]", "[3,2.5,1.0E10]"), got)
-    assert(lake.table("main.np").select("k", "t", "s").collect().map(_.toString).sorted.toSeq == got)
+    Seq(lake.table("main.np"), ComposedReference.table(lake, "main.np")).foreach(df =>
+      assert(df.select("k", "t", "s").collect().map(_.toString).sorted.toSeq == got))
     assert(spark.sql(s"SELECT k FROM $cat.main.np WHERE s < 0 OR t > 2.2").collect()
       .map(_.getInt(0)).sorted.toSeq == Seq(2, 3))
   }
@@ -1927,11 +1932,16 @@ class LakeSpec extends AnyFunSuite {
     import spark.implicits._
     lake.createTable("main.pf", abSchema)
     lake.append("main.pf", (1 to 100).map(i => (i, i)).toDF("a", "b"))
-    val plan = lake.table("main.pf").filter(col("a") === 7)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") &&
-      (plan.contains("EqualTo(a,7)") || plan.contains("IsNotNull(a)")),
-      s"no parquet pushdown in plan:\n${plan.take(1500)}")
+    // the Lake API plans the native scan, which hands the filters Spark
+    // pushed to the parquet readers
+    val df = lake.table("main.pf").filter(col("a") === 7)
+    val pushed = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation => r.scan
+    }.collect { case n: LakeNativeScan => n.pushed.toSeq }.flatten
+    assert(pushed.contains(org.apache.spark.sql.sources.EqualTo("a", 7)) ||
+      pushed.contains(org.apache.spark.sql.sources.IsNotNull("a")),
+      s"no parquet pushdown in plan:\n${df.queryExecution.optimizedPlan}")
+    assert(df.collect().map(_.getInt(1)).toSeq == Seq(7))
   }
 
   // ---- SQL UPDATE lowers onto the native positional-delete update ---------
@@ -2259,12 +2269,20 @@ class LakeSpec extends AnyFunSuite {
       // file list); the DELETE-SET join must not add a second hint
       def hintCount(s: String) = "ResolvedHint".r.findAllIn(s).length
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      val df = lake.table("main.bd")
+      // the composed reference reader still anti-joins the delete set
+      // through LakeRead.gateBroadcast (as the change feed does)
+      val df = ComposedReference.table(lake, "main.bd")
       val gated = hintCount(df.queryExecution.analyzed.toString)
       assert(df.count() == 1000)
+      // the native scan joins nothing: deletes apply inside the readers
+      val native = lake.table("main.bd")
+      assert(hintCount(native.queryExecution.analyzed.toString) == 0)
+      assert(!native.queryExecution.executedPlan.toString.contains("Join"))
+      assert(native.count() == 1000)
       // small sets under a normal threshold DO get the broadcast hint
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      val hinted = hintCount(lake.table("main.bd").queryExecution.analyzed.toString)
+      val hinted = hintCount(ComposedReference.table(lake, "main.bd")
+        .queryExecution.analyzed.toString)
       assert(hinted == gated + 1,
         s"expected exactly one extra hint for the small delete set (gated=$gated hinted=$hinted)")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

@@ -22,6 +22,12 @@ class MvRewriteSpec extends AnyFunSuite {
     (lake, cat)
   }
 
+  /** whether `df`'s optimized plan reads a table through the catalog (the
+    * fact or a dim); a served MV reads through an internal relation of its
+    * own (`LakeRead.scanDF`) */
+  private def scansCatalogTable(df: DataFrame): Boolean =
+    LakeTable.readsCatalogTable(df.queryExecution.optimizedPlan)
+
   private def aggCount(df: DataFrame): Int =
     df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.size
 
@@ -179,7 +185,7 @@ class MvRewriteSpec extends AnyFunSuite {
     withMode("fresh") {
       def noFact(df: DataFrame): Unit = {
         val p = df.queryExecution.optimizedPlan.toString
-        assert(!p.contains("RelationV2"),
+        assert(!scansCatalogTable(df),
           s"rollup must re-aggregate the MV, not scan the fact:\n$p")
       }
       val df = spark.sql(
@@ -211,7 +217,7 @@ class MvRewriteSpec extends AnyFunSuite {
       // grouping by a NON-MV column falls back verbatim
       val nf = spark.sql(
         s"SELECT y, count(*) AS n FROM $cat.main.src GROUP BY y")
-      assert(nf.queryExecution.optimizedPlan.toString.contains("RelationV2"))
+      assert(scansCatalogTable(nf))
       assert(nf.count() == 5)
     }
   }
@@ -225,7 +231,7 @@ class MvRewriteSpec extends AnyFunSuite {
       groupCols = Seq("g"), sumCols = Seq("x"), cntCols = Seq("x"))
     withMode("fresh") {
       val g = spark.sql(s"SELECT count(*) AS n, sum(x) AS s FROM $cat.main.src")
-      assert(!g.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(g),
         g.queryExecution.optimizedPlan.toString)
       val r = g.collect().head
       assert(r.getLong(0) == 0L && r.isNullAt(1),
@@ -256,7 +262,7 @@ class MvRewriteSpec extends AnyFunSuite {
     withMode("fresh") {
       val df = q(join)
       val p = df.queryExecution.optimizedPlan.toString
-      assert(!p.contains("RelationV2"),
+      assert(!scansCatalogTable(df),
         s"join-source MV must serve the join query:\n$p")
       assert(rows3(df) == want)
       // reversed side order matches too (orientation flip)
@@ -264,25 +270,25 @@ class MvRewriteSpec extends AnyFunSuite {
         s"""SELECT seg, count(*) AS n, sum(x) AS s
            |FROM $cat.main.dim d JOIN $cat.main.fact f ON d.dk = f.k
            |GROUP BY seg""".stripMargin)
-      assert(!rev.queryExecution.optimizedPlan.toString.contains("RelationV2"))
+      assert(!scansCatalogTable(rev))
       assert(rows3(rev) == want)
       // a per-side filter is NOT the MV's shape: falls back
       val side = q(
         s"""SELECT seg, sum(x) AS s
            |FROM (SELECT * FROM $cat.main.fact WHERE x > 5) f
            |JOIN $cat.main.dim d ON f.k = d.dk GROUP BY seg""".stripMargin)
-      assert(side.queryExecution.optimizedPlan.toString.contains("RelationV2"))
+      assert(scansCatalogTable(side))
       // DIM churn makes the MV stale: freshness gates on BOTH tables
       lake.update("main.dim", col("dk") === 2L, Map("seg" -> lit("a")))
       val stale = q(join)
-      assert(stale.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(scansCatalogTable(stale),
         "dim change must disqualify the join-MV until refreshed")
       assert(rows3(stale) == Set(("a", 3L, 35L)))
     }
     withMode("refresh") {
       val df = q(join) // refresh-on-read folds the dim delta, then serves
       assert(rows3(df) == Set(("a", 3L, 35L)))
-      assert(!df.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(df),
         s"refresh mode must serve after folding the dim delta:\n${df.queryExecution.optimizedPlan}")
     }
   }
@@ -301,7 +307,7 @@ class MvRewriteSpec extends AnyFunSuite {
       cntCols = Seq("rev"), avgCols = Seq("rev"))
     withMode("fresh") {
       def noFact(df: DataFrame): Unit =
-        assert(!df.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+        assert(!scansCatalogTable(df),
           s"must serve from the MV:\n${df.queryExecution.optimizedPlan}")
       // exact group match: decimal sum serves through the COUNT guard
       val ex = spark.sql(
@@ -358,7 +364,7 @@ class MvRewriteSpec extends AnyFunSuite {
         s"""SELECT date_trunc('DAY', ts) AS d, count(*) AS n, sum(x) AS s
            |FROM $cat.main.src GROUP BY date_trunc('DAY', ts)""".stripMargin)
       val p = df.queryExecution.optimizedPlan
-      assert(p.toString.contains("RelationV2") == false, s"date_trunc MV must serve the bucket query:\n$p")
+      assert(scansCatalogTable(df) == false, s"date_trunc MV must serve the bucket query:\n$p")
       val got = df.collect().map(r =>
         r.getTimestamp(0).toString -> (r.getLong(1), r.getLong(2))).toMap
       assert(got == Map(
@@ -370,13 +376,13 @@ class MvRewriteSpec extends AnyFunSuite {
       val r1 = spark.sql(
         s"""SELECT date_trunc('DAY', ts) AS d, sum(x) AS s
            |FROM $cat.main.src WHERE x > 1 GROUP BY date_trunc('DAY', ts)""".stripMargin)
-      assert(r1.queryExecution.optimizedPlan.toString.contains("RelationV2"), "non-group residual must fall back")
+      assert(scansCatalogTable(r1), "non-group residual must fall back")
       // a DIFFERENT bucket expression (month-from-day) is NOT servable
       // from a day-keyed MV: canonicalized forms differ -> verbatim
       val mo = spark.sql(
         s"""SELECT date_trunc('MONTH', ts) AS mth, sum(x) AS s
            |FROM $cat.main.src GROUP BY date_trunc('MONTH', ts)""".stripMargin)
-      assert(mo.queryExecution.optimizedPlan.toString.contains("RelationV2"), "month bucket over a day-keyed MV must fall back")
+      assert(scansCatalogTable(mo), "month bucket over a day-keyed MV must fall back")
       assert(mo.collect().map(r => r.getTimestamp(0).toString -> r.getLong(1))
         .toMap == Map("2024-03-01 00:00:00.0" -> 33L, "2024-04-01 00:00:00.0" -> 100L))
     }
@@ -406,7 +412,7 @@ class MvRewriteSpec extends AnyFunSuite {
     assert(rows3(spark.sql(chain)) == want) // rule off: ground truth
     withMode("fresh") {
       val df = spark.sql(chain)
-      assert(!df.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(df),
         s"snowflake MV must serve the 2-dim chain:\n${df.queryExecution.optimizedPlan}")
       assert(rows3(df) == want)
       // bottom-join orientation flip (d1 JOIN fact) still serves via the
@@ -416,7 +422,7 @@ class MvRewriteSpec extends AnyFunSuite {
            |FROM $cat.main.d1 a JOIN $cat.main.fact f ON a.k = f.fk
            |JOIN $cat.main.d2 b ON a.seg = b.seg2
            |GROUP BY region""".stripMargin)
-      assert(!flip.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(flip),
         s"flipped bottom join must serve:\n${flip.queryExecution.optimizedPlan}")
       assert(rows3(flip) == want)
       // note: a comma/ON-1=1 reordering of the SAME chain is normalized by
@@ -427,12 +433,12 @@ class MvRewriteSpec extends AnyFunSuite {
            |FROM $cat.main.fact f JOIN $cat.main.d1 a ON f.fk = a.k
            |JOIN $cat.main.d2 b ON a.seg = b.region
            |GROUP BY region""".stripMargin)
-      assert(wrong.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(scansCatalogTable(wrong),
         s"wrong-key chain must fall back:\n${wrong.queryExecution.optimizedPlan}")
       // MIDDLE-dim churn gates: an update to d1 disqualifies until refresh
       lake.update("main.d1", col("k") === 3L, Map("seg" -> lit("blue")))
       val stale = spark.sql(chain)
-      assert(stale.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(scansCatalogTable(stale),
         "dim churn must disqualify the snowflake MV until refreshed")
       val want2 = Set(("emea", 2L, 30L), ("apac", 2L, 12L))
       assert(rows3(stale) == want2)
@@ -440,7 +446,7 @@ class MvRewriteSpec extends AnyFunSuite {
     withMode("refresh") {
       val df = spark.sql(chain) // refresh-on-read folds the d1 delta, serves
       assert(rows3(df) == Set(("emea", 2L, 30L), ("apac", 2L, 12L)))
-      assert(!df.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(df),
         s"refresh mode must serve after folding the dim delta:\n${df.queryExecution.optimizedPlan}")
     }
   }
@@ -525,7 +531,7 @@ class MvRewriteSpec extends AnyFunSuite {
       // global shape rolls up (an Aggregate over the MV remains): assert
       // the fact relation is gone rather than Aggregate-absence
       val c1 = spark.sql(s"SELECT count(1) AS n FROM $cat.main.src")
-      assert(!c1.queryExecution.optimizedPlan.toString.contains("RelationV2"),
+      assert(!scansCatalogTable(c1),
         s"count(1):\n${c1.queryExecution.optimizedPlan}")
     }
   }

@@ -1,0 +1,194 @@
+package graft
+
+import java.nio.file.Files
+import scala.collection.mutable
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
+import org.apache.spark.sql.catalyst.plans.LeftAnti
+import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.v2.{BatchScanExec, DataSourceV2ScanRelation}
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.funsuite.AnyFunSuite
+import graft.lake._
+
+/** The library's own reads (`LakeRead.scanDF`: the `Lake` API, DML, the
+  * change feed, MV refresh) plan the one lake scan, [[LakeNativeScan]],
+  * observed on the physical plans of the actions they run. */
+class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
+  import TestSession.spark
+
+  private def newCat(tag: String): (Lake, String) = {
+    val lake = new Lake(spark, Files.createTempDirectory(s"graft_one$tag").toString)
+    val cat = s"one$tag${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", lake.root)
+    (lake, cat)
+  }
+
+  /** the executed plans of every action `body` runs */
+  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+    val got = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        got.synchronized(got += qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    org.apache.spark.sql.graft.ListenerDrain(spark)
+    spark.listenerManager.register(listener)
+    try { body; org.apache.spark.sql.graft.ListenerDrain(spark) }
+    finally spark.listenerManager.unregister(listener)
+    got.synchronized(got.toSeq)
+  }
+
+  /** the nodes of `p`, and with `caches` those of the cached plans it reads */
+  private def nodes(p: SparkPlan, caches: Boolean): Seq[SparkPlan] =
+    collectWithSubqueries(p) {
+      case m: InMemoryTableScanExec if caches =>
+        m +: nodes(m.relation.cacheBuilder.cachedPlan, caches)
+      case other => Seq(other)
+    }.flatten
+
+  /** the lake scans of `table` ("schema.table") in `ps` */
+  private def scansOf(ps: Seq[SparkPlan], table: String, caches: Boolean = true)
+      : Seq[LakeNativeScan] =
+    ps.flatMap(nodes(_, caches)).collect {
+      case b: BatchScanExec => b.scan
+    }.collect { case n: LakeNativeScan if n.description().contains(s" $table@") => n }
+
+  private def pairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  test("DELETE and UPDATE scan only the files their predicate can match") {
+    val (lake, cat) = newCat("dml")
+    lake.createTable("main.t", StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType))))
+    // four files with disjoint key ranges [0,100) … [300,400)
+    (0 until 4).foreach(i => lake.append("main.t", spark.range(i * 100, (i + 1) * 100)
+      .selectExpr("id AS k", "id * 2 AS v").coalesce(1)))
+    def files(ps: Seq[SparkPlan]): Seq[Int] = {
+      val ss = scansOf(ps, "main.t")
+      assert(ss.nonEmpty, "no lake scan of main.t planned")
+      ss.map(_.currentFileCount)
+    }
+    var res = (0L, 0L)
+    // the Lake API and the SQL DELETE / UPDATE each read one file
+    assert(files(plansOf { res = lake.delete("main.t", col("k") < 50) }).forall(_ == 1))
+    assert(res._2 == 50L)
+    assert(files(plansOf { spark.sql(s"DELETE FROM $cat.main.t WHERE k >= 390") })
+      .forall(_ == 1))
+    assert(files(plansOf {
+      res = lake.update("main.t", col("k").between(250, 259), Map("v" -> lit(-1L)))
+    }).forall(_ == 1))
+    assert(res._2 == 10L)
+    assert(files(plansOf {
+      spark.sql(s"UPDATE $cat.main.t SET v = -2 WHERE k >= 120 AND k < 125")
+    }).forall(_ == 1))
+    val want = (50L until 390L).map(k =>
+      (k, if (k >= 250 && k < 260) -1L else if (k >= 120 && k < 125) -2L else k * 2))
+    assert(pairs(lake.table("main.t")) == want)
+    assert(pairs(ComposedReference.table(lake, "main.t")) == want)
+    assert(pairs(spark.sql(s"SELECT k, v FROM $cat.main.t")) == want)
+  }
+
+  test("MV refresh-on-read never matches the library's own reads") {
+    val (lake, _) = newCat("mvrw")
+    import spark.implicits._
+    lake.createTableAs("main.src", Seq(("a", 1L, 10L), ("a", 2L, 20L), ("b", 3L, 30L),
+      ("b", 4L, 40L)).toDF("g", "x", "y"))
+    lake.createMaterializedView("main.mv", "main.src",
+      groupCols = Seq("g"), sumCols = Seq("x"), minMaxCols = Seq("y"))
+    spark.conf.set("spark.graft.mv.rewrite", "refresh")
+    try {
+      lake.delete("main.src", col("y") === 20L) // retires group a's max
+      val before = lake.store.state().currentSnapshotId
+      // the refresh's own reads (change feed, MIN/MAX recompute) must not
+      // start a nested refresh of the same MV: that would win the watermark
+      // CAS and fail this one with ConcurrentMvRefreshException
+      lake.refreshMaterializedView("main.mv")
+      val st = lake.store.state()
+      val mvTid = st.tableAt("main", "mv", st.currentSnapshotId).get.tableId
+      val commits = st.snapshots.filter(_.snapshotId > before)
+      assert(commits.size == 1 && commits.head.changes.exists(_.contains(s":$mvTid")),
+        s"expected one MV commit: $commits")
+      val want = Set(("a", 1L, 1L, 10L, 10L), ("b", 2L, 7L, 30L, 40L))
+      def rows(df: DataFrame) = df.collect().map(r => (r.getString(0), r.getLong(1),
+        r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+      assert(rows(lake.table("main.mv").select("g", "n_rows", "sum_x", "min_y", "max_y")) ==
+        want)
+      assert(rows(ComposedReference.table(lake, "main.src").groupBy("g")
+        .agg(count(lit(1)), sum("x"), min("y"), max("y"))) == want)
+      // a `Lake` API aggregate matching the (now fresh) MV still reads the
+      // source, as the composed reader always did
+      val agg = lake.table("main.src").groupBy("g")
+        .agg(count(lit(1)), sum("x"), min("y"), max("y"))
+      val scanned = agg.queryExecution.optimizedPlan.collect {
+        case r: DataSourceV2ScanRelation => r.scan.description()
+      }
+      assert(scanned.exists(_.contains(" main.src@")) &&
+        !scanned.exists(_.contains(" main.mv@")), s"Lake API aggregate rewritten: $scanned")
+      assert(rows(agg) == want)
+    } finally spark.conf.unset("spark.graft.mv.rewrite")
+  }
+
+  test("MV refresh write plan: one source scan, one dirty-group aggregate, no delete anti-join") {
+    val (lake, cat) = newCat("mvplan")
+    lake.createTable("main.o", StructType(Seq(StructField("k", LongType),
+      StructField("g", IntegerType), StructField("v", LongType))))
+    lake.setOption("data_inlining_row_limit", "100", Some("main.o"))
+    lake.append("main.o", spark.range(0, 200)
+      .selectExpr("id AS k", "cast(id % 4 AS int) AS g", "id AS v").coalesce(1))
+    // a second schema epoch, a delete overlay and live inline rows
+    spark.sql(s"ALTER TABLE $cat.main.o ADD COLUMN c STRING")
+    lake.append("main.o", spark.range(200, 400)
+      .selectExpr("id AS k", "cast(id % 4 AS int) AS g", "id AS v", "'x' AS c").coalesce(1))
+    lake.delete("main.o", col("k") % 10 === 0L)
+    lake.insertRows("main.o", Seq(Seq(1000L, 1, 1000L, "i"), Seq(1001L, 2, 1L, "i")))
+    lake.createMaterializedView("main.mv", "main.o",
+      groupCols = Seq("g"), sumCols = Seq("v"), minMaxCols = Seq("v"))
+    // the window retires an extremum (dirty group) and inserts inline rows
+    lake.delete("main.o", col("k") === 399L)
+    lake.insertRows("main.o", Seq(Seq(1002L, 3, 7L, "j")))
+    val st0 = lake.store.state()
+    assert(st0.deleteFilesAt(st0.tableAt("main", "o", st0.currentSnapshotId).get.tableId,
+      st0.currentSnapshotId).nonEmpty)
+
+    val plans = plansOf(lake.refreshMaterializedView("main.mv"))
+    val writes = plans.filter(p => nodes(p, caches = false)
+      .exists(_.isInstanceOf[DataWritingCommandExec]))
+    assert(writes.size == 1, s"expected the MV write only: ${writes.size} write plans")
+    val write = writes.head
+    // (source scans outside the cached change rows, dirty-group key
+    // filters `d_dirty = 1`, anti-joins on the delete keys anywhere in the
+    // refresh); the composed reader planned no lake scan, pushed the
+    // dirty-group semi join into each of its union branches, and
+    // anti-joined every scan against the delete rows
+    val observed = (
+      scansOf(Seq(write), "main.o", caches = false).size,
+      nodes(write, caches = false).count {
+        case f: FilterExec => f.condition.exists {
+          case EqualTo(a: AttributeReference, Literal(1L, _)) => a.name == "d_dirty"
+          case _ => false
+        }
+        case _ => false
+      },
+      plans.flatMap(nodes(_, caches = true)).count {
+        case j: BaseJoinExec => j.joinType == LeftAnti &&
+          j.leftKeys.exists(_.references.exists(_.name == LakeRead.FileCol))
+        case _ => false
+      })
+    assert(observed == ((1, 1, 0)), s"refresh write plan shape changed:\n$write")
+
+    val want = ComposedReference.table(lake, "main.o").groupBy("g")
+      .agg(count(lit(1)), sum("v"), min("v"), max("v"))
+    def rows(df: DataFrame) = df.collect().map(r => (r.getInt(0), r.getLong(1),
+      r.getLong(2), r.getLong(3), r.getLong(4))).toSet
+    assert(rows(lake.table("main.mv").select("g", "n_rows", "sum_v", "min_v", "max_v")) ==
+      rows(want))
+  }
+}

@@ -11,8 +11,8 @@ import graft.lake._
   * min 10, max 20 for `b` below); were they matched to the successor by
   * name, `b IS NULL` or `b = 7` would prune every old file and drop rows
   * that do match. Layout metadata is translated by column id, so the stale
-  * stats are dropped instead. Checked on the SQL scan, the `Lake` API and
-  * both DELETE paths. */
+  * stats are dropped instead. Checked on the SQL scan, the `Lake` API, the
+  * composed reference reader and both DELETE paths. */
 class ReaddedColumnSpec extends AnyFunSuite {
   import TestSession.spark
 
@@ -38,6 +38,8 @@ class ReaddedColumnSpec extends AnyFunSuite {
     assert(ints(spark.sql(s"SELECT a FROM $cat.main.t WHERE b IS NULL")) == Seq(1, 2))
     assert(ints(spark.sql(s"SELECT a FROM $cat.main.t WHERE b > 5")) == Nil)
     assert(ints(lake.table("main.t").where(col("b").isNull).select("a")) == Seq(1, 2))
+    assert(ints(ComposedReference.table(lake, "main.t").where(col("b").isNull).select("a")) ==
+      Seq(1, 2))
     spark.sql(s"DELETE FROM $cat.main.t WHERE b IS NULL")
     assert(ints(spark.sql(s"SELECT a FROM $cat.main.t")) == Nil)
   }
@@ -47,8 +49,11 @@ class ReaddedColumnSpec extends AnyFunSuite {
     assert(ints(spark.sql(s"SELECT a FROM $cat.main.t WHERE b = 7")) == Seq(1, 2))
     assert(ints(spark.sql(s"SELECT b FROM $cat.main.t")) == Seq(7, 7))
     assert(ints(lake.table("main.t").where(col("b") === 7).select("a")) == Seq(1, 2))
+    assert(ints(ComposedReference.table(lake, "main.t").where(col("b") === 7).select("a")) ==
+      Seq(1, 2))
     lake.delete("main.t", col("b") === 7)
     assert(ints(lake.table("main.t").select("a")) == Nil)
+    assert(ints(ComposedReference.table(lake, "main.t").select("a")) == Nil)
   }
 
   test("Lake API delete by IS NULL on a re-added column removes the old rows") {
@@ -56,5 +61,6 @@ class ReaddedColumnSpec extends AnyFunSuite {
     lake.delete("main.t", col("b").isNull)
     assert(ints(spark.sql(s"SELECT a FROM $cat.main.t")) == Nil)
     assert(lake.table("main.t").count() == 0L)
+    assert(ComposedReference.table(lake, "main.t").count() == 0L)
   }
 }
