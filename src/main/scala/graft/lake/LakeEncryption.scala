@@ -60,8 +60,8 @@ object LakeEncryption {
         st.optionAt(tableId, "encryption_key", s).getOrElse(DefaultKeyId))
 
   /** Idempotently install the DECRYPTION side into the session's Hadoop
-    * conf so every scan tier (native columnar, delete-aware, composed)
-    * picks it up. Safe for plaintext tables: the factory engages only on
+    * conf so the lake scan's readers (data files and delete files) pick it
+    * up. Safe for plaintext tables: the factory engages only on
     * files that actually carry encryption metadata. Never overwrites a
     * factory/client the user already configured. */
   def ensureReadConf(spark: SparkSession, kmsClass: Option[String] = None): Unit = {

@@ -103,7 +103,11 @@ class MetadataStore(val root: String) {
     ids.iterator.flatMap { sid =>
       // a torn/unreadable checkpoint is skipped — the log is authoritative
       try Some(sid -> Serialization.read[CatalogState](readCheckpointJson(sid)))
-      catch { case _: Exception => None }
+      catch { case e: Exception =>
+        System.err.println(s"WARN graft: checkpoint $sid of $root is " +
+          s"unreadable and skipped, an older one or the log serves: $e")
+        None
+      }
     }.nextOption()
   }
 
@@ -215,12 +219,15 @@ class MetadataStore(val root: String) {
         commit(delta)
         // auto-checkpoint (option checkpoint_interval): every Nth snapshot
         // folds the log into a fresh checkpoint so cold-open cost stays
-        // bounded without anyone scheduling maintenance. Failure is
-        // swallowed — the commit already landed and the log is the truth.
+        // bounded without anyone scheduling maintenance. A failure only
+        // warns — the commit already landed and the log is the truth.
         st.tagAt("global", "checkpoint_interval", st.currentSnapshotId)
           .flatMap(v => scala.util.Try(v.toLong).toOption).filter(_ > 0)
           .foreach(iv => if (sid % iv == 0)
-            try checkpoint() catch { case _: Exception => () })
+            try checkpoint() catch { case e: Exception =>
+              System.err.println(s"WARN graft: auto-checkpoint at snapshot " +
+                s"$sid of $root failed, the log still serves: $e")
+            })
         return sid
       } catch {
         case _: CommitConflictException if attempt < retries =>

@@ -15,7 +15,7 @@ import graft.lake.Meta.PartitionKey
   * VERDICT r9 #1: the q03/q05/q11 perf floors are all "the bare fact
   * exchange is irreducible over raw parquet" — but the engine's own
   * bucket[N] hidden partitioning + SPJ reporting (LakeTable.keyGroups,
-  * NativeParquet.keyGroupedScan, l52) exists precisely to delete that
+  * the lake file batch's key-grouped partitions, l52) exists to delete that
   * exchange when the facts are loaded as co-bucketed tables. This object
   * is the physical design a 100 TB deployment would make once at ingest:
   *

@@ -331,22 +331,30 @@ class BucketSpec extends AnyFunSuite {
           lake.append(s"main.$name", u.filter(expr(s"v % 4 = $c"))))
       }
       mkUniform("ul"); mkUniform("ur")
-      def runUniform(): Int = {
+      def runUniform(partial: Boolean): (Int, Long) = {
+        spark.conf.set(
+          "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled",
+          partial.toString)
         val q = spark.sql(s"SELECT count(*) AS n " +
           s"FROM $cat.main.ul a JOIN $cat.main.ur b ON a.k = b.k")
         tasks = 0
-        q.collect()
+        val n = q.collect().head.getLong(0)
         Thread.sleep(500)
-        tasks
+        (tasks, n)
       }
-      spark.conf.set(
-        "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled", "false")
-      val uGrouped = runUniform()
-      spark.conf.set(
-        "spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled", "true")
-      val uSplit = runUniform()
+      val (uGrouped, un1) = runUniform(partial = false)
+      val (uSplit, un2) = runUniform(partial = true)
       assert(uSplit == uGrouped,
         s"uniform table split under the conf: $uGrouped fused vs $uSplit tasks")
+      assert(un1 == un2)
+      // the same skew rule holds under a live delete: uniform groups stay
+      // fused with or without partially-clustered distribution
+      lake.delete("main.ul", expr("v % 5 = 0"))
+      val (dGrouped, dn1) = runUniform(partial = false)
+      val (dSplit, dn2) = runUniform(partial = true)
+      assert(dSplit == dGrouped,
+        s"uniform table split under a live delete: $dGrouped fused vs $dSplit tasks")
+      assert(dn1 == dn2 && dn1 < un1, s"$dn1 / $dn2 rows after the delete, $un1 before")
     } finally {
       spark.sparkContext.removeSparkListener(listener)
       spark.conf.unset("spark.sql.sources.v2.bucketing.partiallyClusteredDistribution.enabled")

@@ -107,7 +107,7 @@ class InlineScanSpec extends AnyFunSuite {
     assert(scan.estimateStatistics().numRows().getAsLong == 52L)
   }
 
-  test("inline + delete overlay reads on the delete-aware row tier") {
+  test("inline + delete overlay reads columnar, deletes masked per batch") {
     val (lake, cat) = newCat()
     import spark.implicits._
     lake.createTable("main.id", abSchema)
@@ -116,7 +116,7 @@ class InlineScanSpec extends AnyFunSuite {
     lake.delete("main.id", col("a") <= 5)
     lake.insertRows("main.id", Seq(Seq(200, "i200"), Seq(3, "again")))
     val df = spark.sql(s"SELECT * FROM $cat.main.id")
-    assert(!columnarScan(df), df.queryExecution.executedPlan.toString)
+    assert(columnarScan(df), df.queryExecution.executedPlan.toString)
     assert(assertNativeMatchesComposed(lake, s"SELECT * FROM $cat.main.id").size == 17)
     assertNativeMatchesComposed(lake, s"SELECT a FROM $cat.main.id WHERE a = 3")
     assert(nativeScan(lake, "id").description().contains(

@@ -1619,11 +1619,11 @@ class LakeSpec extends AnyFunSuite {
       assert(df.select("a", "t").collect().map(_.toString).sorted.toSeq == sqlRows))
     assert(spark.sql(s"SELECT a FROM $cat.main.nd WHERE t = 'x'").collect()
       .map(_.getInt(0)).toSeq == Seq(1))
-    // the delete-aware row readers fill it too
+    // the columnar read under a delete overlay fills it too
     spark.sql(s"INSERT INTO $cat.main.nd (a, b) VALUES (3, 30)")
     lake.delete("main.nd", col("a") === 3)
     val overlay = spark.sql(s"SELECT a, t FROM $cat.main.nd")
-    assert(!overlay.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(overlay.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(overlay.collect().map(_.toString).sorted.toSeq == sqlRows)
   }
 
@@ -2078,6 +2078,63 @@ class LakeSpec extends AnyFunSuite {
     val v0 = 1L // CTAS snapshot
     assert(spark.sql(s"SELECT count(*) FROM $cat.main.big VERSION AS OF $v0")
       .collect().head.getLong(0) == n)
+  }
+
+  test("delete positions, _graft_pos and _row_id hold under row-group and page skipping") {
+    val root = Files.createTempDirectory("graft_rgskip").toString
+    val cat = s"rgcat${System.nanoTime()}"
+    spark.conf.set(s"spark.sql.catalog.$cat", classOf[LakeCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    val lake = new Lake(spark, root)
+    val n = 5000L
+    // one data file, ascending in `a`, of many small row groups and pages,
+    // with nested and variant columns the masked batches must select from
+    val data = spark.range(0, n, 1, 1).selectExpr("id AS a",
+      "named_struct('x', id, 's', cast(id AS string)) AS st", "array(id, id + 1) AS arr",
+      "map(cast(id % 5 AS int), id) AS m", "parse_json(cast(id AS string)) AS v")
+    lake.createTable("main.rg", data.schema)
+    lake.setOption("per_thread_output", "false", Some("main.rg"))
+    lake.setOption("target_file_size", "512MB", Some("main.rg"))
+    lake.setOption("parquet_row_group_size_bytes", "8KB", Some("main.rg"))
+    spark.conf.set("parquet.page.size", "1024")
+    try lake.append("main.rg", data) finally spark.conf.unset("parquet.page.size")
+    val st = lake.store.state()
+    val tid = st.tableAt("main", "rg", st.currentSnapshotId).get.tableId
+    val Seq(file) = st.filesAt(tid, st.currentSnapshotId)
+    val blocks = {
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(file.path), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.size finally r.close()
+    }
+    assert(blocks >= 8, s"fixture must hold several row groups, got $blocks")
+    // deletes in every row group
+    lake.delete("main.rg", col("a") % 7 === 0 || col("a") % 1000 === 999)
+    // the predicate skips the leading row groups, and pages inside the
+    // ones it keeps: row indexes jump inside a batch
+    val where = "(a >= 1050 AND a < 1120) OR (a >= 1300 AND a < 1380) OR a >= 4000"
+    val cols = Seq("a", "st.s", "arr", "m", "cast(v AS STRING) AS v")
+    // the model: the data file read by plain Spark, its own row index
+    def modelOf(meta: String*): Seq[String] = spark.read.parquet(file.path)
+      .where(where).where(!(col("a") % 7 === 0 || col("a") % 1000 === 999))
+      .selectExpr(cols ++ meta: _*).collect().map(_.toString).sorted.toSeq
+    val model = modelOf("_metadata.row_index AS pos",
+      s"_metadata.row_index + ${file.firstRowId} AS rid")
+    assert(model.size > 800)
+    def lakeRows(): Seq[String] = spark.sql(s"SELECT ${cols.mkString(", ")}, _graft_pos AS pos, " +
+      s"_row_id AS rid FROM $cat.main.rg WHERE $where").collect().map(_.toString).sorted.toSeq
+    assert(lakeRows() == model)
+    // rows asked of the masked batches, and the vectorized reader off by
+    // conf: the masked read stays vectorized underneath, same answer
+    Seq("spark.sql.codegen.wholeStage", "spark.sql.parquet.enableVectorizedReader",
+        "spark.sql.parquet.enableNestedColumnVectorizedReader").foreach { k =>
+      spark.conf.set(k, "false")
+      try assert(lakeRows() == model, k) finally spark.conf.unset(k)
+    }
+    // a plain read of the same overlay stays columnar and agrees
+    val plain = spark.sql(s"SELECT ${cols.mkString(", ")} FROM $cat.main.rg WHERE $where")
+    assert(plain.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
+    assert(plain.collect().map(_.toString).sorted.toSeq == modelOf())
   }
 
   test("scan reads delete parts from metadata, never lists the directory") {
