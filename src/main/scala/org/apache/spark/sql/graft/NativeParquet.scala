@@ -245,7 +245,13 @@ class LakeFileBatch(
         names.flatMap(n => m.get(n).map(n -> _)).toMap))
   }
 
-  override def planInputPartitions(): Array[InputPartition] =
+  // planned once per batch (a batch serves one file list): Spark asks for
+  // the partitions and the reader factory more than once per query, and
+  // each factory broadcasts a hadoop conf
+  override def planInputPartitions(): Array[InputPartition] = planned
+  override def createReaderFactory(): PartitionReaderFactory = factory
+
+  private lazy val planned: Array[InputPartition] =
     (groups.fold(ungrouped())(keyed) ++ inline.map(InlineRowsPartition)).toArray
 
   private def ungrouped(): Seq[InputPartition] = {
@@ -284,7 +290,7 @@ class LakeFileBatch(
   /** Spark's factories per epoch: plain ones read the required columns,
     * indexed ones also the parquet row index. Each kind is built only when
     * some file reads through it. */
-  override def createReaderFactory(): PartitionReaderFactory = {
+  private lazy val factory: PartitionReaderFactory = {
     val rowMeta = positionMeta > 0 || firstRowIds.isDefined
     val masked = files.map(f => rowMeta || deletesOf(new Path(f._1).getName).isDefined)
     def factories(used: Boolean, read: StructType) =
