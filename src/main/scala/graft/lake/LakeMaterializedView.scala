@@ -541,6 +541,8 @@ object LakeMaterializedView {
     val maintenance = Set("compacted", "rewrote", "flushed")
     val insertish = Set("inserted", "inlined")
     val replaced =
+      // a window missing an expired snapshot has no complete change feed
+      !st.hasAllSnapshots(last, cur) ||
       st.tagAt(scope, KSourceTid, cur).exists(_.toLong != srcTid) ||
         st.files.exists(f => f.tableId == srcTid &&
           // a source data-file end is benign only when maintenance moved

@@ -495,35 +495,39 @@ class Lake(val spark: SparkSession, val root: String,
     * update_postimage rows (reference sql/pg_ducklake--0.1.0.sql:344-449,
     * docs/sql_objects.md §table_changes, data_change_feed.sql).
     *
-    * Plan-size shape (r18, guide §2.4/§3.3): O(1) scans and joins per
-    * window REGARDLESS of snapshot count. The window walk is driver-side
-    * metadata only; the data plan is
-    *   - ONE scan over every new file / inline batch in the window, with
-    *     (_snapshot_id, _change_type) recovered per row from an O(files)
-    *     file-name → (snapshot, type) broadcast lookup (data file names
-    *     are unique store-wide — they are the positional-delete join key);
-    *   - ONE scan over every window delete file's parts, provenance
-    *     recovered the same way from the part file name;
-    *   - ONE scan over the targeted pre-image files, inner-joined with the
-    *     delete rows on (file, pos) — position sets are disjoint across
-    *     snapshots (a row can only be deleted once), so the join both
-    *     selects the pre-image rows AND attaches their snapshot/type;
-    *   - one LEFT join against merge post-image row ids (split
-    *     update_preimage vs delete), planned only when the window has
-    *     MERGE snapshots.
-    * The old shape planned one scan+semi/anti-join subtree PER DML
-    * snapshot — a long-window refresh over many small commits degenerated
-    * to O(snapshots) scan arms (11 anti joins in l57's r17 window plan).
+    * Metadata plus lake scans, as the reference computes it (SURVEY.md
+    * A16): the window walk classifies every snapshot on the driver, and
+    * every data read is one [[LakeNativeScan]] whose rows carry their
+    * (`_snapshot_id`, `_change_type`) from that walk ([[LakeRead.Feed]]) —
+    * O(1) scans per window regardless of its snapshot count, and no join
+    * outside MERGE:
+    *   - inserts and post-images: ONE scan over every new file / inline
+    *     batch of the window, each tagged as a whole. A delete of the
+    *     snapshot that created a file (one transaction) masks its positions
+    *     like a live delete: those rows were never observable;
+    *   - deletes and pre-images: ONE scan over the files the window's
+    *     delete entries hit that are older than the delete, reading only
+    *     the deleted positions, each tagged by its entry (position sets are
+    *     disjoint across entries: a row is deleted once), plus the replaced
+    *     inline batches' vanished or changed rows;
+    *   - one LEFT join of MERGE pre-images to a scan of the same snapshot's
+    *     post-image row ids, planned only when the window has MERGEs: a
+    *     MERGE deletes and updates in one snapshot, and its delete file does
+    *     not record which positions were updates.
+    * The walk reads every snapshot of the window, so a window missing one
+    * to expiry fails loudly (an expired `startExclusive` alone is fine).
     *
     * Mid-window DDL: all scans run at the WINDOW-END snapshot; scanDF maps
-    * every file's schema epoch to the end columns by columnId (the same
-    * columnId mapping alignColumns applied per part before), so RENAME /
+    * every file's schema epoch to the end columns by columnId, so RENAME /
     * ADD / DROP inside the window keep the feed consumable. */
   def tableChanges(table: String, startExclusive: Long, endInclusive: Long): DataFrame = {
     val st = store.state()
     val e = resolve(table, st)
     LakeAcl.requirePriv(spark, st, "SELECT", e.schemaName, e.tableName,
       st.currentSnapshotId)
+    require(st.hasAllSnapshots(startExclusive, endInclusive),
+      s"table_changes($table, $startExclusive, $endInclusive): the window holds " +
+        "snapshots that were expired or do not exist, so its changes are lost")
     val tid = e.tableId
     val cols = st.columnsAt(tid, endInclusive)
     val metaSchema = Seq(StructField("_change_type", StringType),
@@ -531,18 +535,15 @@ class Lake(val spark: SparkSession, val root: String,
     val outSchema = StructType(LakeRead.structFor(cols) ++ metaSchema)
     val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], outSchema)
 
-    // ---- window walk: driver-side classification, O(snapshots) metadata
-    val insFiles = Vector.newBuilder[(DataFileEntry, Long, String)]
-    val insBatches = Vector.newBuilder[(InlinedBatch, Long, String)]
-    val delTagged = Vector.newBuilder[(DeleteFileEntry, Long, String)]
-    val preBatches = Vector.newBuilder[(InlinedBatch, Long, String)]
-    // rows inserted AND deleted by one transaction snapshot were never
-    // observable: (data file names created at the delete's own snapshot,
-    // that snapshot) — these delete rows suppress inserted rows instead of
-    // producing pre-images
-    val suppress = Vector.newBuilder[(Set[String], Long)]
-    val mergePostFiles = Vector.newBuilder[(DataFileEntry, Long)]
-    val mergeInlineIds = Vector.newBuilder[(Long, Long)] // (rowId, sid)
+    // ---- window walk: driver-side classification, O(snapshots) metadata;
+    // every file, batch and delete entry with its (snapshot, change type)
+    type Tag = (Long, String)
+    val insFiles = Vector.newBuilder[(DataFileEntry, Tag)]
+    val insBatches = Vector.newBuilder[(InlinedBatch, Tag)]
+    val delTagged = Vector.newBuilder[(DeleteFileEntry, Tag)]
+    val preBatches = Vector.newBuilder[(InlinedBatch, Tag)]
+    val mergePostFiles = Vector.newBuilder[(DataFileEntry, Tag)]
+    val mergePostBatches = Vector.newBuilder[(InlinedBatch, Tag)]
     val MergePre = "merge" // sentinel: split into update_preimage/delete below
 
     st.snapshots
@@ -566,212 +567,94 @@ class Lake(val spark: SparkSession, val root: String,
           val hasDeletes = delta.newDeleteFiles.exists(_.tableId == tid)
           if (insertish && !dml && !mergy && !hasDeletes) {
             delta.newFiles.filter(_.tableId == tid)
-              .foreach(f => insFiles += ((f, sid, "insert")))
+              .foreach(f => insFiles += ((f, (sid, "insert"))))
             delta.newInlined.filter(b => b.tableId == tid && b.rowIds.isEmpty)
-              .foreach(b => insBatches += ((b, sid, "insert")))
+              .foreach(b => insBatches += ((b, (sid, "insert"))))
           } else if (dml || insertish) {
             // a transaction snapshot can carry inserts AND deletes in one
             // delta; every new file/batch of an update-tagged snapshot is a
             // post-image, of a delete/insert-tagged one an insert
-            val postT = if (has("updated")) "update_postimage" else "insert"
-            val preT = if (has("updated")) "update_preimage" else "delete"
-            delta.newFiles.filter(_.tableId == tid)
-              .foreach(f => insFiles += ((f, sid, postT)))
+            val post = (sid, if (has("updated")) "update_postimage" else "insert")
+            val pre = (sid, if (has("updated")) "update_preimage" else "delete")
+            delta.newFiles.filter(_.tableId == tid).foreach(f => insFiles += ((f, post)))
             delta.newInlined.filter(b => b.tableId == tid && b.rowIds.isEmpty)
-              .foreach(b => insBatches += ((b, sid, postT)))
-            changedInline(st, delta, tid).foreach(b => insBatches += ((b, sid, postT)))
-            delta.newDeleteFiles.filter(_.tableId == tid).foreach { d =>
-              delTagged += ((d, sid, preT))
-              val sameSnap = sameSnapshotTargets(st, d, sid)
-              if (sameSnap.nonEmpty) suppress += ((sameSnap, sid))
-            }
-            removedInline(st, delta, tid).foreach(b => preBatches += ((b, sid, preT)))
+              .foreach(b => insBatches += ((b, post)))
+            changedInline(st, delta, tid).foreach(b => insBatches += ((b, post)))
+            delta.newDeleteFiles.filter(_.tableId == tid).foreach(d => delTagged += ((d, pre)))
+            removedInline(st, delta, tid).foreach(b => preBatches += ((b, pre)))
           } else { // pure MERGE snapshot
-            delta.newFiles.filter(f => f.tableId == tid && !f.explicitRowIds)
-              .foreach(f => insFiles += ((f, sid, "insert")))
-            delta.newFiles.filter(f => f.tableId == tid && f.explicitRowIds)
-              .foreach { f =>
-                insFiles += ((f, sid, "update_postimage"))
-                mergePostFiles += ((f, sid))
-              }
-            delta.newInlined.filter(b => b.tableId == tid && b.rowIds.isEmpty)
-              .foreach(b => insBatches += ((b, sid, "insert")))
-            changedInline(st, delta, tid).foreach { b =>
-              insBatches += ((b, sid, "update_postimage"))
-              b.rowIds.foreach(_.foreach(rid => mergeInlineIds += ((rid, sid))))
+            val (ins, post, pre) = ((sid, "insert"), (sid, "update_postimage"), (sid, MergePre))
+            delta.newFiles.filter(_.tableId == tid).foreach { f =>
+              if (!f.explicitRowIds) insFiles += ((f, ins))
+              else { insFiles += ((f, post)); mergePostFiles += ((f, post)) }
             }
-            delta.newDeleteFiles.filter(_.tableId == tid)
-              .foreach(d => delTagged += ((d, sid, MergePre)))
-            removedInline(st, delta, tid).foreach(b => preBatches += ((b, sid, MergePre)))
+            delta.newInlined.filter(b => b.tableId == tid && b.rowIds.isEmpty)
+              .foreach(b => insBatches += ((b, ins)))
+            changedInline(st, delta, tid).foreach { b =>
+              insBatches += ((b, post)); mergePostBatches += ((b, post))
+            }
+            delta.newDeleteFiles.filter(_.tableId == tid).foreach(d => delTagged += ((d, pre)))
+            removedInline(st, delta, tid).foreach(b => preBatches += ((b, pre)))
           }
         }
       }
-
     val insFilesV = insFiles.result()
     val insBatchesV = insBatches.result()
     val delTaggedV = delTagged.result()
     val preBatchesV = preBatches.result()
-    val suppressV = suppress.result()
-    val mergePostV = mergePostFiles.result()
-    val mergeInlineIdsV = mergeInlineIds.result()
+    val mergePostFilesV = mergePostFiles.result()
+    val mergePostBatchesV = mergePostBatches.result()
 
-    // ---- window delete rows: ONE scan over every delete part, provenance
-    // (sid, change type) recovered from the part's file name. Part names
-    // are Spark task-UUID-unique; on the (never-observed) collision, or a
-    // legacy dir entry whose parts cannot be listed, fall back to one
-    // lit-tagged arm per delete file — still a single join downstream.
-    def baseName(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-    val delStruct = StructType(Seq(StructField("file", StringType),
-      StructField("pos", LongType), StructField("row_id", LongType)))
-    val ddTagged: Option[DataFrame] = if (delTaggedV.isEmpty) None else {
-      val withParts = delTaggedV.map { case (d, sid, ct) =>
-        // an entry without recorded parts is a part directory (listed) or,
-        // thawed from a foreign catalog, a single parquet file: a file
-        // lists as empty and reads as itself, like Meta.deleteReadPaths
-        val parts = if (d.parts.nonEmpty) d.parts
-          else StoreIO.forPath(d.path).list(d.path, "", ".parquet").sorted
-            .map(n => s"${d.path}/$n").toList match {
-              case Nil => List(d.path)
-              case listed => listed
-            }
-        (d, sid, ct, parts)
-      }
-      val names = withParts.flatMap(_._4).map(baseName)
-      val tagged =
-        if (names.distinct.size == names.size && names.nonEmpty) {
-          val lookup = spark.createDataFrame(
-            withParts.flatMap { case (_, sid, ct, ps) =>
-              ps.map(p => Row(baseName(p), sid, ct)) }.toList.asJava,
-            StructType(Seq(StructField("_graft_dpart", StringType),
-              StructField("_graft_dsid", LongType),
-              StructField("_graft_dct", StringType))))
-          spark.read.schema(delStruct).parquet(withParts.flatMap(_._4): _*)
-            .withColumn("_graft_dpart", col("_metadata.file_name"))
-            .join(broadcast(lookup), Seq("_graft_dpart"), "left")
-            .drop("_graft_dpart")
-        } else {
-          withParts.map { case (d, sid, ct, _) =>
-            spark.read.schema(delStruct).parquet(deleteReadPaths(Seq(d)): _*)
-              .withColumn("_graft_dsid", lit(sid))
-              .withColumn("_graft_dct", lit(ct))
-          }.reduce(_ unionByName _)
-        }
-      Some(tagged.select(col("file").as(LakeRead.FileCol),
-        col("pos").as(LakeRead.PosCol), col("_graft_dsid"), col("_graft_dct")))
-    }
-    // a delete row suppresses (hits a file created at its own snapshot) iff
-    // its file's begin == its delete's snapshot — driver-known name set
-    val suppCond: Option[Column] = if (suppressV.isEmpty) None else
-      Some(suppressV.map { case (fnames, sid) =>
-        col(LakeRead.FileCol).isin(fnames.toSeq: _*) &&
-          col("_graft_dsid") === lit(sid)
-      }.reduce(_ || _))
+    def tags(files: Seq[(DataFileEntry, Tag)], batches: Seq[(InlinedBatch, Tag)]): Map[String, Tag] =
+      (files.map { case (f, t) => f.fileName -> t } ++
+        batches.map { case (b, t) => s"inline:${b.batchId}" -> t }).toMap
+    def scan(files: Seq[DataFileEntry], batches: Seq[InlinedBatch], feed: LakeRead.Feed) =
+      LakeRead.scanDF(spark, scopedState(st, files, batches), tid, endInclusive,
+        feed = Some(feed))
+    // the window's delete entries against the table's files (the live
+    // read's rule, LakeTable.deleteHits), split by the hit file's age
+    val tagOf = delTaggedV.map { case (d, t) => d.deleteFileId -> t }.toMap
+    val (ownSnapshot, older) = LakeTable.deleteHits(delTaggedV.map(_._1),
+        st.files.filter(_.tableId == tid))
+      .partition { case (d, f, _) => f.begin == tagOf(d.deleteFileId)._1 }
 
-    // ---- inserted side: one scan over every new file/batch in the window
+    // ---- inserted side
     val insertedPart: Option[DataFrame] =
       if (insFilesV.isEmpty && insBatchesV.isEmpty) None
       else {
-        val lookup = spark.createDataFrame(
-          (insFilesV.map { case (f, sid, ct) => Row(f.fileName, sid, ct) } ++
-            insBatchesV.map { case (b, sid, ct) =>
-              Row(s"inline:${b.batchId}", sid, ct) }).toList.asJava,
-          StructType(Seq(StructField(LakeRead.FileCol, StringType),
-            StructField("_snapshot_id", LongType),
-            StructField("_change_type", StringType))))
-        val scan = LakeRead.scanDF(spark,
-          scopedState(st, insFilesV.map(_._1), insBatchesV.map(_._1)),
-          tid, endInclusive, Nil, withRowMeta = true)
-        val taggedScan = scan.join(broadcast(lookup), Seq(LakeRead.FileCol), "left")
-        val suppressed = (ddTagged, suppCond) match {
-          case (Some(dd), Some(cond)) =>
-            taggedScan.join(
-              LakeRead.gateBroadcast(spark,
-                dd.filter(cond).select(LakeRead.FileCol, LakeRead.PosCol),
-                delTaggedV.map(_._1.deleteCount).sum),
-              Seq(LakeRead.FileCol, LakeRead.PosCol), "left_anti")
-          case _ => taggedScan
-        }
-        Some(suppressed
-          .withColumn("_row_id", col(LakeRead.RowIdCol))
-          .drop(LakeRead.FileCol, LakeRead.PosCol, LakeRead.RowIdCol))
+        val names = insFilesV.map(_._1.fileName).toSet
+        Some(scan(insFilesV.map(_._1), insBatchesV.map(_._1), LakeRead.Feed(
+          tags(insFilesV, insBatchesV),
+          LakeTable.partsByFile(ownSnapshot.filter(h => names(h._2.fileName))))))
       }
 
-    // ---- pre-image side: one scan over the targeted files, one join
-    val fileById = st.files.map(f => f.fileId -> f).toMap
-    val preParquet: Option[DataFrame] = ddTagged.map { dd0 =>
-      // positions hitting files CREATED in the delete's own snapshot have
-      // no observable pre-image (suppression rows) — excluded at row level
-      // by the same driver-known (names, sid) set
-      val dd = suppCond.map(c => dd0.filter(!c)).getOrElse(dd0)
-      // target files: created BEFORE their delete's snapshot (a file may be
-      // hit by several window deletes; scanned once, the join's disjoint
-      // position sets attribute each row to its snapshot)
-      val targets = delTaggedV.flatMap { case (d, sid, _) =>
-        d.countsByFile.keys.map(_.toLong).flatMap(fileById.get)
-          .filter(_.begin < sid)
-      }.groupBy(_.fileId).map(_._2.head).toVector.sortBy(_.fileId)
-      val pre = LakeRead.scanDF(spark, scopedState(st, targets, Nil), tid,
-        endInclusive, Nil, withRowMeta = true)
-      pre.join(
-        LakeRead.gateBroadcast(spark, dd, delTaggedV.map(_._1.deleteCount).sum),
-        Seq(LakeRead.FileCol, LakeRead.PosCol), "inner")
-    }
-    // inline pre-images: rows of replaced batches that vanished or changed
-    val preInline: Option[DataFrame] = if (preBatchesV.isEmpty) None else {
-      val lookup = spark.createDataFrame(
-        preBatchesV.map { case (b, sid, ct) =>
-          Row(s"inline:${b.batchId}", sid, ct) }.toList.asJava,
-        StructType(Seq(StructField(LakeRead.FileCol, StringType),
-          StructField("_graft_dsid", LongType),
-          StructField("_graft_dct", StringType))))
-      Some(LakeRead.scanDF(spark,
-          scopedState(st, Nil, preBatchesV.map(_._1)), tid,
-          endInclusive, Nil, withRowMeta = true)
-        .join(broadcast(lookup), Seq(LakeRead.FileCol), "left"))
-    }
-    val preAll = (preParquet.toSeq ++ preInline.toSeq)
-      .reduceOption(_ unionByName _)
-    val prePart: Option[DataFrame] = preAll.map { pre =>
-      val resolved =
-        if (mergePostV.isEmpty && mergeInlineIdsV.isEmpty)
-          pre.withColumn("_change_type", col("_graft_dct"))
-        else {
-          // merge pre-images split by row-id membership in the SAME
-          // snapshot's post-image set: one LEFT join against all window
-          // merge post ids (a MERGE deletes and updates in one snapshot,
-          // so the tag alone can't classify the way UPDATE/DELETE can)
-          val idStruct = StructType(Seq(StructField(LakeRead.RowIdCol, LongType)))
-          val filePost: Option[DataFrame] = if (mergePostV.isEmpty) None else {
-            val lk = spark.createDataFrame(
-              mergePostV.map { case (f, sid) => Row(f.fileName, sid) }.toList.asJava,
-              StructType(Seq(StructField("_graft_pfile", StringType),
-                StructField("_graft_psid", LongType))))
-            Some(spark.read.schema(idStruct).parquet(mergePostV.map(_._1.path): _*)
-              .withColumn("_graft_pfile", col("_metadata.file_name"))
-              .join(broadcast(lk), Seq("_graft_pfile"))
-              .select(col(LakeRead.RowIdCol).as("_graft_prid"), col("_graft_psid")))
-          }
-          val inlinePost: Option[DataFrame] = if (mergeInlineIdsV.isEmpty) None else
-            Some(spark.createDataFrame(
-              mergeInlineIdsV.map { case (rid, sid) => Row(rid, sid) }.toList.asJava,
-              StructType(Seq(StructField("_graft_prid", LongType),
-                StructField("_graft_psid", LongType)))))
-          val postIds = (filePost.toSeq ++ inlinePost.toSeq).reduce(_ unionByName _)
-          pre.join(postIds,
-              pre(LakeRead.RowIdCol) === postIds("_graft_prid") &&
-                col("_graft_dsid") === postIds("_graft_psid"), "left")
-            .withColumn("_change_type",
-              when(col("_graft_dct") =!= MergePre, col("_graft_dct"))
+    // ---- pre-image side: the deleted positions of the files live before
+    // their delete, and the replaced inline rows
+    val preHits = older.filter { case (d, f, _) =>
+      liveAt(f.begin, f.end, tagOf(d.deleteFileId)._1 - 1) }
+    val prePart: Option[DataFrame] =
+      if (preHits.isEmpty && preBatchesV.isEmpty) None
+      else Some(scan(preHits.map(_._2).distinctBy(_.fileId).sortBy(_.fileId),
+        preBatchesV.map(_._1), LakeRead.Feed(
+          tags(Nil, preBatchesV) ++
+            preHits.flatMap { case (d, _, ps) => ps.map(_ -> tagOf(d.deleteFileId)) },
+          LakeTable.partsByFile(preHits), preImages = true)))
+        .map { pre =>
+          val merged = col("_change_type") === MergePre
+          if (mergePostFilesV.isEmpty && mergePostBatchesV.isEmpty)
+            pre.withColumn("_change_type", when(merged, "delete").otherwise(col("_change_type")))
+          else {
+            val post = scan(mergePostFilesV.map(_._1), mergePostBatchesV.map(_._1),
+                LakeRead.Feed(tags(mergePostFilesV, mergePostBatchesV)))
+              .select(col("_row_id").as("_graft_prid"), col("_snapshot_id").as("_graft_psid"))
+            pre.join(post, pre("_row_id") === post("_graft_prid") &&
+                pre("_snapshot_id") === post("_graft_psid"), "left")
+              .withColumn("_change_type", when(!merged, col("_change_type"))
                 .when(col("_graft_prid").isNotNull, "update_preimage")
                 .otherwise("delete"))
-            .drop("_graft_prid", "_graft_psid")
+              .drop("_graft_prid", "_graft_psid")
+          }
         }
-      resolved
-        .withColumn("_snapshot_id", col("_graft_dsid"))
-        .withColumn("_row_id", col(LakeRead.RowIdCol))
-        .drop(LakeRead.FileCol, LakeRead.PosCol, LakeRead.RowIdCol,
-          "_graft_dsid", "_graft_dct")
-    }
 
     (insertedPart.toSeq ++ prePart.toSeq).foldLeft(empty)(_ unionByName _)
   }
@@ -812,11 +695,10 @@ class Lake(val spark: SparkSession, val root: String,
   /** scope a state view to an explicit file/batch set: intervals are opened
     * so the scan keeps them regardless of the snapshot used for schema */
   private def scopedState(st: CatalogState, files: Seq[DataFileEntry],
-      batches: Seq[InlinedBatch],
-      deletes: Seq[DeleteFileEntry] = Nil): CatalogState =
+      batches: Seq[InlinedBatch]): CatalogState =
     st.copy(
       files = files.map(_.copy(begin = 0L, end = None)).toVector,
-      deleteFiles = deletes.map(_.copy(begin = 0L, end = None)).toVector,
+      deleteFiles = Vector.empty,
       inlined = batches.map(_.copy(begin = 0L, end = None)).toVector)
 
   /** old-row JSON by row id from the batches this snapshot replaced */
@@ -847,16 +729,6 @@ class Lake(val spark: SparkSession, val root: String,
         .filter { case (j, rid) => replacement.get(rid).forall(_ != j) }
       b.copy(rowsJson = gone.map(_._1), rowIds = Some(gone.map(_._2)))
     }.filter(_.rowsJson.nonEmpty)
-  }
-
-  /** data-file names a delete file targets that were CREATED in the
-    * delete's own snapshot (transaction grouping): those positions were
-    * never observable and suppress the inserted rows instead of producing
-    * pre-images */
-  private def sameSnapshotTargets(st: CatalogState, d: DeleteFileEntry, sid: Long): Set[String] = {
-    val ids = d.countsByFile.keys.map(_.toLong).toSet
-    st.files.filter(f => ids.contains(f.fileId) && f.begin == sid)
-      .map(_.fileName).toSet
   }
 
   // ------------------------------------------------------------ maintenance

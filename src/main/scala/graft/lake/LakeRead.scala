@@ -24,14 +24,36 @@ import Meta._
   * those files, epochs, deletes and inline rows. SQL reads reach it through
   * the catalog's [[LakeTable]]s; the `Lake` API, DML, the change feed, MV
   * refresh, maintenance and the view expansions through [[scanDF]], a thin
-  * adapter that plans the same scan over an internal table.
+  * adapter that plans the same scan over an internal table. The change
+  * feed's reads are scans too: a [[Feed]] scopes one to an explicit file
+  * set, tags its rows with their snapshot and change type from metadata,
+  * and replaces the live deletes with the window's own — or, for
+  * pre-images, keeps only the deleted positions.
   */
 object LakeRead {
 
-  /** hidden meta columns the scan can surface for DML/CDF */
+  /** hidden meta columns the scan can surface for DML */
   val FileCol = "_graft_file"
   val PosCol = "_graft_pos"
   val RowIdCol = "_graft_row_id"
+  /** the provenance columns of a change-feed read ([[Feed]]) */
+  val ChangeTypeCol = "_change_type"
+  val SnapshotIdCol = "_snapshot_id"
+
+  /** A change-feed read: [[scanDF]] over an explicit file and inline-batch
+    * set whose rows carry their provenance from metadata.
+    * @param tags      data-file name, `inline:<batchId>` or delete part path
+    *                  → the (`_snapshot_id`, `_change_type`) of its rows
+    * @param deletes   data-file name → the delete parts the read applies,
+    *                  in place of the snapshot's live deletes
+    * @param preImages keep only the files' deleted positions, each tagged
+    *                  by the part that deletes it (inline batches are
+    *                  tagged whole either way)
+    */
+  case class Feed(
+      tags: Map[String, (Long, String)],
+      deletes: Map[String, Seq[String]] = Map.empty,
+      preImages: Boolean = false)
 
   /** catalog type string → Spark type. "geometry" is a catalog-level
     * annotation over WKB bytes (reference docs/data_types.md GEOMETRY row):
@@ -170,6 +192,8 @@ object LakeRead {
     *                    `variantPrune`; Spark's own filters above the
     *                    relation still push down and prune as in SQL)
     * @param withRowMeta surface (_graft_file, _graft_pos, _graft_row_id)
+    * @param feed        a change-feed read: surface (_change_type,
+    *                    _snapshot_id, _row_id), the change feed's columns
     */
   def scanDF(
       spark: SparkSession,
@@ -177,7 +201,8 @@ object LakeRead {
       tableId: Long,
       s: Long,
       filters: Seq[org.apache.spark.sql.sources.Filter] = Nil,
-      withRowMeta: Boolean = false): DataFrame = {
+      withRowMeta: Boolean = false,
+      feed: Option[Feed] = None): DataFrame = {
     val e = st.tableById(tableId, s)
       .getOrElse(throw new IllegalArgumentException(s"table $tableId is not live at snapshot $s"))
     // the library's read choke point (API, DML, change feed, MV refresh,
@@ -194,9 +219,9 @@ object LakeRead {
     import org.apache.spark.sql.catalyst.plans.logical.Project
     import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
     val rel = DataSourceV2Relation.create(new LakeTable(null, e.schemaName,
-      e.tableName, s, st, filters, internal = true), None, None)
+      e.tableName, s, st, filters, internal = true, feed), None, None)
     val plan =
-      if (!withRowMeta) rel
+      if (!withRowMeta && feed.isEmpty) rel
       else {
         val withMeta = rel.withMetadataColumns()
         val meta = withMeta.output.drop(rel.output.size).map(a => a.name -> a).toMap
@@ -204,27 +229,13 @@ object LakeRead {
         // metadata-column mark, so `*` and writes treat them as data)
         def as(from: String, to: String) =
           Alias(meta(from), to)(explicitMetadata = Some(Metadata.empty))
-        Project(rel.output ++ Seq(as(FileCol, FileCol), as(PosCol, PosCol),
-          as(LakeTable.RowIdMetaCol, RowIdCol)), withMeta)
+        def plain(n: String) = as(n, n)
+        Project(rel.output ++ (
+          if (feed.isDefined)
+            Seq(plain(ChangeTypeCol), plain(SnapshotIdCol), plain(LakeTable.RowIdMetaCol))
+          else Seq(plain(FileCol), plain(PosCol), as(LakeTable.RowIdMetaCol, RowIdCol))),
+          withMeta)
       }
     org.apache.spark.sql.graft.StreamingBatch.ofRows(spark, plan)
-  }
-
-  /** estimated in-memory bytes per (file, pos) delete-set row: the file-name
-    * string (~50 chars → java String overhead) + the position long, in a
-    * broadcast hash relation */
-  private val DeleteRowBytes = 160L
-
-  /** Hint `broadcast` on the delete side ONLY when the whole delete set
-    * provably fits the session's broadcast threshold. A single large
-    * `DELETE WHERE` can produce billions of (file, pos) rows before vacuum
-    * rewrites the victims — forcing a broadcast there ships the full set to
-    * every executor and OOMs at scale, so past the threshold we leave the
-    * strategy to Catalyst/AQE (shuffled hash / sort-merge on the anti-join
-    * keys). The metadata makes the gate free: `deleteCount` per delete file
-    * is known without touching data. */
-  def gateBroadcast(spark: SparkSession, dd: DataFrame, totalDeleted: Long): DataFrame = {
-    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
-    if (threshold > 0 && totalDeleted * DeleteRowBytes <= threshold) broadcast(dd) else dd
   }
 }

@@ -60,8 +60,12 @@ object LakeWrite {
   def deleteRecursively(dir: String): Unit =
     StoreIO.forPath(dir).deleteRecursively(dir)
 
+  /** a promoted file, with `staged` its path relative to the staging dir
+    * (partition dirs, then Spark's `part-NNNNN` task-indexed name): commits
+    * hand out file and row ids in that order, so they do not depend on the
+    * random file names */
   private case class StagedFile(path: String, fileName: String,
-      partitionValues: Map[String, String])
+      partitionValues: Map[String, String], staged: String)
 
   /** Move staged part-files into the table data dir; parses hidden-partition
     * values from the staged `_gp<i>=<value>` dir layout. With
@@ -97,7 +101,7 @@ object LakeWrite {
         val target = s"$dataDir/$subDir$newName"
         if (subDir.nonEmpty) io.mkdirs(s"$dataDir/${subDir.stripSuffix("/")}")
         io.move(s"$staging/$rel", target)
-        out += StagedFile(target, newName, pvs)
+        out += StagedFile(target, newName, pvs, rel)
       }
     }
     deleteRecursively(staging)
@@ -387,7 +391,7 @@ object LakeWrite {
         throw new IllegalStateException(s"table $schemaName.$tableName dropped concurrently")
       var fileId = st.nextFileId
       var rowId = st.nextRowId(tid)
-      val newFiles = kept.sortBy(_.fileName).map { f =>
+      val newFiles = kept.sortBy(_.staged).map { f =>
         val r = statRows(f.fileName)
         val cnt = r.getLong(r.fieldIndex("_cnt"))
         val fe = DataFileEntry(fileId, tid, f.path, f.fileName, cnt,
@@ -731,7 +735,7 @@ object LakeWrite {
           s"UPDATE conflicts with a concurrent rewrite of: ${gone.mkString(", ")}")
       }
       var fileId = st.nextFileId
-      val newFiles = keptStaged.sortBy(_.fileName).map { f =>
+      val newFiles = keptStaged.sortBy(_.staged).map { f =>
         val r = statRows(f.fileName)
         val fe = DataFileEntry(fileId, tid, f.path, f.fileName,
           r.getLong(r.fieldIndex("_cnt")), sizes(f.fileName), firstRowId = 0L,
@@ -987,8 +991,8 @@ object LakeWrite {
         fe
       }
       val newFiles =
-        postKept.sortBy(_.fileName).map(entryFor(_, postStats, postSizes, explicit = true)).toList ++
-          insKept.sortBy(_.fileName).map(entryFor(_, insStats, insSizes, explicit = false)).toList
+        postKept.sortBy(_.staged).map(entryFor(_, postStats, postSizes, explicit = true)).toList ++
+          insKept.sortBy(_.staged).map(entryFor(_, insStats, insSizes, explicit = false)).toList
       val newStats = newFiles.flatMap { fe =>
         val r = postStats.getOrElse(fe.fileName, insStats(fe.fileName))
         statCols.map { c =>

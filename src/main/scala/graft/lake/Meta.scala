@@ -291,6 +291,11 @@ object Meta {
     def snapshotAtTime(tsMs: Long): Option[Long] =
       snapshots.reverseIterator.find(_.snapshotTimeMs <= tsMs).map(_.snapshotId)
 
+    /** whether every snapshot of the window (s0, s1] is in the history:
+      * none expired, none beyond the current one (ids are dense from 0) */
+    def hasAllSnapshots(s0: Long, s1: Long): Boolean =
+      snapshots.count(s => s.snapshotId > s0 && s.snapshotId <= s1) >= s1 - math.max(s0, -1L)
+
     def tableAt(schema: String, name: String, s: Long): Option[TableEntry] =
       tables.find(t => t.schemaName == schema && t.tableName == name
         && liveAt(t.begin, t.end, s))

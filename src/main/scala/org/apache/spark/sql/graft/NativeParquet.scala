@@ -16,7 +16,7 @@ import org.apache.spark.sql.execution.{PartitionedFileUtil, RowBatches}
 import org.apache.spark.sql.execution.datasources.{FilePartition, NoopCache, PartitionSpec, PartitionedFile, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetUtils}
 import org.apache.spark.sql.execution.datasources.v2.parquet.{ParquetPartitionReaderFactory, ParquetScan}
-import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+import org.apache.spark.sql.execution.vectorized.{ConstantColumnVector, OnHeapColumnVector}
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{Decimal, LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -215,9 +215,17 @@ object NativeParquet {
   *                      `_row_id` is firstRowId + row index; other files
   *                      read it from the file (an [[NativeParquet.EpochReads]]
   *                      rename)
-  * @param positionMeta  how many of `_graft_file`, `_graft_pos` end
-  *                      `readSchema`: the data file's name and the row
-  *                      index
+  * @param trailingMeta  how many of `_graft_file`, `_graft_pos`,
+  *                      `_change_type`, `_snapshot_id` end `readSchema`:
+  *                      the data file's name, the row index and the row's
+  *                      change-feed provenance
+  * @param tags          a change-feed read's provenance: data-file NAME or
+  *                      delete part path → (`_snapshot_id`,
+  *                      `_change_type`) of its rows
+  * @param preImages     read only the deleted positions of each file, each
+  *                      row tagged with the tag of the part that deletes it
+  *                      (the change feed's pre-images); files are otherwise
+  *                      tagged as a whole
   */
 class LakeFileBatch(
     spark: ClassicSparkSession,
@@ -230,19 +238,23 @@ class LakeFileBatch(
     filters: Array[Filter],
     epochs: NativeParquet.EpochReads,
     firstRowIds: Option[Map[String, Long]],
-    positionMeta: Int,
-    inline: Option[Array[InternalRow]]) extends Batch {
+    trailingMeta: Int,
+    inline: Option[Array[InternalRow]],
+    tags: Map[String, (Long, String)],
+    preImages: Boolean) extends Batch {
 
   private def deletesOf(name: String): Option[Seq[String]] =
     deletesByFile.get(name).filter(_.nonEmpty)
 
-  /** `fp` with its files' rename epochs, delete parts and row-id bases */
+  /** `fp` with its files' rename epochs, delete parts, row-id bases and
+    * tags */
   private def partition(fp: FilePartition, fileEpochs: Array[Int]): LakeFilePartition = {
     val names = fp.files.toSeq.map(_.toPath.getName)
-    LakeFilePartition(fp, fileEpochs,
-      names.flatMap(n => deletesOf(n).map(n -> _)).toMap,
+    val deletes = names.flatMap(n => deletesOf(n).map(n -> _)).toMap
+    LakeFilePartition(fp, fileEpochs, deletes,
       firstRowIds.fold(Map.empty[String, Long])(m =>
-        names.flatMap(n => m.get(n).map(n -> _)).toMap))
+        names.flatMap(n => m.get(n).map(n -> _)).toMap),
+      (names ++ deletes.values.flatten).flatMap(k => tags.get(k).map(k -> _)).toMap)
   }
 
   // planned once per batch (a batch serves one file list): Spark asks for
@@ -291,14 +303,14 @@ class LakeFileBatch(
     * indexed ones also the parquet row index. Each kind is built only when
     * some file reads through it. */
   private lazy val factory: PartitionReaderFactory = {
-    val rowMeta = positionMeta > 0 || firstRowIds.isDefined
+    val rowMeta = trailingMeta > 0 || firstRowIds.isDefined
     val masked = files.map(f => rowMeta || deletesOf(new Path(f._1).getName).isDefined)
     def factories(used: Boolean, read: StructType) =
       if (!used) IndexedSeq.empty[ParquetPartitionReaderFactory]
       else NativeParquet.epochFactories(spark, files, dataSchema, read, filters, epochs)
     val plain = factories(masked.contains(false), readSchema)
     val indexedRead =
-      StructType(readSchema.fields.dropRight(positionMeta) :+ NativeParquet.RowIndex)
+      StructType(readSchema.fields.dropRight(trailingMeta) :+ NativeParquet.RowIndex)
     val indexed = factories(masked.contains(true), indexedRead)
     // Spark reads all of a scan's partitions columnar or all as rows; the
     // inline partition follows the files (rows when there are none)
@@ -315,19 +327,21 @@ class LakeFileBatch(
       if (!files.exists(f => deletesOf(new Path(f._1).getName).isDefined)) None
       else Some(SerializableConfiguration.broadcast(spark.sparkContext,
         spark.sessionState.newHadoopConf()))
-    new LakeReaderFactory(plain, indexed, readSchema, positionMeta,
-      firstRowIds.isDefined, columnar, rowBatches, deleteConf)
+    new LakeReaderFactory(plain, indexed, readSchema, trailingMeta,
+      firstRowIds.isDefined, columnar, rowBatches, deleteConf, preImages)
   }
 }
 
 /** a run of lake files: the files, each with its rename epoch (aligned
   * with `files.files`; see [[NativeParquet.EpochReads]]), and those of its
-  * files' delete parts and row-id bases that exist (by file NAME) */
+  * files' delete parts and row-id bases (by file NAME) and of their tags
+  * (by file NAME or part path) that exist */
 private[graft] case class LakeFilePartition(
     files: FilePartition,
     fileEpochs: Array[Int],
     deletes: Map[String, Seq[String]],
-    firstRowIds: Map[String, Long]) extends InputPartition {
+    firstRowIds: Map[String, Long],
+    tags: Map[String, (Long, String)]) extends InputPartition {
   override def preferredLocations(): Array[String] = files.preferredLocations()
 }
 
@@ -351,7 +365,8 @@ private[graft] case class InlineRowsPartition(rows: Array[InternalRow])
   *   - otherwise its files read back to back ([[ChainReader]]), the
   *     unmasked ones through the plain factory and the masked ones as
   *     Spark's vectorized batches with the parquet row index, through
-  *     [[MaskedFileReader]];
+  *     [[MaskedFileReader]] — on a `preImages` read keeping only the
+  *     deleted positions, tagged by [[DeletePositions.tagged]];
   *   - the inline partition is one on-heap `ColumnarBatch` of its rows
   *     (`RowBatches`), or the rows themselves.
   * Spark reads a scan's partitions all columnar or all as rows
@@ -359,8 +374,9 @@ private[graft] case class InlineRowsPartition(rows: Array[InternalRow])
   * masked batches.
   *
   * @param schema     the read schema: the data columns (`_row_id` last
-  *                   among them on a row-id read), then `positionMeta` of
-  *                   `_graft_file`, `_graft_pos`
+  *                   among them on a row-id read), then `trailingMeta` of
+  *                   `_graft_file`, `_graft_pos`, `_change_type`,
+  *                   `_snapshot_id`
   * @param rowBatches Some(capacity) when Spark's vectorized reader cannot
   *                   read the indexed schema: every lake column type is
   *                   one it reads (atomic types, variant among them, and
@@ -378,18 +394,18 @@ private[graft] class LakeReaderFactory(
     plain: IndexedSeq[ParquetPartitionReaderFactory],
     indexed: IndexedSeq[ParquetPartitionReaderFactory],
     schema: StructType,
-    positionMeta: Int,
+    trailingMeta: Int,
     rowIds: Boolean,
     columnar: Boolean,
     rowBatches: Option[Int],
-    deleteConf: Option[Broadcast[SerializableConfiguration]]) extends PartitionReaderFactory {
+    deleteConf: Option[Broadcast[SerializableConfiguration]],
+    preImages: Boolean) extends PartitionReaderFactory {
 
   /** the data columns; an indexed read holds the row index after them */
-  private val nInner = schema.length - positionMeta
-  private val rowMeta = positionMeta > 0 || rowIds
-  /** per trailing metadata column: `_graft_file` (true) or `_graft_pos` */
-  private val fileMeta =
-    schema.fields.drop(nInner).map(_.name == graft.lake.LakeRead.FileCol)
+  private val nInner = schema.length - trailingMeta
+  private val rowMeta = trailingMeta > 0 || rowIds
+  /** the trailing metadata columns' names */
+  private val meta = schema.fieldNames.drop(nInner)
 
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
@@ -435,10 +451,17 @@ private[graft] class LakeReaderFactory(
         val batches = rowBatches.fold(inner.createColumnarReader(one))(n =>
           new RowBatches(inner.createReader(one),
             StructType(schema.take(nInner) :+ NativeParquet.RowIndex), n))
-        out(new MaskedFileReader(batches,
-          lp.deletes.get(name).fold(Array.emptyLongArray)(parts =>
-            DeletePositions.forFile(name, parts, deleteConf.get.value.value)),
-          nInner, lp.firstRowIds.get(name), fileMeta, name))
+        val parts = lp.deletes.getOrElse(name, Nil)
+        def conf = deleteConf.get.value.value
+        val (deleted, tags, tagOf) =
+          if (preImages) {
+            val byTag = parts.groupBy(lp.tags).toSeq
+            val (pos, of) = DeletePositions.tagged(name, byTag.map(_._2), conf)
+            (pos, byTag.map(_._1), of)
+          } else (if (parts.isEmpty) Array.emptyLongArray
+            else DeletePositions.forFile(name, parts, conf), lp.tags.get(name).toSeq, null)
+        out(new MaskedFileReader(batches, deleted, nInner, lp.firstRowIds.get(name),
+          meta, name, tags, tagOf))
       }
     })
   }
@@ -451,10 +474,13 @@ private[graft] class LakeReaderFactory(
   *     across skipped row groups and pages): a batch with no hit passes
   *     through unchanged, a hit batch is seen through a selection of its
   *     surviving rows ([[SelectedVector]]), and a batch with no survivor
-  *     is skipped;
+  *     is skipped. With `tagOf` (a pre-image read) the test flips: only the
+  *     deleted positions are kept, and the file ends with its last one;
   *   - the row index column is dropped, and the metadata columns
   *     appended: `_graft_file` as a constant vector, `_graft_pos` as the
-  *     row index;
+  *     row index, `_snapshot_id`/`_change_type` as the file's one tag in
+  *     constant vectors, or on a pre-image read as each row's
+  *     `tags(tagOf(i))`, `i` its index in `deleted`;
   *   - with `firstRowId` (an implicit-id file of a row-id read) the last
   *     data column, `_row_id`, is firstRowId + the row index.
   */
@@ -463,20 +489,44 @@ private[graft] class MaskedFileReader(
     deleted: Array[Long],
     nInner: Int,
     firstRowId: Option[Long],
-    fileMeta: Array[Boolean],
-    fileName: String) extends PartitionReader[ColumnarBatch] {
+    meta: Array[String],
+    fileName: String,
+    tags: Seq[(Long, String)],
+    tagOf: Array[Int]) extends PartitionReader[ColumnarBatch] {
+  import graft.lake.LakeRead.{ChangeTypeCol, FileCol, SnapshotIdCol}
 
-  private val name: ColumnVector = {
-    val v = new ConstantColumnVector(1, StringType)
-    v.setUtf8String(UTF8String.fromString(fileName))
-    v
-  }
+  private val name = new ConstantColumnVector(1, StringType)
+  name.setUtf8String(UTF8String.fromString(fileName))
+  private val preImages = tagOf != null
+  /** the sources of `_snapshot_id` and `_change_type`: on a pre-image read
+    * one row per tag, seen through each batch's `tagSel`; else the file's
+    * tag as constants */
+  private val (snapshotIds, changeTypes): (ColumnVector, ColumnVector) =
+    if (preImages) {
+      val ids = new OnHeapColumnVector(tags.length, LongType)
+      val types = new OnHeapColumnVector(tags.length, StringType)
+      tags.zipWithIndex.foreach { case ((sid, ct), i) =>
+        ids.putLong(i, sid)
+        types.putByteArray(i, ct.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
+      (ids, types)
+    } else {
+      val ids = new ConstantColumnVector(1, LongType)
+      val types = new ConstantColumnVector(1, StringType)
+      tags.headOption.foreach { case (sid, ct) =>
+        ids.setLong(sid)
+        types.setUtf8String(UTF8String.fromString(ct))
+      }
+      (ids, types)
+    }
   /** the first deleted position not below the rows read so far */
   private var di = 0
+  /** a pre-image batch's tag index per kept row */
+  private var tagSel: Array[Int] = _
   private var batch: ColumnarBatch = _
 
   override def next(): Boolean = {
-    while (inner.next()) {
+    while ((!preImages || di < deleted.length) && inner.next()) {
       val b = inner.get()
       val n = b.numRows()
       val sel = if (n == 0) Array.emptyIntArray else survivors(b.column(nInner), n)
@@ -488,19 +538,27 @@ private[graft] class MaskedFileReader(
     false
   }
 
-  /** ordinals of the batch's rows not deleted; null when none is */
+  /** ordinals of the batch's rows not deleted — on a pre-image read, of
+    * those deleted, with their tags in `tagSel`; null when all are kept */
   private def survivors(idx: ColumnVector, n: Int): Array[Int] = {
     while (di < deleted.length && deleted(di) < idx.getLong(0)) di += 1
-    if (di == deleted.length || deleted(di) > idx.getLong(n - 1)) return null
+    if (di == deleted.length || deleted(di) > idx.getLong(n - 1))
+      return if (preImages) Array.emptyIntArray else null
     val keep = new Array[Int](n)
+    if (preImages) tagSel = new Array[Int](n)
     var k = 0
     var i = 0
     while (i < n) {
       val r = idx.getLong(i)
       while (di < deleted.length && deleted(di) < r) di += 1
-      if (di == deleted.length || deleted(di) != r) { keep(k) = i; k += 1 }
+      if ((di == deleted.length || deleted(di) != r) != preImages) {
+        if (preImages) tagSel(k) = tagOf(di)
+        keep(k) = i
+        k += 1
+      }
       i += 1
     }
+    if (preImages) tagSel = java.util.Arrays.copyOf(tagSel, k)
     java.util.Arrays.copyOf(keep, k)
   }
 
@@ -508,8 +566,15 @@ private[graft] class MaskedFileReader(
     val idx = b.column(nInner)
     def view(v: ColumnVector, add: Long): ColumnVector =
       if (sel == null && add == 0L) v else new SelectedVector(v, sel, add)
-    new ColumnarBatch(Array.tabulate(nInner + fileMeta.length) { c =>
-      if (c >= nInner) { if (fileMeta(c - nInner)) name else view(idx, 0L) }
+    def tag(v: ColumnVector): ColumnVector =
+      if (preImages) new SelectedVector(v, tagSel, 0L) else v
+    new ColumnarBatch(Array.tabulate(nInner + meta.length) { c =>
+      if (c >= nInner) meta(c - nInner) match {
+        case FileCol => name
+        case SnapshotIdCol => tag(snapshotIds)
+        case ChangeTypeCol => tag(changeTypes)
+        case _ => view(idx, 0L)
+      }
       else if (c == nInner - 1 && firstRowId.isDefined) view(idx, firstRowId.get)
       else view(b.column(c), 0L)
     }, rows)
@@ -651,6 +716,21 @@ private[graft] object DeletePositions {
     val arr = out.result()
     java.util.Arrays.sort(arr)
     arr
+  }
+
+  /** [[forFile]] over several groups of parts (one per tag of a pre-image
+    * read), merged ascending, with each position's group index. Groups
+    * never share a position: a row is deleted once. */
+  def tagged(fileName: String, groups: Seq[Seq[String]], conf: Configuration)
+      : (Array[Long], Array[Int]) = {
+    val runs = groups.map(forFile(fileName, _, conf))
+    val all = runs.flatten.toArray
+    java.util.Arrays.sort(all)
+    val group = new Array[Int](all.length)
+    runs.zipWithIndex.foreach { case (run, g) =>
+      run.foreach(p => group(java.util.Arrays.binarySearch(all, p)) = g)
+    }
+    (all, group)
   }
 }
 

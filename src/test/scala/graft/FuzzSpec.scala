@@ -17,7 +17,8 @@ import graft.lake._
   * reads must resolve the definition live at each sampled snapshot over
   * that snapshot's data). After every op the model
   * must match; at the end, a sample of recorded snapshots must ALSO match
-  * via time travel — maintenance ops may rewrite files at any point in
+  * via time travel, and a sample of windows must replay through the change
+  * feed onto their start — maintenance ops may rewrite files at any point in
   * between, so this exercises the interval algebra, the delete overlay,
   * compaction absorption, transactional staging, and historical reads
   * under one adversarial schedule rather than one-feature-at-a-time
@@ -115,6 +116,9 @@ class FuzzSpec extends AnyFunSuite {
     var nextK = 0L
     // snapshot id -> (expected contents, live view def) at that snapshot
     val history = mutable.ArrayBuffer[(Long, Map[Long, Long], Option[(Int, Int)])]()
+    // snapshots of the logical REPLACEs (op 19), which the change feed
+    // cannot express
+    val overwrites = mutable.Set.empty[Long]
     history += ((lake.currentSnapshot(), model, viewDef))
 
     // v reads as Int before the widening epoch (and in AS-OF replays into
@@ -234,6 +238,26 @@ class FuzzSpec extends AnyFunSuite {
           import spark.implicits._
           lake.append("main.f", rows.toDF("k", "v"), overwrite = true)
           model = rows.toMap
+          overwrites += lake.currentSnapshot()
+      }
+      // MERGE on a fixed cadence (no rnd draws, so existing seed schedules
+      // are untouched): a slice of live keys is updated, a few new keys are
+      // inserted, and unmatched target rows with k % m = r are deleted — one
+      // snapshot carrying update pre/post-images, inserts and deletes
+      if (i % 4 == 2) {
+        val hit = model.keys.toSeq.sorted.filter(_ % 7 == i % 7).take(6)
+        val src = (hit ++ (nextK until nextK + 3)).map(k => k -> (k * 5 + i))
+        nextK += 3
+        val (m, r) = (5 + i % 3, i % 5)
+        import spark.implicits._
+        lake.merge("main.f", src.toDF("sk", "sv"), col("k") === col("sk"),
+          matched = Seq(LakeWrite.MergeMatched(None, Some(Map("v" -> col("sv"))))),
+          notMatched = Seq(LakeWrite.MergeInsert(None,
+            Map("k" -> col("sk"), "v" -> col("sv")))),
+          notMatchedBySource = Seq(LakeWrite.MergeMatched(
+            Some(col("k") % m === r), None)))
+        val srcMap = src.toMap
+        model = model.filter { case (k, _) => srcMap.contains(k) || k % m != r } ++ srcMap
       }
       history += ((lake.currentSnapshot(), model, viewDef))
       viewDef.foreach { case (m, r) =>
@@ -364,6 +388,49 @@ class FuzzSpec extends AnyFunSuite {
         val vWant = want.filter { case (k, _) => k % m == r }
         assert(vGot == vWant, s"seed=$seed AS-OF view at $sid (k%$m==$r): " +
           s"${vGot.size} vs ${vWant.size}")
+      }
+    }
+
+    // change-feed invariant, independent of the MV folds: replaying
+    // tableChanges(s0, s1] by row id onto the rows at s0 gives the rows at
+    // s1. Each snapshot's delete/pre-image rows must remove exactly the row
+    // they name, and its insert/post-image rows must add a row id not live,
+    // so a row inserted and deleted inside the window nets out. Windows come
+    // from their own Random, so the op schedule above is unchanged; windows
+    // over a REPLACE are skipped.
+    def idRows(s: Long): Map[Long, (Long, Long)] =
+      spark.sql(s"SELECT _row_id, k, v FROM $cat.main.f VERSION AS OF $s").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.get(2).asInstanceOf[Number].longValue))
+        .toMap
+    val windowRnd = new Random(seed + 1)
+    val sids = history.map(_._1).distinct.toVector
+    (0 until 6).foreach { _ =>
+      val (a, b) = (windowRnd.nextInt(sids.size), windowRnd.nextInt(sids.size))
+      val (s0, s1) = (sids(math.min(a, b)), sids(math.max(a, b)))
+      if (s0 < s1 && !overwrites.exists(s => s > s0 && s <= s1)) {
+        var rows = idRows(s0)
+        lake.tableChanges("main.f", s0, s1)
+          .select("_snapshot_id", "_change_type", "_row_id", "k", "v").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
+            (r.getLong(3), r.get(4).asInstanceOf[Number].longValue)))
+          .groupBy(_._1).toSeq.sortBy(_._1).foreach { case (sid, cs) =>
+            val (gone, added) =
+              cs.partition(c => c._2 == "delete" || c._2 == "update_preimage")
+            gone.foreach { case (_, ct, rid, row) =>
+              assert(rows.get(rid).contains(row), s"seed=$seed feed ($s0, $s1]: " +
+                s"$ct of row $rid $row at $sid, live ${rows.get(rid)}")
+              rows -= rid
+            }
+            added.foreach { case (_, ct, rid, row) =>
+              assert(!rows.contains(rid), s"seed=$seed feed ($s0, $s1]: " +
+                s"$ct of live row $rid $row at $sid")
+              rows += rid -> row
+            }
+          }
+        val want = idRows(s1)
+        assert(rows == want, s"seed=$seed feed ($s0, $s1] replay: ${rows.size} " +
+          s"rows vs ${want.size}; diff ${(rows.toSet -- want.toSet).take(3)} / " +
+          s"${(want.toSet -- rows.toSet).take(3)}")
       }
     }
 

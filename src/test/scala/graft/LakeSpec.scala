@@ -1561,6 +1561,30 @@ class LakeSpec extends AnyFunSuite {
     assert(spark.sql(s"SELECT a FROM $cat.main.rid ORDER BY a").count() == 3)
   }
 
+  test("row ids and file ids do not depend on staged file names") {
+    // two fresh lakes given the same multi-file append and the same DELETE
+    // hand out the same ids (one input partition, so each written file
+    // receives its rows in one order)
+    def ids(): (Map[Long, Long], Seq[(Long, Long, Long)]) = {
+      val lake = newLake()
+      lake.createTable("main.det", StructType(Seq(
+        StructField("k", LongType), StructField("v", LongType))))
+      lake.append("main.det", spark.range(0, 400, 1, 1)
+        .selectExpr("id AS k", "id * 2 AS v").repartition(4))
+      lake.delete("main.det", col("k") % 5 === 0L)
+      val st = lake.store.state()
+      val cur = st.currentSnapshotId
+      val tid = st.tableAt("main", "det", cur).get.tableId
+      (LakeRead.scanDF(spark, st, tid, cur, withRowMeta = true)
+        .select(col("k"), col(LakeRead.RowIdCol)).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap,
+        st.filesAt(tid, cur).map(f => (f.fileId, f.firstRowId, f.rowCount)).sorted)
+    }
+    val (a, b) = (ids(), ids())
+    assert(a._2.size == 4, s"expected four files: ${a._2}")
+    assert(a == b, s"ids differ between identical lakes:\n$a\n$b")
+  }
+
   test("ALTER TYPE widening keeps old epochs on the native tier") {
     val lake = newLake()
     import spark.implicits._
@@ -2219,6 +2243,10 @@ class LakeSpec extends AnyFunSuite {
     assert(res2.getLong(1) == 1L, "nmbs delete count")
     assert(spark.sql(s"SELECT k FROM $cat.main.m ORDER BY k").collect()
       .map(_.getInt(0)).toSeq == Seq(1, 2, 4))
+    // a MERGE that updates nothing still types its pre-images as deletes
+    assert(lake.tableChanges("main.m", lake.currentSnapshot() - 1, lake.currentSnapshot())
+      .select("_change_type", "k").collect().map(r => (r.getString(0), r.getInt(1)))
+      .toSeq == Seq(("delete", 5)))
 
     // SQL-standard cardinality rule: two source rows hitting one target row
     Seq((2, 1, "x"), (2, 2, "y")).toDF("k", "nv", "op").createOrReplaceTempView("mdup")
@@ -2327,7 +2355,7 @@ class LakeSpec extends AnyFunSuite {
       def hintCount(s: String) = "ResolvedHint".r.findAllIn(s).length
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
       // the composed reference reader still anti-joins the delete set
-      // through LakeRead.gateBroadcast (as the change feed does)
+      // through ComposedReference.gateBroadcast
       val df = ComposedReference.table(lake, "main.bd")
       val gated = hintCount(df.queryExecution.analyzed.toString)
       assert(df.count() == 1000)
@@ -2419,6 +2447,34 @@ class LakeSpec extends AnyFunSuite {
     assert(lake.table("main.ex").count() == 2, "current data intact")
     // no-op without a window and nothing new to expire
     assert(lake.expireSnapshots(None) == 3L)
+  }
+
+  test("a change-feed window across expired snapshots fails loudly; MV refresh recomputes") {
+    val lake = newLake()
+    import spark.implicits._
+    lake.createTable("main.xw", StructType(Seq(
+      StructField("k", LongType), StructField("g", StringType))))
+    lake.append("main.xw", Seq((1L, "a"), (2L, "c")).toDF("k", "g"))
+    lake.createMaterializedView("main.xmv", "main.xw", Seq("g"), Seq("k"))
+    val mvAt = lake.currentSnapshot()
+    lake.append("main.xw", Seq((3L, "a"), (4L, "c")).toDF("k", "g"))
+    val lost = lake.currentSnapshot()
+    lake.append("main.xw", Seq((5L, "b")).toDF("k", "g"))
+    Thread.sleep(10)
+    val cur = lake.expireSnapshots(Some(0L)) // keeps the last append only
+    // the window (mvAt, cur] holds the expired append: its rows must not
+    // silently drop out of the feed
+    val e = intercept[IllegalArgumentException](
+      lake.tableChanges("main.xw", mvAt, cur).collect())
+    assert(e.getMessage.contains("expired"), e.getMessage)
+    // an expired start alone is a legal window (a stream's cursor)
+    assert(lake.tableChanges("main.xw", lost, cur).select("k").collect()
+      .map(_.getLong(0)).toSeq == Seq(5L))
+    // the refresh takes its full recompute instead of folding a short feed
+    lake.refreshMaterializedView("main.xmv")
+    val got = lake.table("main.xmv").select("g", "n_rows", "sum_k").collect()
+      .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(got == Map("a" -> (2L, 4L), "c" -> (2L, 6L), "b" -> (1L, 5L)), s"$got")
   }
 
   // ---- freeze emits DuckDB-executable SQL artifacts -----------------------

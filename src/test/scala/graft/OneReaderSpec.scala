@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.execution.{FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
@@ -190,5 +190,64 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       r.getLong(2), r.getLong(3), r.getLong(4))).toSet
     assert(rows(lake.table("main.mv").select("g", "n_rows", "sum_v", "min_v", "max_v")) ==
       rows(want))
+  }
+
+  test("change feed reads are lake scans: no join, and one with a MERGE in the window") {
+    val (lake, cat) = newCat("feed")
+    lake.createTable("main.c", StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType))))
+    lake.setOption("data_inlining_row_limit", "10", Some("main.c"))
+    def rows(from: Long, to: Long) =
+      spark.range(from, to).selectExpr("id AS k", "id * 3 AS v").coalesce(1)
+    lake.append("main.c", rows(0, 100))
+    val s0 = lake.currentSnapshot()
+    lake.append("main.c", rows(100, 200))
+    lake.insertRows("main.c", Seq(Seq(1000L, 1L), Seq(1001L, 2L)))
+    lake.delete("main.c", col("k") % 10 === 0L) // also drops inline row 1000
+    lake.update("main.c", col("k") % 10 === 1L, Map("v" -> (col("v") + 1)))
+    lake.transaction { tx =>
+      tx.append("main.c", rows(200, 300))
+      tx.delete("main.c", col("k") % 10 === 2L) // hits its own append too
+    }
+    val s1 = lake.currentSnapshot()
+    import spark.implicits._
+    lake.merge("main.c", Seq((3L, 7L), (13L, 8L), (5000L, 9L)).toDF("sk", "sv"),
+      col("k") === col("sk"),
+      matched = Seq(LakeWrite.MergeMatched(None, Some(Map("v" -> col("sv"))))),
+      notMatched = Seq(LakeWrite.MergeInsert(None, Map("k" -> col("sk"), "v" -> col("sv")))),
+      notMatchedBySource = Seq(LakeWrite.MergeMatched(Some(col("k") % 10 === 4L), None)))
+    val s2 = lake.currentSnapshot()
+
+    def idRows(s: Long): Map[Long, (Long, Long)] =
+      spark.sql(s"SELECT _row_id, k, v FROM $cat.main.c VERSION AS OF $s").collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    /** (joins, non-lake file scans) of the feed's executed plans; its rows
+      * replayed by row id onto the rows at `from` must give those at `to` */
+    def feed(from: Long, to: Long): (Int, Int) = {
+      var got: Array[org.apache.spark.sql.Row] = Array.empty
+      val ns = plansOf {
+        got = lake.tableChanges("main.c", from, to)
+          .select("_snapshot_id", "_change_type", "_row_id", "k", "v").collect()
+      }.flatMap(nodes(_, caches = true))
+      var live = idRows(from)
+      got.groupBy(_.getLong(0)).toSeq.sortBy(_._1).foreach { case (_, cs) =>
+        val (gone, added) = cs.partition(r => Set("delete", "update_preimage")(r.getString(1)))
+        gone.foreach { r =>
+          assert(live.get(r.getLong(2)).contains((r.getLong(3), r.getLong(4))), s"$r")
+          live -= r.getLong(2)
+        }
+        added.foreach { r =>
+          assert(!live.contains(r.getLong(2)), s"$r")
+          live += r.getLong(2) -> ((r.getLong(3), r.getLong(4)))
+        }
+      }
+      assert(live == idRows(to), s"feed ($from, $to] does not replay")
+      val lakeScans = ns.collect { case b: BatchScanExec => b.scan }
+      assert(lakeScans.nonEmpty && lakeScans.forall(_.isInstanceOf[LakeNativeScan]), s"$lakeScans")
+      (ns.count(_.isInstanceOf[BaseJoinExec]), ns.count(_.isInstanceOf[FileSourceScanExec]))
+    }
+    assert(feed(s0, s1) == ((0, 0)))
+    assert(feed(s0, s2) == ((1, 0)))
+    assert(feed(s1, s2) == ((1, 0)))
   }
 }

@@ -163,6 +163,24 @@ object ComposedReference {
     all
   }
 
+  /** estimated in-memory bytes per (file, pos) delete-set row: the file-name
+    * string (~50 chars → java String overhead) + the position long, in a
+    * broadcast hash relation */
+  private val DeleteRowBytes = 160L
+
+  /** Hint `broadcast` on the delete side ONLY when the whole delete set
+    * provably fits the session's broadcast threshold. A single large
+    * `DELETE WHERE` can produce billions of (file, pos) rows before vacuum
+    * rewrites the victims — forcing a broadcast there ships the full set to
+    * every executor and OOMs at scale, so past the threshold we leave the
+    * strategy to Catalyst/AQE (shuffled hash / sort-merge on the anti-join
+    * keys). The metadata makes the gate free: `deleteCount` per delete file
+    * is known without touching data. */
+  def gateBroadcast(spark: SparkSession, dd: DataFrame, totalDeleted: Long): DataFrame = {
+    val threshold = spark.sessionState.conf.autoBroadcastJoinThreshold
+    if (threshold > 0 && totalDeleted * DeleteRowBytes <= threshold) broadcast(dd) else dd
+  }
+
   private implicit class ListAsJava[A](l: List[A]) {
     def asJava: java.util.List[A] = {
       val jl = new java.util.ArrayList[A](l.size)
