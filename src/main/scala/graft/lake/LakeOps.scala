@@ -1018,8 +1018,9 @@ class Lake(val spark: SparkSession, val root: String,
     val hits = spark.read.schema(delStruct).parquet(deleteReadPaths(dels): _*)
       .select(col("file").as(LakeRead.FileCol), col("pos").as(LakeRead.PosCol),
         col("row_id").as(LakeRead.RowIdCol))
-    val written = LakeWrite.writeDeleteFile(spark, store, tid, hits)
-      .getOrElse(return cur)
+    // positions the entries record: they partition the new file exactly
+    val written = LakeWrite.writeDeleteFile(spark, store, tid, hits,
+      rowBound = dels.map(_.deleteCount).sum).file.getOrElse(return cur)
     store.commitWithRetry() { (st, sid) =>
       // the overlay set must not have changed under us: a concurrent DML
       // added positions we did not merge, a concurrent vacuum ended files

@@ -753,6 +753,15 @@ private[graft] class LakeNativeScan(
   /** current file count after pruning (test observability) */
   private[graft] def currentFileCount: Int = files.size
 
+  /** the rows of the kept files less their recorded deletes, plus the
+    * inline rows: an upper bound on the rows the scan returns */
+  private[lake] def liveRows: Long = {
+    val deleted = table.st.deleteFilesAt(table.entry.tableId, table.snapshot)
+      .flatMap(_.countsByFile).groupMapReduce(_._1)(_._2)(_ + _)
+    files.map(f => math.max(0L, f.rowCount - deleted.getOrElse(f.fileId.toString, 0L))).sum +
+      inlineRowCount
+  }
+
   override def estimateStatistics(): Statistics = new Statistics {
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(files.map(_.fileSizeBytes).sum +

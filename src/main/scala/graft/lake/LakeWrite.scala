@@ -2,7 +2,9 @@ package graft.lake
 
 import java.nio.file.{Files, Paths}
 import java.util.UUID
-import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -520,24 +522,50 @@ object LakeWrite {
   private[lake] case class WrittenDeletes(
       path: String, counts: Map[String, Long], total: Long, parts: List[String])
 
-  /** distributed write of (file, pos, row_id) hit rows into a positional
-    * delete "file" (a parquet directory — the scan reads it as one unit);
-    * None when no hits. */
+  /** What a DML learns of its hits from its delete write, observed as the
+    * rows are written: the delete file (None when no data-file row is hit),
+    * the row ids of the inline rows it deletes outright, and how many of the
+    * written positions are update pre-images. */
+  private[lake] case class DeleteHits(
+      file: Option[WrittenDeletes], inlineIds: Set[Long], updated: Long)
+
+  /** the `hits` column of [[writeDeleteFile]] flagging update pre-images */
+  private val UpdCol = "_upd"
+
+  /** per-data-file hit counts, merged on the driver from O(files) maps */
+  private object HitCounts extends Aggregator[String, Map[String, Long], Map[String, Long]] {
+    private def add(m: Map[String, Long], f: String, n: Long) = m.updated(f, m.getOrElse(f, 0L) + n)
+    def zero: Map[String, Long] = Map.empty
+    def reduce(m: Map[String, Long], f: String): Map[String, Long] = add(m, f, 1L)
+    def merge(a: Map[String, Long], b: Map[String, Long]): Map[String, Long] =
+      b.foldLeft(a) { case (m, (f, n)) => add(m, f, n) }
+    def finish(m: Map[String, Long]): Map[String, Long] = m
+    def bufferEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+    def outputEncoder: Encoder[Map[String, Long]] = ExpressionEncoder[Map[String, Long]]()
+  }
+
+  /** Distributed write of the (file, pos, row_id) rows of `hits` into a
+    * positional delete "file" (a parquet directory — the scan reads it as
+    * one unit). `hits` carries [[LakeRead.FileCol]], [[LakeRead.PosCol]],
+    * [[LakeRead.RowIdCol]] and optionally [[UpdCol]]; its inline rows
+    * (file `inline:<batch>`) are observed, not written.
+    *
+    * The write is the one pass a DML makes over its hits: `Dataset.observe`
+    * on it counts them per data file and in total, collects the inline ids
+    * and counts the update pre-images, so no DML counts its hits in a job of
+    * its own, and a zero-hit write leaves no directory behind.
+    * @param rowBound an upper bound on the hits (the live rows the DML's
+    *                 scan keeps), which sizes the range partitioning
+    * @param oneHitPerRow MERGE's cardinality rule: a (file, pos, row_id)
+    *                 aggregate under the range exchange, and the write
+    *                 fails — its directory deleted — when a row is hit
+    *                 twice */
   private[lake] def writeDeleteFile(
-      spark: SparkSession, store: MetadataStore, tid: Long,
-      parquetHits: DataFrame): Option[WrittenDeletes] = {
-    val hits = parquetHits
-      .select(col(LakeRead.FileCol).as("file"), col(LakeRead.PosCol).as("pos"),
-        col(LakeRead.RowIdCol).as("row_id"))
-    // per-data-file hit counts BEFORE the write (r17): the same rows land
-    // in the delete file below, so counting the input replaces the old
-    // post-write re-read of the delete dir (one job instead of two, and a
-    // zero-hit DELETE skips the write entirely), and the total sizes the
-    // range partitioning below instead of a blind session-width shuffle
-    val counts = hits.groupBy("file").count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap // O(files)
-    val total = counts.values.sum
-    if (total == 0) return None
+      spark: SparkSession, store: MetadataStore, tid: Long, hits: DataFrame,
+      rowBound: Long, oneHitPerRow: Boolean = false): DeleteHits = {
+    val upd = if (hits.columns.contains(UpdCol)) col(UpdCol) else lit(false)
+    val rows = hits.select(col(LakeRead.FileCol).as("file"), col(LakeRead.PosCol).as("pos"),
+      col(LakeRead.RowIdCol).as("row_id"), upd.as(UpdCol))
     val delDir = s"${tableDir(store.root, tid)}/deletes/d${uuid()}"
     val io = StoreIO.forPath(delDir)
     io.mkdirs(s"${tableDir(store.root, tid)}/deletes")
@@ -546,26 +574,60 @@ object LakeWrite {
     // positions prunes to its row groups via file-column min/max stats
     // (the executor-local delete application in NativeParquet) — and the
     // sort stays distributed, no single-task funnel for a big DELETE.
-    // Part count derives from the hit count (~4M position rows ≈ a few
+    // Part count derives from the row bound (~4M position rows ≈ a few
     // hundred MB per part, guide §2.2/§6), not the session shuffle width:
-    // a small DELETE gets one part with NO range-sampling job, a 100 TB
-    // one still fans out.
+    // a DML over fewer rows gets one part with NO range-sampling job, a
+    // 100 TB one still fans out.
     val rowsPerPart = 4L << 20
     val nParts = math.max(1L, math.min(
       spark.sessionState.conf.numShufflePartitions.toLong,
-      (total + rowsPerPart - 1) / rowsPerPart)).toInt
-    hits
-      .repartitionByRange(nParts, col("file"), col("pos"))
+      (rowBound + rowsPerPart - 1) / rowsPerPart)).toInt
+    val ranged = rows.repartitionByRange(nParts, col("file"), col("pos"))
+    // the aggregate's clustering is the range partitioning's (no exchange
+    // of its own); observed above the exchange, so a range-sampling job
+    // never runs the metrics twice
+    val hitRows =
+      if (!oneHitPerRow) ranged
+      else ranged.groupBy("file", "pos", "row_id")
+        .agg(count(lit(1)).as("_mult"), max(col(UpdCol)).as(UpdCol))
+    val inline = col("file").startsWith("inline:")
+    val seen = new Observation()
+    val metrics = Seq(udaf(HitCounts, Encoders.STRING)(col("file")).as("counts"),
+      count_if(col(UpdCol) && !inline).as("updated"),
+      collect_list(when(inline && !col(UpdCol), col("row_id"))).as("inline")) ++ // ≤ inline limit
+      (if (oneHitPerRow) Seq(max(col("_mult")).as("mult")) else Nil)
+    hitRows
+      .observe(seen, metrics.head, metrics.tail: _*)
+      .filter(!inline)
       .sortWithinPartitions("file", "pos")
+      .select("file", "pos", "row_id")
       // delete vectors leak row lineage — on an encrypted table they get
       // the same uniform-key treatment as data files
       .write.options({
         val st = store.state()
         LakeEncryption.writeOptions(st, tid, st.currentSnapshotId)
       }).mode(SaveMode.Overwrite).parquet(delDir)
-    val parts = io.list(delDir, "", ".parquet").sorted
-      .map(n => s"$delDir/$n").toList
-    Some(WrittenDeletes(delDir, counts, total, parts))
+    val m = seen.get
+    val counts = m("counts").asInstanceOf[scala.collection.Map[String, Long]]
+      .filterNot(_._1.startsWith("inline:")).toMap // O(files)
+    val total = counts.values.sum
+    val twice = m.get("mult").exists(v => v != null && v.asInstanceOf[Long] > 1)
+    if (total == 0 || twice) io.deleteRecursively(delDir)
+    if (twice) throw new IllegalStateException("MERGE: a target row matched multiple source rows")
+    val file = if (total == 0) None else Some(WrittenDeletes(delDir, counts, total,
+      io.list(delDir, "", ".parquet").sorted.map(n => s"$delDir/$n").toList))
+    DeleteHits(file, m("inline").asInstanceOf[Seq[Long]].toSet, m("updated").asInstanceOf[Long])
+  }
+
+  /** The live rows the lake scans of `df` keep after file pruning, plus
+    * their inline rows: an upper bound on the rows a DML over `df` can hit,
+    * read off the optimized plan (no job). */
+  private def scannedRows(df: DataFrame): Long = {
+    import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
+    df.queryExecution.optimizedPlan.collect {
+      case r: DataSourceV2ScanRelation if r.scan.isInstanceOf[LakeNativeScan] =>
+        r.scan.asInstanceOf[LakeNativeScan].liveRows
+    }.sum
   }
 
   /** Apply `cond` unless it is the literal TRUE (the DELETE/UPDATE-all
@@ -593,18 +655,12 @@ object LakeWrite {
     val tid = st0.tableAt(schemaName, tableName, s0)
       .getOrElse(throw new NoSuchElementException(s"no table $schemaName.$tableName")).tableId
 
+    // one action: the delete write observes the hit counts and the inline
+    // ids as it writes the positions
     val matched = filterUnlessTrue(
       LakeRead.scanDF(spark, st0, tid, s0, Nil, withRowMeta = true), cond)
-      .persist()
-    val delFile = writeDeleteFile(spark, store, tid,
-      matched.filter(!col(LakeRead.FileCol).startsWith("inline:")))
-    // inline-row ids: provably empty when the table has no inline batches
-    // at s0 — skip the collect job (r17; most tables never inline)
-    val inlineIds: Set[Long] =
-      if (st0.inlinedAt(tid, s0).isEmpty) Set.empty
-      else matched.filter(col(LakeRead.FileCol).startsWith("inline:"))
-        .select(col(LakeRead.RowIdCol)).collect().map(_.getLong(0)).toSet // ≤ inline limit
-    matched.unpersist()
+    val hits = writeDeleteFile(spark, store, tid, matched, scannedRows(matched))
+    val (delFile, inlineIds) = (hits.file, hits.inlineIds)
     beforeCommit()
 
     val total = delFile.map(_.total).getOrElse(0L) + inlineIds.size
@@ -684,42 +740,44 @@ object LakeWrite {
     val cols = st0.columnsAt(tid, s0)
     val schemaVersion = st0.snapshots.lastOption.map(_.schemaVersion).getOrElse(0L)
 
-    val matched = filterUnlessTrue(
+    val scan = filterUnlessTrue(
       LakeRead.scanDF(spark, st0, tid, s0, Nil, withRowMeta = true), cond)
-      .persist()
-    val updated = matched.select(
-      cols.map(c => set.getOrElse(c.name, col(c.name))
-        .cast(LakeRead.sparkType(c.dataType)).as(c.name)) ++
-        Seq(col(LakeRead.FileCol), col(LakeRead.RowIdCol)): _*)
+    val rowBound = scannedRows(scan) // before the cache hides the scan
+    val matched = scan.persist()
+    val inline = col(LakeRead.FileCol).startsWith("inline:")
+    val (updatedJson, delFile, staged) = try {
+      val updated = matched.select(
+        cols.map(c => set.getOrElse(c.name, col(c.name))
+          .cast(LakeRead.sparkType(c.dataType)).as(c.name)) ++
+          Seq(col(LakeRead.FileCol), col(LakeRead.RowIdCol)): _*)
 
-    // inline side: updated JSON by row id (inline log is small by contract);
-    // provably empty — and the two collect jobs skipped — when the table
-    // has no inline batches at s0 (r17)
-    val updatedJson: Map[Long, String] =
-      if (st0.inlinedAt(tid, s0).isEmpty) Map.empty
-      else {
-        val inlineUpdated = updated.filter(col(LakeRead.FileCol).startsWith("inline:"))
-        val inlineIds = inlineUpdated.select(col(LakeRead.RowIdCol))
-          .collect().map(_.getLong(0))
-        val inlineJson = inlineUpdated.drop(LakeRead.FileCol, LakeRead.RowIdCol)
-          .toJSON.collect()
-        inlineIds.zip(inlineJson).toMap
+      // inline side: updated JSON by row id (inline log is small by
+      // contract); provably empty — and the two collect jobs skipped — when
+      // the table has no inline batches at s0 (r17)
+      val updatedJson: Map[Long, String] =
+        if (st0.inlinedAt(tid, s0).isEmpty) Map.empty
+        else {
+          val inlineUpdated = updated.filter(inline)
+          val inlineIds = inlineUpdated.select(col(LakeRead.RowIdCol))
+            .collect().map(_.getLong(0))
+          val inlineJson = inlineUpdated.drop(LakeRead.FileCol, LakeRead.RowIdCol)
+            .toJSON.collect()
+          inlineIds.zip(inlineJson).toMap
+        }
+
+      // parquet side: delete file + post-image files with explicit row ids,
+      // the second written only when the first saw a hit
+      val delFile = writeDeleteFile(spark, store, tid, matched.filter(!inline), rowBound).file
+      val staged: Seq[StagedFile] = delFile match {
+        case None => Nil
+        case Some(_) =>
+          val staging = s"${store.root}/_staging/${uuid()}"
+          withMicrosTimestamps(spark)(updated.filter(!inline).drop(LakeRead.FileCol)
+            .write.options(writeOptions(st0, tid, s0)).mode(SaveMode.Overwrite).parquet(staging))
+          promoteStaged(staging, s"${tableDir(store.root, tid)}/data", Nil)
       }
-
-    // parquet side: delete file + post-image files with explicit row ids
-    val parquetPre = matched.filter(!col(LakeRead.FileCol).startsWith("inline:"))
-    val delFile = writeDeleteFile(spark, store, tid, parquetPre)
-    val postImages = updated.filter(!col(LakeRead.FileCol).startsWith("inline:"))
-      .drop(LakeRead.FileCol)
-    val staged: Seq[StagedFile] = delFile match {
-      case None => Nil
-      case Some(_) =>
-        val staging = s"${store.root}/_staging/${uuid()}"
-        withMicrosTimestamps(spark)(postImages.write.options(writeOptions(st0, tid, s0))
-          .mode(SaveMode.Overwrite).parquet(staging))
-        promoteStaged(staging, s"${tableDir(store.root, tid)}/data", Nil)
-    }
-    matched.unpersist()
+      (updatedJson, delFile, staged)
+    } finally matched.unpersist()
 
     val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
     val readStruct = LakeRead.structFor(cols).add(StructField(LakeRead.RowIdCol, LongType))
@@ -827,10 +885,14 @@ object LakeWrite {
     * error (SQL standard cardinality rule). Returns
     * (snapshotId, updated, deleted, inserted).
     *
-    * Scale shape: the matched/not-matched splits are plain joins on the ON
-    * condition (equi-joins shuffle/broadcast under Catalyst+AQE as usual);
-    * driver-side collects are limited to inline-log rows (bounded by
-    * data_inlining_row_limit) and O(files) stats rows. */
+    * Scale shape: one join on the ON condition (inner, or outer on the
+    * side whose unmatched rows a clause acts on; equi-joins shuffle or
+    * broadcast under Catalyst+AQE as usual) reads the source once and the
+    * target once. Its acting rows are cached and feed three writes: the
+    * delete file, which also counts the hits and enforces the cardinality
+    * rule, the post-images and the inserts. Driver-side collects are
+    * limited to inline-log rows (bounded by data_inlining_row_limit) and
+    * O(files) stats rows. */
   def merge(
       spark: SparkSession,
       store: MetadataStore,
@@ -863,108 +925,120 @@ object LakeWrite {
     val overlap = source.columns.toSet.intersect(cols.map(_.name).toSet)
     require(overlap.isEmpty, s"merge source columns collide with target: $overlap")
 
-    /** index of the first clause whose condition holds, else -1 */
-    def firstMatch(conds: Seq[Option[Column]]): Column =
+    // Every clause gets one action index, column `Act`: the target-side
+    // clauses (WHEN MATCHED, then WHEN NOT MATCHED BY SOURCE) from 0, the
+    // inserts after
+    val Act = "_m_act"
+    val tgtClauses = matched ++ notMatchedBySource
+    val nT = tgtClauses.size
+    /** `base` + the index of the first clause whose condition holds, else -1 */
+    def firstMatch(conds: Seq[Option[Column]], base: Int): Column =
       conds.zipWithIndex.foldRight(lit(-1)) { case ((c, i), acc) =>
         // an unconditional clause matches unconditionally — emit the index
         // itself instead of a degenerate when(true, ...) conjunct
-        c.map(cc => when(cc, lit(i)).otherwise(acc)).getOrElse(lit(i))
+        c.map(cc => when(cc, lit(base + i)).otherwise(acc)).getOrElse(lit(base + i))
       }
-
-    /** affected rows of one matched-style group: post-image target columns
-      * (pre-image values for DELETE rows), scan meta, `_upd` action flag */
-    def affectedSide(df: DataFrame, clauses: Seq[MergeMatched]): DataFrame = {
-      val acted = df.withColumn("_m_act", firstMatch(clauses.map(_.cond)))
-        .filter(col("_m_act") >= 0)
-      val updIdx = clauses.zipWithIndex.collect { case (c, i) if c.set.isDefined => i }
-      acted.select(cols.map { c =>
-        updIdx.foldRight(col(c.name)) { (i, acc) =>
-          when(col("_m_act") === lit(i),
-            clauses(i).set.get.getOrElse(c.name, col(c.name))).otherwise(acc)
-        }.cast(LakeRead.sparkType(c.dataType)).as(c.name)
-      } ++ Seq(col(LakeRead.FileCol), col(LakeRead.PosCol), col(LakeRead.RowIdCol),
-        (if (updIdx.isEmpty) lit(false)
-         else col("_m_act").isin(updIdx.map(i => i: Any): _*)).as("_upd")): _*)
+    /** column `c` as the acting row leaves it: the post-image of an update,
+      * the values of an insert, the pre-image of a delete */
+    def valueOf(c: ColumnEntry): Column = {
+      val arms = tgtClauses.zipWithIndex.collect { case (MergeMatched(_, Some(set)), i) =>
+        i -> set.getOrElse(c.name, col(c.name))
+      } ++ notMatched.zipWithIndex.map { case (cl, k) =>
+        (nT + k) -> cl.values.getOrElse(c.name, lit(null))
+      }
+      arms.foldRight(if (nT == 0) lit(null) else col(c.name)) { case ((i, v), acc) =>
+        when(col(Act) === lit(i), v).otherwise(acc)
+      }.cast(LakeRead.sparkType(c.dataType)).as(c.name)
     }
 
+    // One join reads the source once and the target once: inner for the
+    // matched rows, outer on the target for NOT MATCHED BY SOURCE, outer on
+    // the source for NOT MATCHED. An insert-only MERGE anti-joins and writes
+    // no delete file.
     val tgt = LakeRead.scanDF(spark, st0, tid, s0, Nil, withRowMeta = true)
-    val mAff = affectedSide(tgt.join(source, onCond, "inner"), matched)
-    val nmbsAff =
-      if (notMatchedBySource.isEmpty) None
-      else Some(affectedSide(tgt.join(source, onCond, "left_anti"), notMatchedBySource))
-    val affected = nmbsAff.foldLeft(mAff)(_ unionByName _).persist()
-
-    // SQL cardinality rule: a target row hit by two source matches is an
-    // error, never a double-apply (nmbs rows join nothing, so checking the
-    // union is equivalent and saves a pass)
-    if (matched.nonEmpty &&
-      !affected.groupBy(col(LakeRead.RowIdCol)).count()
-        .filter(col("count") > 1).isEmpty)
-      throw new IllegalStateException(
-        "MERGE: a target row matched multiple source rows")
-
-    val inline = col(LakeRead.FileCol).startsWith("inline:")
-    // inline log side (driver-held, bounded by data_inlining_row_limit);
-    // provably empty — three collect jobs skipped — when the table has no
-    // inline batches at s0 (r17)
-    val hasInline = st0.inlinedAt(tid, s0).nonEmpty
-    val inlineDelIds: Set[Long] =
-      if (!hasInline) Set.empty
-      else affected.filter(inline && !col("_upd"))
-        .select(col(LakeRead.RowIdCol)).collect().map(_.getLong(0)).toSet
-    val inlineUpdJson: Map[Long, String] =
-      if (!hasInline) Map.empty
+    val (joined, act) =
+      if (nT == 0) (source.join(tgt, onCond, "left_anti"), firstMatch(notMatched.map(_.cond), 0))
       else {
-        val inlineUpd = affected.filter(inline && col("_upd"))
-        val inlineUpdIds = inlineUpd.select(col(LakeRead.RowIdCol))
-          .collect().map(_.getLong(0))
-        inlineUpdIds.zip(
-          inlineUpd.drop(LakeRead.FileCol, LakeRead.PosCol, LakeRead.RowIdCol, "_upd")
-            .toJSON.collect()).toMap
+        val joinType = (notMatchedBySource.nonEmpty, notMatched.nonEmpty) match {
+          case (false, false) => "inner"
+          case (true, false) => "left_outer"
+          case (false, true) => "right_outer"
+          case (true, true) => "full_outer"
+        }
+        // a target row carries a row id; a source row, this mark
+        val inTgt = col(LakeRead.RowIdCol).isNotNull
+        val inSrc = col("_m_src").isNotNull
+        (tgt.join(source.withColumn("_m_src", lit(true)), onCond, joinType),
+          when(inTgt && inSrc, firstMatch(matched.map(_.cond), 0))
+            .when(inTgt, firstMatch(notMatchedBySource.map(_.cond), matched.size))
+            .otherwise(firstMatch(notMatched.map(_.cond), nT)))
       }
-
-    // parquet side: one delete file over every affected pre-image
-    val delFile = writeDeleteFile(spark, store, tid, affected.filter(!inline))
-    val counts = affected.filter(!inline).groupBy(col("_upd")).count()
-      .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
+    val rowBound = if (nT == 0) 0L else scannedRows(tgt)
+    val actedRows = joined.withColumn(Act, act).filter(col(Act) >= 0)
+      .select(cols.map(valueOf) ++
+        (if (nT == 0) Nil else Seq(col(LakeRead.FileCol), col(LakeRead.PosCol),
+          col(LakeRead.RowIdCol))) :+ col(Act): _*)
+    // the delete write, the post-images and the inserts all read the join
+    val acted = if (nT == 0) actedRows else actedRows.persist()
+    val isIns = col(Act) >= nT
+    val updIdx = tgtClauses.zipWithIndex.collect { case (c, i) if c.set.isDefined => i: Any }
+    val isUpd = if (updIdx.isEmpty) lit(false) else col(Act).isin(updIdx: _*)
+    val inline = col(LakeRead.FileCol).startsWith("inline:")
+    val dataCols = cols.map(c => col(c.name))
+    // an outer join on the source side makes the target's row metadata
+    // nullable; on target rows it never is, and declaring it so keeps the
+    // delete and post-image files' metadata columns required
+    def tgtMeta(n: String, none: Any) = coalesce(col(n), lit(none)).as(n)
 
     val wopts = writeOptions(st0, tid, s0)
     val dataDir = s"${tableDir(store.root, tid)}/data"
     val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
     val baseStruct = LakeRead.structFor(cols)
-
-    // post-image files (explicit row ids, like UPDATE)
-    val postStaged = if (counts.getOrElse(true, 0L) == 0) Nil else {
-      val staging = s"${store.root}/_staging/${uuid()}"
-      withMicrosTimestamps(spark)(affected.filter(col("_upd") && !inline)
-        .drop(LakeRead.FileCol, LakeRead.PosCol, "_upd")
-        .write.options(wopts).mode(SaveMode.Overwrite).parquet(staging))
-      promoteStaged(staging, dataDir, Nil)
-    }
-    affected.unpersist()
-    val (postKept, postStats, postSizes) = stagedStats(spark,
-      baseStruct.add(StructField(LakeRead.RowIdCol, LongType)), statCols, postStaged)
-
-    // insert files (fresh row ids assigned at commit)
-    val insActed = source.join(tgt, onCond, "left_anti")
-      .withColumn("_i_act", firstMatch(notMatched.map(_.cond)))
-      .filter(col("_i_act") >= 0)
-    val insStaged = if (notMatched.isEmpty) Nil else {
-      val ins = insActed.select(cols.map { c =>
-        notMatched.zipWithIndex.foldRight(lit(null): Column) { case ((cl, i), acc) =>
-          when(col("_i_act") === lit(i),
-            cl.values.getOrElse(c.name, lit(null))).otherwise(acc)
-        }.cast(LakeRead.sparkType(c.dataType)).as(c.name)
-      }: _*)
+    def stage(rows: DataFrame): Seq[StagedFile] = {
       val staging = s"${store.root}/_staging/${uuid()}"
       withMicrosTimestamps(spark)(
-        ins.write.options(wopts).mode(SaveMode.Overwrite).parquet(staging))
+        rows.write.options(wopts).mode(SaveMode.Overwrite).parquet(staging))
       promoteStaged(staging, dataDir, Nil)
     }
+
+    val (hits, inlineUpdJson, postStaged, insStaged) = try {
+      // one delete file over every affected pre-image; it also enforces the
+      // SQL cardinality rule (a target row hit by two source matches is an
+      // error, never a double-apply) before anything else is written
+      val hits =
+        if (nT == 0) DeleteHits(None, Set.empty, 0L)
+        else writeDeleteFile(spark, store, tid, acted.filter(!isIns).select(
+          tgtMeta(LakeRead.FileCol, ""), tgtMeta(LakeRead.PosCol, 0L),
+          tgtMeta(LakeRead.RowIdCol, 0L), isUpd.as(UpdCol)),
+          rowBound, oneHitPerRow = matched.nonEmpty)
+      // inline log side (driver-held, bounded by data_inlining_row_limit);
+      // provably empty — both collect jobs skipped — when the table has no
+      // inline batches at s0 (r17)
+      val inlineUpdJson: Map[Long, String] =
+        if (nT == 0 || st0.inlinedAt(tid, s0).isEmpty) Map.empty
+        else {
+          val inlineUpd = acted.filter(!isIns && isUpd && inline)
+          val inlineUpdIds = inlineUpd.select(col(LakeRead.RowIdCol))
+            .collect().map(_.getLong(0))
+          inlineUpdIds.zip(inlineUpd.select(dataCols: _*).toJSON.collect()).toMap
+        }
+      // post-image files (explicit row ids, like UPDATE), then insert files
+      // (fresh row ids assigned at commit)
+      val postStaged = if (hits.updated == 0) Nil
+        else stage(acted.filter(!isIns && isUpd && !inline)
+          .select(dataCols :+ tgtMeta(LakeRead.RowIdCol, 0L): _*))
+      val insStaged = if (notMatched.isEmpty) Nil
+        else stage(acted.filter(isIns).select(dataCols: _*))
+      (hits, inlineUpdJson, postStaged, insStaged)
+    } finally acted.unpersist()
+    val delFile = hits.file
+    val inlineDelIds = hits.inlineIds
+    val (postKept, postStats, postSizes) = stagedStats(spark,
+      baseStruct.add(StructField(LakeRead.RowIdCol, LongType)), statCols, postStaged)
     val (insKept, insStats, insSizes) = stagedStats(spark, baseStruct, statCols, insStaged)
 
-    val updCnt = counts.getOrElse(true, 0L) + inlineUpdJson.size
-    val delCnt = counts.getOrElse(false, 0L) + inlineDelIds.size
+    val updCnt = hits.updated + inlineUpdJson.size
+    val delCnt = delFile.map(_.total).getOrElse(0L) - hits.updated + inlineDelIds.size
     val insCnt = insKept.map(f => insStats(f.fileName).getLong(
       insStats(f.fileName).fieldIndex("_cnt"))).sum
 

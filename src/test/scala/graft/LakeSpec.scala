@@ -2250,6 +2250,7 @@ class LakeSpec extends AnyFunSuite {
 
     // SQL-standard cardinality rule: two source rows hitting one target row
     Seq((2, 1, "x"), (2, 2, "y")).toDF("k", "nv", "op").createOrReplaceTempView("mdup")
+    val cached = org.apache.spark.sql.graft.CachedEntries(spark)
     val err = intercept[Exception] {
       spark.sql(
         s"""MERGE INTO $cat.main.m t USING mdup s ON t.k = s.k
@@ -2257,6 +2258,8 @@ class LakeSpec extends AnyFunSuite {
            |""".stripMargin).collect()
     }
     assert(err.getMessage != null)
+    // the failed MERGE released the frame it cached
+    assert(org.apache.spark.sql.graft.CachedEntries(spark) <= cached)
   }
 
   // ---- ddl.sql: column defaults — existence vs current ---------------------

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, Literal}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
@@ -31,19 +32,27 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     (lake, cat)
   }
 
-  /** the executed plans of every action `body` runs */
-  private def plansOf(body: => Unit): Seq[SparkPlan] = {
+  /** the actions one call ran: how many (failed ones too), and the
+    * executed plans of those that succeeded */
+  private case class Run(actions: Int, plans: Seq[SparkPlan]) {
+    override def toString: String = s"$actions actions:\n${plans.mkString("\n")}"
+  }
+
+  /** the actions `body` runs */
+  private def plansOf(body: => Unit): Run = {
     val got = mutable.ArrayBuffer.empty[SparkPlan]
+    var failed = 0
     val listener = new QueryExecutionListener {
       override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
         got.synchronized(got += qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        got.synchronized(failed += 1)
     }
     org.apache.spark.sql.graft.ListenerDrain(spark)
     spark.listenerManager.register(listener)
     try { body; org.apache.spark.sql.graft.ListenerDrain(spark) }
     finally spark.listenerManager.unregister(listener)
-    got.synchronized(got.toSeq)
+    got.synchronized(Run(got.size + failed, got.toSeq))
   }
 
   /** the nodes of `p`, and with `caches` those of the cached plans it reads */
@@ -71,8 +80,8 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     // four files with disjoint key ranges [0,100) … [300,400)
     (0 until 4).foreach(i => lake.append("main.t", spark.range(i * 100, (i + 1) * 100)
       .selectExpr("id AS k", "id * 2 AS v").coalesce(1)))
-    def files(ps: Seq[SparkPlan]): Seq[Int] = {
-      val ss = scansOf(ps, "main.t")
+    def files(run: Run): Seq[Int] = {
+      val ss = scansOf(run.plans, "main.t")
       assert(ss.nonEmpty, "no lake scan of main.t planned")
       ss.map(_.currentFileCount)
     }
@@ -158,7 +167,7 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(st0.deleteFilesAt(st0.tableAt("main", "o", st0.currentSnapshotId).get.tableId,
       st0.currentSnapshotId).nonEmpty)
 
-    val plans = plansOf(lake.refreshMaterializedView("main.mv"))
+    val plans = plansOf(lake.refreshMaterializedView("main.mv")).plans
     val writes = plans.filter(p => nodes(p, caches = false)
       .exists(_.isInstanceOf[DataWritingCommandExec]))
     assert(writes.size == 1, s"expected the MV write only: ${writes.size} write plans")
@@ -228,7 +237,7 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       val ns = plansOf {
         got = lake.tableChanges("main.c", from, to)
           .select("_snapshot_id", "_change_type", "_row_id", "k", "v").collect()
-      }.flatMap(nodes(_, caches = true))
+      }.plans.flatMap(nodes(_, caches = true))
       var live = idRows(from)
       got.groupBy(_.getLong(0)).toSeq.sortBy(_._1).foreach { case (_, cs) =>
         val (gone, added) = cs.partition(r => Set("delete", "update_preimage")(r.getString(1)))
@@ -249,5 +258,95 @@ class OneReaderSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(feed(s0, s1) == ((0, 0)))
     assert(feed(s0, s2) == ((1, 0)))
     assert(feed(s1, s2) == ((1, 0)))
+  }
+
+  test("DML action budget: DELETE 1, UPDATE 2, MERGE 3, counted by the delete write") {
+    val (lake, _) = newCat("budget")
+    lake.createTable("main.b", StructType(Seq(
+      StructField("k", LongType), StructField("v", LongType))))
+    lake.setOption("data_inlining_row_limit", "10", Some("main.b"))
+    (0 until 4).foreach(i => lake.append("main.b", spark.range(i * 100, (i + 1) * 100)
+      .selectExpr("id AS k", "id * 2 AS v").coalesce(1)))
+    val tid = lake.store.state().tableAt("main", "b", lake.currentSnapshot()).get.tableId
+    val tableDir = new java.io.File(LakeWrite.tableDir(lake.root, tid))
+    def deleteIds: Set[Long] = {
+      val st = lake.store.state()
+      st.deleteFilesAt(tid, st.currentSnapshotId).map(_.deleteFileId).toSet
+    }
+    def deleteDirs: Set[String] = Option(new java.io.File(tableDir, "deletes").list())
+      .map(_.toSet).getOrElse(Set.empty)
+    /** per-data-file hits (by file id) of the target rows `hit` keeps, and
+      * its inline hits, read through the composed reference */
+    def expected(hit: DataFrame => DataFrame): (Map[String, Long], Long) = {
+      val st = lake.store.state()
+      val idByName = st.filesAt(tid, st.currentSnapshotId)
+        .map(f => f.fileName -> f.fileId.toString).toMap
+      val byFile = hit(ComposedReference.table(lake, "main.b", withRowMeta = true))
+        .groupBy(LakeRead.FileCol).count().collect().map(r => r.getString(0) -> r.getLong(1))
+      val (inline, files) = byFile.partition(_._1.startsWith("inline:"))
+      (files.map { case (n, c) => idByName(n) -> c }.toMap, inline.map(_._2).sum)
+    }
+    /** runs `dml` as `actions` actions whose new delete entry records
+      * `counts`; returns the run and the DML's result */
+    def budget[T](label: String, actions: Int, counts: Map[String, Long])(dml: => T): (Run, T) = {
+      val before = deleteIds
+      var got: Option[T] = None
+      val run = plansOf { got = Some(dml) }
+      assert(run.actions == actions, s"$label: $run")
+      val st = lake.store.state()
+      val added = st.deleteFilesAt(tid, st.currentSnapshotId).filterNot(d => before(d.deleteFileId))
+      assert(added.map(_.countsByFile) == (if (counts.isEmpty) Nil else Seq(counts)), label)
+      assert(added.forall(d => d.deleteCount == counts.values.sum), label)
+      (run, got.get)
+    }
+
+    // DELETE and UPDATE while no inline rows are live
+    val d1 = col("k") % 10 === 0L
+    val (c1, _) = expected(_.filter(d1))
+    assert(budget("DELETE", 1, c1)(lake.delete("main.b", d1))._2._2 == c1.values.sum)
+    val u1 = col("k") % 10 === 2L
+    val (cu, _) = expected(_.filter(u1))
+    assert(budget("UPDATE", 2, cu)(lake.update("main.b", u1, Map("v" -> -col("v"))))._2._2 ==
+      cu.values.sum)
+
+    // MERGE: a matched UPDATE and a NOT MATCHED INSERT, one target scan
+    import spark.implicits._
+    val src = Seq((3L, 7L), (13L, 8L), (205L, 9L), (5000L, 1L), (5001L, 2L)).toDF("sk", "sv")
+    val (cm, _) = expected(_.join(src, col("k") === col("sk"), "left_semi"))
+    val (mrun, m) = budget("MERGE", 3, cm)(lake.merge("main.b", src, col("k") === col("sk"),
+      matched = Seq(LakeWrite.MergeMatched(None, Some(Map("v" -> col("sv"))))),
+      notMatched = Seq(LakeWrite.MergeInsert(None, Map("k" -> col("sk"), "v" -> col("sv"))))))
+    assert((m._2, m._3, m._4) == ((cm.values.sum, 0L, 2L)))
+    val scans = scansOf(mrun.plans, "main.b")
+    assert(scans.nonEmpty && scans.forall(_ eq scans.head),
+      s"MERGE read its target in ${scans.size} scans: $mrun")
+
+    // DELETE with live inline rows: still one action, inline ids observed
+    lake.insertRows("main.b", Seq(Seq(1001L, 1L), Seq(1002L, 2L)))
+    val d2 = col("k") % 10 === 1L
+    val (c2, i2) = expected(_.filter(d2))
+    assert(i2 == 1L)
+    assert(budget("DELETE with inline rows", 1, c2)(lake.delete("main.b", d2))._2._2 ==
+      c2.values.sum + i2)
+
+    // a zero-hit DELETE: one action, no entry and no delete directory
+    val dirs = deleteDirs
+    assert(budget("zero-hit DELETE", 1, Map.empty)(lake.delete("main.b", col("k") < 0L))._2._2 == 0L)
+    assert(deleteDirs == dirs)
+
+    // a cardinality-violating MERGE leaves no file and commits nothing
+    def files(dir: java.io.File): Set[String] =
+      if (!dir.exists()) Set.empty
+      else java.nio.file.Files.walk(dir.toPath).iterator().asScala.map(_.toString).toSet
+    val staging = new java.io.File(lake.root, "_staging")
+    val (filesBefore, stagedBefore, snap) = (files(tableDir), files(staging), lake.currentSnapshot())
+    val dup = Seq((4L, 1L), (4L, 2L)).toDF("sk", "sv")
+    val err = intercept[IllegalStateException](lake.merge("main.b", dup, col("k") === col("sk"),
+      matched = Seq(LakeWrite.MergeMatched(None, Some(Map("v" -> col("sv"))))), notMatched = Nil))
+    assert(err.getMessage.contains("matched multiple source rows"))
+    assert(files(tableDir) == filesBefore && files(staging) == stagedBefore)
+    assert(lake.currentSnapshot() == snap)
+
+    assert(pairs(lake.table("main.b")) == pairs(ComposedReference.table(lake, "main.b")))
   }
 }
