@@ -640,6 +640,39 @@ object LakeWrite {
       case _ => df.filter(cond)
     }
 
+  /** First committer wins: a DML that read `tid` at `s0` fails at commit
+    * when the rows it hit changed under it. That is, one of its hit data
+    * files (`hitFiles`, by name) was rewritten (compaction, overwrite) or
+    * got a delete file committed after s0 (a racing DELETE, UPDATE or
+    * MERGE), or an inline batch holding one of its hit rows (`hitInline`,
+    * by row id) was rewritten. Committing would apply positions to files
+    * that no longer hold those rows, or overwrite the other writer's
+    * change. Mirrors the reference's retryable TransactionException path
+    * (metadata_manager.cpp:294-364); the caller re-runs the whole DML
+    * against fresh state. Returns `st`'s live data file ids by name. */
+  private def requireHitsUnchanged(op: String, st0: CatalogState, st: CatalogState,
+      tid: Long, s0: Long, hitFiles: Iterable[String],
+      hitInline: Set[Long]): Map[String, Long] = {
+    def conflict(what: String, on: Iterable[Any]) =
+      throw new java.util.ConcurrentModificationException(
+        s"$op conflicts with a concurrent $what: ${on.mkString(", ")}")
+    val live = st.filesAt(tid, st.currentSnapshotId).map(f => f.fileName -> f.fileId).toMap
+    val gone = hitFiles.filterNot(live.contains)
+    if (gone.nonEmpty) conflict("rewrite of", gone)
+    val hitIds = hitFiles.map(live(_).toString).toSet
+    val raced = st.deleteFiles.filter(d => d.tableId == tid && d.begin > s0 &&
+      d.countsByFile.keys.exists(hitIds.contains))
+    if (raced.nonEmpty) conflict("delete on files", raced.flatMap(_.countsByFile.keys)
+      .filter(hitIds.contains).distinct)
+    if (hitInline.nonEmpty) {
+      val liveB = st.inlinedAt(tid, st.currentSnapshotId).map(_.batchId).toSet
+      val rewritten = st0.inlinedAt(tid, s0)
+        .filter(b => !liveB.contains(b.batchId) && b.ids.exists(hitInline.contains))
+      if (rewritten.nonEmpty) conflict("rewrite of inline batches", rewritten.map(_.batchId))
+    }
+    live
+  }
+
   /** Row-level DELETE. Returns (snapshotId, deletedRowCount) — the
     * reference asserts exact DML row counts (dml_row_count.sql). */
   def delete(
@@ -665,19 +698,8 @@ object LakeWrite {
 
     val total = delFile.map(_.total).getOrElse(0L) + inlineIds.size
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = st.filesAt(tid, st.currentSnapshotId)
-        .map(f => f.fileName -> f.fileId).toMap
-      // conflict detection: if any file we computed positions against was
-      // replaced (compaction / overwrite) between scan and commit, those
-      // positions are meaningless in the new files — committing would
-      // silently lose the delete. Mirrors the reference's retryable
-      // TransactionException path (metadata_manager.cpp:294-364); the
-      // caller re-runs the whole DML against fresh state.
-      delFile.foreach { wd =>
-        val gone = wd.counts.keys.filterNot(fileIdByName.contains)
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"DELETE conflicts with a concurrent rewrite of: ${gone.mkString(", ")}")
-      }
+      val fileIdByName = requireHitsUnchanged("DELETE", st0, st, tid, s0,
+        delFile.map(_.counts.keys).getOrElse(Nil), inlineIds)
       val newDel = delFile.toList.map { wd =>
         DeleteFileEntry(st.nextFileId, tid, wd.path, wd.total,
           wd.counts.flatMap { case (fn, c) => fileIdByName.get(fn).map(_.toString -> c) },
@@ -785,13 +807,8 @@ object LakeWrite {
 
     val total = delFile.map(_.total).getOrElse(0L) + updatedJson.size
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = st.filesAt(tid, st.currentSnapshotId)
-        .map(f => f.fileName -> f.fileId).toMap
-      delFile.foreach { wd =>
-        val gone = wd.counts.keys.filterNot(fileIdByName.contains)
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"UPDATE conflicts with a concurrent rewrite of: ${gone.mkString(", ")}")
-      }
+      val fileIdByName = requireHitsUnchanged("UPDATE", st0, st, tid, s0,
+        delFile.map(_.counts.keys).getOrElse(Nil), updatedJson.keySet)
       var fileId = st.nextFileId
       val newFiles = keptStaged.sortBy(_.staged).map { f =>
         val r = statRows(f.fileName)
@@ -1043,13 +1060,8 @@ object LakeWrite {
       insStats(f.fileName).fieldIndex("_cnt"))).sum
 
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = st.filesAt(tid, st.currentSnapshotId)
-        .map(f => f.fileName -> f.fileId).toMap
-      delFile.foreach { wd =>
-        val gone = wd.counts.keys.filterNot(fileIdByName.contains)
-        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"MERGE conflicts with a concurrent rewrite of: ${gone.mkString(", ")}")
-      }
+      val fileIdByName = requireHitsUnchanged("MERGE", st0, st, tid, s0,
+        delFile.map(_.counts.keys).getOrElse(Nil), inlineDelIds ++ inlineUpdJson.keySet)
       var fileId = st.nextFileId
       var rowId = st.nextRowId(tid)
       def entryFor(f: StagedFile, stats: Map[String, Row], sizes: Map[String, Long],

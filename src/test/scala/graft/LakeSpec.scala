@@ -777,6 +777,44 @@ class LakeSpec extends AnyFunSuite {
     assert(n == 5 && lake.table("main.cc").count() == 15)
   }
 
+  test("delete racing an update of a hit row fails: first committer wins") {
+    val lake = newLake()
+    import spark.implicits._
+    lake.createTable("main.du", abSchema)
+    lake.append("main.du", (1 to 20).map(i => (i, i)).toDF("a", "b"))
+    // the update commits between the delete's scan and its commit; the
+    // delete's positions still name row 3's pre-image, so committing would
+    // leave the update's post-image (3, 100) alive
+    val e = intercept[java.util.ConcurrentModificationException] {
+      graft.lake.LakeWrite.delete(spark, lake.store, "main", "du", col("a") <= 5,
+        beforeCommit = () => lake.update("main.du", col("a") === 3, Map("b" -> lit(100))))
+    }
+    assert(e.getMessage.contains("concurrent delete"))
+    assert(lake.table("main.du").filter(col("a") === 3).collect()
+      .map(_.getInt(1)).toSeq == Seq(100))
+    val (_, n) = lake.delete("main.du", col("a") <= 5)
+    assert(n == 5 && lake.table("main.du").count() == 15)
+    assert(lake.table("main.du").filter(col("a") <= 5).count() == 0)
+  }
+
+  test("delete racing an update of a hit inline row fails: first committer wins") {
+    val lake = newLake()
+    lake.createTable("main.di", abSchema)
+    lake.setOption("data_inlining_row_limit", "100", Some("main.di"))
+    lake.insertRows("main.di", (1 to 20).map(i => Seq(i, i)))
+    val e = intercept[java.util.ConcurrentModificationException] {
+      graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") <= 5,
+        beforeCommit = () => lake.update("main.di", col("a") === 3, Map("b" -> lit(100))))
+    }
+    assert(e.getMessage.contains("rewrite of inline batches"))
+    val (_, n) = lake.delete("main.di", col("a") <= 5)
+    assert(n == 5 && lake.table("main.di").count() == 15)
+    // a racing write that leaves the hit rows alone does not conflict
+    val (_, m) = graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") === 6,
+      beforeCommit = () => lake.insertRows("main.di", Seq(Seq(21, 21))))
+    assert(m == 1 && lake.table("main.di").count() == 15)
+  }
+
   test("DML racing a sorted rewrite is detected, not silently lost") {
     val lake = newLake()
     import spark.implicits._
