@@ -811,7 +811,6 @@ class Lake(val spark: SparkSession, val root: String,
           .drop(LakeRead.FileCol, LakeRead.PosCol)
           .coalesce(1)
       }.reduce(_ unionByName _)
-    val groupedIds = groups.flatten.map(_.fileId).toSet
     // Spark 4.1's spark.sql.unionOutputPartitioning ZIPS a union whose
     // children share a partitioning — N coalesce(1) branches is exactly
     // that shape, so the whole rewrite would execute as ONE task whose
@@ -823,22 +822,8 @@ class Lake(val spark: SparkSession, val root: String,
     spark.conf.set(unionConfKey, "false")
     try LakeWrite.append(spark, store, sn, tn, df, explicitRowIds = true,
       changeTag = "compacted", sorted = true, repartitionForWrite = false,
-      extraEnded = stNow => {
-        val curN = stNow.currentSnapshotId
-        // a delete that landed on a grouped file AFTER our scan would be
-        // silently dropped by the rewrite — fail instead (caller retries),
-        // the mirror of the delete-vs-compaction conflict on the DML side
-        val raced = stNow.deleteFilesAt(tid, curN).filter(d => d.begin > cur &&
-          d.countsByFile.keys.exists(k => groupedIds.contains(k.toLong)))
-        if (raced.nonEmpty) throw new java.util.ConcurrentModificationException(
-          s"compaction conflicts with a concurrent delete on files: " +
-            raced.flatMap(_.countsByFile.keys).mkString(", "))
-        val liveIds = stNow.filesAt(tid, curN).map(_.fileId).toSet
-        val endDel = stNow.deleteFilesAt(tid, curN).filter(d =>
-          d.countsByFile.keys.forall(k =>
-            groupedIds.contains(k.toLong) || !liveIds.contains(k.toLong)))
-        (groupedIds.toList.sorted, endDel.map(_.deleteFileId).toList, Nil)
-      })
+      replaces = Some(LakeWrite.ReadSet.rewrite(s"compaction of $table", st, tid, cur,
+        groups.flatten)))
     finally prevUnionConf match {
       case Some(v) => spark.conf.set(unionConfKey, v)
       case None => spark.conf.unset(unionConfKey)
@@ -857,11 +842,14 @@ class Lake(val spark: SparkSession, val root: String,
     * touching all of them. Plan shape at scale: ONE range-partitioning
     * shuffle (sampled bounds), write parallelism = output file count; no
     * driver-side data movement. Merge-on-read overlays are consumed (the
-    * rewrite scans survivors), inline batches are absorbed, and a
-    * concurrent DML or append is a retryable conflict — the same guard
-    * compaction uses. Change feed sees no logical change (compacted tag).
+    * rewrite scans survivors) and inline batches are absorbed. A
+    * concurrent DML on what it read, or a concurrent change of the table's
+    * columns, sort keys or partition keys, is a retryable conflict; a
+    * concurrent append stays live beside the rewrite
+    * ([[LakeWrite.requireUnchanged]]). Change feed sees no logical change
+    * (compacted tag).
     */
-  def rewriteSorted(table: String, beforeCommit: () => Unit = () => ()): Long = {
+  def rewriteSorted(table: String): Long = {
     aclSuper("rewrite_sorted")
     requireNotInTransaction("rewriteSorted")
     val (sn, tn) = schemaOf(table)
@@ -880,34 +868,13 @@ class Lake(val spark: SparkSession, val root: String,
     val df = LakeRead.scanDF(spark, st, tid, cur, Nil, withRowMeta = true)
       .drop(LakeRead.FileCol, LakeRead.PosCol)
       .repartitionByRange(nOut, sortKeys.map(LakeWrite.sortCol): _*)
-    val liveIds = live.map(_.fileId).toSet
-    beforeCommit() // test seam: a write landing here must be detected below
+    // a concurrent ALTER TABLE would commit rows under a stale schema, a
+    // set_sort/set_partition reset would stamp the rewrite as clustered by
+    // an order the table no longer declares: both conflict (layout)
     LakeWrite.append(spark, store, sn, tn, df, explicitRowIds = true,
       changeTag = "compacted", sorted = true, repartitionForWrite = false,
-      extraEnded = stNow => {
-        val curN = stNow.currentSnapshotId
-        // any DML or append that landed after our scan would be silently
-        // dropped by the whole-table rewrite — fail instead (caller retries)
-        val racedDel = stNow.deleteFilesAt(tid, curN).exists(_.begin > cur)
-        val racedAdd = stNow.filesAt(tid, curN).exists(f =>
-          f.begin > cur && !liveIds.contains(f.fileId))
-        val racedInl = stNow.inlinedAt(tid, curN).exists(_.begin > cur)
-        // concurrent METADATA changes conflict too: an ALTER TABLE would
-        // commit rows under a stale schema, a set_sort/set_partition reset
-        // would silently stamp the rewrite as clustered by an order the
-        // table no longer declares
-        val racedMeta =
-          stNow.columnsAt(tid, curN) != st.columnsAt(tid, cur) ||
-          stNow.sortKeysAt(tid, curN) != sortKeys ||
-          stNow.partitionKeysAt(tid, curN) != st.partitionKeysAt(tid, cur)
-        if (racedDel || racedAdd || racedInl || racedMeta)
-          throw new java.util.ConcurrentModificationException(
-            s"sorted rewrite of $table conflicts with a concurrent " +
-              (if (racedMeta) "metadata change" else "write"))
-        (liveIds.toList.sorted,
-          stNow.deleteFilesAt(tid, curN).map(_.deleteFileId).toList,
-          stNow.inlinedAt(tid, curN).map(_.batchId).toList)
-      })
+      replaces = Some(LakeWrite.ReadSet.rewrite(s"sorted rewrite of $table", st, tid, cur,
+        live, st.inlinedAt(tid, cur), layout = true)))
   }
 
   /** Z-order clustering rewrite: re-cluster the whole table by the Morton
@@ -921,10 +888,9 @@ class Lake(val spark: SparkSession, val root: String,
     * and ONE `repartitionByRange` shuffle re-clusters into
     * size-targeted files — identical commit/conflict machinery to
     * [[rewriteSorted]] (absorbs delete overlays + inline batches, aborts
-    * on any concurrent write or metadata change, CDF-silent `compacted`
-    * snapshot). Columns must be numeric, date, or timestamp. */
-  def rewriteZOrder(table: String, zcols: Seq[String], buckets: Int = 256,
-      beforeCommit: () => Unit = () => ()): Long = {
+    * on a concurrent DML on what it read or a metadata change, CDF-silent
+    * `compacted` snapshot). Columns must be numeric, date, or timestamp. */
+  def rewriteZOrder(table: String, zcols: Seq[String], buckets: Int = 256): Long = {
     aclSuper("rewrite_zorder")
     requireNotInTransaction("rewriteZOrder")
     require(zcols.size >= 2 && zcols.size <= 4,
@@ -968,27 +934,10 @@ class Lake(val spark: SparkSession, val root: String,
       .repartitionByRange(nOut, col("_graft_zv"))
       .sortWithinPartitions("_graft_zv")
       .drop("_graft_zv")
-    val liveIds = live.map(_.fileId).toSet
-    beforeCommit()
     LakeWrite.append(spark, store, sn, tn, df, explicitRowIds = true,
       changeTag = "compacted", sorted = false, repartitionForWrite = false,
-      extraEnded = stNow => {
-        val curN = stNow.currentSnapshotId
-        val racedDel = stNow.deleteFilesAt(tid, curN).exists(_.begin > cur)
-        val racedAdd = stNow.filesAt(tid, curN).exists(f =>
-          f.begin > cur && !liveIds.contains(f.fileId))
-        val racedInl = stNow.inlinedAt(tid, curN).exists(_.begin > cur)
-        val racedMeta =
-          stNow.columnsAt(tid, curN) != st.columnsAt(tid, cur) ||
-          stNow.partitionKeysAt(tid, curN) != st.partitionKeysAt(tid, cur)
-        if (racedDel || racedAdd || racedInl || racedMeta)
-          throw new java.util.ConcurrentModificationException(
-            s"z-order rewrite of $table conflicts with a concurrent " +
-              (if (racedMeta) "metadata change" else "write"))
-        (liveIds.toList.sorted,
-          stNow.deleteFilesAt(tid, curN).map(_.deleteFileId).toList,
-          stNow.inlinedAt(tid, curN).map(_.batchId).toList)
-      })
+      replaces = Some(LakeWrite.ReadSet.rewrite(s"z-order rewrite of $table", st, tid, cur,
+        live, st.inlinedAt(tid, cur), layout = true)))
   }
 
   /** Consolidate a table's live delete files into ONE sorted delete dir.
@@ -1021,24 +970,18 @@ class Lake(val spark: SparkSession, val root: String,
     // positions the entries record: they partition the new file exactly
     val written = LakeWrite.writeDeleteFile(spark, store, tid, hits,
       rowBound = dels.map(_.deleteCount).sum).file.getOrElse(return cur)
+    // a concurrent rewrite that ended a merged delete file conflicts; a
+    // concurrent DML's new delete file stays live beside the merged one
+    val reads = LakeWrite.ReadSet(s"delete-file consolidation of $table", tid, cur,
+      deleteFiles = dels.map(_.deleteFileId).toSet)
+    val byName = st0.filesAt(tid, cur).map(f => f.fileName -> f.fileId).toMap
     store.commitWithRetry() { (st, sid) =>
-      // the overlay set must not have changed under us: a concurrent DML
-      // added positions we did not merge, a concurrent vacuum ended files
-      // we are about to re-add — both are retryable conflicts
-      val now = st.deleteFilesAt(tid, st.currentSnapshotId).map(_.deleteFileId).toSet
-      if (now != dels.map(_.deleteFileId).toSet)
-        throw new java.util.ConcurrentModificationException(
-          "delete-file consolidation raced a concurrent DML or vacuum")
-      val fileIdByName = st.filesAt(tid, st.currentSnapshotId)
-        .map(f => f.fileName -> f.fileId).toMap
+      LakeWrite.requireUnchanged(st, reads)
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(),
           st.snapshots.lastOption.map(_.schemaVersion).getOrElse(0L),
           List(s"compacted:$tid:deletes")),
-        newDeleteFiles = List(DeleteFileEntry(st.nextFileId, tid, written.path,
-          written.total,
-          written.counts.flatMap { case (fn, c) => fileIdByName.get(fn).map(_.toString -> c) },
-          sid, None, parts = written.parts)),
+        newDeleteFiles = List(written.entry(st.nextFileId, tid, sid, byName)),
         endedDeleteFiles = dels.map(_.deleteFileId).toList,
         newScheduledDeletions = dels.map(d =>
           ScheduledDeletion(d.path, System.currentTimeMillis(), sid)).toList)
@@ -1076,15 +1019,9 @@ class Lake(val spark: SparkSession, val root: String,
     val scoped = st.copy(files = victims, inlined = Vector.empty)
     val df = LakeRead.scanDF(spark, scoped, tid, cur, Nil, withRowMeta = true)
       .drop(LakeRead.FileCol, LakeRead.PosCol)
-    val victimIds = victims.map(_.fileId).toSet
     LakeWrite.append(spark, store, sn, tn, df, explicitRowIds = true,
       changeTag = "rewrote", sorted = true,
-      extraEnded = stNow => {
-        val curN = stNow.currentSnapshotId
-        val endDel = stNow.deleteFilesAt(tid, curN).filter(d =>
-          d.countsByFile.keys.forall(k => victimIds.contains(k.toLong)))
-        (victimIds.toList, endDel.map(_.deleteFileId).toList, Nil)
-      })
+      replaces = Some(LakeWrite.ReadSet.rewrite(s"rewrite of $table", st, tid, cur, victims)))
   }
 
   /** full VACUUM = rewrite past threshold, then merge small files
@@ -1118,8 +1055,8 @@ class Lake(val spark: SparkSession, val root: String,
       .coalesce(1)
     LakeWrite.append(spark, store, sn, tn, df, explicitRowIds = true,
       changeTag = "flushed", sorted = true,
-      extraEnded = stNow =>
-        (Nil, Nil, stNow.inlinedAt(e.tableId, stNow.currentSnapshotId).map(_.batchId).toList))
+      replaces = Some(LakeWrite.ReadSet.rewrite(s"flush of $table", st, e.tableId,
+        st.currentSnapshotId, Nil, batches)))
   }
 
   /** cleanup_old_files (reference src/pgducklake_functions.cpp:142-203):

@@ -215,12 +215,100 @@ object LakeWrite {
     }
   }
 
+  /** the catalog stats of one written file from its [[statAggsFor]] row */
+  private def columnStats(fileId: Long, r: Row, statCols: Seq[ColumnEntry]): Seq[FileColumnStats] =
+    statCols.map { c =>
+      FileColumnStats(fileId, c.name, c.dataType,
+        Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
+        Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
+        r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
+    }
+
   private[lake] def statAggsFor(statCols: Seq[ColumnEntry]): Seq[Column] =
     Seq(count(lit(1)).as("_cnt")) ++ statCols.flatMap { c =>
       Seq(min(col(c.name)).cast(StringType).as(s"_min_${c.name}"),
         max(col(c.name)).cast(StringType).as(s"_max_${c.name}"),
         sum(when(col(c.name).isNull, 1L).otherwise(0L)).as(s"_nulls_${c.name}"))
     }
+
+  /** `v` as column `c` stores it: cast to the declared type and, on a NOT
+    * NULL column, guarded per row (codegen'd; `raise_error` runs on the
+    * first null only). Every parquet writer aligns its rows through it:
+    * append, UPDATE's post-images and MERGE's acted rows. A literal null
+    * still fails, where an `assert_true` guard folds away with it. */
+  private def stored(c: ColumnEntry, v: Column): Column = {
+    val base = v.cast(LakeRead.sparkType(c.dataType))
+    (if (c.nullable) base
+     else coalesce(base, raise_error(lit(s"NOT NULL constraint on column ${c.name} violated"))))
+      .as(c.name)
+  }
+
+  /** What a writer's output was computed from: table `tid` as read at
+    * snapshot `s0`, and the ids of the data files, delete files and inline
+    * batches it read there. `layout` marks a clustering rewrite, whose
+    * output also depends on the table's columns, sort keys and partition
+    * keys. A DML reads the data files it hits and the inline batches
+    * holding its hit rows; a rewrite reads what it replaces, and ends
+    * exactly that at commit. `op` names the writer in conflict messages. */
+  case class ReadSet(op: String, tid: Long, s0: Long,
+      files: Set[Long] = Set.empty, deleteFiles: Set[Long] = Set.empty,
+      inlined: Set[Long] = Set.empty, layout: Boolean = false)
+
+  object ReadSet {
+    /** a rewrite of `files` and `inlined` read at `s0`: it also absorbs the
+      * delete files live at s0 that name only rewritten or already ended
+      * data files */
+    def rewrite(op: String, st0: CatalogState, tid: Long, s0: Long,
+        files: Iterable[DataFileEntry], inlined: Iterable[InlinedBatch] = Nil,
+        layout: Boolean = false): ReadSet = {
+      val ids = files.map(_.fileId).toSet
+      val live = st0.filesAt(tid, s0).map(_.fileId).toSet
+      val absorbed = if (ids.isEmpty) Set.empty[Long]
+        else st0.deleteFilesAt(tid, s0).filter(_.countsByFile.keys.forall { k =>
+          ids(k.toLong) || !live(k.toLong)
+        }).map(_.deleteFileId).toSet
+      ReadSet(op, tid, s0, ids, absorbed, inlined.map(_.batchId).toSet, layout)
+    }
+  }
+
+  /** The commit-time conflict rule every lake writer applies inside its
+    * `commitWithRetry` closure, against the fresh state `st`: a commit
+    * conflicts only with commits that touched what it read (Delta Lake's
+    * rule, Armbrust et al., VLDB 2020). Throws
+    * `ConcurrentModificationException` when
+    *  - an entry of the read set is no longer live (a compaction, rewrite,
+    *    flush, consolidation or DML rewrote it),
+    *  - a delete file committed after s0 names a read data file (a racing
+    *    DELETE, UPDATE or MERGE), or
+    *  - for a clustering rewrite, the table's columns, sort keys or
+    *    partition keys changed since s0.
+    * Committing then would resurrect deleted rows, duplicate rewritten
+    * ones, or apply positions to files that no longer hold those rows. A
+    * commit that only added entries the writer did not read (an append, an
+    * insert) does not conflict: those entries stay live, which is the
+    * serial order "writer, then the other commit". The caller re-runs the
+    * whole op against fresh state, like the reference's retryable
+    * TransactionException (metadata_manager.cpp:294-364). */
+  private[lake] def requireUnchanged(st: CatalogState, rs: ReadSet): Unit = {
+    def conflict(what: String): Nothing =
+      throw new java.util.ConcurrentModificationException(
+        s"${rs.op} conflicts with a concurrent write: a concurrent $what")
+    def check(what: String, ids: Iterable[Long]): Unit =
+      if (ids.nonEmpty) conflict(s"$what ${ids.toSeq.distinct.sorted.mkString(", ")}")
+    val cur = st.currentSnapshotId
+    def gone(read: Set[Long], live: => Iterable[Long]) = if (read.isEmpty) Nil else read -- live
+    check("rewrite of data files", gone(rs.files, st.filesAt(rs.tid, cur).map(_.fileId)))
+    check("rewrite of delete files",
+      gone(rs.deleteFiles, st.deleteFilesAt(rs.tid, cur).map(_.deleteFileId)))
+    check("rewrite of inline batches", gone(rs.inlined, st.inlinedAt(rs.tid, cur).map(_.batchId)))
+    if (rs.files.nonEmpty) check("delete on data files",
+      st.deleteFiles.filter(d => d.tableId == rs.tid && d.begin > rs.s0)
+        .flatMap(_.countsByFile.keys.map(_.toLong)).filter(rs.files))
+    if (rs.layout && (st.columnsAt(rs.tid, cur) != st.columnsAt(rs.tid, rs.s0) ||
+        st.sortKeysAt(rs.tid, cur) != st.sortKeysAt(rs.tid, rs.s0) ||
+        st.partitionKeysAt(rs.tid, cur) != st.partitionKeysAt(rs.tid, rs.s0)))
+      conflict("metadata change")
+  }
 
   /** Distributed append of `df`. Returns the committed snapshot id.
     *
@@ -230,6 +318,8 @@ object LakeWrite {
     * partitioning, reference src/pgducklake_partition.cpp:31-97). Sort keys
     * are applied only on compaction-style writes (`sorted=true`), mirroring
     * the reference (sorted_by.cpp: sort on compaction/flush, not inserts).
+    * A rewrite passes what it replaced as `replaces`: the commit applies
+    * [[requireUnchanged]] to it and ends exactly its entries.
     */
   def append(
       spark: SparkSession,
@@ -240,7 +330,7 @@ object LakeWrite {
       overwrite: Boolean = false,
       explicitRowIds: Boolean = false,
       changeTag: String = "inserted",
-      extraEnded: CatalogState => (List[Long], List[Long], List[Long]) = _ => (Nil, Nil, Nil),
+      replaces: Option[ReadSet] = None,
       sorted: Boolean = false,
       repartitionForWrite: Boolean = true,
       extraTags: (CatalogState, Long) => (List[TagEntry], List[String]) =
@@ -262,18 +352,10 @@ object LakeWrite {
 
     def tag(k: String): Option[String] = st0.optionAt(tid, k, s0)
 
-    // align to table schema (by name, cast to declared types); NOT NULL
-    // columns get a codegen'd per-row guard (assert_true short-circuits to
-    // null on success, throws on the first violating row)
+    // align to table schema (by name, cast to declared types, NOT NULL
+    // guarded)
     val rowIdSel = if (explicitRowIds) Seq(col(LakeRead.RowIdCol)) else Nil
-    var aligned = df.select(
-      cols.map { c =>
-        val base = col(c.name).cast(LakeRead.sparkType(c.dataType))
-        if (c.nullable) base.as(c.name)
-        else when(assert_true(base.isNotNull,
-          lit(s"NOT NULL constraint on column ${c.name} violated")).isNull,
-          base).as(c.name)
-      } ++ rowIdSel: _*)
+    var aligned = df.select(cols.map(c => stored(c, col(c.name))) ++ rowIdSel: _*)
     // per_thread_output=false (docs/settings.md): funnel into one output
     // file per write instead of the default one-per-task
     if (tag("per_thread_output").exists(v => v == "false" || v == "0"))
@@ -391,6 +473,7 @@ object LakeWrite {
     store.commitWithRetry() { (st, sid) =>
       if (st.tableById(tid, st.currentSnapshotId).isEmpty)
         throw new IllegalStateException(s"table $schemaName.$tableName dropped concurrently")
+      replaces.foreach(requireUnchanged(st, _))
       var fileId = st.nextFileId
       var rowId = st.nextRowId(tid)
       val newFiles = kept.sortBy(_.staged).map { f =>
@@ -410,22 +493,19 @@ object LakeWrite {
       }.toList
       val newStats = newFiles.flatMap { fe =>
         val r = statRows(fe.fileName)
-        statCols.map { c =>
-          FileColumnStats(fe.fileId, c.name, c.dataType,
-            Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
-            Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
-            r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
-        } ++ variantPaths.zipWithIndex.map { case ((cn, k, t), i) =>
+        columnStats(fe.fileId, r, statCols) ++ variantPaths.zipWithIndex.map { case ((cn, k, t), i) =>
           FileColumnStats(fe.fileId, s"$cn.$$.$k", t,
             Option(r.getString(r.fieldIndex(s"_vmin_$i"))),
             Option(r.getString(r.fieldIndex(s"_vmax_$i"))),
             r.getLong(r.fieldIndex(s"_vnull_$i")))
         }
       }
-      val (extraFiles, extraDel, extraInl) = extraEnded(st)
-      val endedFiles = (if (overwrite) st.filesAt(tid, st.currentSnapshotId).map(_.fileId).toList else Nil) ++ extraFiles
-      val endedDel = (if (overwrite) st.deleteFilesAt(tid, st.currentSnapshotId).map(_.deleteFileId).toList else Nil) ++ extraDel
-      val endedInl = (if (overwrite) st.inlinedAt(tid, st.currentSnapshotId).map(_.batchId).toList else Nil) ++ extraInl
+      def ended(all: => Vector[Long], replaced: ReadSet => Set[Long]): List[Long] =
+        (if (overwrite) all.toList else Nil) ++ replaces.toList.flatMap(replaced(_).toList.sorted)
+      val cur = st.currentSnapshotId
+      val endedFiles = ended(st.filesAt(tid, cur).map(_.fileId), _.files)
+      val endedDel = ended(st.deleteFilesAt(tid, cur).map(_.deleteFileId), _.deleteFiles)
+      val endedInl = ended(st.inlinedAt(tid, cur).map(_.batchId), _.inlined)
       val n = newFiles.map(_.rowCount).sum
       val (tagsNew, tagsEnded) = extraTags(st, sid)
       CommitDelta(
@@ -520,7 +600,14 @@ object LakeWrite {
     * listed ONCE here at write time and recorded in metadata, so scans
     * never re-list the directory (VERDICT r4 #5). */
   private[lake] case class WrittenDeletes(
-      path: String, counts: Map[String, Long], total: Long, parts: List[String])
+      path: String, counts: Map[String, Long], total: Long, parts: List[String]) {
+    /** its catalog entry, committed at `sid`; `byName` maps the data file
+      * names its counts are keyed by to their ids */
+    def entry(id: Long, tid: Long, sid: Long, byName: Map[String, Long]): DeleteFileEntry =
+      DeleteFileEntry(id, tid, path, total,
+        counts.flatMap { case (fn, c) => byName.get(fn).map(_.toString -> c) },
+        sid, None, parts = parts)
+  }
 
   /** What a DML learns of its hits from its delete write, observed as the
     * rows are written: the delete file (None when no data-file row is hit),
@@ -640,37 +727,16 @@ object LakeWrite {
       case _ => df.filter(cond)
     }
 
-  /** First committer wins: a DML that read `tid` at `s0` fails at commit
-    * when the rows it hit changed under it. That is, one of its hit data
-    * files (`hitFiles`, by name) was rewritten (compaction, overwrite) or
-    * got a delete file committed after s0 (a racing DELETE, UPDATE or
-    * MERGE), or an inline batch holding one of its hit rows (`hitInline`,
-    * by row id) was rewritten. Committing would apply positions to files
-    * that no longer hold those rows, or overwrite the other writer's
-    * change. Mirrors the reference's retryable TransactionException path
-    * (metadata_manager.cpp:294-364); the caller re-runs the whole DML
-    * against fresh state. Returns `st`'s live data file ids by name. */
-  private def requireHitsUnchanged(op: String, st0: CatalogState, st: CatalogState,
-      tid: Long, s0: Long, hitFiles: Iterable[String],
-      hitInline: Set[Long]): Map[String, Long] = {
-    def conflict(what: String, on: Iterable[Any]) =
-      throw new java.util.ConcurrentModificationException(
-        s"$op conflicts with a concurrent $what: ${on.mkString(", ")}")
-    val live = st.filesAt(tid, st.currentSnapshotId).map(f => f.fileName -> f.fileId).toMap
-    val gone = hitFiles.filterNot(live.contains)
-    if (gone.nonEmpty) conflict("rewrite of", gone)
-    val hitIds = hitFiles.map(live(_).toString).toSet
-    val raced = st.deleteFiles.filter(d => d.tableId == tid && d.begin > s0 &&
-      d.countsByFile.keys.exists(hitIds.contains))
-    if (raced.nonEmpty) conflict("delete on files", raced.flatMap(_.countsByFile.keys)
-      .filter(hitIds.contains).distinct)
-    if (hitInline.nonEmpty) {
-      val liveB = st.inlinedAt(tid, st.currentSnapshotId).map(_.batchId).toSet
-      val rewritten = st0.inlinedAt(tid, s0)
-        .filter(b => !liveB.contains(b.batchId) && b.ids.exists(hitInline.contains))
-      if (rewritten.nonEmpty) conflict("rewrite of inline batches", rewritten.map(_.batchId))
-    }
-    live
+  /** A DML's read set at `s0`: the data files its delete write hit and the
+    * inline batches holding its hit inline rows (`inlineHits`, by row id).
+    * Also returns the ids at s0 of the table's data files by name, which
+    * key the delete file's counts. */
+  private def dmlReads(op: String, st0: CatalogState, tid: Long, s0: Long,
+      file: Option[WrittenDeletes], inlineHits: Set[Long]): (ReadSet, Map[String, Long]) = {
+    val byName = st0.filesAt(tid, s0).map(f => f.fileName -> f.fileId).toMap
+    val batches = st0.inlinedAt(tid, s0).filter(_.ids.exists(inlineHits)).map(_.batchId)
+    (ReadSet(op, tid, s0, files = file.toList.flatMap(_.counts.keys.flatMap(byName.get)).toSet,
+      inlined = batches.toSet), byName)
   }
 
   /** Row-level DELETE. Returns (snapshotId, deletedRowCount) — the
@@ -680,8 +746,7 @@ object LakeWrite {
       store: MetadataStore,
       schemaName: String,
       tableName: String,
-      cond: Column,
-      beforeCommit: () => Unit = () => ()): (Long, Long) = {
+      cond: Column): (Long, Long) = {
     val st0 = store.state()
     val s0 = st0.currentSnapshotId
     LakeAcl.requirePriv(spark, st0, "DELETE", schemaName, tableName, s0)
@@ -694,52 +759,35 @@ object LakeWrite {
       LakeRead.scanDF(spark, st0, tid, s0, Nil, withRowMeta = true), cond)
     val hits = writeDeleteFile(spark, store, tid, matched, scannedRows(matched))
     val (delFile, inlineIds) = (hits.file, hits.inlineIds)
-    beforeCommit()
+    val (reads, byName) = dmlReads(s"DELETE on $schemaName.$tableName", st0, tid, s0,
+      delFile, inlineIds)
 
     val total = delFile.map(_.total).getOrElse(0L) + inlineIds.size
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = requireHitsUnchanged("DELETE", st0, st, tid, s0,
-        delFile.map(_.counts.keys).getOrElse(Nil), inlineIds)
-      val newDel = delFile.toList.map { wd =>
-        DeleteFileEntry(st.nextFileId, tid, wd.path, wd.total,
-          wd.counts.flatMap { case (fn, c) => fileIdByName.get(fn).map(_.toString -> c) },
-          sid, None, parts = wd.parts)
-      }
-      val (endedB, newB) = rewriteInlineBatches(st, tid, sid,
-        keep = (rid, _) => !inlineIds.contains(rid), transform = (j, _) => j)
+      requireUnchanged(st, reads)
+      val (endedB, newB) = rewriteInlineBatches(st, reads, sid, drop = inlineIds)
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(),
           st.snapshots.lastOption.map(_.schemaVersion).getOrElse(0L),
           List(s"deleted:$tid:$total")),
-        newDeleteFiles = newDel,
+        newDeleteFiles = delFile.toList.map(_.entry(st.nextFileId, tid, sid, byName)),
         endedInlined = endedB, newInlined = newB)
     }
     (sid, total)
   }
 
-  /** rewrite inline batches of `tid`: keep(rowId, json) selects survivors,
-    * transform(json, rowId) maps kept rows; unchanged batches untouched. */
-  private def rewriteInlineBatches(
-      st: CatalogState, tid: Long, sid: Long,
-      keep: (Long, String) => Boolean,
-      transform: (String, Long) => String): (List[Long], List[InlinedBatch]) = {
-    var nextB = st.nextBatchId
-    val ended = List.newBuilder[Long]
-    val added = List.newBuilder[InlinedBatch]
-    st.inlinedAt(tid, st.currentSnapshotId).foreach { b =>
-      val pairs = b.rowsJson.zip(b.ids)
-      val kept = pairs.filter { case (j, rid) => keep(rid, j) }
-        .map { case (j, rid) => (transform(j, rid), rid) }
-      if (kept != pairs) {
-        ended += b.batchId
-        if (kept.nonEmpty) {
-          added += InlinedBatch(nextB, tid, b.schemaVersion, kept.head._2,
-            kept.map(_._1), sid, None, rowIds = Some(kept.map(_._2)))
-          nextB += 1
-        }
-      }
-    }
-    (ended.result(), added.result())
+  /** The read inline batches of a DML, rewritten without the rows `drop`
+    * names: each one ends, and its survivors move to a new batch keeping
+    * their row ids. Returns (ended batch ids, new batches). */
+  private def rewriteInlineBatches(st: CatalogState, reads: ReadSet, sid: Long,
+      drop: Long => Boolean): (List[Long], List[InlinedBatch]) = {
+    val read = st.inlined.filter(b => reads.inlined(b.batchId)).sortBy(_.batchId).toList
+    val survivors = read.map(b => b -> b.rowsJson.zip(b.ids).filterNot(p => drop(p._2)))
+      .filter(_._2.nonEmpty)
+    (read.map(_.batchId), survivors.zipWithIndex.map { case ((b, kept), i) =>
+      InlinedBatch(st.nextBatchId + i, reads.tid, b.schemaVersion, kept.head._2,
+        kept.map(_._1), sid, None, rowIds = Some(kept.map(_._2)))
+    })
   }
 
   /** Row-level UPDATE = positional delete of pre-images + append of
@@ -769,8 +817,7 @@ object LakeWrite {
     val inline = col(LakeRead.FileCol).startsWith("inline:")
     val (updatedJson, delFile, staged) = try {
       val updated = matched.select(
-        cols.map(c => set.getOrElse(c.name, col(c.name))
-          .cast(LakeRead.sparkType(c.dataType)).as(c.name)) ++
+        cols.map(c => stored(c, set.getOrElse(c.name, col(c.name)))) ++
           Seq(col(LakeRead.FileCol), col(LakeRead.RowIdCol)): _*)
 
       // inline side: updated JSON by row id (inline log is small by
@@ -806,9 +853,10 @@ object LakeWrite {
     val (keptStaged, statRows, sizes) = stagedStats(spark, readStruct, statCols, staged)
 
     val total = delFile.map(_.total).getOrElse(0L) + updatedJson.size
+    val (reads, byName) = dmlReads(s"UPDATE on $schemaName.$tableName", st0, tid, s0,
+      delFile, updatedJson.keySet)
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = requireHitsUnchanged("UPDATE", st0, st, tid, s0,
-        delFile.map(_.counts.keys).getOrElse(Nil), updatedJson.keySet)
+      requireUnchanged(st, reads)
       var fileId = st.nextFileId
       val newFiles = keptStaged.sortBy(_.staged).map { f =>
         val r = statRows(f.fileName)
@@ -819,26 +867,13 @@ object LakeWrite {
         fileId += 1
         fe
       }.toList
-      val newStats = newFiles.flatMap { fe =>
-        val r = statRows(fe.fileName)
-        statCols.map { c =>
-          FileColumnStats(fe.fileId, c.name, c.dataType,
-            Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
-            Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
-            r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
-        }
-      }
-      val newDel = delFile.toList.map { wd =>
-        DeleteFileEntry(fileId, tid, wd.path, wd.total,
-          wd.counts.flatMap { case (fn, c) => fileIdByName.get(fn).map(_.toString -> c) },
-          sid, None, parts = wd.parts)
-      }
+      val newStats = newFiles.flatMap(fe => columnStats(fe.fileId, statRows(fe.fileName), statCols))
+      val newDel = delFile.toList.map(_.entry(fileId, tid, sid, byName))
       // inline rewrites: survivors keep their batch's schema epoch; rows the
       // UPDATE re-serialized (current column names) move to their OWN batch
       // stamped with the CURRENT schema version, so a batch never mixes
       // JSON epochs after schema evolution
-      val (endedB, keptB) = rewriteInlineBatches(st, tid, sid,
-        keep = (rid, _) => !updatedJson.contains(rid), transform = (j, _) => j)
+      val (endedB, keptB) = rewriteInlineBatches(st, reads, sid, drop = updatedJson.contains)
       val updatedBatch =
         if (updatedJson.isEmpty) Nil
         else {
@@ -963,9 +998,9 @@ object LakeWrite {
       } ++ notMatched.zipWithIndex.map { case (cl, k) =>
         (nT + k) -> cl.values.getOrElse(c.name, lit(null))
       }
-      arms.foldRight(if (nT == 0) lit(null) else col(c.name)) { case ((i, v), acc) =>
+      stored(c, arms.foldRight(if (nT == 0) lit(null) else col(c.name)) { case ((i, v), acc) =>
         when(col(Act) === lit(i), v).otherwise(acc)
-      }.cast(LakeRead.sparkType(c.dataType)).as(c.name)
+      })
     }
 
     // One join reads the source once and the target once: inner for the
@@ -1059,9 +1094,10 @@ object LakeWrite {
     val insCnt = insKept.map(f => insStats(f.fileName).getLong(
       insStats(f.fileName).fieldIndex("_cnt"))).sum
 
+    val (reads, byName) = dmlReads(s"MERGE into $schemaName.$tableName", st0, tid, s0,
+      delFile, inlineDelIds ++ inlineUpdJson.keySet)
     val sid = store.commitWithRetry() { (st, sid) =>
-      val fileIdByName = requireHitsUnchanged("MERGE", st0, st, tid, s0,
-        delFile.map(_.counts.keys).getOrElse(Nil), inlineDelIds ++ inlineUpdJson.keySet)
+      requireUnchanged(st, reads)
       var fileId = st.nextFileId
       var rowId = st.nextRowId(tid)
       def entryFor(f: StagedFile, stats: Map[String, Row], sizes: Map[String, Long],
@@ -1079,25 +1115,11 @@ object LakeWrite {
       val newFiles =
         postKept.sortBy(_.staged).map(entryFor(_, postStats, postSizes, explicit = true)).toList ++
           insKept.sortBy(_.staged).map(entryFor(_, insStats, insSizes, explicit = false)).toList
-      val newStats = newFiles.flatMap { fe =>
-        val r = postStats.getOrElse(fe.fileName, insStats(fe.fileName))
-        statCols.map { c =>
-          FileColumnStats(fe.fileId, c.name, c.dataType,
-            Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
-            Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
-            r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
-        }
-      }
-      val newDel = delFile.toList.map { wd =>
-        val fe = DeleteFileEntry(fileId, tid, wd.path, wd.total,
-          wd.counts.flatMap { case (fn, c) => fileIdByName.get(fn).map(_.toString -> c) },
-          sid, None, parts = wd.parts)
-        fileId += 1
-        fe
-      }
-      val (endedB, keptB) = rewriteInlineBatches(st, tid, sid,
-        keep = (rid, _) => !inlineDelIds.contains(rid) && !inlineUpdJson.contains(rid),
-        transform = (j, _) => j)
+      val newStats = newFiles.flatMap(fe => columnStats(fe.fileId,
+        postStats.getOrElse(fe.fileName, insStats(fe.fileName)), statCols))
+      val newDel = delFile.toList.map(_.entry(fileId, tid, sid, byName))
+      val (endedB, keptB) = rewriteInlineBatches(st, reads, sid,
+        drop = rid => inlineDelIds.contains(rid) || inlineUpdJson.contains(rid))
       val updatedBatch =
         if (inlineUpdJson.isEmpty) Nil
         else {

@@ -645,8 +645,9 @@ class BucketSpec extends AnyFunSuite {
     // right — inner-join null keys never match anyway).
     val lake = new Lake(spark, Files.createTempDirectory("graft_bnull").toString)
     def mk(name: String, rows: Long): Unit = {
+      // k nullable: the test appends NULL keys (spark.range's id is NOT NULL)
       lake.createTable(s"main.$name", spark.range(0, 1).selectExpr(
-        "id AS k", "id AS v").schema,
+        "nullif(id, -1) AS k", "id AS v").schema,
         partitionKeys = List(PartitionKey(BucketTransform(4), "k")),
         sortKeys = List(Meta.SortKey("k", ascending = true, nullsFirst = true)))
       lake.append(s"main.$name",
@@ -660,6 +661,9 @@ class BucketSpec extends AnyFunSuite {
     spark.conf.set(s"spark.sql.catalog.$cat.root", lake.root)
     spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    // no inferred IsNotNull(k) filter: the null-bearing files must reach
+    // the join's scan, as they would if k had no nulls to filter
+    spark.conf.set("spark.sql.constraintPropagation.enabled", "false")
     try {
       def q() = spark.sql(
         s"SELECT count(*) AS n FROM $cat.main.na a JOIN $cat.main.nb b ON a.k = b.k")
@@ -687,6 +691,7 @@ class BucketSpec extends AnyFunSuite {
     } finally {
       spark.conf.unset("spark.sql.sources.v2.bucketing.enabled")
       spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      spark.conf.unset("spark.sql.constraintPropagation.enabled")
     }
   }
 

@@ -19,6 +19,13 @@ class LakeSpec extends AnyFunSuite {
   private def newLake(): Lake =
     new Lake(spark, Files.createTempDirectory("graft_lake").toString)
 
+  /** a lake whose store runs one armed racer before its next commit CAS */
+  private def racingLake(): (Lake, RaceAtCas) = {
+    val root = Files.createTempDirectory("graft_lake").toString
+    val cas = new MetadataStore(root) with RaceAtCas
+    (new Lake(spark, root, Some(cas)), cas)
+  }
+
   private val abSchema = StructType(Seq(
     StructField("a", IntegerType), StructField("b", IntegerType)))
 
@@ -508,6 +515,27 @@ class LakeSpec extends AnyFunSuite {
     assert(lake.table("main.n").count() == 2)
   }
 
+  test("not null: UPDATE and MERGE enforce it like append") {
+    val lake = newLake()
+    import spark.implicits._
+    lake.createTable("main.n", abSchema)
+    lake.append("main.n", Seq((3, 3), (4, 4)).toDF("a", "b"))
+    lake.setNotNull("main.n", "b")
+    def violates(op: => Any): Unit = {
+      val e = intercept[Exception](op)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => String.valueOf(t.getMessage).contains("NOT NULL constraint on column b")), e)
+    }
+    violates(lake.update("main.n", col("a") === 3, Map("b" -> lit(null))))
+    violates(lake.merge("main.n", Seq(4, 99).toDF("sa"), col("a") === col("sa"),
+      matched = Seq(LakeWrite.MergeMatched(None, Some(Map("b" -> lit(null))))),
+      notMatched = Seq(LakeWrite.MergeInsert(None, Map("a" -> col("sa"), "b" -> lit(null))))))
+    // neither committed: no null, no zero, no inserted row
+    assert(lake.table("main.n").orderBy("a").collect().map(r => (r.getInt(0), r.getInt(1)))
+      .toSeq == Seq((3, 3), (4, 4)))
+    assert(lake.update("main.n", col("a") === 3, Map("b" -> lit(30)))._2 == 1)
+  }
+
   // ---- schema-level option scoping (reference lists unsupported) --------
   test("options: table beats schema beats global") {
     val lake = newLake()
@@ -759,16 +787,16 @@ class LakeSpec extends AnyFunSuite {
 
   // ---- DML vs concurrent rewrite conflict ---------------------------------
   test("delete racing a compaction is detected, not silently lost") {
-    val lake = newLake()
+    val (lake, cas) = racingLake()
     import spark.implicits._
     lake.createTable("main.cc", abSchema)
     lake.append("main.cc", (1 to 10).map(i => (i, i)).toDF("a", "b"))
     lake.append("main.cc", (11 to 20).map(i => (i, i)).toDF("a", "b"))
     // the compaction lands between the delete's scan and its commit
+    cas.raceOnce(lake.mergeAdjacentFiles("main.cc"))
     val e = intercept[java.util.ConcurrentModificationException] {
       graft.lake.LakeWrite.delete(spark, lake.store, "main", "cc",
-        col("a") <= 5,
-        beforeCommit = () => lake.mergeAdjacentFiles("main.cc"))
+        col("a") <= 5)
     }
     assert(e.getMessage.contains("concurrent rewrite"))
     // nothing was lost: table still has all 20 rows; retrying succeeds
@@ -778,16 +806,16 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("delete racing an update of a hit row fails: first committer wins") {
-    val lake = newLake()
+    val (lake, cas) = racingLake()
     import spark.implicits._
     lake.createTable("main.du", abSchema)
     lake.append("main.du", (1 to 20).map(i => (i, i)).toDF("a", "b"))
     // the update commits between the delete's scan and its commit; the
     // delete's positions still name row 3's pre-image, so committing would
     // leave the update's post-image (3, 100) alive
+    cas.raceOnce(lake.update("main.du", col("a") === 3, Map("b" -> lit(100))))
     val e = intercept[java.util.ConcurrentModificationException] {
-      graft.lake.LakeWrite.delete(spark, lake.store, "main", "du", col("a") <= 5,
-        beforeCommit = () => lake.update("main.du", col("a") === 3, Map("b" -> lit(100))))
+      graft.lake.LakeWrite.delete(spark, lake.store, "main", "du", col("a") <= 5)
     }
     assert(e.getMessage.contains("concurrent delete"))
     assert(lake.table("main.du").filter(col("a") === 3).collect()
@@ -798,25 +826,25 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("delete racing an update of a hit inline row fails: first committer wins") {
-    val lake = newLake()
+    val (lake, cas) = racingLake()
     lake.createTable("main.di", abSchema)
     lake.setOption("data_inlining_row_limit", "100", Some("main.di"))
     lake.insertRows("main.di", (1 to 20).map(i => Seq(i, i)))
+    cas.raceOnce(lake.update("main.di", col("a") === 3, Map("b" -> lit(100))))
     val e = intercept[java.util.ConcurrentModificationException] {
-      graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") <= 5,
-        beforeCommit = () => lake.update("main.di", col("a") === 3, Map("b" -> lit(100))))
+      graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") <= 5)
     }
     assert(e.getMessage.contains("rewrite of inline batches"))
     val (_, n) = lake.delete("main.di", col("a") <= 5)
     assert(n == 5 && lake.table("main.di").count() == 15)
     // a racing write that leaves the hit rows alone does not conflict
-    val (_, m) = graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") === 6,
-      beforeCommit = () => lake.insertRows("main.di", Seq(Seq(21, 21))))
+    cas.raceOnce(lake.insertRows("main.di", Seq(Seq(21, 21))))
+    val (_, m) = graft.lake.LakeWrite.delete(spark, lake.store, "main", "di", col("a") === 6)
     assert(m == 1 && lake.table("main.di").count() == 15)
   }
 
   test("DML racing a sorted rewrite is detected, not silently lost") {
-    val lake = newLake()
+    val (lake, cas) = racingLake()
     import spark.implicits._
     lake.createTable("main.rr", abSchema)
     lake.setSort("main.rr", List(SortKey("a", ascending = true, nullsFirst = false)))
@@ -825,9 +853,9 @@ class LakeSpec extends AnyFunSuite {
     // the delete lands between the rewrite's snapshot read and its commit;
     // the rewrite's survivors were computed WITHOUT it, so committing would
     // resurrect the deleted rows — must fail instead
+    cas.raceOnce(lake.delete("main.rr", col("a") <= 5))
     val e = intercept[java.util.ConcurrentModificationException] {
-      lake.rewriteSorted("main.rr",
-        beforeCommit = () => lake.delete("main.rr", col("a") <= 5))
+      lake.rewriteSorted("main.rr")
     }
     assert(e.getMessage.contains("concurrent write"))
     // the delete survived the aborted rewrite; retrying the rewrite works
@@ -1307,15 +1335,15 @@ class LakeSpec extends AnyFunSuite {
     // ADVICE r4: a set_sort reset landing between the rewrite's snapshot
     // read and its commit must abort the rewrite — otherwise it commits
     // stamped as clustered by an order the table no longer declares
-    val lake = newLake()
+    val (lake, cas) = racingLake()
     import spark.implicits._
     lake.createTable("main.rm", abSchema)
     lake.setSort("main.rm", List(SortKey("a", ascending = true, nullsFirst = false)))
     lake.append("main.rm", (1 to 10).map(i => (i, i)).toDF("a", "b"))
+    cas.raceOnce(lake.setSort("main.rm",
+      List(SortKey("b", ascending = false, nullsFirst = true))))
     val e = intercept[java.util.ConcurrentModificationException] {
-      lake.rewriteSorted("main.rm",
-        beforeCommit = () => lake.setSort("main.rm",
-          List(SortKey("b", ascending = false, nullsFirst = true))))
+      lake.rewriteSorted("main.rm")
     }
     assert(e.getMessage.contains("metadata change"))
     // table contents untouched by the aborted rewrite
