@@ -30,13 +30,6 @@ class CommitRaceSpec extends AnyFunSuite {
   private val abSchema = StructType(Seq(
     StructField("a", IntegerType), StructField("b", IntegerType)))
 
-  private def racingLake(store: String => MetadataStore with RaceAtCas =
-      new MetadataStore(_) with RaceAtCas): (Lake, RaceAtCas) = {
-    val root = Files.createTempDirectory("graft_race").toString
-    val cas = store(root)
-    (new Lake(spark, root, Some(cas)), cas)
-  }
-
   /** one data file of rows (i, i) */
   private def ab(rows: Seq[Int]): DataFrame = rows.map(i => (i, i)).toDF("a", "b").coalesce(1)
 
@@ -69,9 +62,9 @@ class CommitRaceSpec extends AnyFunSuite {
 
   private def pairs(as: Seq[Int]): Seq[(Int, Int)] = as.map(i => (i, i))
 
-  private def inlineLake(store: String => MetadataStore with RaceAtCas =
-      new MetadataStore(_) with RaceAtCas): (Lake, RaceAtCas) = {
-    val (lake, cas) = racingLake(store)
+  /** main.t holding ten inline rows (i, i) */
+  private def inlineLake(racing: (Lake, RaceAtCas) = RaceAtCas.lake(spark)): (Lake, RaceAtCas) = {
+    val (lake, cas) = racing
     lake.createTable("main.t", abSchema)
     lake.setOption("data_inlining_row_limit", "100", Some("main.t"))
     lake.insertRows("main.t", (1 to 10).map(i => Seq(i, i)))
@@ -81,7 +74,7 @@ class CommitRaceSpec extends AnyFunSuite {
   test("rewriteDataFiles racing a delete on a victim file conflicts") {
     // the unchecked rewrite ended the racer's delete file with its victim
     // and brought a = 5 back (18 rows)
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     lake.append("main.t", ab(1 to 10))
     lake.append("main.t", ab(11 to 20))
@@ -111,7 +104,7 @@ class CommitRaceSpec extends AnyFunSuite {
   test("mergeAdjacentFiles racing rewriteDataFiles conflicts") {
     // the unchecked compaction re-added the rows the racer had already
     // rewritten: 36 rows, 28 distinct, duplicated row ids
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     Seq(1 to 10, 11 to 20, 21 to 30).foreach(r => lake.append("main.t", ab(r)))
     lake.delete("main.t", col("a") <= 2)
@@ -121,7 +114,7 @@ class CommitRaceSpec extends AnyFunSuite {
   }
 
   test("UPDATE racing an UPDATE of the same row conflicts") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     lake.append("main.t", ab(1 to 20))
     val others = pairs((1 to 20).filter(_ != 3))
@@ -131,7 +124,7 @@ class CommitRaceSpec extends AnyFunSuite {
   }
 
   test("MERGE racing a DELETE of a matched row conflicts") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     lake.append("main.t", ab(1 to 20))
     val src = Seq((3, 30), (4, 40)).toDF("sa", "sb")
@@ -147,7 +140,7 @@ class CommitRaceSpec extends AnyFunSuite {
   test("rewriteSorted racing an append commits beside it") {
     // the append's file is not in the rewrite's read set: it stays live,
     // serializable as "append, then rewrite"
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     lake.setSort("main.t", List(SortKey("a", ascending = true, nullsFirst = false)))
     lake.append("main.t", ab(11 to 20))
@@ -159,15 +152,15 @@ class CommitRaceSpec extends AnyFunSuite {
 
   test("the CAS seam is store-independent: flush racing an insert over JDBC") {
     val dbDir = Files.createTempDirectory("graft_race_derby").toString
-    val (lake, cas) = inlineLake(root =>
-      new JdbcMetadataStore(root, s"jdbc:derby:$dbDir/cat;create=true") with RaceAtCas)
+    val (lake, cas) = inlineLake(RaceAtCas.lake(spark, root =>
+      new JdbcMetadataStore(root, s"jdbc:derby:$dbDir/cat;create=true") with RaceAtCas))
     val all = pairs(1 to 11)
     assert(!race(lake, cas, lake.insertRows("main.t", Seq(Seq(11, 11))),
       lake.flushInlinedData("main.t"), racerOnly = all, serial = all))
   }
 
   test("a crash at the CAS leaves the table as it was and only orphans behind") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.t", abSchema)
     lake.append("main.t", ab(1 to 10))
     lake.append("main.t", ab(11 to 20))

@@ -19,13 +19,6 @@ class LakeSpec extends AnyFunSuite {
   private def newLake(): Lake =
     new Lake(spark, Files.createTempDirectory("graft_lake").toString)
 
-  /** a lake whose store runs one armed racer before its next commit CAS */
-  private def racingLake(): (Lake, RaceAtCas) = {
-    val root = Files.createTempDirectory("graft_lake").toString
-    val cas = new MetadataStore(root) with RaceAtCas
-    (new Lake(spark, root, Some(cas)), cas)
-  }
-
   private val abSchema = StructType(Seq(
     StructField("a", IntegerType), StructField("b", IntegerType)))
 
@@ -787,7 +780,7 @@ class LakeSpec extends AnyFunSuite {
 
   // ---- DML vs concurrent rewrite conflict ---------------------------------
   test("delete racing a compaction is detected, not silently lost") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     import spark.implicits._
     lake.createTable("main.cc", abSchema)
     lake.append("main.cc", (1 to 10).map(i => (i, i)).toDF("a", "b"))
@@ -806,7 +799,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("delete racing an update of a hit row fails: first committer wins") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     import spark.implicits._
     lake.createTable("main.du", abSchema)
     lake.append("main.du", (1 to 20).map(i => (i, i)).toDF("a", "b"))
@@ -826,7 +819,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("delete racing an update of a hit inline row fails: first committer wins") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     lake.createTable("main.di", abSchema)
     lake.setOption("data_inlining_row_limit", "100", Some("main.di"))
     lake.insertRows("main.di", (1 to 20).map(i => Seq(i, i)))
@@ -844,7 +837,7 @@ class LakeSpec extends AnyFunSuite {
   }
 
   test("DML racing a sorted rewrite is detected, not silently lost") {
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     import spark.implicits._
     lake.createTable("main.rr", abSchema)
     lake.setSort("main.rr", List(SortKey("a", ascending = true, nullsFirst = false)))
@@ -1335,7 +1328,7 @@ class LakeSpec extends AnyFunSuite {
     // ADVICE r4: a set_sort reset landing between the rewrite's snapshot
     // read and its commit must abort the rewrite — otherwise it commits
     // stamped as clustered by an order the table no longer declares
-    val (lake, cas) = racingLake()
+    val (lake, cas) = RaceAtCas.lake(spark)
     import spark.implicits._
     lake.createTable("main.rm", abSchema)
     lake.setSort("main.rm", List(SortKey("a", ascending = true, nullsFirst = false)))

@@ -1,6 +1,8 @@
 package graft
 
-import graft.lake.MetadataStore
+import java.nio.file.Files
+import org.apache.spark.sql.SparkSession
+import graft.lake.{Lake, MetadataStore}
 import graft.lake.Meta.CommitDelta
 
 /** Test seam at the commit CAS: the first `commit` after [[raceOnce]] runs
@@ -21,5 +23,15 @@ trait RaceAtCas extends MetadataStore {
     racer = None
     r.foreach(_())
     super.commit(delta)
+  }
+}
+
+object RaceAtCas {
+  /** a fresh lake over a racing store (the file log unless `store` says) */
+  def lake(spark: SparkSession, store: String => MetadataStore with RaceAtCas =
+      new MetadataStore(_) with RaceAtCas): (Lake, RaceAtCas) = {
+    val root = Files.createTempDirectory("graft_race").toString
+    val cas = store(root)
+    (new Lake(spark, root, Some(cas)), cas)
   }
 }
