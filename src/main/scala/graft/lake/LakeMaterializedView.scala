@@ -537,21 +537,36 @@ object LakeMaterializedView {
     def hasTagFor(tid: Long)(sid: Long, tags: Set[String]): Boolean =
       snapChanges.getOrElse(sid, Nil).exists(c =>
         tags.exists(t => c == s"$t:$tid" || c.startsWith(s"$t:$tid:")))
-    def hasTag(sid: Long, tags: Set[String]): Boolean = hasTagFor(srcTid)(sid, tags)
     val maintenance = Set("compacted", "rewrote", "flushed")
     val insertish = Set("inserted", "inlined")
+    val logical = Set("inserted", "inlined", "deleted", "updated", "merged")
+    /** table `tid` was replaced in the window (the source or a dim) */
+    def replacedIn(tid: Long): Boolean = {
+      val tagged = hasTagFor(tid) _
+      st.files.exists(f => f.tableId == tid &&
+          // a data-file end is benign only when maintenance moved the
+          // bytes AND no insert op on the SAME snapshot could have been
+          // the overwrite that actually ended it
+          f.end.exists(s => in(s) && (!tagged(s, maintenance) || tagged(s, insertish)))) ||
+        st.inlined.exists(b => b.tableId == tid &&
+          b.end.exists(s => in(s) && tagged(s, insertish)))
+    }
+    /** table `tid` changed logically in the window: data files, delete
+      * files or inline batches created by a LOGICAL snapshot, or inline
+      * batches ended by one (inline-row deletes). Compaction, rewrite and
+      * flush create and end files too but move bytes without changing
+      * rows — the change feed skips them, and so does this test. */
+    def changedIn(tid: Long): Boolean = {
+      def logicalIn(s: Long) = in(s) && hasTagFor(tid)(s, logical)
+      st.files.exists(f => f.tableId == tid && logicalIn(f.begin)) ||
+        st.deleteFiles.exists(df => df.tableId == tid && logicalIn(df.begin)) ||
+        st.inlined.exists(b => b.tableId == tid &&
+          (logicalIn(b.begin) || b.end.exists(logicalIn)))
+    }
     val replaced =
       // a window missing an expired snapshot has no complete change feed
       !st.hasAllSnapshots(last, cur) ||
-      st.tagAt(scope, KSourceTid, cur).exists(_.toLong != srcTid) ||
-        st.files.exists(f => f.tableId == srcTid &&
-          // a source data-file end is benign only when maintenance moved
-          // the bytes AND no insert op on the SAME snapshot could have been
-          // the overwrite that actually ended it
-          f.end.exists(s => in(s) &&
-            (!hasTag(s, maintenance) || hasTag(s, insertish)))) ||
-        st.inlined.exists(b => b.tableId == srcTid &&
-          b.end.exists(s => in(s) && hasTag(s, insertish)))
+        st.tagAt(scope, KSourceTid, cur).exists(_.toLong != srcTid) || replacedIn(srcTid)
 
     // DIM changes (join-source MVs, r14 — VERDICT r13 #4): the MV state
     // folded fact rows against the dim AS OF the last refresh, so a dim
@@ -575,33 +590,16 @@ object LakeMaterializedView {
     // Past `spark.graft.mv.dimDeltaMaxKeys` changed keys the key probe
     // loses to the scan it avoids → full recompute. Pure dim MAINTENANCE
     // (compaction / rewrite / flush) moves bytes, not rows → nothing.
-    val logicalTags = Set("inserted", "inlined", "deleted", "updated", "merged")
     val recordedDimTids: Seq[Long] = st.tagAt(scope, KDimTid, cur)
       .map(_.split(';').toSeq.map(_.toLong)).getOrElse(Nil)
     val dimReplaced = dimTids.zipWithIndex.exists { case (dt, i) =>
-      val hasDimTag = hasTagFor(dt) _
-      recordedDimTids.lift(i).exists(_ != dt) ||
-        st.files.exists(f => f.tableId == dt &&
-          f.end.exists(s => in(s) &&
-            (!hasDimTag(s, maintenance) || hasDimTag(s, insertish)))) ||
-        st.inlined.exists(b => b.tableId == dt &&
-          b.end.exists(s => in(s) && hasDimTag(s, insertish)))
+      recordedDimTids.lift(i).exists(_ != dt) || replacedIn(dt)
     }
     // !replaced: a fact replace full-recomputes below regardless — don't
     // pay the dim change-feed jobs + driver probes just to discard them
-    def dimChangedIn(dt: Long): Boolean = {
-      val hasDimTag = hasTagFor(dt) _
-      st.files.exists(f => f.tableId == dt &&
-          in(f.begin) && hasDimTag(f.begin, logicalTags)) ||
-        st.deleteFiles.exists(df => df.tableId == dt &&
-          in(df.begin) && hasDimTag(df.begin, logicalTags)) ||
-        st.inlined.exists(b => b.tableId == dt &&
-          ((in(b.begin) && hasDimTag(b.begin, logicalTags)) ||
-            b.end.exists(s => in(s) && hasDimTag(s, logicalTags))))
-    }
     val changedDims: Seq[Int] =
       if (replaced || dimReplaced) Nil
-      else dimTids.zipWithIndex.collect { case (dt, i) if dimChangedIn(dt) => i }
+      else dimTids.zipWithIndex.collect { case (dt, i) if changedIn(dt) => i }
     // N-dim telescoping of the exact identity (one term per changed dim):
     //   Δ(F⋈D₁⋈…⋈Dₙ) = ΔF⋈D₁ₗ⋈…⋈Dₙₗ + Σᵢ F꜀⋈D₁꜀⋈…⋈Dᵢ₋₁꜀⋈ΔDᵢ⋈Dᵢ₊₁ₗ⋈…⋈Dₙₗ
     // — dim i's term joins EARLIER dims at CUR and LATER dims at LAST
@@ -668,20 +666,10 @@ object LakeMaterializedView {
     // mean the SOURCE changed — without this check a periodic refresh on
     // an idle source rewrites the whole MV every call (O(|MV|) write
     // amplification + snapshot churn). Catalog vectors are in memory;
-    // logical source changes = data files / delete files / inline batches
-    // created by a LOGICAL snapshot in the window, or inline batches ended
-    // by one (inline-row deletes). Compaction/rewrite/flush create and end
-    // files too but move bytes without changing rows — the change feed
-    // skips them, and so does this check (they used to defeat the
-    // early-out and force an empty-delta MV rewrite). Replaces were
-    // handled above.
-    val logical = Set("inserted", "inlined", "deleted", "updated", "merged")
-    def logicalIn(s: Long) = in(s) && hasTag(s, logical)
-    val sourceChanged =
-      st.files.exists(f => f.tableId == srcTid && logicalIn(f.begin)) ||
-        st.deleteFiles.exists(df => df.tableId == srcTid && logicalIn(df.begin)) ||
-        st.inlined.exists(ib => ib.tableId == srcTid &&
-          (logicalIn(ib.begin) || ib.end.exists(logicalIn)))
+    // maintenance alone (which used to defeat the early-out and force an
+    // empty-delta MV rewrite) is no logical change. Replaces were handled
+    // above.
+    val sourceChanged = changedIn(srcTid)
     if (!sourceChanged && dimDeltaTerms.isEmpty) return last
 
     // persist: the change-feed scan is embedded up to three times in the
@@ -786,7 +774,7 @@ object LakeMaterializedView {
       // future op were to create delete files under a different tag
       val retirementsPossible = needDirty && (dimDeltaTerms.nonEmpty ||
         st.snapshots.exists(sn => in(sn.snapshotId) &&
-          hasTag(sn.snapshotId, Set("deleted", "updated", "merged"))) ||
+          hasTagFor(srcTid)(sn.snapshotId, Set("deleted", "updated", "merged"))) ||
         st.deleteFiles.exists(df => df.tableId == srcTid && in(df.begin)))
       val merged =
         if (!retirementsPossible) {

@@ -175,10 +175,10 @@ class Lake(val spark: SparkSession, val root: String,
     *
     * Metadata-first by design — row counts and sizes come from the parquet
     * footers and the filesystem, so registering a 100 TB directory reads
-    * zero data rows. With `collectStats` (default) ONE distributed agg job
-    * additionally records per-file min/max/null stats (the same job shape
-    * and stringification as the write path, so registered files prune
-    * exactly like native ones); `collectStats = false` is the pure-footer
+    * zero data rows. With `collectStats` (default) the files also get the
+    * write path's per-file stats ([[LakeWrite.fileStats]]: footers first,
+    * else one distributed agg job), so registered files prune exactly like
+    * native ones; `collectStats = false` is the pure-footer
     * bulk path — absent stats make the pruner keep the files, never drop
     * them. Identity partition-key values are recorded when a file's stats
     * prove a single value (min == max, no nulls); transform keys stay
@@ -237,64 +237,35 @@ class Lake(val spark: SparkSession, val root: String,
     names.find(taken).foreach(n => throw new IllegalArgumentException(
       s"addDataFiles: file name '$n' is already registered; rename the file"))
 
-    val statCols = cols.filter(c => LakeWrite.statsEligible(LakeRead.sparkType(c.dataType)))
-    // footer-first (r17, guide §6): foreign files carry their writers'
-    // statistics, which parquet-mr's reader already sanitizes (legacy
-    // corrupt binary stats are dropped at decode → harvest falls back);
-    // physical-vs-declared type mismatches fall back inside FooterStats
-    val statRows: Map[String, Row] =
-      if (!collectStats || statCols.isEmpty || cands.forall(_.rows == 0L)) Map.empty
-      else org.apache.spark.sql.graft.FooterStats.harvest(spark,
-        cands.map(cd => cd.fileName -> cd.path),
-        statCols.map(c => c.name -> LakeRead.sparkType(c.dataType))).getOrElse {
-        val aggs = LakeWrite.statAggsFor(statCols)
-        spark.read.schema(LakeRead.structFor(cols)).parquet(cands.map(_.path): _*)
-          .groupBy(col("_metadata.file_name").as("_file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map(r => r.getString(0) -> r).toMap
-      }
-    val statColNames = statCols.map(_.name).toSet
+    // the write path's stats (footer-first, r17, guide §6): foreign files
+    // carry their writers' statistics, which parquet-mr's reader already
+    // sanitizes (legacy corrupt binary stats are dropped at decode →
+    // harvest falls back); physical-vs-declared type mismatches fall back
+    // inside FooterStats
+    val stats: Map[String, Seq[FileColumnStats]] =
+      if (!collectStats || cands.forall(_.rows == 0L)) Map.empty
+      else LakeWrite.fileStats(spark, cols, cands.map(cd => cd.fileName -> cd.path))
+        .map { case (name, (_, s)) => name -> s }
     val partKeys = st0.partitionKeysAt(tid, cur)
+    val written = LakeWrite.WrittenFiles(cands.sortBy(_.fileName).map { cd =>
+      val s = stats.getOrElse(cd.fileName, Nil)
+      val pvals = partKeys.filter(_.transform == "identity").flatMap { pk =>
+        s.find(_.columnName == pk.column).collect {
+          case FileColumnStats(_, _, _, Some(mn), mx, 0L) if mx.contains(mn) => pk.label -> mn
+        }
+      }.toMap
+      LakeWrite.NewFile(cd.path, cd.fileName, cd.rows, cd.size, pvals, s)
+    }, explicitRowIds = false)
 
     store.commitWithRetry() { (st, sid) =>
       if (st.tableById(tid, st.currentSnapshotId).isEmpty)
         throw new IllegalStateException(s"table $table dropped concurrently")
       val schemaVersion = st.snapshots.lastOption.map(_.schemaVersion).getOrElse(0L)
-      var fileId = st.nextFileId
-      var rowId = st.nextRowId(tid)
-      val newFiles = cands.sortBy(_.fileName).map { cd =>
-        val r = statRows.get(cd.fileName)
-        val pvals = partKeys
-          .filter(pk => pk.transform == "identity" && statColNames.contains(pk.column))
-          .flatMap { pk =>
-            r.flatMap { row =>
-              val mn = Option(row.getString(row.fieldIndex(s"_min_${pk.column}")))
-              val mx = Option(row.getString(row.fieldIndex(s"_max_${pk.column}")))
-              val nulls = row.getLong(row.fieldIndex(s"_nulls_${pk.column}"))
-              if (nulls == 0L && mn.isDefined && mn == mx) Some(pk.label -> mn.get)
-              else None
-            }
-          }.toMap
-        val fe = DataFileEntry(fileId, tid, cd.path, cd.fileName, cd.rows,
-          cd.size, firstRowId = rowId, schemaVersion = schemaVersion,
-          explicitRowIds = false, partitionValues = pvals, begin = sid, end = None)
-        fileId += 1; rowId += cd.rows
-        fe
-      }.toList
-      val newStats = newFiles.flatMap { fe =>
-        statRows.get(fe.fileName).toList.flatMap { r =>
-          statCols.map { c =>
-            FileColumnStats(fe.fileId, c.name, c.dataType,
-              Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
-              Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
-              r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
-          }
-        }
-      }
-      val n = newFiles.map(_.rowCount).sum
+      val (newFiles, newStats) =
+        written.entries(tid, sid, schemaVersion, st.nextFileId, st.nextRowId(tid))
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(), schemaVersion,
-          List(s"inserted:$tid:$n")),
+          List(s"inserted:$tid:${written.rows}")),
         newFiles = newFiles, newStats = newStats)
     }
   }
@@ -737,6 +708,15 @@ class Lake(val spark: SparkSession, val root: String,
   private def optionTag(st: CatalogState, tid: Long, key: String): Option[String] =
     st.optionAt(tid, key, st.currentSnapshotId)
 
+  /** the table's `target_file_size` in bytes (DuckLake's default when unset) */
+  private def targetFileSize(st: CatalogState, tid: Long): Long =
+    optionTag(st, tid, "target_file_size")
+      .map(LakeOptions.parseBytes).getOrElse(LakeOptions.DefaultTargetFileSize)
+
+  /** how many ~target_file_size files a whole-table rewrite of `live` writes */
+  private def rewriteFileCount(st: CatalogState, tid: Long, live: Seq[DataFileEntry]): Int =
+    math.max(1, math.ceil(live.map(_.fileSizeBytes).sum.toDouble / targetFileSize(st, tid)).toInt)
+
   /** Merge adjacent small files (VACUUM step 2, src/pgducklake_vacuum.cpp:
     * 73-86; DuckLake `ducklake_merge_adjacent_files`): live files SMALLER
     * than `target_file_size` are bin-packed — within one hidden-partition
@@ -764,8 +744,7 @@ class Lake(val spark: SparkSession, val root: String,
     val e = resolve(table, st)
     val tid = e.tableId
     val cur = st.currentSnapshotId
-    val target = optionTag(st, tid, "target_file_size")
-      .map(LakeOptions.parseBytes).getOrElse(LakeOptions.DefaultTargetFileSize)
+    val target = targetFileSize(st, tid)
     val live = st.filesAt(tid, cur)
     val packOrder: Vector[DataFileEntry] => Vector[DataFileEntry] = {
       // safety valve / A-B gate (metadata-only: the job reads and writes
@@ -861,10 +840,7 @@ class Lake(val spark: SparkSession, val root: String,
     require(sortKeys.nonEmpty, s"$table has no declared sort order (set_sort first)")
     val live = st.filesAt(tid, cur)
     if (live.isEmpty && st.inlinedAt(tid, cur).isEmpty) return cur
-    val target = optionTag(st, tid, "target_file_size")
-      .map(LakeOptions.parseBytes).getOrElse(LakeOptions.DefaultTargetFileSize)
-    val nOut = math.max(1, math.ceil(
-      live.map(_.fileSizeBytes).sum.toDouble / target).toInt)
+    val nOut = rewriteFileCount(st, tid, live)
     val df = LakeRead.scanDF(spark, st, tid, cur, Nil, withRowMeta = true)
       .drop(LakeRead.FileCol, LakeRead.PosCol)
       .repartitionByRange(nOut, sortKeys.map(LakeWrite.sortCol): _*)
@@ -905,10 +881,7 @@ class Lake(val spark: SparkSession, val root: String,
     zcols.foreach(c => require(names.contains(c), s"$table has no column $c"))
     val live = st.filesAt(tid, cur)
     if (live.isEmpty && st.inlinedAt(tid, cur).isEmpty) return cur
-    val target = optionTag(st, tid, "target_file_size")
-      .map(LakeOptions.parseBytes).getOrElse(LakeOptions.DefaultTargetFileSize)
-    val nOut = math.max(1, math.ceil(
-      live.map(_.fileSizeBytes).sum.toDouble / target).toInt)
+    val nOut = rewriteFileCount(st, tid, live)
     val base = LakeRead.scanDF(spark, st, tid, cur, Nil, withRowMeta = true)
       .drop(LakeRead.FileCol, LakeRead.PosCol)
     // numeric/timestamp → double directly; date routes via timestamp (a
@@ -1117,7 +1090,12 @@ class Lake(val spark: SparkSession, val root: String,
     val deleted = Vector.newBuilder[String]
     st.tables.map(_.tableId).distinct.foreach { tid =>
       val dir = LakeWrite.tableDir(store.root, tid)
-      io.listFilesRecursive(dir).foreach { rel =>
+      val listed = io.listFilesRecursive(dir)
+      // a checksum sidecar is its file's: it stays while the file does and
+      // goes with it (`delete` takes it along); only a sidecar whose file
+      // is gone is judged on its own
+      val sidecars = listed.map(StoreIO.sidecar).toSet
+      listed.filterNot(sidecars).foreach { rel =>
         val p = s"$dir/$rel"
         val owned = referenced.contains(p) ||
           protectedPrefixes.exists(pref => p == pref || p.startsWith(pref + "/"))

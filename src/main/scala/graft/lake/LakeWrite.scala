@@ -215,21 +215,98 @@ object LakeWrite {
     }
   }
 
-  /** the catalog stats of one written file from its [[statAggsFor]] row */
-  private def columnStats(fileId: Long, r: Row, statCols: Seq[ColumnEntry]): Seq[FileColumnStats] =
-    statCols.map { c =>
-      FileColumnStats(fileId, c.name, c.dataType,
-        Option(r.getString(r.fieldIndex(s"_min_${c.name}"))),
-        Option(r.getString(r.fieldIndex(s"_max_${c.name}"))),
-        r.getLong(r.fieldIndex(s"_nulls_${c.name}")))
-    }
+  /** One data file a write adds, ready for the catalog: its row count,
+    * size, partition values and column stats (stamped with the file's id
+    * at commit) */
+  private[lake] case class NewFile(path: String, fileName: String, rows: Long, size: Long,
+      partitionValues: Map[String, String], stats: Seq[FileColumnStats])
 
-  private[lake] def statAggsFor(statCols: Seq[ColumnEntry]): Seq[Column] =
-    Seq(count(lit(1)).as("_cnt")) ++ statCols.flatMap { c =>
-      Seq(min(col(c.name)).cast(StringType).as(s"_min_${c.name}"),
-        max(col(c.name)).cast(StringType).as(s"_max_${c.name}"),
-        sum(when(col(c.name).isNull, 1L).otherwise(0L)).as(s"_nulls_${c.name}"))
+  /** The data files of one write, in commit order, with what their entries
+    * share: whether they carry explicit row ids, and the sort stamp of a
+    * sorted write. */
+  private[lake] case class WrittenFiles(files: Seq[NewFile], explicitRowIds: Boolean,
+      sortedBy: Option[List[String]] = None) {
+    def rows: Long = files.map(_.rows).sum
+
+    /** their catalog entries and stats, committed at `sid` under
+      * `schemaVersion`: file ids from `fileId` on and, unless the rows
+      * carry their own, row ids from `rowId` on */
+    def entries(tid: Long, sid: Long, schemaVersion: Long, fileId: Long, rowId: Long)
+        : (List[DataFileEntry], List[FileColumnStats]) = {
+      val firstRowIds = files.scanLeft(rowId)(_ + _.rows)
+      val es = files.zipWithIndex.map { case (f, i) =>
+        DataFileEntry(fileId + i, tid, f.path, f.fileName, f.rows, f.size,
+          firstRowId = if (explicitRowIds) 0L else firstRowIds(i),
+          schemaVersion = schemaVersion, explicitRowIds = explicitRowIds,
+          partitionValues = f.partitionValues, begin = sid, end = None, sortedBy = sortedBy)
+      }.toList
+      (es, es.zip(files).flatMap { case (fe, f) => f.stats.map(_.copy(fileId = fe.fileId)) })
     }
+  }
+
+  /** Row count and column stats of each non-empty parquet file in `files`
+    * ((name, path) pairs), keyed by name; zero-row files are absent. Stats
+    * cover the stats-eligible columns of `cols` and, on variant columns,
+    * every top-level scalar path (ducklake_file_variant_stats,
+    * src/pgducklake_freeze.cpp:60; exercised by variant.sql), named
+    * "v.$.price" so [[LakeVariantPruning]] matches them.
+    *
+    * Footers first (r17, guide §1.2/§6): the stats come from the parquet
+    * footers the write itself produced, with no second pass over the
+    * written bytes. [[org.apache.spark.sql.graft.FooterStats]] either
+    * reproduces the aggregate's strings bit-identically or returns None,
+    * and then one distributed job computes them (INT96 timestamps, NaN or
+    * ±0.0 float bounds, >4 KB binary values, encrypted footers). Variant
+    * paths have no footer stats: a table with variant columns discovers
+    * its paths with `schema_of_variant_agg` and folds their min/max/nulls
+    * into that same job. */
+  private[lake] def fileStats(spark: SparkSession, cols: Seq[ColumnEntry],
+      files: Seq[(String, String)]): Map[String, (Long, Seq[FileColumnStats])] = {
+    if (files.isEmpty) return Map.empty
+    val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
+    val variantCols = cols.filter(c => LakeRead.sparkType(c.dataType).isInstanceOf[VariantType])
+    def read = spark.read.schema(LakeRead.structFor(cols)).parquet(files.map(_._2): _*)
+    val variantPaths: Seq[(String, String, String)] = // (colName, key, sparkType)
+      if (variantCols.isEmpty) Nil
+      else {
+        val aggs = variantCols.map(c => schema_of_variant_agg(col(c.name)).as(c.name))
+        val row = read.agg(aggs.head, aggs.tail: _*).collect().head
+        variantCols.zipWithIndex.flatMap { case (c, i) =>
+          topLevelVariantPaths(Option(row.getString(i)).getOrElse(""))
+            .map { case (k, t) => (c.name, k, t) }
+        }
+      }
+    val rows: Map[String, Row] = (if (variantCols.isEmpty)
+      org.apache.spark.sql.graft.FooterStats.harvest(spark, files,
+        statCols.map(c => c.name -> LakeRead.sparkType(c.dataType)))
+      else None).getOrElse {
+      val aggs = Seq(count(lit(1)).as("_cnt")) ++
+        statCols.flatMap(c => statAggs(col(c.name), "", c.name)) ++
+        variantPaths.zipWithIndex.flatMap { case ((cn, k, t), i) =>
+          statAggs(try_variant_get(col(cn), s"$$.$k", t), "v", i.toString)
+        }
+      read.groupBy(col("_metadata.file_name").as("_file"))
+        .agg(aggs.head, aggs.tail: _*)
+        .collect().map(r => r.getString(0) -> r).toMap // one row per file
+    }
+    def stat(r: Row, name: String, dataType: String, p: String, i: String) =
+      FileColumnStats(0L, name, dataType, Option(r.getString(r.fieldIndex(s"_${p}min_$i"))),
+        Option(r.getString(r.fieldIndex(s"_${p}max_$i"))), r.getLong(r.fieldIndex(s"_${p}nulls_$i")))
+    rows.map { case (name, r) =>
+      name -> (r.getLong(r.fieldIndex("_cnt")),
+        statCols.map(c => stat(r, c.name, c.dataType, "", c.name)) ++
+          variantPaths.zipWithIndex.map { case ((cn, k, t), i) =>
+            stat(r, s"$cn.$$.$k", t, "v", i.toString)
+          })
+    }
+  }
+
+  /** min, max (as strings) and null count of `v`, aliased
+    * `_<p>min_<i>`, `_<p>max_<i>`, `_<p>nulls_<i>`: with `p` empty, the
+    * row shape [[org.apache.spark.sql.graft.FooterStats]] reproduces */
+  private def statAggs(v: Column, p: String, i: String): Seq[Column] =
+    Seq(min(v).cast(StringType).as(s"_${p}min_$i"), max(v).cast(StringType).as(s"_${p}max_$i"),
+      sum(when(v.isNull, 1L).otherwise(0L)).as(s"_${p}nulls_$i"))
 
   /** `v` as column `c` stores it: cast to the declared type and, on a NOT
     * NULL column, guarded per row (codegen'd; `raise_error` runs on the
@@ -310,15 +387,112 @@ object LakeWrite {
       conflict("metadata change")
   }
 
-  /** Distributed append of `df`. Returns the committed snapshot id.
-    *
-    * When the table has partition keys, rows are grouped by the transform
-    * values and written `partitionBy` synthetic `_gp<i>` dirs (then promoted
-    * to FLAT files with the values recorded per file — DuckLake-style hidden
-    * partitioning, reference src/pgducklake_partition.cpp:31-97). Sort keys
-    * are applied only on compaction-style writes (`sorted=true`), mirroring
-    * the reference (sorted_by.cpp: sort on compaction/flush, not inserts).
-    * A rewrite passes what it replaced as `replaces`: the commit applies
+  /** The one path from rows to data files: every lake write that adds
+    * parquet files runs it (append and the rewrites and sink built on it,
+    * UPDATE's post-images, MERGE's post-images and inserts). It
+    *  1. aligns `rows` to the table's columns through [[stored]], keeping
+    *     [[LakeRead.RowIdCol]] when `explicitRowIds`;
+    *  2. applies the table's layout: `per_thread_output=false` funnels into
+    *     one file; partition keys write `partitionBy` synthetic `_gp<i>`
+    *     dirs (then promoted to FLAT files with the values recorded per
+    *     file — DuckLake-style hidden partitioning, reference
+    *     src/pgducklake_partition.cpp:31-97), repartitioned by them first
+    *     when `repartition`; sort keys apply only when `sorted`, mirroring
+    *     the reference (sorted_by.cpp: sort on compaction/flush, not
+    *     inserts); [[writeOptions]] (encryption included) and
+    *     [[withMicrosTimestamps]] hold for every write;
+    *  3. writes under `_staging/<uuid>` and promotes into the data dir
+    *     (`hive_file_pattern` picks the dir layout);
+    *  4. harvests each file's row count and stats ([[fileStats]]);
+    *  5. drops the zero-row files (empty write partitions).
+    * Its result builds the files' catalog entries inside the caller's
+    * commit closure. */
+  private[lake] def writeFiles(spark: SparkSession, store: MetadataStore,
+      st0: CatalogState, tid: Long, s0: Long, rows: DataFrame, explicitRowIds: Boolean,
+      sorted: Boolean = false, repartition: Boolean = true): WrittenFiles = {
+    val cols = st0.columnsAt(tid, s0)
+    val partKeys = st0.partitionKeysAt(tid, s0)
+    val sortKeys = st0.sortKeysAt(tid, s0)
+    def tag(k: String): Option[String] = st0.optionAt(tid, k, s0)
+
+    val rowIdSel = if (explicitRowIds) Seq(col(LakeRead.RowIdCol)) else Nil
+    var aligned = rows.select(cols.map(c => stored(c, col(c.name))) ++ rowIdSel: _*)
+    // per_thread_output=false (docs/settings.md): funnel into one output
+    // file per write instead of the default one-per-task
+    if (tag("per_thread_output").exists(v => v == "false" || v == "0"))
+      aligned = aligned.coalesce(1)
+    // UNPARTITIONED tables only: the partitioned branch sorts AFTER its
+    // repartition (this pre-sort would be discarded by the shuffle — and
+    // worse, sorted map output shuffle-compresses so well that AQE's
+    // coalescing, which reads COMPRESSED sizes, merges the reduce side
+    // into a few giant partitions whose re-sort then spills the whole
+    // input per task: 4 × 6 GB spills ENOSPC'd the sf100 fixture build)
+    if (sortKeys.nonEmpty && sorted && partKeys.isEmpty)
+      aligned = aligned.sortWithinPartitions(sortKeys.map(sortCol): _*)
+
+    val staging = s"${store.root}/_staging/${uuid()}"
+    val wopts = writeOptions(st0, tid, s0)
+    val hivePattern = partKeys.nonEmpty &&
+      tag("hive_file_pattern").exists(v => v == "true" || v == "1")
+    val writer = if (partKeys.isEmpty) aligned.write else {
+      val pcols = partKeys.zipWithIndex.map { case (pk, i) => transformCol(pk).as(s"_gp$i") }
+      val withP0 = aligned.select(aligned.columns.map(col) ++ pcols: _*)
+      // EXPLICIT partition count: a bare repartition(cols) is
+      // REPARTITION_BY_COL, which AQE's coalescing may merge by COMPRESSED
+      // map-output size — naturally-ordered input (TPC-H facts arrive
+      // orderkey-sorted) compresses so well that a multi-GB chunk
+      // collapsed into a handful of reduce partitions whose per-task sort
+      // then spilled ~6 GB apiece (ENOSPC'd the sf100 fixture build).
+      // All-bucket specs get one task per bucket (the physical design: a
+      // task writes its bucket's one file); other specs pin the session
+      // shuffle width.
+      val writeParts: Int = {
+        val bucketNs = partKeys.map(pk => BucketTransform.unapply(pk.transform))
+        if (bucketNs.nonEmpty && bucketNs.forall(_.isDefined))
+          math.max(1, bucketNs.flatten.product)
+        else spark.sessionState.conf.numShufflePartitions
+      }
+      val withP = if (repartition)
+        withP0.repartition(writeParts, partKeys.indices.map(i => col(s"_gp$i")): _*)
+      else withP0
+      // lead the within-task sort with the partition columns: the dynamic
+      // partition writer requires its input ordered by them and would
+      // otherwise insert its OWN sort on _gp alone — non-stable under
+      // spill merges, which would silently unsort the rows inside each
+      // file and falsify the sortedBy stamp
+      val sortedP = if (sortKeys.nonEmpty && sorted)
+        withP.sortWithinPartitions(
+          partKeys.indices.map(i => col(s"_gp$i")) ++ sortKeys.map(sortCol): _*)
+      else withP
+      sortedP.write.partitionBy(partKeys.indices.map(i => s"_gp$i"): _*)
+    }
+    withMicrosTimestamps(spark)(
+      writer.options(wopts).mode(SaveMode.Overwrite).parquet(staging))
+
+    val staged = promoteStaged(staging, s"${tableDir(store.root, tid)}/data",
+      partKeys, hivePattern)
+    val stats = fileStats(spark, cols, staged.map(f => f.fileName -> f.path))
+    // zero-row part files (empty write partitions) have no stats: physically
+    // drop them, they carry nothing
+    val (kept, empty) = staged.partition(f => stats.contains(f.fileName))
+    empty.foreach(f => StoreIO.forPath(f.path).delete(f.path))
+    WrittenFiles(kept.sortBy(_.staged).map { f =>
+      val (n, fileColStats) = stats(f.fileName)
+      NewFile(f.path, f.fileName, n, StoreIO.forPath(f.path).size(f.path),
+        f.partitionValues, fileColStats)
+    }, explicitRowIds,
+      // sortWithinPartitions ran and every file receives its task's rows
+      // in order → each file is internally sorted by the keys. Stamp the
+      // FULL key (direction + null order): see SortKey.stamp
+      sortedBy = if (sorted && sortKeys.nonEmpty) Some(sortKeys.map(SortKey.stamp)) else None)
+  }
+
+  /** Distributed append of `df` through [[writeFiles]]. Returns the
+    * committed snapshot id. Compaction inputs pass `repartitionForWrite =
+    * false`: they are already grouped partition-pure (one task per
+    * bin-packed group), so the shuffle would only break that grouping —
+    * the dynamic-partition writer splits by `_gp` value either way. A
+    * rewrite passes what it replaced as `replaces`: the commit applies
     * [[requireUnchanged]] to it and ends exactly its entries.
     */
   def append(
@@ -345,172 +519,26 @@ object LakeWrite {
       LakeAcl.requirePriv(spark, st0, "DELETE", schemaName, tableName, s0)
     val tid = st0.tableAt(schemaName, tableName, s0)
       .getOrElse(throw new NoSuchElementException(s"no table $schemaName.$tableName")).tableId
-    val cols = st0.columnsAt(tid, s0)
-    val partKeys = st0.partitionKeysAt(tid, s0)
-    val sortKeys = st0.sortKeysAt(tid, s0)
     val schemaVersion = st0.snapshots.lastOption.map(_.schemaVersion).getOrElse(0L)
-
-    def tag(k: String): Option[String] = st0.optionAt(tid, k, s0)
-
-    // align to table schema (by name, cast to declared types, NOT NULL
-    // guarded)
-    val rowIdSel = if (explicitRowIds) Seq(col(LakeRead.RowIdCol)) else Nil
-    var aligned = df.select(cols.map(c => stored(c, col(c.name))) ++ rowIdSel: _*)
-    // per_thread_output=false (docs/settings.md): funnel into one output
-    // file per write instead of the default one-per-task
-    if (tag("per_thread_output").exists(v => v == "false" || v == "0"))
-      aligned = aligned.coalesce(1)
-    // UNPARTITIONED tables only: the partitioned branch sorts AFTER its
-    // repartition (this pre-sort would be discarded by the shuffle — and
-    // worse, sorted map output shuffle-compresses so well that AQE's
-    // coalescing, which reads COMPRESSED sizes, merges the reduce side
-    // into a few giant partitions whose re-sort then spills the whole
-    // input per task: 4 × 6 GB spills ENOSPC'd the sf100 fixture build)
-    if (sortKeys.nonEmpty && sorted && partKeys.isEmpty)
-      aligned = aligned.sortWithinPartitions(sortKeys.map(sortCol): _*)
-
-    val staging = s"${store.root}/_staging/${uuid()}"
-    val wopts = writeOptions(st0, tid, s0)
-    val hivePattern = partKeys.nonEmpty &&
-      tag("hive_file_pattern").exists(v => v == "true" || v == "1")
-    withMicrosTimestamps(spark) { if (partKeys.nonEmpty) {
-      val pcols = partKeys.zipWithIndex.map { case (pk, i) => transformCol(pk).as(s"_gp$i") }
-      // compaction inputs are already grouped partition-pure (one task per
-      // bin-packed group), so the shuffle would only break that grouping —
-      // the dynamic-partition writer splits by _gp value either way
-      val withP0 = aligned.select(aligned.columns.map(col) ++ pcols: _*)
-      // EXPLICIT partition count: a bare repartition(cols) is
-      // REPARTITION_BY_COL, which AQE's coalescing may merge by COMPRESSED
-      // map-output size — naturally-ordered input (TPC-H facts arrive
-      // orderkey-sorted) compresses so well that a multi-GB chunk
-      // collapsed into a handful of reduce partitions whose per-task sort
-      // then spilled ~6 GB apiece (ENOSPC'd the sf100 fixture build).
-      // All-bucket specs get one task per bucket (the physical design: a
-      // task writes its bucket's one file); other specs pin the session
-      // shuffle width.
-      val writeParts: Int = {
-        val bucketNs = partKeys.map(pk => BucketTransform.unapply(pk.transform))
-        if (bucketNs.nonEmpty && bucketNs.forall(_.isDefined))
-          math.max(1, bucketNs.flatten.product)
-        else spark.sessionState.conf.numShufflePartitions
-      }
-      val withP = if (repartitionForWrite)
-        withP0.repartition(writeParts, partKeys.indices.map(i => col(s"_gp$i")): _*)
-      else withP0
-      // lead the within-task sort with the partition columns: the dynamic
-      // partition writer requires its input ordered by them and would
-      // otherwise insert its OWN sort on _gp alone — non-stable under
-      // spill merges, which would silently unsort the rows inside each
-      // file and falsify the sortedBy stamp below
-      val sortedP = if (sortKeys.nonEmpty && sorted)
-        withP.sortWithinPartitions(
-          partKeys.indices.map(i => col(s"_gp$i")) ++ sortKeys.map(sortCol): _*)
-      else withP
-      sortedP.write.options(wopts).partitionBy(partKeys.indices.map(i => s"_gp$i"): _*)
-        .mode(SaveMode.Overwrite).parquet(staging)
-    } else aligned.write.options(wopts).mode(SaveMode.Overwrite).parquet(staging) }
-
-    val staged = promoteStaged(staging, s"${tableDir(store.root, tid)}/data",
-      partKeys, hivePattern)
-
-    // per-file stats job (distributed; one aggregate row per file)
-    val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
-    val readStruct = {
-      val base = LakeRead.structFor(cols)
-      if (explicitRowIds) base.add(StructField(LakeRead.RowIdCol, LongType)) else base
-    }
-    // variant path stats (ducklake_file_variant_stats,
-    // src/pgducklake_freeze.cpp:60; exercised by variant.sql): discover the
-    // union of top-level scalar paths via schema_of_variant_agg, then fold
-    // per-path min/max/null into the SAME per-file stats job. The stat rows
-    // use synthetic names ("v.$.price") that [[LakeVariantPruning]] matches
-    // so variant_get predicates prune files.
-    val variantCols = cols.filter(c => LakeRead.sparkType(c.dataType) match {
-      case _: VariantType => true
-      case _ => false
-    })
-    val variantPaths: Seq[(String, String, String)] = // (colName, key, sparkType)
-      if (variantCols.isEmpty || staged.isEmpty) Nil
-      else {
-        val aggs = variantCols.map(c => schema_of_variant_agg(col(c.name)).as(c.name))
-        val row = spark.read.schema(readStruct).parquet(staged.map(_.path): _*)
-          .agg(aggs.head, aggs.tail: _*).collect().head
-        variantCols.zipWithIndex.flatMap { case (c, i) =>
-          topLevelVariantPaths(Option(row.getString(i)).getOrElse(""))
-            .map { case (k, t) => (c.name, k, t) }
-        }
-      }
-    val variantAggs: Seq[Column] = variantPaths.zipWithIndex.flatMap {
-      case ((cn, k, t), i) =>
-        val v = try_variant_get(col(cn), s"$$.$k", t)
-        Seq(min(v).cast(StringType).as(s"_vmin_$i"),
-          max(v).cast(StringType).as(s"_vmax_$i"),
-          sum(when(v.isNull, 1L).otherwise(0L)).as(s"_vnull_$i"))
-    }
-    // variant tables keep the fused stats+variant-path job; everything else
-    // harvests the footers the write just produced (r17, guide §1.2/§6 —
-    // no second pass over the written bytes; exact-or-fallback contract in
-    // FooterStats)
-    val statRows: Map[String, Row] =
-      if (staged.isEmpty) Map.empty
-      else (if (variantCols.isEmpty)
-        org.apache.spark.sql.graft.FooterStats.harvest(spark,
-          staged.map(f => f.fileName -> f.path),
-          statCols.map(c => c.name -> LakeRead.sparkType(c.dataType)))
-      else None).getOrElse {
-        val aggs = statAggsFor(statCols) ++ variantAggs
-        spark.read.schema(readStruct).parquet(staged.map(_.path): _*)
-          .groupBy(col("_metadata.file_name").as("_file"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map(r => r.getString(0) -> r).toMap // one row per file
-      }
-    // zero-row part files (empty write partitions) have no stats row:
-    // physically drop them, they carry nothing
-    val (kept, empty) = staged.partition(f => statRows.contains(f.fileName))
-    empty.foreach(f => StoreIO.forPath(f.path).delete(f.path))
-    val sizes = kept.map(f => f.fileName -> StoreIO.forPath(f.path).size(f.path)).toMap
+    val written = writeFiles(spark, store, st0, tid, s0, df, explicitRowIds,
+      sorted = sorted, repartition = repartitionForWrite)
 
     store.commitWithRetry() { (st, sid) =>
       if (st.tableById(tid, st.currentSnapshotId).isEmpty)
         throw new IllegalStateException(s"table $schemaName.$tableName dropped concurrently")
       replaces.foreach(requireUnchanged(st, _))
-      var fileId = st.nextFileId
-      var rowId = st.nextRowId(tid)
-      val newFiles = kept.sortBy(_.staged).map { f =>
-        val r = statRows(f.fileName)
-        val cnt = r.getLong(r.fieldIndex("_cnt"))
-        val fe = DataFileEntry(fileId, tid, f.path, f.fileName, cnt,
-          sizes(f.fileName), firstRowId = if (explicitRowIds) 0L else rowId,
-          schemaVersion = schemaVersion, explicitRowIds = explicitRowIds,
-          partitionValues = f.partitionValues, begin = sid, end = None,
-          // sortWithinPartitions ran and every file receives its task's
-          // rows in order → each file is internally sorted by the keys.
-          // Stamp the FULL key (direction + null order): see SortKey.stamp
-          sortedBy = if (sorted && sortKeys.nonEmpty)
-            Some(sortKeys.map(SortKey.stamp)) else None)
-        fileId += 1; rowId += cnt
-        fe
-      }.toList
-      val newStats = newFiles.flatMap { fe =>
-        val r = statRows(fe.fileName)
-        columnStats(fe.fileId, r, statCols) ++ variantPaths.zipWithIndex.map { case ((cn, k, t), i) =>
-          FileColumnStats(fe.fileId, s"$cn.$$.$k", t,
-            Option(r.getString(r.fieldIndex(s"_vmin_$i"))),
-            Option(r.getString(r.fieldIndex(s"_vmax_$i"))),
-            r.getLong(r.fieldIndex(s"_vnull_$i")))
-        }
-      }
+      val (newFiles, newStats) =
+        written.entries(tid, sid, schemaVersion, st.nextFileId, st.nextRowId(tid))
       def ended(all: => Vector[Long], replaced: ReadSet => Set[Long]): List[Long] =
         (if (overwrite) all.toList else Nil) ++ replaces.toList.flatMap(replaced(_).toList.sorted)
       val cur = st.currentSnapshotId
       val endedFiles = ended(st.filesAt(tid, cur).map(_.fileId), _.files)
       val endedDel = ended(st.deleteFilesAt(tid, cur).map(_.deleteFileId), _.deleteFiles)
       val endedInl = ended(st.inlinedAt(tid, cur).map(_.batchId), _.inlined)
-      val n = newFiles.map(_.rowCount).sum
       val (tagsNew, tagsEnded) = extraTags(st, sid)
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(), schemaVersion,
-          List(s"$changeTag:$tid:$n")),
+          List(s"$changeTag:$tid:${written.rows}")),
         newFiles = newFiles, endedFiles = endedFiles,
         endedDeleteFiles = endedDel, endedInlined = endedInl,
         newTags = tagsNew, endedTags = tagsEnded,
@@ -815,115 +843,79 @@ object LakeWrite {
     val rowBound = scannedRows(scan) // before the cache hides the scan
     val matched = scan.persist()
     val inline = col(LakeRead.FileCol).startsWith("inline:")
-    val (updatedJson, delFile, staged) = try {
-      val updated = matched.select(
-        cols.map(c => stored(c, set.getOrElse(c.name, col(c.name)))) ++
-          Seq(col(LakeRead.FileCol), col(LakeRead.RowIdCol)): _*)
-
-      // inline side: updated JSON by row id (inline log is small by
-      // contract); provably empty — and the two collect jobs skipped — when
-      // the table has no inline batches at s0 (r17)
-      val updatedJson: Map[Long, String] =
-        if (st0.inlinedAt(tid, s0).isEmpty) Map.empty
-        else {
-          val inlineUpdated = updated.filter(inline)
-          val inlineIds = inlineUpdated.select(col(LakeRead.RowIdCol))
-            .collect().map(_.getLong(0))
-          val inlineJson = inlineUpdated.drop(LakeRead.FileCol, LakeRead.RowIdCol)
-            .toJSON.collect()
-          inlineIds.zip(inlineJson).toMap
-        }
-
+    val (delFile, (updatedJson, written)) = try {
       // parquet side: delete file + post-image files with explicit row ids,
       // the second written only when the first saw a hit
       val delFile = writeDeleteFile(spark, store, tid, matched.filter(!inline), rowBound).file
-      val staged: Seq[StagedFile] = delFile match {
-        case None => Nil
-        case Some(_) =>
-          val staging = s"${store.root}/_staging/${uuid()}"
-          withMicrosTimestamps(spark)(updated.filter(!inline).drop(LakeRead.FileCol)
-            .write.options(writeOptions(st0, tid, s0)).mode(SaveMode.Overwrite).parquet(staging))
-          promoteStaged(staging, s"${tableDir(store.root, tid)}/data", Nil)
-      }
-      (updatedJson, delFile, staged)
+      (delFile, postImages(spark, store, st0, tid, s0, matched.select(
+        cols.map(c => set.getOrElse(c.name, col(c.name)).as(c.name)) ++
+          Seq(col(LakeRead.FileCol), col(LakeRead.RowIdCol)): _*), delFile.isDefined))
     } finally matched.unpersist()
-
-    val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
-    val readStruct = LakeRead.structFor(cols).add(StructField(LakeRead.RowIdCol, LongType))
-    val (keptStaged, statRows, sizes) = stagedStats(spark, readStruct, statCols, staged)
 
     val total = delFile.map(_.total).getOrElse(0L) + updatedJson.size
     val (reads, byName) = dmlReads(s"UPDATE on $schemaName.$tableName", st0, tid, s0,
       delFile, updatedJson.keySet)
     val sid = store.commitWithRetry() { (st, sid) =>
       requireUnchanged(st, reads)
-      var fileId = st.nextFileId
-      val newFiles = keptStaged.sortBy(_.staged).map { f =>
-        val r = statRows(f.fileName)
-        val fe = DataFileEntry(fileId, tid, f.path, f.fileName,
-          r.getLong(r.fieldIndex("_cnt")), sizes(f.fileName), firstRowId = 0L,
-          schemaVersion = schemaVersion, explicitRowIds = true,
-          partitionValues = Map.empty, begin = sid, end = None)
-        fileId += 1
-        fe
-      }.toList
-      val newStats = newFiles.flatMap(fe => columnStats(fe.fileId, statRows(fe.fileName), statCols))
-      val newDel = delFile.toList.map(_.entry(fileId, tid, sid, byName))
-      // inline rewrites: survivors keep their batch's schema epoch; rows the
-      // UPDATE re-serialized (current column names) move to their OWN batch
-      // stamped with the CURRENT schema version, so a batch never mixes
-      // JSON epochs after schema evolution
+      val (newFiles, newStats) = written.entries(tid, sid, schemaVersion, st.nextFileId, 0L)
+      val newDel = delFile.toList.map(_.entry(st.nextFileId + newFiles.size, tid, sid, byName))
       val (endedB, keptB) = rewriteInlineBatches(st, reads, sid, drop = updatedJson.contains)
-      val updatedBatch =
-        if (updatedJson.isEmpty) Nil
-        else {
-          val ids = updatedJson.keys.toList.sorted
-          List(InlinedBatch(
-            (keptB.map(_.batchId) :+ (st.nextBatchId - 1)).max + 1, tid,
-            schemaVersion, ids.head, ids.map(updatedJson), sid, None,
-            rowIds = Some(ids)))
-        }
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(), schemaVersion,
           List(s"updated:$tid:$total")),
         newFiles = newFiles, newStats = newStats, newDeleteFiles = newDel,
-        endedInlined = endedB, newInlined = keptB ++ updatedBatch)
+        endedInlined = endedB,
+        newInlined = keptB ++ reserialized(st, tid, schemaVersion, sid, keptB, updatedJson))
     }
     (sid, total)
   }
+
+  /** The post-image step UPDATE and MERGE share. `post` holds each updated
+    * row's new values under the table's column names (not yet
+    * [[stored]]), its [[LakeRead.FileCol]] and its [[LakeRead.RowIdCol]].
+    * Inline rows (file `inline:<batch>`) come back re-serialized, JSON by
+    * row id: the inline log is small by contract, and both collect jobs
+    * are skipped when the table has no inline batches at s0 (r17). The
+    * other rows go through [[writeFiles]] keeping their row ids, unless
+    * `parquetHit` says no data-file row was updated. Post-images are not
+    * repartitioned by the table's partition keys: the dynamic-partition
+    * writer splits each task's rows by `_gp` value, so every file still
+    * records its partition values, and the DML adds no exchange. */
+  private def postImages(spark: SparkSession, store: MetadataStore, st0: CatalogState,
+      tid: Long, s0: Long, post: DataFrame, parquetHit: Boolean)
+      : (Map[Long, String], WrittenFiles) = {
+    val inline = col(LakeRead.FileCol).startsWith("inline:")
+    val json: Map[Long, String] =
+      if (st0.inlinedAt(tid, s0).isEmpty) Map.empty
+      else {
+        val rows = post.filter(inline)
+        val ids = rows.select(col(LakeRead.RowIdCol)).collect().map(_.getLong(0))
+        ids.zip(rows.select(st0.columnsAt(tid, s0).map(c => stored(c, col(c.name))): _*)
+          .toJSON.collect()).toMap
+      }
+    (json, if (!parquetHit) WrittenFiles(Nil, explicitRowIds = true)
+      else writeFiles(spark, store, st0, tid, s0, post.filter(!inline),
+        explicitRowIds = true, repartition = false))
+  }
+
+  /** The inline rows a DML re-serialized (`json` by row id, under the
+    * current column names) as a batch of their own after the survivors
+    * `kept`, stamped with the current schema version: a batch never mixes
+    * JSON epochs after schema evolution. */
+  private def reserialized(st: CatalogState, tid: Long, schemaVersion: Long, sid: Long,
+      kept: List[InlinedBatch], json: Map[Long, String]): List[InlinedBatch] =
+    if (json.isEmpty) Nil
+    else {
+      val ids = json.keys.toList.sorted
+      List(InlinedBatch((kept.map(_.batchId) :+ (st.nextBatchId - 1)).max + 1, tid,
+        schemaVersion, ids.head, ids.map(json), sid, None, rowIds = Some(ids)))
+    }
 
   /** WHEN MATCHED clause: `set` = UPDATE assignments, None = DELETE.
     * Also used for WHEN NOT MATCHED BY SOURCE (target-only expressions). */
   case class MergeMatched(cond: Option[Column], set: Option[Map[String, Column]])
   /** WHEN NOT MATCHED clause: conditional INSERT with per-column values. */
   case class MergeInsert(cond: Option[Column], values: Map[String, Column])
-
-  /** per-file stats over freshly staged parquet; drops zero-row part files.
-    * Returns (kept files, stats row per file name, size per file name).
-    *
-    * r17 (guide §1.2/§6): stats come from the parquet FOOTERS the write
-    * itself produced — zero extra Spark jobs, zero re-read of the written
-    * bytes (the old job re-read every ingested byte once more; at 100 TB
-    * that is a second full pass over the write). FooterStats either
-    * reproduces the old aggregate's strings bit-identically or returns
-    * None, in which case the old job runs (INT96 timestamps, NaN/±0.0
-    * float bounds, >4 KB binary values, encrypted footers). */
-  private def stagedStats(spark: SparkSession, readStruct: StructType,
-      statCols: Seq[ColumnEntry], staged: Seq[StagedFile])
-      : (Seq[StagedFile], Map[String, Row], Map[String, Long]) = {
-    if (staged.isEmpty) return (Nil, Map.empty, Map.empty)
-    val statRows = org.apache.spark.sql.graft.FooterStats.harvest(spark,
-      staged.map(f => f.fileName -> f.path),
-      statCols.map(c => c.name -> LakeRead.sparkType(c.dataType))).getOrElse {
-      spark.read.schema(readStruct).parquet(staged.map(_.path): _*)
-        .groupBy(col("_metadata.file_name").as("_file"))
-        .agg(statAggsFor(statCols).head, statAggsFor(statCols).tail: _*)
-        .collect().map(r => r.getString(0) -> r).toMap // one row per file
-    }
-    val (kept, empty) = staged.partition(f => statRows.contains(f.fileName))
-    empty.foreach(f => StoreIO.forPath(f.path).delete(f.path))
-    (kept, statRows, kept.map(f => f.fileName -> StoreIO.forPath(f.path).size(f.path)).toMap)
-  }
 
   /** MERGE INTO (SQL standard / reference DML surface): one snapshot carrying
     * positional deletes of every affected pre-image, post-image files with
@@ -998,9 +990,9 @@ object LakeWrite {
       } ++ notMatched.zipWithIndex.map { case (cl, k) =>
         (nT + k) -> cl.values.getOrElse(c.name, lit(null))
       }
-      stored(c, arms.foldRight(if (nT == 0) lit(null) else col(c.name)) { case ((i, v), acc) =>
+      arms.foldRight(if (nT == 0) lit(null) else col(c.name)) { case ((i, v), acc) =>
         when(col(Act) === lit(i), v).otherwise(acc)
-      })
+      }.as(c.name)
     }
 
     // One join reads the source once and the target once: inner for the
@@ -1035,25 +1027,13 @@ object LakeWrite {
     val isIns = col(Act) >= nT
     val updIdx = tgtClauses.zipWithIndex.collect { case (c, i) if c.set.isDefined => i: Any }
     val isUpd = if (updIdx.isEmpty) lit(false) else col(Act).isin(updIdx: _*)
-    val inline = col(LakeRead.FileCol).startsWith("inline:")
     val dataCols = cols.map(c => col(c.name))
     // an outer join on the source side makes the target's row metadata
     // nullable; on target rows it never is, and declaring it so keeps the
     // delete and post-image files' metadata columns required
     def tgtMeta(n: String, none: Any) = coalesce(col(n), lit(none)).as(n)
 
-    val wopts = writeOptions(st0, tid, s0)
-    val dataDir = s"${tableDir(store.root, tid)}/data"
-    val statCols = cols.filter(c => statsEligible(LakeRead.sparkType(c.dataType)))
-    val baseStruct = LakeRead.structFor(cols)
-    def stage(rows: DataFrame): Seq[StagedFile] = {
-      val staging = s"${store.root}/_staging/${uuid()}"
-      withMicrosTimestamps(spark)(
-        rows.write.options(wopts).mode(SaveMode.Overwrite).parquet(staging))
-      promoteStaged(staging, dataDir, Nil)
-    }
-
-    val (hits, inlineUpdJson, postStaged, insStaged) = try {
+    val (hits, (inlineUpdJson, post), ins) = try {
       // one delete file over every affected pre-image; it also enforces the
       // SQL cardinality rule (a target row hit by two source matches is an
       // error, never a double-apply) before anything else is written
@@ -1063,77 +1043,43 @@ object LakeWrite {
           tgtMeta(LakeRead.FileCol, ""), tgtMeta(LakeRead.PosCol, 0L),
           tgtMeta(LakeRead.RowIdCol, 0L), isUpd.as(UpdCol)),
           rowBound, oneHitPerRow = matched.nonEmpty)
-      // inline log side (driver-held, bounded by data_inlining_row_limit);
-      // provably empty — both collect jobs skipped — when the table has no
-      // inline batches at s0 (r17)
-      val inlineUpdJson: Map[Long, String] =
-        if (nT == 0 || st0.inlinedAt(tid, s0).isEmpty) Map.empty
-        else {
-          val inlineUpd = acted.filter(!isIns && isUpd && inline)
-          val inlineUpdIds = inlineUpd.select(col(LakeRead.RowIdCol))
-            .collect().map(_.getLong(0))
-          inlineUpdIds.zip(inlineUpd.select(dataCols: _*).toJSON.collect()).toMap
-        }
-      // post-image files (explicit row ids, like UPDATE), then insert files
-      // (fresh row ids assigned at commit)
-      val postStaged = if (hits.updated == 0) Nil
-        else stage(acted.filter(!isIns && isUpd && !inline)
-          .select(dataCols :+ tgtMeta(LakeRead.RowIdCol, 0L): _*))
-      val insStaged = if (notMatched.isEmpty) Nil
-        else stage(acted.filter(isIns).select(dataCols: _*))
-      (hits, inlineUpdJson, postStaged, insStaged)
+      // post-images (explicit row ids, like UPDATE), then insert files
+      // (fresh row ids assigned at commit; like post-images, not
+      // repartitioned by the partition keys)
+      val post =
+        if (nT == 0) (Map.empty[Long, String], WrittenFiles(Nil, explicitRowIds = true))
+        else postImages(spark, store, st0, tid, s0, acted.filter(!isIns && isUpd).select(
+          dataCols ++ Seq(col(LakeRead.FileCol), tgtMeta(LakeRead.RowIdCol, 0L)): _*),
+          parquetHit = hits.updated > 0)
+      val ins = if (notMatched.isEmpty) WrittenFiles(Nil, explicitRowIds = false)
+        else writeFiles(spark, store, st0, tid, s0, acted.filter(isIns),
+          explicitRowIds = false, repartition = false)
+      (hits, post, ins)
     } finally acted.unpersist()
     val delFile = hits.file
     val inlineDelIds = hits.inlineIds
-    val (postKept, postStats, postSizes) = stagedStats(spark,
-      baseStruct.add(StructField(LakeRead.RowIdCol, LongType)), statCols, postStaged)
-    val (insKept, insStats, insSizes) = stagedStats(spark, baseStruct, statCols, insStaged)
 
     val updCnt = hits.updated + inlineUpdJson.size
     val delCnt = delFile.map(_.total).getOrElse(0L) - hits.updated + inlineDelIds.size
-    val insCnt = insKept.map(f => insStats(f.fileName).getLong(
-      insStats(f.fileName).fieldIndex("_cnt"))).sum
+    val insCnt = ins.rows
 
     val (reads, byName) = dmlReads(s"MERGE into $schemaName.$tableName", st0, tid, s0,
       delFile, inlineDelIds ++ inlineUpdJson.keySet)
     val sid = store.commitWithRetry() { (st, sid) =>
       requireUnchanged(st, reads)
-      var fileId = st.nextFileId
-      var rowId = st.nextRowId(tid)
-      def entryFor(f: StagedFile, stats: Map[String, Row], sizes: Map[String, Long],
-          explicit: Boolean): DataFileEntry = {
-        val r = stats(f.fileName)
-        val cnt = r.getLong(r.fieldIndex("_cnt"))
-        val fe = DataFileEntry(fileId, tid, f.path, f.fileName, cnt,
-          sizes(f.fileName), firstRowId = if (explicit) 0L else rowId,
-          schemaVersion = schemaVersion, explicitRowIds = explicit,
-          partitionValues = Map.empty, begin = sid, end = None)
-        fileId += 1
-        if (!explicit) rowId += cnt
-        fe
-      }
-      val newFiles =
-        postKept.sortBy(_.staged).map(entryFor(_, postStats, postSizes, explicit = true)).toList ++
-          insKept.sortBy(_.staged).map(entryFor(_, insStats, insSizes, explicit = false)).toList
-      val newStats = newFiles.flatMap(fe => columnStats(fe.fileId,
-        postStats.getOrElse(fe.fileName, insStats(fe.fileName)), statCols))
-      val newDel = delFile.toList.map(_.entry(fileId, tid, sid, byName))
+      val (postFiles, postStats) = post.entries(tid, sid, schemaVersion, st.nextFileId, 0L)
+      val (insFiles, insStats) = ins.entries(tid, sid, schemaVersion,
+        st.nextFileId + postFiles.size, st.nextRowId(tid))
+      val newFiles = postFiles ++ insFiles
+      val newDel = delFile.toList.map(_.entry(st.nextFileId + newFiles.size, tid, sid, byName))
       val (endedB, keptB) = rewriteInlineBatches(st, reads, sid,
         drop = rid => inlineDelIds.contains(rid) || inlineUpdJson.contains(rid))
-      val updatedBatch =
-        if (inlineUpdJson.isEmpty) Nil
-        else {
-          val ids = inlineUpdJson.keys.toList.sorted
-          List(InlinedBatch(
-            (keptB.map(_.batchId) :+ (st.nextBatchId - 1)).max + 1, tid,
-            schemaVersion, ids.head, ids.map(inlineUpdJson), sid, None,
-            rowIds = Some(ids)))
-        }
       CommitDelta(
         snapshot = Snapshot(sid, System.currentTimeMillis(), schemaVersion,
           List(s"merged:$tid:${updCnt + delCnt + insCnt}")),
-        newFiles = newFiles, newStats = newStats, newDeleteFiles = newDel,
-        endedInlined = endedB, newInlined = keptB ++ updatedBatch)
+        newFiles = newFiles, newStats = postStats ++ insStats, newDeleteFiles = newDel,
+        endedInlined = endedB,
+        newInlined = keptB ++ reserialized(st, tid, schemaVersion, sid, keptB, inlineUpdJson))
     }
     (sid, updCnt, delCnt, insCnt)
   }

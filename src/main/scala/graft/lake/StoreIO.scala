@@ -36,13 +36,16 @@ trait StoreIO {
   def list(dir: String, prefix: String, suffix: String): Vector[String]
   def read(path: String): Array[Byte]
   def exists(path: String): Boolean
+  /** delete a file, with its checksum sidecar if it has one */
   def delete(path: String): Unit
   def mkdirs(dir: String): Unit
   /** write `data` to `path` iff absent — the commit CAS. False = slot taken. */
   def putIfAbsent(path: String, data: Array[Byte]): Boolean
   /** overwrite write (freeze artifacts, idempotent content) */
   def put(path: String, data: Array[Byte]): Unit
-  /** same-filesystem rename (staged-file promotion) */
+  /** same-filesystem rename (staged-file promotion). Like `delete`, it
+    * carries the file's checksum sidecar ([[StoreIO.sidecar]]) along,
+    * as Hadoop's checksummed FileSystems do. */
   def move(src: String, dst: String): Unit
   def size(path: String): Long
   /** last-modified epoch millis (orphan-deletion grace window) */
@@ -66,6 +69,13 @@ object StoreIO {
 
   def forPath(path: String): StoreIO =
     if (isRemote(path)) new HadoopStoreIO(path) else LocalStoreIO
+
+  /** the checksum sidecar Hadoop's local FileSystem writes beside `path`
+    * (`dir/.name.crc`) and verifies on every read of it */
+  def sidecar(path: String): String = {
+    val i = path.lastIndexOf('/') + 1
+    s"${path.take(i)}.${path.drop(i)}.crc"
+  }
 }
 
 object LocalStoreIO extends StoreIO {
@@ -81,7 +91,10 @@ object LocalStoreIO extends StoreIO {
   }
   override def read(path: String): Array[Byte] = Files.readAllBytes(Paths.get(path))
   override def exists(path: String): Boolean = Files.exists(Paths.get(path))
-  override def delete(path: String): Unit = Files.deleteIfExists(Paths.get(path))
+  override def delete(path: String): Unit = {
+    Files.deleteIfExists(Paths.get(path))
+    Files.deleteIfExists(Paths.get(StoreIO.sidecar(path)))
+  }
   override def mkdirs(dir: String): Unit = Files.createDirectories(Paths.get(dir))
   override def putIfAbsent(path: String, data: Array[Byte]): Boolean = {
     val target = Paths.get(path)
@@ -94,8 +107,11 @@ object LocalStoreIO extends StoreIO {
   }
   override def put(path: String, data: Array[Byte]): Unit =
     Files.write(Paths.get(path), data)
-  override def move(src: String, dst: String): Unit =
+  override def move(src: String, dst: String): Unit = {
     Files.move(Paths.get(src), Paths.get(dst))
+    val crc = Paths.get(StoreIO.sidecar(src))
+    if (Files.exists(crc)) Files.move(crc, Paths.get(StoreIO.sidecar(dst)))
+  }
   override def size(path: String): Long = Files.size(Paths.get(path))
   override def mtime(path: String): Long =
     Files.getLastModifiedTime(Paths.get(path)).toMillis
@@ -111,7 +127,8 @@ object LocalStoreIO extends StoreIO {
   }
   override def deleteRecursively(dir: String): Unit = {
     val p = Paths.get(dir)
-    if (Files.exists(p)) {
+    if (Files.isRegularFile(p)) delete(dir)
+    else if (Files.exists(p)) {
       val walk = Files.walk(p)
       try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
         .forEach(f => Files.deleteIfExists(f))

@@ -79,12 +79,11 @@ class LocalWriteSpec extends AnyFunSuite {
     val deletes = st.deleteFilesAt(tid, st.currentSnapshotId)
     val parts = deletes.flatMap(_.parts).map(p => Paths.get(new java.net.URI(p).getPath))
     assert(data.nonEmpty && parts.nonEmpty)
-    // promoted data files are renamed out of their write dir without
-    // their sidecar; delete files stay where the write put them, sidecar
-    // and all
+    // promoted data files take their sidecar along out of their write dir;
+    // delete files stay where the write put them, sidecar and all
     data.foreach { f =>
       assert(mode(f) == "rw-r--r--", f)
-      assert(!Files.exists(crcOf(f)), f)
+      assert(mode(crcOf(f)) == "rw-r--r--", crcOf(f))
     }
     (data.map(_.getParent) ++ deletes.map(d => Paths.get(d.path))).distinct
       .foreach(d => assert(mode(d) == "rwxr-xr-x", d))
@@ -121,5 +120,40 @@ class LocalWriteSpec extends AnyFunSuite {
     del.foreach(flip)
     val e2 = intercept[Exception](lake.table("main.t").collect())
     assert(checksumFailure(e2), e2)
+
+    // a promoted lake data file
+    val (lake3, st3, tid3) = lakeWithDeletes()
+    st3.filesAt(tid3, st3.currentSnapshotId).foreach(f => flip(Paths.get(f.path)))
+    val e3 = intercept[Exception](lake3.table("main.t").collect())
+    assert(checksumFailure(e3), e3)
+  }
+
+  test("a data file's sidecar lives and dies with it: promotion, cleanup, orphans") {
+    val lake = newLake()
+    lake.createTable("main.t", Seq((1, 1L)).toDF("g", "x").schema)
+    (1 to 3).foreach(i =>
+      lake.append("main.t", (1 to 20).map(j => (j % 4, (i * 100 + j).toLong)).toDF("g", "x")))
+    // an empty append's zero-row part file is dropped, sidecar too
+    lake.append("main.t", Seq.empty[(Int, Long)].toDF("g", "x"))
+    lake.mergeAdjacentFiles("main.t") // ends the three appended files
+    lake.update("main.t", col("x") === 105L, Map("x" -> lit(-1L)))
+    val st = lake.store.state()
+    val tid = st.tableAt("main", "t", st.currentSnapshotId).get.tableId
+    val dataDir = Paths.get(LakeWrite.tableDir(lake.root, tid), "data")
+    // crash residue: a promoted file and its sidecar that no commit names,
+    // and a sidecar whose file is gone
+    val live = st.filesAt(tid, st.currentSnapshotId).map(f => Paths.get(f.path))
+    Files.copy(live.head, dataDir.resolve("gorphan.parquet"))
+    Files.copy(crcOf(live.head), crcOf(dataDir.resolve("gorphan.parquet")))
+    Files.write(crcOf(dataDir.resolve("ggone.parquet")), Array[Byte](1, 2, 3))
+
+    lake.cleanupOldFiles(Some(0L))
+    val reaped = lake.deleteOrphanedFiles(Some(0L))
+    assert(reaped.map(p => Paths.get(p).getFileName.toString).sorted ==
+      Seq(".ggone.parquet.crc", "gorphan.parquet"), reaped)
+    val onDisk = Files.list(dataDir).iterator().asScala.map(_.getFileName.toString).toSet
+    assert(onDisk == live.flatMap(f => Seq(f, crcOf(f))).map(_.getFileName.toString).toSet,
+      s"on disk: $onDisk, live: $live")
+    assert(lake.table("main.t").count() == 60)
   }
 }
